@@ -1478,8 +1478,8 @@ def npoints(s: pd.Series, scalar_fn) -> pd.Series:
     def ncommas():
         nonlocal commas
         if commas is None:
-            commas = pc.count_substring(f.b.arr, pattern=",").to_numpy(
-                zero_copy_only=False).astype(np.int64)
+            commas = pc.count_substring(f.b.arr, pattern=",").fill_null(
+                0).to_numpy(zero_copy_only=False).astype(np.int64)
         return commas
 
     v, g = f.b.extract(FPOLY_1RING)
@@ -1512,8 +1512,8 @@ def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
         f.put(f.b.match(pat), 1)
     m = f.b.match(FMPOINT_ANY)
     if m.any():
-        commas = pc.count_substring(f.b.arr, pattern=",").to_numpy(
-            zero_copy_only=False).astype(np.int64)
+        commas = pc.count_substring(f.b.arr, pattern=",").fill_null(
+            0).to_numpy(zero_copy_only=False).astype(np.int64)
         f.put(m, commas + 1)
     return f.finish(scalar_fn)
 

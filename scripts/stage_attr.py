@@ -9,6 +9,7 @@ Usage: python scripts/stage_attr.py <sf_dir> <query> [query ...]
 """
 import json
 import os
+import shlex
 import sys
 import tempfile
 import time
@@ -20,31 +21,20 @@ def main():
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
     log_dir = tempfile.mkdtemp(prefix="sparkevt_")
-    os.environ["SPARK_GRAFT_EVENTLOG"] = log_dir
-    from pyspark.sql import SparkSession
-
+    # the engine's own session (get_spark: worker daemon, malloc env,
+    # Arrow batch size) plus the event log, set before the JVM starts
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join([
+        "--conf", "spark.eventLog.enabled=true",
+        "--conf", f"spark.eventLog.dir={log_dir}",
+        "--conf", "spark.eventLog.compress=false",
+        "pyspark-shell"])
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.session import (
         default_parallelism,
+        get_spark,
     )
     cores = default_parallelism()
-    spark = (
-        SparkSession.builder.appName("stage_attr")
-        .master(f"local[{cores}]")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .config("spark.eventLog.compress", "false")
-        .config("spark.sql.shuffle.partitions", str(cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
+    spark = get_spark("stage_attr")
     spark.sparkContext.setLogLevel("ERROR")
     spark.range(32_000).repartition(cores) \
         .mapInPandas(lambda it: it, "id long").selectExpr("sum(id)").collect()

@@ -526,14 +526,15 @@ def test_bucket_pairs_mega_bucket_bounded_and_exact(spark):
     par = spark.sparkContext.defaultParallelism
     per_task_cap = block * block
     per_part_cap = math.ceil(n_tasks / par) * per_task_cap
-    per_part = (
-        pairs.groupBy(F.spark_partition_id().alias("pid")).count()
-        .agg(F.max("count")).collect()[0][0]
-    )
-    assert per_part <= per_part_cap, (per_part, per_part_cap)
-    # and the work is genuinely spread: the max partition holds a small
-    # fraction of the 50M pairs, not all of them
-    assert per_part < n * (n - 1) // 2 / 4
+    per_part = [
+        r["count"] for r in
+        pairs.groupBy(F.spark_partition_id().alias("pid")).count().collect()
+    ]
+    assert max(per_part) <= per_part_cap, (max(per_part), per_part_cap)
+    # and the work is genuinely spread: every partition holds pairs. (A
+    # fixed share such as "under a quarter of all pairs" cannot hold on
+    # 4 or fewer partitions, where the fair share itself is a quarter.)
+    assert len(per_part) == min(par, n_tasks), (per_part, par)
 
 
 def test_bucket_pairs_blocked_path_equals_direct_path(spark):

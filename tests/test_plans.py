@@ -141,20 +141,25 @@ def test_aqe_splits_skewed_join_partition(spark):
     detects the oversized partition at runtime and splits it —
     `skew=true` / `AQEShuffleRead ... skewed` in the executed plan.
     Thresholds are lowered so local-scale data trips the same code path a
-    100 TB hot key would."""
+    100 TB hot key would. The shuffle width is pinned too: AQE calls a
+    partition skewed against the MEDIAN partition, and with as few
+    partitions as a 4-core session has, the hot key's partition (10 % of
+    the rows plus its share of the rest) is under 2x that median."""
     from pyspark.sql import functions as F
 
     conf = spark.conf
     keys = ["spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
             "spark.sql.adaptive.advisoryPartitionSizeInBytes",
             "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-            "spark.sql.autoBroadcastJoinThreshold"]
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.shuffle.partitions"]
     old = {k: conf.get(k, None) for k in keys}
     try:
         conf.set(keys[0], "64KB")
         conf.set(keys[1], "32KB")
         conf.set(keys[2], "2")
         conf.set(keys[3], "-1")  # force SMJ so the skew path is exercised
+        conf.set(keys[4], "32")
         fact = spark.range(300_000).select(
             F.when(F.col("id") % 10 == 0, F.lit(7))
             .otherwise(F.pmod("id", F.lit(1000))).alias("k"),

@@ -1,0 +1,116 @@
+"""The Python worker environment the daemon (`daemon_preload`) forks.
+
+PySpark's worker calls `importlib.invalidate_caches()` for every task
+(`pyspark.worker_util.setup_spark_files`). On CPython 3.10-3.12 that makes
+every `zipimporter` re-read its archive's central directory at once, so a
+worker that imported pyspark from `pyspark.zip` re-read it once per
+package directory per task. The daemon replaces the method with one that
+re-reads only an archive whose (mtime, size) stamp changed. It also
+freezes its heap, which the worker's per-task `gc.collect()` then skips.
+"""
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
+import pandas as pd
+from pyspark.sql.functions import pandas_udf
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+PATCHED = sys.version_info < (3, 13)
+
+PROBE = textwrap.dedent(r"""
+    import importlib, json, os, sys, zipfile, zipimport
+
+    zpath = os.path.join(sys.argv[1], "pkgs.zip")
+
+    def write(extra):
+        with zipfile.ZipFile(zpath, "w") as z:
+            for name in ("zpkg/__init__.py", "zpkg/a/__init__.py",
+                         "zpkg/b/__init__.py"):
+                z.writestr(name, "")
+            z.writestr("zpkg/a/m.py", "A = 1\n")
+            z.writestr("zpkg/b/m.py", "B = 2\n")
+            if extra:
+                z.writestr("zpkg/b/extra.py", "VALUE = 42\n")
+
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting(archive):
+        reads.append(archive)
+        return read_directory(archive)
+
+    def rereads():  # of this archive: the interpreter may hold other zips
+        del reads[:]
+        importlib.invalidate_caches()
+        return reads.count(zpath)
+
+    write(extra=False)
+    sys.path.insert(0, zpath)
+    import zpkg.a.m, zpkg.b.m  # one zipimporter per package directory
+
+    zipimport._read_directory = counting
+    out = {"importers": sum(isinstance(f, zipimport.zipimporter)
+                            and f.archive == zpath
+                            for f in sys.path_importer_cache.values()),
+           "unpatched": rereads()}
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark import (
+        daemon_preload,
+    )
+    daemon_preload.reread_changed_zips_only()
+    out["patched"] = rereads()
+    out["patched_again"] = rereads()
+    size = os.path.getsize(zpath)
+    write(extra=True)
+    assert os.path.getsize(zpath) != size
+    out["changed"] = rereads()
+    import zpkg.b.extra
+    out["extra"] = zpkg.b.extra.VALUE
+    print(json.dumps(out))
+""")
+
+
+def test_invalidate_caches_rereads_only_changed_archives(tmp_path):
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        [REPO] + [p for p in (os.environ.get("PYTHONPATH"),) if p]))
+    proc = subprocess.run([sys.executable, "-c", PROBE, str(tmp_path)],
+                          capture_output=True, text=True, env=env,
+                          timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    # zip root, zpkg/, zpkg/a/ and zpkg/b/
+    assert out["importers"] >= 4, out
+    if PATCHED:
+        # the interpreter's own method re-reads every importer's archive
+        assert out["unpatched"] == out["importers"], out
+        # ... and the stamped importers re-read only once it changed
+        assert out["changed"] >= 1, out
+    assert out["patched"] == 0, out
+    assert out["patched_again"] == 0, out
+    # the rewritten archive (new size) is seen: its new module imports
+    assert out["extra"] == 42, out
+
+
+def test_workers_inherit_the_patch_and_the_frozen_heap(spark):
+    """The daemon patches and freezes its heap before it forks, so every
+    worker runs the patched method, and the per-task gc.collect() of
+    pyspark.daemon skips the pre-imported modules."""
+
+    @pandas_udf("string")
+    def worker_state(ids: pd.Series) -> pd.Series:
+        import gc
+        import zipimport
+
+        name = zipimport.zipimporter.invalidate_caches.__name__
+        return pd.Series([f"{name} {gc.get_freeze_count() > 0}"] * len(ids))
+
+    rows = spark.range(0, 400, 1, 4).select(
+        worker_state("id").alias("s")).collect()
+    want = ("invalidate_caches_if_changed" if PATCHED
+            else "invalidate_caches")
+    assert len(rows) == 400
+    assert {r.s for r in rows} == {f"{want} True"}
