@@ -31,6 +31,25 @@ outside the UDF (identity pandas_udf, 4 cores), from two causes:
 Measured per task with `scripts/worker_task_cpu.py`: ~220 ms, 42 ms with
 the stamped importers, 3.5 ms with the freeze as well.
 
+Per-session cost. `spark.stop()` ends the daemon, so every session
+starts a new one, and Spark puts `$SPARK_HOME/python/lib/pyspark.zip`
+and the py4j source zip first on its `sys.path`. The zips hold no
+bytecode and zipimport never caches any, so each daemon start compiled
+the ~94 pyspark modules it imports: `import pyspark.daemon` took ~1 s
+from the zip against ~0.15 s from the interpreter's installed,
+bytecode-cached copy. Before the imports below, `prefer_installed_copy`
+moves each package's zips behind the other `sys.path` entries, but only
+when the installed copy is the same release: its `<pkg>/version.py` is
+byte-identical to every zip's. With no installed copy, another release,
+or a zip without `version.py`, `sys.path` stays as Spark built it, and
+the stamped importers above keep the zip's per-task cost low. Once the
+installed directory is `pyspark.__path__`, what only the zip holds is
+out of the daemon's reach: for Spark 4.1.2 that is pyspark's 819 test
+modules and `pyspark/sql/streaming/benchmark`, which no worker imports;
+the 347 modules both copies hold, and py4j's 9, are byte-identical.
+Measured with `scripts/daemon_start.py` (4 cores): the engine daemon is
+ready in ~0.9 s instead of ~1.7 s.
+
 Wired via `spark.python.daemon.module` (session.get_spark). Imports are
 best-effort: any failure falls back to a plain pyspark.daemon — the
 daemon must never die at import time, workers import lazily as before.
@@ -40,6 +59,43 @@ import gc
 import os
 import sys
 import zipimport
+from importlib.machinery import PathFinder
+
+
+def _zip_member(entry, name):
+    """Bytes of `name` inside the `sys.path` entry, or None when the entry
+    is not a zip archive or lacks it."""
+    try:
+        return zipimport.zipimporter(entry).get_data(name)
+    except (zipimport.ZipImportError, OSError):
+        return None
+
+
+def prefer_installed_copy():
+    """Move the pyspark and py4j zips to the end of `sys.path` when the
+    interpreter's installed copy is the same release; else change nothing."""
+    for pkg in ("pyspark", "py4j"):
+        if pkg in sys.modules:
+            continue
+        zipped = {p: data for p in sys.path
+                  if (data := _zip_member(p, pkg + "/version.py")) is not None}
+        if not zipped:
+            continue
+        rest = [p for p in sys.path if p not in zipped]
+        spec = PathFinder.find_spec(pkg, rest)
+        if spec is None or spec.origin is None:
+            continue
+        try:
+            with open(os.path.join(os.path.dirname(spec.origin),
+                                   "version.py"), "rb") as f:
+                installed = f.read()
+        except OSError:
+            continue
+        if all(data == installed for data in zipped.values()):
+            sys.path[:] = rest + list(zipped)
+
+
+prefer_installed_copy()
 
 try:  # engine + numeric stack: best-effort, COW-shared after fork
     import numpy  # noqa: F401

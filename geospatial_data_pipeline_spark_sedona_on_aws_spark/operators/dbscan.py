@@ -54,7 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.io import read_parquet_cached as _rpc
+from ..sources.io import _scan_key, read_parquet_cached as _rpc
 from pyspark.sql import functions as F
 
 from .graph import connected_components
@@ -65,34 +65,25 @@ MIN_PTS = 5
 #: points per blob — fixes per-component size at every SF.
 BLOB = 25
 
-#: (sf_dir, mtime, size) -> events row count (parquet footer metadata);
-#: memoized so the stats trio's repeated calls pay the count job once per
-#: directory. Keyed on the file identity, not just the path, so a
-#: regenerated fixture in the same driver session invalidates naturally
-#: (r10 advice item 1).
+#: `sources.io._scan_key` (application id, path, mtime_ns, size) -> events
+#: row count (parquet footer metadata); memoized so the stats trio's
+#: repeated calls pay the count job once per file and session. Keyed on
+#: the file identity, not just the path, so a regenerated fixture in the
+#: same driver session invalidates naturally (r10 advice item 1); a path
+#: that cannot be stat-ed is counted every time.
 _N_CACHE: dict = {}
-
-
-def _events_cache_key(sf_dir: str) -> tuple:
-    import os
-
-    path = f"{sf_dir}/events.parquet"
-    try:
-        st = os.stat(path)
-        return (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        # directory-shaped parquet or remote path: fall back to the key
-        # that always works; regeneration then needs a new sf_dir
-        return (sf_dir, 0, 0)
 
 
 def events_count(spark: SparkSession, sf_dir: str) -> int:
     """Memoized row count of events.parquet (footer metadata, exact)."""
-    key = _events_cache_key(sf_dir)
-    if key not in _N_CACHE:
-        _N_CACHE[key] = spark.read.parquet(
-            f"{sf_dir}/events.parquet").count()
-    return _N_CACHE[key]
+    path = f"{sf_dir}/events.parquet"
+    key = _scan_key(spark, path)
+    n = _N_CACHE.get(key)
+    if n is None:
+        n = spark.read.parquet(path).count()
+        if key is not None:
+            _N_CACHE[key] = n
+    return n
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:

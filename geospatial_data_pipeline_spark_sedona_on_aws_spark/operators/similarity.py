@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from ..sources.io import read_parquet_cached as _rpc
+from ..sources.io import _scan_key, read_parquet_cached as _rpc
 from pyspark.sql import functions as F
 
 TOPK = 10
@@ -60,26 +60,23 @@ LSH_PLANES_SQL = ("CASE " + " ".join(
     for p in range(LSH_MIN_PLANES, LSH_MAX_PLANES)
 ) + f" ELSE {LSH_MAX_PLANES} END")
 
-#: (sf_dir, mtime, size) -> embeddings row count; memoized like
+#: `sources.io._scan_key` -> embeddings row count; memoized like
 #: operators/dbscan.py's events_count so repeated plan builds pay the
-#: (parquet-footer metadata) count job once per directory, and keyed on
-#: file identity so a regenerated fixture invalidates naturally.
+#: (parquet-footer metadata) count job once per file and session, and
+#: keyed on file identity so a regenerated fixture invalidates naturally.
 _EMB_N_CACHE: dict = {}
 
 
 def emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Memoized row count of embeddings.parquet (footer metadata, exact)."""
-    import os
-
     path = f"{sf_dir}/embeddings.parquet"
-    try:
-        st = os.stat(path)
-        key = (sf_dir, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (sf_dir, 0, 0)
-    if key not in _EMB_N_CACHE:
-        _EMB_N_CACHE[key] = spark.read.parquet(path).count()
-    return _EMB_N_CACHE[key]
+    key = _scan_key(spark, path)
+    n = _EMB_N_CACHE.get(key)
+    if n is None:
+        n = spark.read.parquet(path).count()
+        if key is not None:
+            _EMB_N_CACHE[key] = n
+    return n
 
 
 #: spread floor: at least this many embedding rows per task. A tiny

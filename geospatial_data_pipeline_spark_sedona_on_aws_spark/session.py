@@ -75,7 +75,11 @@ def get_spark(app_name: str = "geospatial-engine", shuffle_partitions: int | Non
         # ~220 ms to ~3.5 ms of Python CPU: on CPython < 3.13 each task's
         # importlib.invalidate_caches() made every zipimporter re-read
         # pyspark.zip, and each task's gc.collect() walked the
-        # pre-imported heap (details in daemon_preload).
+        # pre-imported heap. Every session starts a new daemon, which
+        # imports pyspark and py4j from the interpreter's installed,
+        # bytecode-cached copy when it is the release in Spark's zips:
+        # compiling them from pyspark.zip took ~0.8 s of each start
+        # (details in daemon_preload).
         .config("spark.python.daemon.module",
                 "geospatial_data_pipeline_spark_sedona_on_aws_spark"
                 ".daemon_preload")

@@ -10,9 +10,10 @@ driver-verified green row (candidates for displacement next round).
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def family(name: str) -> str:

@@ -35,10 +35,11 @@ Usage: python scripts/plan_audit.py [sf_dir] > PLAN_AUDIT_r6.md
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators import dbscan as DB
+from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators import similarity as SIM
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators import spatial_join as SJ
 
 from tests.conftest import SF_SMOKE
@@ -32,6 +35,20 @@ def test_events_count_cache_keyed_on_file_identity(spark, tmp_path):
     os.replace(sf / "tmp_half" / part, sf / "events.parquet")
     n2 = DB.events_count(spark, str(sf))
     assert n2 == n1 // 2, (n1, n2)
+
+
+@pytest.mark.parametrize("count, table", [
+    (DB.events_count, "events"), (SIM.emb_count, "embeddings")])
+def test_row_count_memos_skip_unstatable_paths(spark, tmp_path, count, table):
+    """A `file://` URI is read by Spark but cannot be stat-ed, so its file
+    identity is unknown: the row-count memos must count it again rather
+    than keep the first answer for the life of the process."""
+    sf_dir = tmp_path.as_uri()
+    path = f"{sf_dir}/{table}.parquet"
+    spark.range(7).write.mode("overwrite").parquet(path)
+    assert count(spark, sf_dir) == 7
+    spark.range(3).write.mode("overwrite").parquet(path)
+    assert count(spark, sf_dir) == 3
 
 
 def test_cell_join_seam_not_retained_by_default(spark):

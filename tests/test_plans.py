@@ -415,9 +415,11 @@ def test_plan_audit_flag_detectors():
     """r5 verdict item 6: the audit's red-flag set must (a) stay empty on
     the benign shapes the registry actually produces and (b) fire on the
     unbounded shapes it exists to catch."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "scripts"))
     import plan_audit as PA
 
     benign_bnl = "\n".join([
