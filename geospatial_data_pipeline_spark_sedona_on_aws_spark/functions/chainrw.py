@@ -25,14 +25,23 @@ Spark-first note: chained Python UDFs in one projection are collapsed by
 Catalyst into a single ArrowEvalPython node, so the WKB bytes between
 stages never hit an exchange — the rewrite changes serialization format
 and kernel, not the shuffle structure (plan-audited).
+
+`select_st` then runs the projection fuser (see its docstring): all the
+scalar pandas UDF calls of one projection become one struct UDF that
+evaluates each distinct subtree once.
 """
 
 from __future__ import annotations
 
+import functools
 import re
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StructField, StructType
+from pyspark.util import PythonEvalType
 
 # ---------------------------------------------------------------- specs
 #
@@ -101,10 +110,10 @@ class _Expr:
         return None
 
 
-def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
-    """Parse s[i:] into an _Expr, stopping (exclusive) at an unbalanced
-    ')' or at a top-level ',' when stop_at_paren. Returns (expr_items,
-    next_index, stopped_char)."""
+def _parse(s: str, i: int = 0, stops: str = ""):
+    """Parse s[i:] into an _Expr, stopping (exclusive) at a top-level
+    character in `stops` (call arguments stop at ',' and ')', a bare
+    group at ')'). Returns (expr_items, next_index, stopped_char)."""
     items: list = []
     buf: list = []
     n = len(s)
@@ -128,8 +137,23 @@ def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
             buf.append(s[i:j + 1])
             i = j + 1
             continue
-        if stop_at_paren and c in "),":
+        if c in stops:
             break
+        if c == "(":
+            # bare group (not a call): its content parses recursively, so
+            # calls inside stay visible and its ')' cannot close the
+            # enclosing call
+            sub, i, stopped = _parse(s, i + 1, ")")
+            for x in ["(", *sub, stopped]:
+                if isinstance(x, str):
+                    buf.append(x)
+                    continue
+                if buf:
+                    items.append("".join(buf))
+                    buf = []
+                items.append(x)
+            i += len(stopped)
+            continue
         m = _IDENT.match(s, i)
         if m:
             name = m.group(0)
@@ -142,7 +166,7 @@ def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
                 args = []
                 k += 1
                 while True:
-                    sub, k, stopped = _parse(s, k, stop_at_paren=True)
+                    sub, k, stopped = _parse(s, k, "),")
                     args.append(_Expr(sub))
                     if stopped == ",":
                         k += 1
@@ -167,9 +191,7 @@ def _parse(s: str, i: int = 0, stop_at_paren: bool = False):
         i += 1
     if buf:
         items.append("".join(buf))
-    if stop_at_paren:
-        return items, i, (s[i] if i < n else "")
-    return items, i, ""
+    return items, i, (s[i] if i < n else "")
 
 
 def _producer(call: _Call):
@@ -263,13 +285,7 @@ def _emit_expr(expr: _Expr) -> str:
 def rewrite(expr: str) -> str:
     """Rewrite one SQL expression string: every maximal nested
     registered-ST_ composition (chain of >= 2 twin-covered calls) is
-    re-emitted on the WKB carrier; everything else is returned verbatim.
-    SPARK_GRAFT_NO_CHAINRW=1 disables the rewrite (A/B benchmarking and
-    parity probes run the same query text down both paths)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_CHAINRW"):
-        return expr
+    re-emitted on the WKB carrier; everything else is returned verbatim."""
     items, _, _ = _parse(expr)
     return _emit_expr(_Expr(items))
 
@@ -280,11 +296,173 @@ def st_expr(expr: str) -> Column:
     return F.expr(rewrite(expr))
 
 
+# ------------------------------------------------- projection fuser
+
+_FIELD = re.compile(r"\s*\.\s*([A-Za-z_][A-Za-z0-9_]*)")
+_ALIASED = re.compile(r"(?is).*\sAS\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]*`)\s*")
+
+
+@functools.cache
+def _udfs() -> dict:
+    """Lower-cased registered name -> UDF (SQL names are
+    case-insensitive)."""
+    from .spatial import udf_table
+
+    return {name.lower(): fn for name, fn in udf_table().items()}
+
+
+def _resolve(call: _Call, field):
+    """(UDF, canonical field) when `call` names a deterministic scalar
+    pandas UDF and `field` is a field of its struct result (or None for
+    a non-struct result); else None."""
+    fn = _udfs().get(call.name.lower())
+    if (fn is None or fn.evalType != PythonEvalType.SQL_SCALAR_PANDAS_UDF
+            or not fn.deterministic):
+        return None
+    if not isinstance(fn.returnType, StructType):
+        return (fn, None) if field is None else None
+    for name in fn.returnType.fieldNames():
+        if field is not None and name.lower() == field.lower():
+            return fn, name
+    return None
+
+
+def _call_field(expr: _Expr):
+    """(call, field) if expr is exactly one call, optionally followed by
+    a `.field` access; else None."""
+    items = [x for x in expr.items if not (isinstance(x, str)
+                                          and not x.strip())]
+    if not items or not isinstance(items[0], _Call) or len(items) > 2:
+        return None
+    if len(items) == 1:
+        return items[0], None
+    m = isinstance(items[1], str) and _FIELD.fullmatch(items[1].rstrip())
+    return (items[0], m.group(1)) if m else None
+
+
+def _has_udf(expr: _Expr) -> bool:
+    return any(isinstance(x, _Call) and (x.name.lower() in _udfs()
+                                         or any(map(_has_udf, x.args)))
+               for x in expr.items)
+
+
+def _fusable(call: _Call, field) -> bool:
+    """Every argument is a fusable call or UDF-free text."""
+    return _resolve(call, field) is not None and all(
+        ((cf := _call_field(a)) and _fusable(*cf)) or not _has_udf(a)
+        for a in call.args)
+
+
+class _Fusion:
+    """One projection's struct UDF under construction: its arguments are
+    the deduplicated UDF-free leaf expressions, its body runs each
+    distinct UDF node once — nodes keyed on (function object, argument
+    refs), so aliases of one function share a node — and its fields are
+    the roots of the fused subtrees."""
+
+    def __init__(self):
+        self.leaves: dict = {}     # leaf text -> argument index
+        self.nodes: dict = {}      # (fn, refs) -> node index (dep order)
+        self.outs: dict = {}       # ref -> field index
+        self.calls = 0
+
+    def _ref(self, call: _Call, field) -> tuple:
+        fn, field = _resolve(call, field)
+        self.calls += 1
+        refs = []
+        for a in call.args:
+            cf = _call_field(a)
+            if cf and _resolve(*cf):
+                refs.append(self._ref(*cf))
+            else:
+                text = _emit_expr(a).strip()
+                refs.append(("c", self.leaves.setdefault(
+                    text, len(self.leaves))))
+        node = self.nodes.setdefault((fn, tuple(refs)), len(self.nodes))
+        return ("v", node, field)
+
+    def _field(self, ref) -> str:
+        return f"__fz.f{self.outs.setdefault(ref, len(self.outs))}"
+
+    def emit(self, expr: _Expr) -> str:
+        """expr with each maximal fusable subtree replaced by its field."""
+        out, items, i = [], expr.items, 0
+        while i < len(items):
+            x = items[i]
+            i += 1
+            if isinstance(x, str):
+                out.append(x)
+                continue
+            tail = items[i] if i < len(items) else None
+            m = isinstance(tail, str) and _FIELD.match(tail)
+            if m and _fusable(x, m.group(1)):
+                out.append(self._field(self._ref(x, m.group(1))))
+                out.append(tail[m.end():])
+                i += 1
+            elif _fusable(x, None):
+                out.append(self._field(self._ref(x, None)))
+            else:
+                out.append(f"{x.name}("
+                           + ",".join(self.emit(a) for a in x.args) + ")")
+        return "".join(out)
+
+    def udf(self):
+        """The struct pandas_udf; call it on the leaves, in order."""
+        steps, outs = list(self.nodes), list(self.outs)
+
+        def dtype(ref):
+            rt = steps[ref[1]][0].returnType
+            return rt if ref[2] is None else rt[ref[2]].dataType
+
+        schema = StructType([StructField(f"f{k}", dtype(r))
+                             for k, r in enumerate(outs)])
+
+        def fused(*cols: pd.Series) -> pd.DataFrame:
+            vals: list = []
+
+            def get(ref):
+                if ref[0] == "c":
+                    return cols[ref[1]]
+                v = vals[ref[1]]
+                return v if ref[2] is None else v[ref[2]]
+
+            for fn, refs in steps:
+                vals.append(fn.func(*map(get, refs)))
+            return pd.DataFrame({f"f{k}": get(r)
+                                 for k, r in enumerate(outs)})
+
+        return pandas_udf(fused, schema)
+
+
 def select_st(df: DataFrame, *exprs: str) -> DataFrame:
-    """df.selectExpr with the chain rewrite applied to every expression.
-    Registration (text + _B twins) must already have happened
-    (functions.spatial.register_spatial_functions)."""
-    return df.select(*[st_expr(e) for e in exprs])
+    """df.selectExpr with the chain rewrite applied to every expression,
+    then the projection fuser.
+
+    Spark evaluates Python UDFs badly when they share work: EvalPythonExec
+    runs one chain per OUTPUT column, so a UDF subtree read by two outputs
+    is computed twice, and a UDF with more than one argument starts a new
+    ArrowEvalPython frontier (an extra Arrow round trip). The fuser
+    collects every maximal subtree of scalar pandas UDF calls across the
+    projection (a UDF nested inside a JVM expression is a boundary: it is
+    fused on its own, the JVM expression and its consumer stay) and runs
+    them as ONE struct pandas_udf whose arguments are the deduplicated
+    UDF-free leaf expressions; its body calls each distinct subtree's
+    registered function once, in dependency order, and the outputs read
+    its fields (`__fz.f0`...). A projection with fewer than two UDF calls
+    is a plain select. Registration (text + _B twins) must already have
+    happened (functions.spatial.register_spatial_functions)."""
+    fz = _Fusion()
+    texts = [rewrite(e) for e in exprs]
+    fused = [fz.emit(_Expr(_parse(t)[0])) for t in texts]
+    if fz.calls < 2:
+        return df.select(*map(F.expr, texts))
+    # an unaliased output keeps the name Spark gives its unfused spelling
+    cols = [F.expr(f) if f == t or _ALIASED.fullmatch(t)
+            else F.expr(f).alias(df.select(F.expr(t)).columns[0])
+            for t, f in zip(texts, fused)]
+    staged = df.select("*", fz.udf()(*map(F.expr, fz.leaves)).alias("__fz"))
+    out = staged.select(*cols)
+    return out.drop("__fz") if "__fz" in out.columns else out
 
 
 def sql_st(spark: SparkSession, sql: str) -> DataFrame:
@@ -396,7 +574,7 @@ def salt_union_aggr_sql(sql: str, buckets: int = UNION_AGGR_SALT_BUCKETS
     overhead is one extra exchange of <= buckets x groups narrow partial
     rows — negligible at every size — so the rewrite is unconditional for
     statements it recognizes (strictly safer than thresholding on a
-    guess). SPARK_GRAFT_NO_UNION_AGGR_SALT=1 disables (A/B probes).
+    guess).
 
     Strictly scoped: the statement must be a single depth-0
     SELECT ... FROM ... GROUP BY ... block (no HAVING / ORDER BY / LIMIT /
@@ -405,10 +583,6 @@ def salt_union_aggr_sql(sql: str, buckets: int = UNION_AGGR_SALT_BUCKETS
     expression over >= 1 ST_Union_Aggr call and no other aggregate.
     Anything else is returned verbatim (the plain bounded-hold UDAF path
     still applies)."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_NO_UNION_AGGR_SALT"):
-        return sql
     if "st_union_aggr" not in sql.lower():
         return sql
     stmt = sql.rstrip().rstrip(";")

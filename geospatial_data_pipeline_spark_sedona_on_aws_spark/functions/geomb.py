@@ -45,8 +45,6 @@ from pyspark.sql.types import (
     DoubleType,
     LongType,
     StringType,
-    StructField,
-    StructType,
 )
 
 from ..kernel import geom as G
@@ -264,28 +262,6 @@ def st_npoints_b(b: pd.Series) -> pd.Series:
     return _npoints_b_series(b)
 
 
-#: explicit type objects, not DDL strings: the DDL parse needs an active
-#: SparkContext, which the executor-side module import does not have
-_AREA_NPTS_T = StructType([StructField("area", DoubleType()),
-                           StructField("npts", LongType())])
-_FWDRT_T = StructType([StructField("fwd", ArrayType(DoubleType())),
-                       StructField("rt", ArrayType(DoubleType()))])
-
-
-@pandas_udf(_AREA_NPTS_T)
-def st_area_npoints_b(b: pd.Series) -> pd.DataFrame:
-    """Fused ST_Area_B + ST_NPoints_B (r13 optimization round, guide
-    §4): EvalPythonExec builds one chained-function pipeline per OUTPUT
-    udf column, so a geometry chain consumed by two measures is
-    recomputed per measure AND each chained-UDF frontier costs a full
-    Arrow round trip. Fusing the two measures into one struct keeps the
-    whole upstream chain single-consumer — one ArrowEvalPython node, one
-    evaluation. Bit-identical to the composition by construction: the
-    same series kernels run in the same order."""
-    return pd.DataFrame({"area": _area_b_series(b),
-                         "npts": _npoints_b_series(b)})
-
-
 @pandas_udf(DoubleType())
 def st_length_b(b: pd.Series) -> pd.Series:
     p = PK.pack_wkb(_tolist(b))
@@ -482,35 +458,6 @@ def st_transform_b(b: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
     return _transform_b_series(b, src, dst)
 
 
-@pandas_udf(BinaryType())
-def st_transform_roundtrip_b(b: pd.Series, src: pd.Series,
-                             dst: pd.Series) -> pd.Series:
-    """Fused src→dst→src double transform (r13 optimization round): the
-    nested two-call spelling splits into two ArrowEvalPython frontiers
-    (two Arrow round trips); fused it is one single-consumer link in the
-    chain. Literal composition of _transform_b_series — bit-identical to
-    ST_Transform_B(ST_Transform_B(g, src, dst), dst, src)."""
-    return _transform_b_series(_transform_b_series(b, src, dst), dst, src)
-
-
-@pandas_udf(_FWDRT_T)
-def st_transform_fwdrt_coords_b(wkt: pd.Series, src: pd.Series,
-                                dst: pd.Series) -> pd.DataFrame:
-    """Fused WKT-parse → forward + roundtrip transform coordinates (r13
-    optimization round): fwd = ST_Coords_B(ST_Transform_B(g, src, dst)),
-    rt = ST_Coords_B(ST_Transform_B(fwd_geom, dst, src)) — in the
-    unfused spelling the forward transform is consumed twice (its own
-    coords AND the return leg), so EvalPythonExec evaluated it once per
-    consumer across three ArrowEvalPython frontiers; a pandas UDF chains
-    into its consumer's node only as the sole argument, so the parse was
-    a fourth. Fused: one node, every kernel once. Literal composition of
-    the series functions (pinned in tests/test_binary_carrier.py)."""
-    f = _transform_b_series(_from_wkt_full_series(wkt), src, dst)
-    r = _transform_b_series(f, dst, src)
-    return pd.DataFrame({"fwd": _coords_b_series(f),
-                         "rt": _coords_b_series(r)})
-
-
 # ------------------------------------------------------------ buffer
 
 def _buffer_round_b_scalar(raw: bytes, d: float, q: int) -> bytes:
@@ -586,35 +533,6 @@ def _bufferround_b_series(b: pd.Series, d: pd.Series,
 @pandas_udf(BinaryType())
 def st_bufferround_b(b: pd.Series, d: pd.Series, q: pd.Series) -> pd.Series:
     return _bufferround_b_series(b, d, q)
-
-
-@pandas_udf(_AREA_NPTS_T)
-def st_buffer_round_stats_b(wkt: pd.Series, d: pd.Series,
-                            q: pd.Series) -> pd.DataFrame:
-    """Fused WKT-parse → round buffer → Area+NPoints (r13 optimization
-    round, guide §4): a pandas UDF chains into its consumer's
-    ArrowEvalPython node only when it is the consumer's SOLE argument,
-    so ST_BufferRound_B(ST_GeomFromWKT_B(s), d, q) split into two Arrow
-    frontiers and the two-measure spelling re-evaluated the buffer per
-    measure. One struct-returning fusion = one node, every kernel once.
-    Literal composition of the series kernels — bit-identical to the
-    unfused spelling (pinned in tests/test_binary_carrier.py)."""
-    buf = _bufferround_b_series(_from_wkt_full_series(wkt), d, q)
-    return pd.DataFrame({"area": _area_b_series(buf),
-                         "npts": _npoints_b_series(buf)})
-
-
-@pandas_udf(_AREA_NPTS_T)
-def st_transform_roundtrip_stats_b(wkt: pd.Series, src: pd.Series,
-                                   dst: pd.Series) -> pd.DataFrame:
-    """Fused WKT-parse → src→dst→src double transform → Area+NPoints
-    (r13 optimization round): same single-node rationale as
-    st_buffer_round_stats_b. Literal composition of the series
-    kernels."""
-    g = _from_wkt_full_series(wkt)
-    rt = _transform_b_series(_transform_b_series(g, src, dst), dst, src)
-    return pd.DataFrame({"area": _area_b_series(rt),
-                         "npts": _npoints_b_series(rt)})
 
 
 # ------------------------------------------------- predicates (r8 late)
@@ -760,11 +678,6 @@ REGISTRY_B = {
     "ST_Length_B": st_length_b,
     "ST_Coords_B": st_coords_b,
     "ST_Transform_B": st_transform_b,
-    "ST_AreaNPoints_B": st_area_npoints_b,
-    "ST_TransformRoundtrip_B": st_transform_roundtrip_b,
-    "ST_TransformFwdRtCoords_B": st_transform_fwdrt_coords_b,
-    "ST_BufferRoundStats_B": st_buffer_round_stats_b,
-    "ST_TransformRoundtripStats_B": st_transform_roundtrip_stats_b,
     "ST_BufferRound_B": st_bufferround_b,
     "ST_Centroid_B": st_centroid_b,
     "ST_Envelope_B": st_envelope_b,

@@ -19,6 +19,8 @@ the hot pipeline path additionally uses the fused dissolve-clip-area operator
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
@@ -3611,130 +3613,6 @@ def st_z(s: pd.Series) -> pd.Series:
     return LN._xy_accessor(s, 2, lambda w: _st_xy(w, 2)).astype("float64")
 
 
-#: explicit type objects (DDL strings would need an active SparkContext
-#: at executor-side module import)
-_XY_T = StructType([StructField("x", DoubleType()),
-                    StructField("y", DoubleType())])
-_END_XY_LEN_T = StructType([StructField("x", DoubleType()),
-                            StructField("y", DoubleType()),
-                            StructField("len", DoubleType())])
-_NGEOMS_LEN_T = StructType([StructField("n", LongType()),
-                            StructField("len", DoubleType())])
-
-
-@pandas_udf(_XY_T)
-def st_xy(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_X + ST_Y as one struct (r13 optimization round):
-    EvalPythonExec builds one chained pipeline per OUTPUT udf, so a
-    derived geometry consumed by both coordinates — ST_X(f(g)) AND
-    ST_Y(f(g)) — evaluates f twice; ST_XY(f(g)) is ONE top-level udf
-    (identical calls dedupe in ExtractPythonUDFs), so f runs once.
-    Literal composition of the st_x/st_y lanes — value-identical."""
-    return pd.DataFrame({
-        "x": LN.st_x(s, lambda w: _st_xy(w, 0)).astype("float64"),
-        "y": LN.st_y(s, lambda w: _st_xy(w, 1)).astype("float64"),
-    })
-
-
-@pandas_udf(_END_XY_LEN_T)
-def st_end_xy_len(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_X/ST_Y(ST_EndPoint(line)) + ST_Length(line) — the
-    shortest/longest-line consumer pair (see st_xy); the line argument
-    is evaluated once instead of once per measure. Literal composition
-    of the endpoint / coordinate / length lanes."""
-    ep = LO.terminal_point(s, True, lambda g: _terminal_point(g, True))
-    return pd.DataFrame({
-        "x": LN.st_x(ep, lambda w: _st_xy(w, 0)).astype("float64"),
-        "y": LN.st_y(ep, lambda w: _st_xy(w, 1)).astype("float64"),
-        "len": LO.length(s, _length).astype("float64"),
-    })
-
-
-@pandas_udf(_NGEOMS_LEN_T)
-def st_numgeoms_length(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_NumGeometries + ST_Length of the same geometry (the
-    ST_LineMerge consumer pair; see st_xy). Literal composition."""
-    return pd.DataFrame({
-        "n": LO.num_geometries(s, _num_geometries).astype("Int64"),
-        "len": LO.length(s, _length).astype("float64"),
-    })
-
-
-_XYZ_T = StructType([StructField("x", DoubleType()),
-                     StructField("y", DoubleType()),
-                     StructField("z", DoubleType())])
-_NP_LEN_T = StructType([StructField("np", LongType()),
-                        StructField("len", DoubleType())])
-
-
-@pandas_udf(_XYZ_T)
-def st_xyz(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_X + ST_Y + ST_Z as one struct (r14, the st_xy
-    rationale): a derived geometry consumed by several coordinate
-    accessors — e.g. ST_Y(ST_RotateX(g, θ)) AND ST_Z(ST_RotateX(g, θ))
-    — re-evaluates the rotation once per accessor chain; one struct
-    consumer evaluates it once. Literal composition of the three
-    accessor lanes."""
-    return pd.DataFrame({
-        "x": LN.st_x(s, lambda w: _st_xy(w, 0)).astype("float64"),
-        "y": LN.st_y(s, lambda w: _st_xy(w, 1)).astype("float64"),
-        "z": LN._xy_accessor(s, 2, lambda w: _st_xy(w, 2)).astype("float64"),
-    })
-
-
-@pandas_udf(_NP_LEN_T)
-def st_npoints_length(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_NPoints + ST_Length of the same geometry (r14): the
-    SimplifyVW / AddPoint / RemovePoint consumers each read both
-    measures of one derived line — fusing keeps the derivation chain
-    single-consumer, evaluated once. Literal composition of the
-    st_npoints / st_length lanes."""
-    return pd.DataFrame({
-        "np": LO.npoints(s, _npoints).astype("Int64"),
-        "len": LO.length(s, _length).astype("float64"),
-    })
-
-_APRM_T = StructType([StructField("ap_np", LongType()),
-                      StructField("ap_len", DoubleType()),
-                      StructField("rp_np", LongType()),
-                      StructField("rp_len", DoubleType())])
-_SPLIT_T = StructType([StructField("n", LongType()),
-                       StructField("len0", DoubleType())])
-
-
-@pandas_udf(_APRM_T)
-def st_addrm_stats(line: pd.Series, pt: pd.Series,
-                   pos: pd.Series) -> pd.DataFrame:
-    """Fused vertex-surgery round trip (r14, the st_xy rationale):
-    NPoints + Length of ST_AddPoint(line, pt, pos) AND of
-    ST_RemovePoint(that, pos) — the four separate consumer chains
-    re-ran AddPoint four times and RemovePoint twice per row. Literal
-    composition of the add/remove/npoints/length lanes; AddPoint and
-    RemovePoint each run exactly once."""
-    ap = LO.add_point(line, pt, pos, _add_point)
-    rp = LO.remove_point(ap, pos, _remove_point)
-    return pd.DataFrame({
-        "ap_np": LO.npoints(ap, _npoints).astype("Int64"),
-        "ap_len": LO.length(ap, _length).astype("float64"),
-        "rp_np": LO.npoints(rp, _npoints).astype("Int64"),
-        "rp_len": LO.length(rp, _length).astype("float64"),
-    })
-
-
-@pandas_udf(_SPLIT_T)
-def st_splitstats(a: pd.Series, b: pd.Series) -> pd.DataFrame:
-    """Fused ST_NumGeometries(ST_Split(a, b)) + ST_Length(ST_GeometryN(
-    ST_Split(a, b), 0)) (r14): the two consumer chains re-ran the split
-    per output column. Literal composition of the split / geometry_n /
-    num_geometries / length lanes."""
-    sp = LO.split(a, b, _split)
-    g0 = LO.geometry_n(sp, pd.Series(0, index=sp.index), _geometry_n)
-    return pd.DataFrame({
-        "n": LO.num_geometries(sp, _num_geometries).astype("Int64"),
-        "len0": LO.length(g0, _length).astype("float64"),
-    })
-
-
 @pandas_udf(StringType())
 def st_force2d(s: pd.Series) -> pd.Series:
     return s.map(_force_2d, na_action="ignore")
@@ -4634,13 +4512,6 @@ _REGISTRY = {
     "ST_X": st_x,
     "ST_Y": st_y,
     "ST_Z": st_z,
-    "ST_XY": st_xy,                        # fused X+Y struct (r13)
-    "ST_EndXYLen": st_end_xy_len,          # fused endpoint-XY + length
-    "ST_NumGeomsLength": st_numgeoms_length,  # fused count + length
-    "ST_XYZ": st_xyz,                      # fused X+Y+Z struct (r14)
-    "ST_NPointsLength": st_npoints_length,  # fused count + length (r14)
-    "ST_AddRmStats": st_addrm_stats,       # fused vertex surgery (r14)
-    "ST_SplitStats": st_splitstats,        # fused split measures (r14)
     "ST_DistanceSphere": st_distancesphere,
     "ST_DistanceSpheroid": st_distancespheroid,
     "ST_AreaSpheroid": st_areaspheroid,
@@ -4768,6 +4639,25 @@ _REGISTRY = {
     "ST_SimplifyPreserveTopology": st_simplify,
 }
 
+@functools.cache
+def udf_table() -> dict:
+    """Every SQL name the engine registers -> its UDF, in registration
+    order (on a repeated name the later entry wins, as in Spark's
+    registry). register_spatial_functions registers exactly this table
+    and chainrw's projection fuser resolves names through it, so a name
+    that resolves in SQL is always one the fuser can see."""
+    from . import geomb, grid, spatial_ext
+
+    return {
+        **_REGISTRY, **geomb.REGISTRY_B, **spatial_ext.REGISTRY_EXT,
+        **grid.REGISTRY_GRID,
+        # singular/plural + dimension-tag aliases (PostGIS registers both)
+        "ST_NumInteriorRing": st_numinteriorrings,
+        "ST_Force3DZ": st_force3d,
+        "ST_CoordDim": st_ndims,  # PostGIS alias of NDims
+    }
+
+
 def register_spatial_functions(spark: SparkSession) -> None:
     """Name-parity registration so F.expr("ST_Area(g)") etc. resolve —
     the engine's stand-in for SedonaSqlExtensions
@@ -4779,18 +4669,6 @@ def register_spatial_functions(spark: SparkSession) -> None:
         # every registry query calls this, so make repeat calls free
         # (a fresh SparkSession is a fresh object — it re-registers)
         return
-    for name, fn in _REGISTRY.items():
+    for name, fn in udf_table().items():
         spark.udf.register(name, fn)
-    from . import geomb, grid, spatial_ext
-
-    for name, fn in geomb.REGISTRY_B.items():
-        spark.udf.register(name, fn)
-    for name, fn in spatial_ext.REGISTRY_EXT.items():
-        spark.udf.register(name, fn)
-    for name, fn in grid.REGISTRY_GRID.items():
-        spark.udf.register(name, fn)
-    # singular/plural + dimension-tag aliases (PostGIS registers both)
-    spark.udf.register("ST_NumInteriorRing", st_numinteriorrings)
-    spark.udf.register("ST_Force3DZ", st_force3d)
-    spark.udf.register("ST_CoordDim", st_ndims)  # PostGIS alias of NDims
     spark._spark_graft_st_registered = True

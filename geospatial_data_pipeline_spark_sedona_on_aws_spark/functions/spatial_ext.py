@@ -682,115 +682,6 @@ def st_maximuminscribedcircle(s: pd.Series) -> pd.DataFrame:
     return out
 
 
-_MICS_T = StructType([
-    StructField("radius", DoubleType()),
-    StructField("cx", DoubleType()),
-    StructField("cy", DoubleType()),
-    StructField("nx", DoubleType()),
-    StructField("ny", DoubleType()),
-])
-
-
-@pandas_udf(_MICS_T)
-def st_micstats(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_MaximumInscribedCircle + the four coordinate reads of
-    its center/nearest points (r14, the st_xy rationale): the
-    clearance batch consumed the MIC struct through FIVE separate
-    chains, re-evaluating the solver per output column. Literal
-    composition: the same MIC lane/scalar rows, then the same st_x/st_y
-    accessor lanes over the emitted POINT text."""
-    from .spatial import _st_xy
-
-    mic = LN.maximum_inscribed_circle(s, _mic_rows)
-    center, nearest = mic["center"], mic["nearest"]
-    return pd.DataFrame({
-        "radius": pd.to_numeric(mic["radius"], errors="coerce"),
-        "cx": LN.st_x(center, lambda w: _st_xy(w, 0)).astype("float64"),
-        "cy": LN.st_y(center, lambda w: _st_xy(w, 1)).astype("float64"),
-        "nx": LN.st_x(nearest, lambda w: _st_xy(w, 0)).astype("float64"),
-        "ny": LN.st_y(nearest, lambda w: _st_xy(w, 1)).astype("float64"),
-    })
-
-
-_MCLS_T = StructType([
-    StructField("clear", DoubleType()),
-    StructField("len", DoubleType()),
-    StructField("wkt", StringType()),
-])
-
-
-@pandas_udf(_MCLS_T)
-def st_minclearstats(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_MinimumClearance + ST_MinimumClearanceLine +
-    ST_Length(line) (r14): the three consumers each re-ran the
-    clearance pair scan per output chain (the lru memo amortized the
-    scan, not the parse/serialize per chain). Literal composition of
-    the clearance lanes and the length lane over the emitted line."""
-    from . import lanes_ops as LO
-    from .spatial import _length
-
-    wkt = LN.minimum_clearance_line(s, _minimum_clearance_line)
-    return pd.DataFrame({
-        "clear": LN.minimum_clearance(s, _minimum_clearance)
-        .astype("float64"),
-        "len": LO.length(wkt, _length).astype("float64"),
-        "wkt": wkt,
-    })
-
-_FCW_T = StructType([
-    StructField("wkt", StringType()),
-    StructField("ccw_rt", StringType()),
-    StructField("is_cw", BooleanType()),
-    StructField("is_ccw", BooleanType()),
-    StructField("area", DoubleType()),
-])
-
-
-@pandas_udf(_FCW_T)
-def st_forcecwstats(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_ForcePolygonCW + its five consumers (r14, the st_xy
-    rationale): the orientation batch read the CW-forced polygon through
-    SIX separate chains (AsText, AsText∘ForceRHR — the same value by
-    the PostGIS alias, AsText∘ForcePolygonCCW, IsPolygonCW, IsPolygonCCW,
-    Area), re-running the orientation pass per output column. Literal
-    composition of the same lanes over ONE cw series; ST_AsText is
-    identity on the canonical WKT carrier."""
-    from . import lanes_ops as LO
-    from .spatial import _area
-
-    cw = LN.force_polygon_cw(
-        s, lambda w: _force_orientation(w, exterior_ccw=False))
-    return pd.DataFrame({
-        "wkt": cw,
-        "ccw_rt": LN.force_polygon_ccw(
-            cw, lambda w: _force_orientation(w, exterior_ccw=True)),
-        "is_cw": LN.is_polygon_cw(
-            cw, lambda w: _is_polygon_oriented(w, exterior_ccw=False)
-        ).astype("boolean"),
-        "is_ccw": LN.is_polygon_ccw(
-            cw, lambda w: _is_polygon_oriented(w, exterior_ccw=True)
-        ).astype("boolean"),
-        "area": LO.area(cw, _area).astype("float64"),
-    })
-
-
-_ZMZ_T = StructType([StructField("zm", LongType()),
-                     StructField("z", DoubleType())])
-
-
-@pandas_udf(_ZMZ_T)
-def st_zmflagz(s: pd.Series) -> pd.DataFrame:
-    """Fused ST_Zmflag + ST_Z of the same geometry (r14): the Force3DZ
-    consumer pair re-ran the 3D lift once per accessor chain. Literal
-    composition of the zmflag / z-accessor lanes."""
-    from .spatial import _st_xy
-
-    return pd.DataFrame({
-        "zm": LN.zmflag(s, _zmflag).astype("Int64"),
-        "z": LN._xy_accessor(s, 2, lambda w: _st_xy(w, 2)).astype("float64"),
-    })
-
-
 @pandas_udf(DoubleType())
 def st_3ddistance(a: pd.Series, b: pd.Series) -> pd.Series:
     return LN.distance_3d(a, b, _distance3d).astype("float64")
@@ -878,10 +769,6 @@ REGISTRY_EXT = {
     "ST_MinimumClearance": st_minimumclearance,
     "ST_MinimumClearanceLine": st_minimumclearanceline,
     "ST_MaximumInscribedCircle": st_maximuminscribedcircle,
-    "ST_MICStats": st_micstats,            # fused MIC + coords (r14)
-    "ST_MinClearStats": st_minclearstats,  # fused clearance trio (r14)
-    "ST_ForceCWStats": st_forcecwstats,    # fused CW + consumers (r14)
-    "ST_ZmflagZ": st_zmflagz,              # fused zmflag + Z (r14)
     "ST_3DDistance": st_3ddistance,
     "ST_RotateX": st_rotatex,
     "ST_RotateY": st_rotatey,

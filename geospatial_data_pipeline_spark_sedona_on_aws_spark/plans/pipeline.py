@@ -225,28 +225,19 @@ def st_buffer_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     Semantics are pinned equal to the text-surface twin by
     tests/test_binary_carrier.py (same scalar kernel on fallback rows,
     coordinate-level equality on the fast path)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    # r13 (optimization round): buffer once, measure ONCE — the old
-    # two-measure spelling had EvalPythonExec re-evaluating the shared
-    # __buf chain per measure (one chained pipeline per output UDF) and
-    # paid an extra ArrowEvalPython round trip; ST_AreaNPoints_B is the
-    # literal composition of the two measures as one struct (guide §4),
-    # so the FromWKT → BufferRound → measure chain is single-consumer:
-    # one Python node, every kernel evaluated once. Same values —
-    # oracle unchanged; fused == composed pinned in
-    # tests/test_binary_carrier.py.
-    return lu.select(
+    d = "(1 + property_id % 5) / 4.0"
+    buf = f"ST_BufferRound(land_geometry, {d}, 8)"
+    return chainrw.select_st(
+        lu,
         "property_id",
-        F.expr("CAST((1 + property_id % 5) / 4.0 AS DOUBLE)").alias("d"),
-        F.expr("ST_BufferRoundStats_B(land_geometry,"
-               " (1 + property_id % 5) / 4.0, 8)").alias("__m"),
-    ).select(
-        "property_id", "d",
-        F.expr("CAST(round(__m.area * 100) AS BIGINT)").alias("area_q"),
-        F.expr("__m.npts").alias("n_vertices"),
+        f"CAST({d} AS DOUBLE) AS d",
+        f"CAST(round(ST_Area({buf}) * 100) AS BIGINT) AS area_q",
+        f"ST_NPoints({buf}) AS n_vertices",
     )
 
 def st_name_parity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,21 +521,21 @@ def st_affine_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid closed form), ST_Scale (area × |fx·fy|), ST_SnapToGrid /
     ST_ReducePrecision (off-tie inputs, so both engines' round agree),
     ST_Expand ((w+2d)(h+2d)), ST_Multi (type tag survives a singleton)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    # r14 (VERDICT item 2): the aff_cx/aff_cy pair re-ran
-    # ST_Affine∘ST_Centroid once per coordinate (EvalPythonExec chains
-    # per OUTPUT column) — the r13 fused ST_XY struct evaluates the
-    # affine+centroid chain once. Values and the oracle unchanged.
-    return lu.selectExpr(
+    ctr = ("ST_Centroid(ST_Affine(land_geometry,"
+           " 0D, -1D, 1D, 0D, 0D, 0D))")
+    return chainrw.select_st(
+        lu,
         "property_id",
         "CAST(round(ST_Area(ST_Rotate(land_geometry,"
         " 0.39269908169872414 * (property_id % 8))) * 10000) AS BIGINT)"
         " AS rot_area_q",
-        "ST_XY(ST_Centroid(ST_Affine(land_geometry,"
-        " 0D, -1D, 1D, 0D, 0D, 0D))) AS __ac",
+        f"ST_X({ctr}) AS aff_cx",
+        f"ST_Y({ctr}) AS aff_cy",
         "CAST(round(ST_Area(ST_Scale(land_geometry, 2D, 3D)) * 100)"
         " AS BIGINT) AS scale_area_q",
         "ST_X(ST_SnapToGrid(concat('POINT (', x1 + 0.3125, ' ', y1, ')'),"
@@ -555,10 +546,6 @@ def st_affine_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         " (1 + property_id % 5) / 4.0)) * 100) AS BIGINT) AS exp_area_q",
         "ST_GeometryType(ST_Multi(concat('POINT (', x1, ' ', y1, ')')))"
         " AS multi_type",
-    ).selectExpr(
-        "property_id", "rot_area_q",
-        "__ac.x AS aff_cx", "__ac.y AS aff_cy",
-        "scale_area_q", "snap_x", "rp_x", "exp_area_q", "multi_type",
     )
 
 ST_AFFINE_OPS_ORACLE = f"""
@@ -592,6 +579,7 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_HausdorffDistance of collinear shifted segments (= shift),
     ST_FrechetDistance of antiparallel segments (= diagonal coupling),
     ST_ShortestLine from an outside point (lands on the rect corner)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -601,13 +589,12 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                  " x2 + 2 + x2 - x1, ' ', y1, ')')")
     seg_rev = ("concat('LINESTRING (', x2, ' ', y1 + 3, ', ', x1, ' ',"
                " y1 + 3, ')')")
-    # r13 (optimization round): the ll_x/ll_y and sl_x/sl_len pairs each
-    # consumed the same derived line — EvalPythonExec evaluated
-    # LongestLine/ShortestLine (and the EndPoint behind them) once PER
-    # measure; ST_XY / ST_EndXYLen fuse each pair into one struct so the
-    # line kernels run once. Same values (literal compositions,
-    # oracle-pinned).
-    return lu.selectExpr(
+    ll = ("ST_EndPoint(ST_LongestLine(concat('POINT (', x1 - 1, ' ',"
+          " y1 - 1, ')'), land_geometry))")
+    sl = ("ST_ShortestLine(concat('POINT (', x1 - 3, ' ', y1, ')'),"
+          " land_geometry)")
+    return chainrw.select_st(
+        lu,
         "property_id",
         "ST_Perimeter(land_geometry) AS perim",
         "CAST(round(ST_Length(ST_BoundingDiagonal(land_geometry))"
@@ -618,17 +605,13 @@ def st_measure_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         " AS ang_q",
         "CAST(round(ST_MaxDistance(concat('POINT (', x1 - 1, ' ', y1 - 1,"
         " ')'), land_geometry) * 10000) AS BIGINT) AS md_q",
-        "ST_XY(ST_EndPoint(ST_LongestLine(concat('POINT (', x1 - 1, ' ',"
-        " y1 - 1, ')'), land_geometry))) AS __ll",
+        f"ST_X({ll}) AS ll_x",
+        f"ST_Y({ll}) AS ll_y",
         f"ST_HausdorffDistance({seg_a}, {seg_shift}) AS hd",
         f"CAST(round(ST_FrechetDistance({seg_a}, {seg_rev}) * 10000)"
         " AS BIGINT) AS fd_q",
-        "ST_EndXYLen(ST_ShortestLine(concat('POINT (', x1 - 3, ' ',"
-        " y1, ')'), land_geometry)) AS __sl",
-    ).selectExpr(
-        "property_id", "perim", "diag_q", "ang_q", "md_q",
-        "__ll.x AS ll_x", "__ll.y AS ll_y", "hd", "fd_q",
-        "__sl.x AS sl_x", "__sl.len AS sl_len",
+        f"ST_X(ST_EndPoint({sl})) AS sl_x",
+        f"ST_Length({sl}) AS sl_len",
     )
 
 ST_MEASURE_OPS_ORACLE = f"""
@@ -665,7 +648,7 @@ def st_shape_edit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_CollectionExtract (member count), ST_Simplify (sub-tolerance bump
     collapses to the 2-point segment).
 
-    r13: the batch goes through the chain rewriter (chainrw.select_st),
+    The batch goes through the chain rewriter (chainrw.select_st),
     whose _FUSE rule turns the seg_np spelling into the fused
     ST_SegmentizeNPoints counter — the densified ring (up to thousands
     of vertices per row at sf1.0) is never materialized; the r13
@@ -697,10 +680,8 @@ def st_shape_edit_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ST_IsRing({ring}) AS ring_is_ring",
         f"ST_IsSimple({diag}) AS diag_simple",
         f"ST_IsSimple({bow}) AS bow_simple",
-        # fused X+Y struct: PointOnSurface runs once, not per coordinate
-        # (r13 optimization round; see st_measure_ops)
-        "ST_XY(ST_PointOnSurface(land_geometry)).x AS pos_x",
-        "ST_XY(ST_PointOnSurface(land_geometry)).y AS pos_y",
+        "ST_X(ST_PointOnSurface(land_geometry)) AS pos_x",
+        "ST_Y(ST_PointOnSurface(land_geometry)) AS pos_y",
         "CAST(round(ST_MinimumBoundingRadius(land_geometry) * 10000)"
         " AS BIGINT) AS mbr_q",
         f"ST_X(ST_GeometricMedian({corners})) AS gm_x",
@@ -978,6 +959,7 @@ def st_edit_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     surgery round trip), ST_Snap (vertex snap + segment insertion, the
     JTS two-phase snapper), ST_Split (by interior point — piece count and
     lengths). All closed forms on the bottom edge of each parcel."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -986,31 +968,25 @@ def st_edit_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpt = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1 + 1, ')')"
     mid_on = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1, ')')"
     near = "concat('POINT (', (x1 + x2) / 2.0, ' ', y1 + 0.25, ')')"
-    # r14 (VERDICT item 2): the vertex-surgery round trip re-ran
-    # ST_AddPoint four times and ST_RemovePoint twice per row (one
-    # EvalPythonExec chain per OUTPUT column), and ST_Split twice —
-    # ST_AddRmStats / ST_SplitStats are literal compositions of the
-    # same lanes, each edit evaluated once. Values and the oracle
-    # unchanged.
-    return lu.selectExpr(
+    ap = f"ST_AddPoint({bottom}, {midpt}, 1)"
+    rp = f"ST_RemovePoint({ap}, 1)"
+    split = f"ST_Split({bottom}, {mid_on})"
+    return chainrw.select_st(
+        lu,
         "property_id",
-        f"ST_AddRmStats({bottom}, {midpt}, 1) AS __ar",
+        f"ST_NPoints({ap}) AS ap_np",
+        f"CAST(round(ST_Length({ap}) * 10000) AS BIGINT) AS ap_len_q",
+        f"ST_NPoints({rp}) AS rp_np",
+        f"ST_Length({rp}) AS rp_len",
         f"ST_X(ST_EndPoint(ST_SetPoint({bottom}, -1,"
         " concat('POINT (', x2 + 5, ' ', y1, ')')))) AS sp_x",
         f"ST_X(ST_StartPoint(ST_Snap(concat('LINESTRING (', x1 + 0.25,"
         f" ' ', y1, ', ', x2, ' ', y2, ')'),"
         " concat('POINT (', x1, ' ', y1, ')'), 0.5D))) AS snap_x",
         f"ST_NPoints(ST_Snap({bottom}, {near}, 0.5D)) AS snap_np",
-        f"ST_SplitStats({bottom}, {mid_on}) AS __sp",
-    ).selectExpr(
-        "property_id",
-        "__ar.ap_np AS ap_np",
-        "CAST(round(__ar.ap_len * 10000) AS BIGINT) AS ap_len_q",
-        "__ar.rp_np AS rp_np",
-        "__ar.rp_len AS rp_len",
-        "sp_x", "snap_x", "snap_np",
-        "__sp.n AS split_n",
-        "CAST(round(__sp.len0 * 100) AS BIGINT) AS split_len_q",
+        f"ST_NumGeometries({split}) AS split_n",
+        f"CAST(round(ST_Length(ST_GeometryN({split}, 0)) * 100) AS BIGINT)"
+        " AS split_len_q",
     )
 
 ST_EDIT_LINE_OPS_ORACLE = f"""
@@ -1042,6 +1018,7 @@ def st_misc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_Project (spherical forward problem — due-east at the equator is
     exactly lon + degrees(d/R)), ST_XMin/XMax/YMin/YMax, ST_NumPoints
     (PostGIS: linestrings only). All closed forms on the parcel ints."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -1053,34 +1030,26 @@ def st_misc_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup = ("concat('LINESTRING (', x1, ' ', y1, ', ', x1, ' ', y1, ', ',"
            " x2, ' ', y1, ', ', x2, ' ', y1, ')')")
     eqpt = "concat('POINT (', CAST(x1 % 90 AS DOUBLE), ' 0)')"
-    # r13 (optimization round): the LineMerge and Project pairs each
-    # consumed the same derived geometry once per measure — fused structs
-    # (ST_NumGeomsLength, ST_XY) run each kernel once; same values
-    # (literal compositions, oracle-pinned)
-    return lu.selectExpr(
+    proj = f"ST_Project({eqpt}, 111194.9266D, 1.5707963267948966D)"
+    return chainrw.select_st(
+        lu,
         "property_id",
         f"CAST(round(ST_Area(ST_MakePolygon({ring})) * 100) AS BIGINT)"
         " AS mkpoly_area_q",
-        f"ST_NumGeomsLength(ST_LineMerge({mls})) AS __lm",
+        f"ST_NumGeometries(ST_LineMerge({mls})) AS lm_n",
+        f"ST_Length(ST_LineMerge({mls})) AS lm_len",
         f"ST_NPoints(ST_RemoveRepeatedPoints({dup})) AS rrp_np",
         "ST_HasZ(ST_Force3D(concat('POINT (', x1, ' ', y1, ')'), 7D))"
         " AS f3d_hasz",
         "ST_Z(ST_Force3D(concat('POINT (', x1, ' ', y1, ')'), 7D))"
         " AS f3d_z",
-        f"ST_XY(ST_Project({eqpt}, 111194.9266D,"
-        " 1.5707963267948966D)) AS __proj",
+        f"CAST(round(ST_X({proj}) * 1000000) AS BIGINT) AS proj_lon_q",
+        f"CAST(round(ST_Y({proj}) * 1000000) AS BIGINT) AS proj_lat_q",
         "ST_XMin(land_geometry) AS bxmin",
         "ST_XMax(land_geometry) AS bxmax",
         "ST_YMin(land_geometry) AS bymin",
         "ST_YMax(land_geometry) AS bymax",
         f"ST_NumPoints({ring}) AS np_ring",
-    ).selectExpr(
-        "property_id", "mkpoly_area_q",
-        "__lm.n AS lm_n", "__lm.len AS lm_len",
-        "rrp_np", "f3d_hasz", "f3d_z",
-        "CAST(round(__proj.x * 1000000) AS BIGINT) AS proj_lon_q",
-        "CAST(round(__proj.y * 1000000) AS BIGINT) AS proj_lat_q",
-        "bxmin", "bxmax", "bymin", "bymax", "np_ring",
     )
 
 ST_MISC_OPS_ORACLE = f"""
@@ -1992,25 +1961,18 @@ def st_transform_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse at the edge, both projections as whole-batch numpy over the
     packed coordinate array, measures straight off the WKB (never back
     through text; functions/geomb.py)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    # r13 (optimization round): ST_TransformRoundtrip_B fuses the double
-    # transform (one Python link instead of two frontiers) and
-    # ST_AreaNPoints_B fuses the two measures (the old spelling
-    # re-evaluated the shared __rt chain per measure); whole chain is
-    # single-consumer → ONE ArrowEvalPython node, every kernel once
-    # (guide §4). Both fused functions are literal compositions of the
-    # unfused kernels — same values, oracle unchanged.
-    return lu.select(
+    rt = ("ST_Transform(ST_Transform(land_geometry, 'EPSG:3857',"
+          " 'EPSG:5880'), 'EPSG:5880', 'EPSG:3857')")
+    return chainrw.select_st(
+        lu,
         "property_id",
-        F.expr("ST_TransformRoundtripStats_B(land_geometry,"
-               " 'EPSG:3857', 'EPSG:5880')").alias("__m"),
-    ).select(
-        "property_id",
-        F.expr("CAST(round(__m.area * 1000) AS BIGINT)").alias("area_q"),
-        F.expr("__m.npts").alias("n_vertices"),
+        f"CAST(round(ST_Area({rt}) * 1000) AS BIGINT) AS area_q",
+        f"ST_NPoints({rt}) AS n_vertices",
     )
 
 ST_TRANSFORM_ROUNDTRIP_ORACLE = f"""
@@ -2053,6 +2015,7 @@ def st_transform_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     corner-1/corner-3 easting+northing quantized to 1 mm, plus the
     EPSG:32722 → EPSG:4326 Newton round trip of corner 1 quantized to
     1e-6 deg (≈ 0.1 m; the Newton residual is ~1e-14 deg)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -2067,30 +2030,24 @@ def st_transform_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r8: binary carrier — the degree-rect WKT parses once at the edge,
     # both projections and the coordinate extraction run off packed WKB
-    # (the coords lane emits the same closed-ring number order the
-    # WKT-text split produced, so the try_element_at positions are
-    # unchanged). r13 (optimization round): the forward transform is
-    # consumed twice (its own coords AND the return leg), which split
-    # the chain into three ArrowEvalPython frontiers with the forward
-    # kernel evaluated once per consumer; ST_TransformFwdRtCoords_B is
-    # the literal composition of Transform/Coords for both legs as one
-    # struct — ONE Python node, every kernel once (guide §4). Same
-    # values, oracle unchanged.
+    # (ST_Coords_B emits the same closed-ring number order the WKT-text
+    # split produced, so the try_element_at positions are unchanged)
     wkt = ("concat_ws('', 'POLYGON ((', lon1, ' ', lat1, ', ', lon2, ' ',"
            " lat1, ', ', lon2, ' ', lat2, ', ', lon1, ' ', lat2, '))')")
-    out = deg.selectExpr(
+    utm = f"ST_Transform_B(ST_GeomFromWKT_B({wkt}), 'EPSG:4326', 'EPSG:32722')"
+    fwd = f"ST_Coords_B({utm})"
+    back = f"ST_Coords_B(ST_Transform_B({utm}, 'EPSG:32722', 'EPSG:4326'))"
+    return chainrw.select_st(
+        deg,
         "property_id",
-        f"ST_TransformFwdRtCoords_B({wkt},"
-        " 'EPSG:4326', 'EPSG:32722') AS __m",
-    )
-    return out.selectExpr(
-        "property_id",
-        "CAST(round(try_element_at(__m.fwd, 1) * 1000) AS BIGINT) AS e1_mm",
-        "CAST(round(try_element_at(__m.fwd, 2) * 1000) AS BIGINT) AS n1_mm",
-        "CAST(round(try_element_at(__m.fwd, 5) * 1000) AS BIGINT) AS e3_mm",
-        "CAST(round(try_element_at(__m.fwd, 6) * 1000) AS BIGINT) AS n3_mm",
-        "CAST(round(try_element_at(__m.rt, 1) * 1000000) AS BIGINT) AS lon_rt_q",
-        "CAST(round(try_element_at(__m.rt, 2) * 1000000) AS BIGINT) AS lat_rt_q",
+        f"CAST(round(try_element_at({fwd}, 1) * 1000) AS BIGINT) AS e1_mm",
+        f"CAST(round(try_element_at({fwd}, 2) * 1000) AS BIGINT) AS n1_mm",
+        f"CAST(round(try_element_at({fwd}, 5) * 1000) AS BIGINT) AS e3_mm",
+        f"CAST(round(try_element_at({fwd}, 6) * 1000) AS BIGINT) AS n3_mm",
+        f"CAST(round(try_element_at({back}, 1) * 1000000) AS BIGINT)"
+        " AS lon_rt_q",
+        f"CAST(round(try_element_at({back}, 2) * 1000000) AS BIGINT)"
+        " AS lat_rt_q",
     )
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions import chainrw
 from . import fixtures
 
 def _lu(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,20 +41,19 @@ def st_from_text_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     mpt = "concat('MULTIPOINT (', x1, ' ', y1, ', ', x2, ' ', y2, ')')"
     lfmp_src = ("concat('MULTIPOINT (', x1, ' ', y1, ', ', x2, ' ', y1,"
                 " ', ', x2, ' ', y2, ')')")
-    # r14 (VERDICT item 2): the PointFromText pair (X+Y) and the
-    # LineStringFromText pair (Length+NPoints) each re-parsed the same
-    # constructed geometry once per output column — the r13 fused
-    # structs ST_XY / ST_NPointsLength evaluate each constructor once.
-    # Values and the oracle unchanged (literal compositions).
-    return lu.selectExpr(
+    pft = "ST_PointFromText(concat(x1, ',', y1), ',')"
+    lsft = ("ST_LineStringFromText("
+            "concat(x1, ',', y1, ',', x2, ',', y1, ',', x2, ',', y2), ',')")
+    return chainrw.select_st(
+        lu,
         "property_id",
         "ST_Area(ST_PolygonFromEnvelope(CAST(x1 AS DOUBLE),"
         " CAST(y1 AS DOUBLE), CAST(x2 AS DOUBLE), CAST(y2 AS DOUBLE)))"
         " AS env_area",
-        "ST_XY(ST_PointFromText(concat(x1, ',', y1), ',')) AS __pft",
-        "ST_NPointsLength(ST_LineStringFromText("
-        "concat(x1, ',', y1, ',', x2, ',', y1, ',', x2, ',', y2), ','))"
-        " AS __lsft",
+        f"ST_X({pft}) AS pft_x",
+        f"ST_Y({pft}) AS pft_y",
+        f"ST_Length({lsft}) AS lsft_len",
+        f"ST_NPoints({lsft}) AS lsft_np",
         f"ST_LineFromText({rect}) IS NULL AS lft_mismatch_null",
         "ST_Length(ST_LineFromText(concat('LINESTRING (', x1, ' ', y1,"
         "', ', x2, ' ', y1, ')'))) AS lft_len",
@@ -66,15 +66,6 @@ def st_from_text_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"ST_Length(ST_LineFromMultiPoint({lfmp_src})) AS lfmp_len",
         "ST_AsHEXEWKB('POINT (1 2)') AS hex_pt",
         f"CAST(length(ST_AsHEXEWKB({rect})) AS BIGINT) AS hex_rect_len",
-    ).selectExpr(
-        "property_id", "env_area",
-        "__pft.x AS pft_x",
-        "__pft.y AS pft_y",
-        "__lsft.len AS lsft_len",
-        "__lsft.np AS lsft_np",
-        "lft_mismatch_null", "lft_len", "mpoly_area",
-        "mpoly_mismatch_null", "mpt_np", "mpt_mismatch_null", "gc_n",
-        "lfmp_len", "hex_pt", "hex_rect_len",
     )
 
 ST_FROM_TEXT_OPS_ORACLE = f"""
@@ -120,42 +111,30 @@ def st_orientation_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
               " x2, ' ', y1, ', ', x1, ' ', y2, ', ', x1, ' ', y1, '))')")
     mls = ("concat('MULTILINESTRING ((', x1, ' ', y1, ', ', x2, ' ', y1,"
            " '), (', x2, ' ', y1, ', ', x2, ' ', y2, '))')")
-    # r14 (VERDICT item 2): ST_ForcePolygonCW fed SIX chains (AsText,
-    # AsText∘ForceRHR — the PostGIS alias of the same function, so the
-    # same value, AsText∘ForcePolygonCCW, IsPolygonCW, IsPolygonCCW,
-    # Area) and ST_Force3DZ fed two; EvalPythonExec re-evaluates the
-    # inner UDF once per OUTPUT column, so the orientation pass ran six
-    # times per row. ST_ForceCWStats / ST_ZmflagZ are literal
-    # compositions of the same lanes — values and the oracle unchanged.
-    return lu.selectExpr(
+    cw = f"ST_ForcePolygonCW({rect})"
+    f3dz = "ST_Force3DZ(concat('POINT (', x1, ' ', y1, ')'), 7D)"
+    return chainrw.select_st(
+        lu,
         "property_id",
-        f"ST_ForceCWStats({rect}) AS __f",
+        f"ST_AsText({cw}) AS cw_wkt",
+        f"ST_AsText(ST_ForceRHR({rect})) AS rhr_wkt",
+        f"ST_AsText(ST_ForcePolygonCCW({cw})) AS ccw_roundtrip",
         f"ST_IsPolygonCW({rect}) AS raw_is_cw",
         f"ST_IsPolygonCCW({rect}) AS raw_is_ccw",
+        f"ST_IsPolygonCW({cw}) AS forced_is_cw",
+        f"ST_IsPolygonCCW({cw}) AS forced_is_ccw",
+        f"ST_Area({cw}) AS cw_area",
         f"ST_IsCollection({rect}) AS rect_is_coll",
         f"ST_IsCollection({mls}) AS mls_is_coll",
         f"ST_Zmflag({rect}) AS zm_2d",
-        "ST_ZmflagZ(ST_Force3DZ(concat('POINT (', x1, ' ', y1, ')'),"
-        " 7D)) AS __z",
+        f"ST_Zmflag({f3dz}) AS zm_z",
+        f"ST_Z({f3dz}) AS f3dz_z",
         f"ST_NumGeometries(ST_ForceCollection({mls})) AS fcoll_n",
         "ST_NumGeometries(ST_ForceCollection(concat('POINT (', x1, ' ',"
         " y1, ')'))) AS fcoll_pt_n",
         f"ST_IsValidReason({rect}) AS ivr_rect",
         f"ST_IsValidReason({bowtie}) AS ivr_bowtie",
         f"ST_NumInteriorRing({rect}) AS nir",
-    ).selectExpr(
-        "property_id",
-        "__f.wkt AS cw_wkt",
-        "__f.wkt AS rhr_wkt",
-        "__f.ccw_rt AS ccw_roundtrip",
-        "raw_is_cw", "raw_is_ccw",
-        "__f.is_cw AS forced_is_cw",
-        "__f.is_ccw AS forced_is_ccw",
-        "__f.area AS cw_area",
-        "rect_is_coll", "mls_is_coll", "zm_2d",
-        "__z.zm AS zm_z",
-        "__z.z AS f3dz_z",
-        "fcoll_n", "fcoll_pt_n", "ivr_rect", "ivr_bowtie", "nir",
     )
 
 ST_ORIENTATION_OPS_ORACLE = f"""
@@ -209,54 +188,42 @@ def st_clearance_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            "', ', x1 + 4 * s, ' ', y1,"
            "', ', x1 + 6 * s, ' ', y1 + 5 * s,"
            "', ', x1 + 8 * s, ' ', y1, ')')")
-    # r14 (VERDICT r13 item 2): the multi-consumer inner UDFs are FUSED
-    # into single struct-returning consumers — EvalPythonExec builds one
-    # chained pipeline per OUTPUT udf column, so the old spelling
-    # re-evaluated ST_MaximumInscribedCircle five times and
-    # ST_MinimumClearanceLine / ST_SimplifyVW / ST_RotateX / ST_RotateY
-    # twice each (select-layer hoisting does NOT help: the planner
-    # inlines the aliases back into per-output chains — measured with
-    # the UDF profiler). ST_MICStats / ST_MinClearStats / ST_XYZ /
-    # ST_NPointsLength are literal compositions of the same lanes, so
-    # every derived geometry is now evaluated exactly once; values and
-    # the oracle are unchanged.
-    return lu.selectExpr(
+    mcl = f"ST_MinimumClearanceLine({rect})"
+    mic = f"ST_MaximumInscribedCircle({rect})"
+    pz = "concat('POINT Z (', x1, ' ', y1, ' ', x2 - x1, ')')"
+    vw = f"ST_SimplifyVW({zig}, CAST(3 * s * s AS DOUBLE))"
+    base = lu.selectExpr(
         "property_id", "x1", "y1", "x2", "y2",
         "1 + property_id % 3 AS s",
-    ).selectExpr(
+    )
+    return chainrw.select_st(
+        base,
         "property_id",
-        f"ST_MinClearStats({rect}) AS __mcs",
-        f"ST_MICStats({rect}) AS __mic",
+        f"ST_MinimumClearance({rect}) AS min_clear",
+        f"ST_Length({mcl}) AS mcl_len",
+        f"ST_AsText({mcl}) AS mcl_wkt",
+        f"{mic}.radius AS mic_radius",
+        f"CAST(round(ST_X({mic}.center) * 100) AS BIGINT) AS mic_cx_q",
+        f"CAST(round(ST_Y({mic}.center) * 100) AS BIGINT) AS mic_cy_q",
+        f"CAST(round(ST_X({mic}.nearest) * 100) AS BIGINT) AS mic_nx_q",
+        f"CAST(round(ST_Y({mic}.nearest) * 100) AS BIGINT) AS mic_ny_q",
         "ST_3DDistance(concat('POINT Z (', x1, ' ', y1, ' 0)'),"
         " concat('POINT Z (', x2, ' ', y2, ' ', x2 - x1, ')')) AS d3_pp",
         "ST_3DDistance(concat('LINESTRING Z (', x1, ' ', y1, ' 0, ',"
         " x2, ' ', y1, ' 0)'),"
         " concat('POINT Z (', x1, ' ', y2, ' ', x2 - x1, ')')) AS d3_sp",
-        "ST_XYZ(ST_RotateX(concat('POINT Z (', x1, ' ', y1,"
-        " ' ', x2 - x1, ')'), pi())) AS __rx",
-        "ST_XYZ(ST_RotateY(concat('POINT Z (', x1, ' ', y1,"
-        " ' ', x2 - x1, ')'), pi())) AS __ry",
-        f"ST_NPointsLength(ST_SimplifyVW({zig},"
-        " CAST(3 * s * s AS DOUBLE))) AS __vw",
-    ).selectExpr(
-        "property_id",
-        "__mcs.clear AS min_clear",
-        "__mcs.len AS mcl_len",
-        "__mcs.wkt AS mcl_wkt",
-        "__mic.radius AS mic_radius",
-        "CAST(round(__mic.cx * 100) AS BIGINT) AS mic_cx_q",
-        "CAST(round(__mic.cy * 100) AS BIGINT) AS mic_cy_q",
-        "CAST(round(__mic.nx * 100) AS BIGINT) AS mic_nx_q",
-        "CAST(round(__mic.ny * 100) AS BIGINT) AS mic_ny_q",
-        "d3_pp", "d3_sp",
-        "CAST(round(__rx.y * 1000000) AS BIGINT) AS rx_y_q",
-        "CAST(round(__rx.z * 1000000) AS BIGINT) AS rx_z_q",
-        "CAST(round(__ry.x * 1000000) AS BIGINT) AS ry_x_q",
-        "CAST(round(__ry.z * 1000000) AS BIGINT) AS ry_z_q",
-        "__vw.np AS vw_np",
+        f"CAST(round(ST_Y(ST_RotateX({pz}, pi())) * 1000000) AS BIGINT)"
+        " AS rx_y_q",
+        f"CAST(round(ST_Z(ST_RotateX({pz}, pi())) * 1000000) AS BIGINT)"
+        " AS rx_z_q",
+        f"CAST(round(ST_X(ST_RotateY({pz}, pi())) * 1000000) AS BIGINT)"
+        " AS ry_x_q",
+        f"CAST(round(ST_Z(ST_RotateY({pz}, pi())) * 1000000) AS BIGINT)"
+        " AS ry_z_q",
+        f"ST_NPoints({vw}) AS vw_np",
         # quantized: the engine folds per-segment hypots in path order,
         # the oracle factors s*(4 + 2*sqrt(29)) — ulp-different doubles
-        "CAST(round(__vw.len * 1000000) AS BIGINT) AS vw_len_q",
+        f"CAST(round(ST_Length({vw}) * 1000000) AS BIGINT) AS vw_len_q",
     )
 
 ST_CLEARANCE_OPS_ORACLE = f"""

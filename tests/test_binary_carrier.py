@@ -313,12 +313,12 @@ def test_binary_transform_chain_equals_text(spark):
 
 
 def test_fused_struct_udfs_equal_composition(spark):
-    """r13 (optimization round): the fused struct UDFs
-    (ST_BufferRoundStats_B, ST_TransformRoundtripStats_B,
-    ST_TransformFwdRtCoords_B) must equal the unfused compositions
-    value-for-value on rects, a non-rect slow-path polygon, and NULL —
-    and each fused query plan must carry exactly ONE ArrowEvalPython
-    node (the whole point of the fusion)."""
+    """The projection fuser (chainrw.select_st) on the buffer/transform
+    measure chains must equal the unfused compositions value-for-value
+    on rects, a non-rect slow-path polygon, and NULL — and each fused
+    headline query plan must carry exactly ONE ArrowEvalPython node (the
+    whole point of the fusion)."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
         register_spatial_functions,
     )
@@ -331,33 +331,18 @@ def test_fused_struct_udfs_equal_composition(spark):
         (3, "POLYGON ((5 5, 9 5, 9 9, 5 9, 5 5))"),             # closed rect
     ]
     df = spark.createDataFrame(rows, "id int, g string")
-    df.createOrReplaceTempView("fused_par")
-    fused = spark.sql("""
-      SELECT id,
-             ST_BufferRoundStats_B(g, 0.5, 8) AS bs,
-             ST_TransformRoundtripStats_B(g, 'EPSG:3857', 'EPSG:5880') AS ts,
-             ST_TransformFwdRtCoords_B(g, 'EPSG:3857', 'EPSG:5880') AS fc
-      FROM fused_par ORDER BY id""").collect()
-    comp = spark.sql("""
-      SELECT id,
-             ST_Area_B(ST_BufferRound_B(ST_GeomFromWKT_B(g), 0.5, 8)) AS b_area,
-             ST_NPoints_B(ST_BufferRound_B(ST_GeomFromWKT_B(g), 0.5, 8)) AS b_np,
-             ST_Area_B(ST_Transform_B(ST_Transform_B(ST_GeomFromWKT_B(g),
-                 'EPSG:3857', 'EPSG:5880'), 'EPSG:5880', 'EPSG:3857')) AS t_area,
-             ST_NPoints_B(ST_Transform_B(ST_Transform_B(ST_GeomFromWKT_B(g),
-                 'EPSG:3857', 'EPSG:5880'), 'EPSG:5880', 'EPSG:3857')) AS t_np,
-             ST_Coords_B(ST_Transform_B(ST_GeomFromWKT_B(g),
-                 'EPSG:3857', 'EPSG:5880')) AS fwd,
-             ST_Coords_B(ST_Transform_B(ST_Transform_B(ST_GeomFromWKT_B(g),
-                 'EPSG:3857', 'EPSG:5880'), 'EPSG:5880', 'EPSG:3857')) AS rt
-      FROM fused_par ORDER BY id""").collect()
-    for f, c in zip(fused, comp):
-        assert f["bs"]["area"] == c["b_area"], f["id"]
-        assert f["bs"]["npts"] == c["b_np"], f["id"]
-        assert f["ts"]["area"] == c["t_area"], f["id"]
-        assert f["ts"]["npts"] == c["t_np"], f["id"]
-        assert f["fc"]["fwd"] == c["fwd"], f["id"]
-        assert f["fc"]["rt"] == c["rt"], f["id"]
+    buf = "ST_BufferRound_B(ST_GeomFromWKT_B(g), 0.5, 8)"
+    fwd = "ST_Transform_B(ST_GeomFromWKT_B(g), 'EPSG:3857', 'EPSG:5880')"
+    rt = f"ST_Transform_B({fwd}, 'EPSG:5880', 'EPSG:3857')"
+    exprs = ["id",
+             f"ST_Area_B({buf}) AS b_area", f"ST_NPoints_B({buf}) AS b_np",
+             f"ST_Area_B({rt}) AS t_area", f"ST_NPoints_B({rt}) AS t_np",
+             f"ST_Coords_B({fwd}) AS fwd", f"ST_Coords_B({rt}) AS rt"]
+    fused = CR.select_st(df, *exprs)
+    assert "fused(" in fused._jdf.queryExecution().executedPlan().toString()
+    comp = df.selectExpr(*exprs)
+    assert sorted(map(tuple, fused.collect())) == \
+        sorted(map(tuple, comp.collect()))
     # plan shape: the three fused headline queries run ONE Python node
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans import pipeline as P
     for fn in (P.st_buffer_round, P.st_transform_roundtrip,

@@ -2,8 +2,8 @@
 
 Layer 1: `chainrw.rewrite` string-level unit tests — chains of >= 2
 twin-covered calls move to the `_B` carrier, lone calls and hygiene-only
-chains stay on text, non-ST_ tokens (strings, identifiers, keywords,
-arithmetic) are copied verbatim, and the kill switch restores identity.
+chains stay on text, and non-ST_ tokens (strings, identifiers, keywords,
+arithmetic, parenthesised groups) are copied verbatim.
 
 Layer 2: `kernel/packed._pack_ragged` / `_emit_ragged` engagement tests —
 single-kind variable-shape batches must take the vectorized lane (not
@@ -11,13 +11,16 @@ silently fall back to the per-row loop) and round-trip byte-identical to
 geomtypes.to_wkb; anomalous batches (mixed kinds, big-endian, Z, trailing
 bytes) must bail to the strict loop and still round-trip.
 
-Layer 3: Spark parity — the SAME query text through `select_st` (rewritten)
-and through plain `selectExpr` (text path) returns identical rows, on the
-reference's own chain spelling (spark_job/process_geodata.py:120-139).
+Layer 3: Spark parity — the SAME query text through `select_st` (rewritten
+and fused) and through plain `selectExpr` (text path) returns identical
+rows, on the reference's own chain spelling
+(spark_job/process_geodata.py:120-139) and on every registry query that
+builds its projection with `select_st`.
 """
 
 from __future__ import annotations
 
+import os
 import random
 import struct
 
@@ -29,6 +32,8 @@ from hypothesis import strategies as st
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
+
+from .conftest import SF_SMOKE
 
 
 # ------------------------------------------------------------- layer 1
@@ -110,10 +115,23 @@ def test_rewrite_unknown_st_name_blocks_that_node_but_not_args():
     assert got2 == "ST_NPoints(ST_ConvexHull(ST_GeomFromWKT(w)))"
 
 
-def test_rewrite_kill_switch(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_CHAINRW", "1")
-    e = "ST_Area(ST_GeomFromWKT(wkt)) AS a"
-    assert CR.rewrite(e) == e
+# parenthesised (non-call) groups inside a call's arguments: the group's
+# ')' must not close the enclosing call, and calls inside the group stay
+# visible to the rewrite
+PAREN_EXPRS = [
+    ("ST_Distance(ST_GeomFromWKT((w)), ST_Centroid(ST_GeomFromWKT(v)))"
+     " AS d",
+     "ST_Distance_B(ST_GeomFromWKT_B((w)), ST_Centroid_B(ST_GeomFromWKT_B(v)))"
+     " AS d"),
+    ("ST_Area(ST_BufferRound(w, (1 + p) / 4.0, 8)) AS a",
+     "ST_Area_B(ST_BufferRound_B(ST_GeomFromWKT_B(w), (1 + p) / 4.0, 8))"
+     " AS a"),
+]
+
+
+@pytest.mark.parametrize("expr,want", PAREN_EXPRS)
+def test_rewrite_parenthesised_arguments(expr, want):
+    assert CR.rewrite(expr) == want
 
 
 def test_rewrite_case_insensitive_names():
@@ -273,6 +291,10 @@ def test_select_st_equals_text_path_on_reference_chain(spark):
         " ST_GeomFromWKT(lwkt)) AS d",
         "ST_Intersects(ST_Envelope(ST_GeomFromWKT(wkt)),"
         " ST_GeomFromWKT(lwkt)) AS hit",
+        # parenthesised arguments (see PAREN_EXPRS)
+        "ST_Distance(ST_GeomFromWKT((lwkt)), ST_Centroid(ST_GeomFromWKT(wkt)))"
+        " AS d_paren",
+        "ST_Area(ST_BufferRound(wkt, (1 + id % 5) / 4.0, 8)) AS buf_paren",
     ]
     # guard: the rewriter actually fires on these (not a silent no-op)
     assert any("_B(" in CR.rewrite(e) for e in exprs)
@@ -286,6 +308,145 @@ def test_select_st_equals_text_path_on_reference_chain(spark):
                 assert abs(gv - ev) <= 1e-9 * max(1.0, abs(ev)), (k, g, e)
             else:
                 assert gv == ev, (k, g, e)
+
+
+# ------------------------------------------------- projection fuser
+
+def _fuse(*exprs):
+    fz = CR._Fusion()
+    return fz, [fz.emit(CR._Expr(CR._parse(e)[0])) for e in exprs]
+
+
+def test_fuser_shares_subtrees_and_leaves():
+    fz, out = _fuse("ST_X(ST_Centroid(g)) AS x", "ST_Y(ST_Centroid(g)) AS y",
+                    "ST_Area(g) + 1 AS a")
+    assert out == ["__fz.f0 AS x", "__fz.f1 AS y", "__fz.f2 + 1 AS a"]
+    assert list(fz.leaves) == ["g"]
+    # ST_Centroid(g) is one node read by both coordinates
+    assert len(fz.nodes) == 4 and fz.calls == 5
+
+
+def test_fuser_dedups_aliases_by_function_object():
+    # ST_ForceRHR is registered as the same function as ST_ForcePolygonCW
+    fz, out = _fuse("ST_AsText(ST_ForcePolygonCW(g)) AS cw",
+                    "ST_AsText(ST_ForceRHR(g)) AS rhr")
+    assert out == ["__fz.f0 AS cw", "__fz.f0 AS rhr"]
+    assert len(fz.nodes) == 2
+
+
+def test_fuser_reads_struct_fields():
+    fz, out = _fuse("ST_X(ST_MaximumInscribedCircle(g).center) AS cx",
+                    "ST_MaximumInscribedCircle(g).radius AS r")
+    assert out == ["__fz.f0 AS cx", "__fz.f1 AS r"]
+    assert len(fz.nodes) == 2          # the solver runs once
+    # a whole struct is not fusable; its consumer stays
+    _, out = _fuse("ST_MaximumInscribedCircle(g) AS m")
+    assert out == ["ST_MaximumInscribedCircle(g) AS m"]
+
+
+def test_fuser_stops_at_jvm_boundaries():
+    # a UDF inside a JVM expression is fused on its own; the outer UDF
+    # call stays where it is, reading the fused field
+    fz, out = _fuse("ST_Buffer(g, ST_Area(g) * 0.1) AS b")
+    assert out == ["ST_Buffer(g, __fz.f0 * 0.1) AS b"]
+    # UDF-free JVM arguments are leaves, deduplicated by text
+    fz, out = _fuse("ST_Area(ST_Buffer(concat(a, b), 1)) AS x",
+                    "ST_Length(concat(a, b)) AS y")
+    assert out == ["__fz.f0 AS x", "__fz.f1 AS y"]
+    assert list(fz.leaves) == ["concat(a, b)", "1"]
+
+
+@pytest.mark.usefixtures("spark")
+def test_select_st_fuses_only_two_or_more_calls(spark):
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
+        register_spatial_functions,
+    )
+
+    register_spatial_functions(spark)
+    df = spark.createDataFrame([(1, "POINT (1 2)")], "id long, g string")
+    one = CR.select_st(df, "id", "ST_X(g) AS x")
+    assert "fused(" not in one._jdf.queryExecution().executedPlan().toString()
+    two = CR.select_st(df, "id", "ST_X(g) AS x", "ST_Y(g)", "*")
+    plan = two._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [fused(") == 1
+    # unaliased outputs keep the name of their unfused spelling; `*`
+    # does not leak the fused struct
+    assert two.columns == ["id", "x", "ST_Y(g)", "id", "g"]
+    assert tuple(two.collect()[0]) == (1, 1.0, 2.0, 1, "POINT (1 2)")
+
+
+#: every registry query that builds its projection with select_st
+SELECT_ST_QUERIES = [
+    "st_affine_ops", "st_measure_ops", "st_shape_edit_ops",
+    "st_edit_line_ops", "st_misc_ops", "st_from_text_ops",
+    "st_orientation_ops", "st_clearance_ops", "st_buffer_round",
+    "st_transform_roundtrip", "st_transform_utm", "st_point_line_ops",
+]
+
+
+@pytest.mark.parametrize("name", SELECT_ST_QUERIES)
+def test_select_st_query_equals_plain_select(spark, monkeypatch, name):
+    """The registry query through select_st (chain rewrite + fuser)
+    returns the rows its own expressions give through plain selectExpr."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    got = rows(QUERIES[name](spark, SF_SMOKE))
+    monkeypatch.setattr(CR, "select_st", lambda df, *e: df.selectExpr(*e))
+    exp = rows(QUERIES[name](spark, SF_SMOKE))
+    assert len(got) == len(exp) > 0
+    for g, e in zip(got, exp):
+        for gv, ev in zip(g, e):
+            if isinstance(gv, float) and isinstance(ev, float):
+                assert abs(gv - ev) <= 1e-9 * max(1.0, abs(ev)), (g, e)
+            else:
+                assert gv == ev, (g, e)
+
+
+def _dump_nodes(name: str) -> int:
+    """Fewest ArrowEvalPython nodes among the query's committed plan
+    dumps (plans/r13, plans/r14)."""
+    import glob
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dumps = [f for f in glob.glob(os.path.join(root, "plans", "r1*",
+                                               f"{name}_*.txt"))
+             if f.endswith(("_after.txt", "_before.txt"))]
+    assert dumps, name
+    return min(len(set(re.findall(r"ArrowEvalPython \((\d+)\)",
+                                  open(f).read()))) for f in dumps)
+
+
+@pytest.mark.parametrize("name", SELECT_ST_QUERIES)
+def test_select_st_query_plan_shape(spark, name):
+    """No more ArrowEvalPython nodes than the committed dump, and every
+    distinct UDF subtree is evaluated under exactly one result id."""
+    import re
+    import sys
+
+    sys.path.insert(0, os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts"))
+    import plan_audit as PA
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
+
+    plan = QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution() \
+        .executedPlan().toString()
+    lines = [ln for ln in plan.splitlines() if "ArrowEvalPython [" in ln]
+    assert 1 <= len(lines) <= _dump_nodes(name), plan
+    ids: dict = {}
+    for ln in lines:
+        for out in PA._udf_outputs(ln):
+            m = re.fullmatch(r"\s*(.*\))#(\d+)L?\s*", out)
+            ids.setdefault(re.sub(r"\)#\d+L?", ")", m.group(1)),
+                           set()).add(m.group(2))
+    assert all(len(v) == 1 for v in ids.values()), ids
+    assert "udf-recompute" not in PA.audit(plan)["flags"], plan
 
 
 # ---------------------------------------- ST_Union_Aggr auto-salt (r9)
@@ -305,7 +466,7 @@ def test_salt_rewrite_canonical_shapes():
     assert got3.count("AS __ua_p0") == 1 and "__ua_p1" not in got3
 
 
-def test_salt_rewrite_bails_on_unrecognized_shapes(monkeypatch):
+def test_salt_rewrite_bails_on_unrecognized_shapes():
     f = CR.salt_union_aggr_sql
     keep = [
         # mixed with another aggregate: the split is not union-shaped
@@ -325,9 +486,6 @@ def test_salt_rewrite_bails_on_unrecognized_shapes(monkeypatch):
     ]
     for s in keep:
         assert f(s) == s, s
-    monkeypatch.setenv("SPARK_GRAFT_NO_UNION_AGGR_SALT", "1")
-    s = "SELECT k, ST_Union_Aggr(g) AS u FROM t GROUP BY k"
-    assert f(s) == s
 
 
 @pytest.mark.usefixtures("spark")
@@ -473,14 +631,6 @@ def test_fuse_npoints_segmentize_rewrite():
     # non-fusable consumers keep the plain spelling
     assert "ST_SegmentizeNPoints" not in C.rewrite(
         "ST_Length(ST_Segmentize(g, 1D))")
-    # the A/B kill switch disables the fusion too
-    import os
-    os.environ["SPARK_GRAFT_NO_CHAINRW"] = "1"
-    try:
-        assert C.rewrite("ST_NPoints(ST_Segmentize(g, 1D))") == \
-            "ST_NPoints(ST_Segmentize(g, 1D))"
-    finally:
-        del os.environ["SPARK_GRAFT_NO_CHAINRW"]
 
 
 def test_fused_segmentize_npoints_parity(spark):

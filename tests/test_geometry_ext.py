@@ -493,23 +493,21 @@ def test_st_transform_rejects_unknown_pair():
 
 
 def test_buffer_round_udf_call_is_shared(spark):
-    """area_q and n_vertices must read ONE buffer evaluation. r13
-    (optimization round): the old two-measure spelling relied on
-    ExtractPythonUDFs sharing the nested call's exprId — which shares the
-    ID but NOT the runtime evaluation (EvalPythonExec builds one chained
-    pipeline per output UDF, so the buffer kernel ran twice). The fused
-    ST_BufferRoundStats_B makes single evaluation structural: exactly one
-    fused UDF result id in the plan, exactly one ArrowEvalPython node,
-    and the superseded multi-chain spelling must be gone."""
+    """area_q and n_vertices must read ONE buffer evaluation. Sharing the
+    nested call's exprId is not enough (EvalPythonExec builds one chained
+    pipeline per output UDF, so the buffer kernel ran twice); the
+    projection fuser (chainrw.select_st) makes single evaluation
+    structural: exactly one fused UDF result id in the plan, exactly one
+    ArrowEvalPython node, and no per-measure chain left."""
     import re
 
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.pipeline import st_buffer_round
 
     plan = st_buffer_round(spark, "/root/testdata/sf0.001") \
         ._jdf.queryExecution().executedPlan().toString()
-    ids = re.findall(r"ST_BufferRoundStats_B\(.*?\)#(\d+)", plan)
+    ids = re.findall(r"fused\(.*?\)#(\d+)", plan)
     assert ids, plan
-    assert len(set(ids)) == 1, f"BufferRoundStats evaluated under ids {set(ids)}"
+    assert len(set(ids)) == 1, f"fused UDF evaluated under ids {set(ids)}"
     assert plan.count("ArrowEvalPython") == 1, plan
     assert "ST_Area_B(ST_BufferRound_B" not in plan
 

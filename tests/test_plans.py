@@ -454,6 +454,21 @@ def test_plan_audit_flag_detectors():
         "PushedFilters: [GreaterThan(o_orderkey,100)]")
     assert PA.audit(pushed)["flags"] == []
 
+    # one nested UDF call read by two outputs of one ArrowEvalPython node
+    # is evaluated once per output; a chain read by one output, or one
+    # fused struct UDF, is not
+    shared = (
+        "+- ArrowEvalPython [ST_NPoints_B(ST_GeomFromWKT_B(w#5)#7)#8L,"
+        " ST_Length_B(ST_GeomFromWKT_B(w#5)#9)#10,"
+        " ST_X(concat_ws(, POINT (, x#1, )))#12],"
+        " [pythonUDF0#13L, pythonUDF1#14, pythonUDF2#15], 200")
+    assert "udf-recompute" in PA.audit(shared)["flags"]
+    single = shared.replace("ST_Length_B(ST_GeomFromWKT_B(w#5)#9)#10",
+                            "ST_Length_B(v#6)#10")
+    assert PA.audit(single)["flags"] == []
+    fused = ("+- ArrowEvalPython [fused(w#5, x#1)#7], [pythonUDF0#8], 200")
+    assert PA.audit(fused)["flags"] == []
+
 
 def test_bnl_build_sides_stay_bounded(spark):
     """r10 (r9 verdict item 7): the BroadcastNestedLoopJoin sites in

@@ -326,17 +326,32 @@ def test_xml_and_srid_error_edges():
     assert SX._srid("srid=31983;POINT (1 2)") == 31983
 
 
-def test_r14_fused_struct_udfs_equal_composition(spark):
-    """r14 (optimization round 2): the fused struct UDFs added for the
-    ST_ sweep heavies — ST_MICStats, ST_MinClearStats, ST_XYZ,
-    ST_NPointsLength — must equal the unfused compositions
-    value-for-value on the rect lane, a slow-path L-shape, a POINT Z
-    rotation input, and NULL rows."""
+def _fused_equals_composed(spark, df, exprs):
+    """The projection fuser (chainrw.select_st) returns the rows the same
+    expressions give through plain selectExpr, from ONE fused Python
+    node."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
         register_spatial_functions,
     )
 
     register_spatial_functions(spark)
+    fused = CR.select_st(df, *exprs)
+    plan = fused._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython [fused(") == 1, plan
+    assert plan.count("ArrowEvalPython") == 1, plan
+    got = sorted(map(tuple, fused.collect()))
+    assert got == sorted(map(tuple, df.selectExpr(*exprs).collect()))
+    return got
+
+
+def test_r14_fused_struct_udfs_equal_composition(spark):
+    """The multi-consumer ST_ sweep heavies (the maximum inscribed
+    circle and its point coordinates, the clearance trio, a rotated
+    point's coordinates, a simplified line's measures) fused by the
+    projection fuser must equal the unfused compositions value-for-value
+    on the rect lane, a slow-path L-shape, a POINT Z rotation input, and
+    NULL rows."""
     rows = [
         (0, "POLYGON ((10 10, 60 10, 60 40, 10 40))",           # rect lane
          "POINT Z (3 4 5)",
@@ -350,57 +365,33 @@ def test_r14_fused_struct_udfs_equal_composition(spark):
          "LINESTRING (0 0, 3 0, 3 3)"),
     ]
     df = spark.createDataFrame(rows, "id int, g string, p string, l string")
-    df.createOrReplaceTempView("fused_r14")
-    fused = spark.sql("""
-      SELECT id,
-             ST_MICStats(g) AS mic,
-             ST_MinClearStats(g) AS mcs,
-             ST_XYZ(ST_RotateX(p, pi())) AS xyz,
-             ST_NPointsLength(ST_SimplifyVW(l, 2.0d)) AS npl
-      FROM fused_r14 ORDER BY id""").collect()
-    comp = spark.sql("""
-      SELECT id,
-             ST_MaximumInscribedCircle(g).radius AS mic_r,
-             ST_X(ST_MaximumInscribedCircle(g).center) AS mic_cx,
-             ST_Y(ST_MaximumInscribedCircle(g).center) AS mic_cy,
-             ST_X(ST_MaximumInscribedCircle(g).nearest) AS mic_nx,
-             ST_Y(ST_MaximumInscribedCircle(g).nearest) AS mic_ny,
-             ST_MinimumClearance(g) AS mc,
-             ST_Length(ST_MinimumClearanceLine(g)) AS mcl_len,
-             ST_AsText(ST_MinimumClearanceLine(g)) AS mcl_wkt,
-             ST_X(ST_RotateX(p, pi())) AS rx,
-             ST_Y(ST_RotateX(p, pi())) AS ry,
-             ST_Z(ST_RotateX(p, pi())) AS rz,
-             ST_NPoints(ST_SimplifyVW(l, 2.0d)) AS np,
-             ST_Length(ST_SimplifyVW(l, 2.0d)) AS len
-      FROM fused_r14 ORDER BY id""").collect()
-    for f, c in zip(fused, comp):
-        i = f["id"]
-        assert f["mic"]["radius"] == c["mic_r"], i
-        assert f["mic"]["cx"] == c["mic_cx"], i
-        assert f["mic"]["cy"] == c["mic_cy"], i
-        assert f["mic"]["nx"] == c["mic_nx"], i
-        assert f["mic"]["ny"] == c["mic_ny"], i
-        assert f["mcs"]["clear"] == c["mc"], i
-        assert f["mcs"]["len"] == c["mcl_len"], i
-        assert f["mcs"]["wkt"] == c["mcl_wkt"], i
-        assert f["xyz"]["x"] == c["rx"], i
-        assert f["xyz"]["y"] == c["ry"], i
-        assert f["xyz"]["z"] == c["rz"], i
-        assert f["npl"]["np"] == c["np"], i
-        assert f["npl"]["len"] == c["len"], i
+    got = _fused_equals_composed(spark, df, [
+        "id",
+        "ST_MaximumInscribedCircle(g).radius AS mic_r",
+        "ST_X(ST_MaximumInscribedCircle(g).center) AS mic_cx",
+        "ST_Y(ST_MaximumInscribedCircle(g).center) AS mic_cy",
+        "ST_X(ST_MaximumInscribedCircle(g).nearest) AS mic_nx",
+        "ST_Y(ST_MaximumInscribedCircle(g).nearest) AS mic_ny",
+        "ST_MinimumClearance(g) AS mc",
+        "ST_Length(ST_MinimumClearanceLine(g)) AS mcl_len",
+        "ST_AsText(ST_MinimumClearanceLine(g)) AS mcl_wkt",
+        "ST_X(ST_RotateX(p, pi())) AS rx",
+        "ST_Y(ST_RotateX(p, pi())) AS ry",
+        "ST_Z(ST_RotateX(p, pi())) AS rz",
+        "ST_NPoints(ST_SimplifyVW(l, 2.0d)) AS np",
+        "ST_Length(ST_SimplifyVW(l, 2.0d)) AS len",
+    ])
+    assert got[2][1:] == (None,) * 13           # NULL row stays NULL
+    assert got[0][1] == 15.0                    # rect MIC radius
 
 
 def test_r14_fused_batch_structs_equal_composition(spark):
-    """r14 round 2: ST_ForceCWStats, ST_ZmflagZ, ST_AddRmStats,
-    ST_SplitStats must equal the unfused compositions value-for-value —
-    rect lane, already-CW ring, holed polygon, non-areal passthrough,
-    Z points, off-line split points, and NULLs."""
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        register_spatial_functions,
-    )
-
-    register_spatial_functions(spark)
+    """The orientation, Z, vertex-surgery and split batches fused by the
+    projection fuser must equal the unfused compositions value-for-value
+    — rect lane, already-CW ring, holed polygon, non-areal passthrough,
+    Z points, off-line split points, and NULLs. ST_ForceRHR is the same
+    registered function as ST_ForcePolygonCW, so the fuser shares its
+    node."""
     rows = [
         (0, "POLYGON ((10 10, 60 10, 60 40, 10 40, 10 10))",  # CCW rect
          "POINT Z (3 4 5)",
@@ -419,46 +410,23 @@ def test_r14_fused_batch_structs_equal_composition(spark):
     df = spark.createDataFrame(
         rows, "id int, g string, p string, l string, pt string,"
         " spt string, pos int")
-    df.createOrReplaceTempView("fused_r14b")
-    fused = spark.sql("""
-      SELECT id,
-             ST_ForceCWStats(g) AS f,
-             ST_ZmflagZ(p) AS z,
-             ST_AddRmStats(l, pt, pos) AS ar,
-             ST_SplitStats(l, spt) AS sp
-      FROM fused_r14b ORDER BY id""").collect()
-    comp = spark.sql("""
-      SELECT id,
-             ST_AsText(ST_ForcePolygonCW(g)) AS cw_wkt,
-             ST_AsText(ST_ForceRHR(g)) AS rhr_wkt,
-             ST_AsText(ST_ForcePolygonCCW(ST_ForcePolygonCW(g)))
-                 AS ccw_rt,
-             ST_IsPolygonCW(ST_ForcePolygonCW(g)) AS is_cw,
-             ST_IsPolygonCCW(ST_ForcePolygonCW(g)) AS is_ccw,
-             ST_Area(ST_ForcePolygonCW(g)) AS cw_area,
-             ST_Zmflag(p) AS zm,
-             ST_Z(p) AS zz,
-             ST_NPoints(ST_AddPoint(l, pt, pos)) AS ap_np,
-             ST_Length(ST_AddPoint(l, pt, pos)) AS ap_len,
-             ST_NPoints(ST_RemovePoint(ST_AddPoint(l, pt, pos), pos))
-                 AS rp_np,
-             ST_Length(ST_RemovePoint(ST_AddPoint(l, pt, pos), pos))
-                 AS rp_len,
-             ST_NumGeometries(ST_Split(l, spt)) AS sp_n,
-             ST_Length(ST_GeometryN(ST_Split(l, spt), 0)) AS sp_len0
-      FROM fused_r14b ORDER BY id""").collect()
-    for f, c in zip(fused, comp):
-        i = f["id"]
-        assert f["f"]["wkt"] == c["cw_wkt"] == c["rhr_wkt"], i
-        assert f["f"]["ccw_rt"] == c["ccw_rt"], i
-        assert f["f"]["is_cw"] == c["is_cw"], i
-        assert f["f"]["is_ccw"] == c["is_ccw"], i
-        assert f["f"]["area"] == c["cw_area"], i
-        assert f["z"]["zm"] == c["zm"], i
-        assert f["z"]["z"] == c["zz"], i
-        assert f["ar"]["ap_np"] == c["ap_np"], i
-        assert f["ar"]["ap_len"] == c["ap_len"], i
-        assert f["ar"]["rp_np"] == c["rp_np"], i
-        assert f["ar"]["rp_len"] == c["rp_len"], i
-        assert f["sp"]["n"] == c["sp_n"], i
-        assert f["sp"]["len0"] == c["sp_len0"], i
+    got = _fused_equals_composed(spark, df, [
+        "id",
+        "ST_AsText(ST_ForcePolygonCW(g)) AS cw_wkt",
+        "ST_AsText(ST_ForceRHR(g)) AS rhr_wkt",
+        "ST_AsText(ST_ForcePolygonCCW(ST_ForcePolygonCW(g))) AS ccw_rt",
+        "ST_IsPolygonCW(ST_ForcePolygonCW(g)) AS is_cw",
+        "ST_IsPolygonCCW(ST_ForcePolygonCW(g)) AS is_ccw",
+        "ST_Area(ST_ForcePolygonCW(g)) AS cw_area",
+        "ST_Zmflag(p) AS zm",
+        "ST_Z(p) AS zz",
+        "ST_NPoints(ST_AddPoint(l, pt, pos)) AS ap_np",
+        "ST_Length(ST_AddPoint(l, pt, pos)) AS ap_len",
+        "ST_NPoints(ST_RemovePoint(ST_AddPoint(l, pt, pos), pos)) AS rp_np",
+        "ST_Length(ST_RemovePoint(ST_AddPoint(l, pt, pos), pos)) AS rp_len",
+        "ST_NumGeometries(ST_Split(l, spt)) AS sp_n",
+        "ST_Length(ST_GeometryN(ST_Split(l, spt), 0)) AS sp_len0",
+    ])
+    for r in got:
+        assert r[1] == r[2], r                  # ForceRHR == ForcePolygonCW
+    assert got[4][1:] == (None,) * 14           # NULL row stays NULL

@@ -622,12 +622,15 @@ def test_prop_subdivide_preserves_area(seed, mv):
 
 
 def test_fused_xy_struct_udfs_equal_composition():
-    """r13 (optimization round): ST_XY / ST_EndXYLen / ST_NumGeomsLength
-    must equal the scalar compositions value-for-value (they are literal
-    compositions of the same lanes) — pinned on a point, a line, a
-    multiline, a non-point (NULL coords), and NULL input."""
+    """The projection fuser's generated body (chainrw.select_st) calls
+    each registered function once, in dependency order, and must equal
+    the per-output compositions value-for-value — pinned on a point, a
+    line, a multiline, a non-point (NULL coords), and NULL input."""
     import pandas as pd
 
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import (
+        chainrw as CR,
+    )
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import (
         spatial as SP,
     )
@@ -639,19 +642,17 @@ def test_fused_xy_struct_udfs_equal_composition():
         "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))",
         None,
     ], dtype=object)
-    xy = SP.st_xy.func(rows)
-    x = SP.st_x.func(rows)
-    y = SP.st_y.func(rows)
-    assert list(xy["x"].fillna(-1)) == list(x.fillna(-1))
-    assert list(xy["y"].fillna(-1)) == list(y.fillna(-1))
-    exl = SP.st_end_xy_len.func(rows)
+    fz = CR._Fusion()
+    for e in ("ST_X(s)", "ST_Y(s)", "ST_X(ST_EndPoint(s))",
+              "ST_Y(ST_EndPoint(s))", "ST_Length(s)", "ST_NumGeometries(s)"):
+        fz.emit(CR._Expr(CR._parse(e)[0]))
+    assert len(fz.nodes) == 7                  # ST_EndPoint(s) runs once
+    got = fz.udf().func(rows)
     ep = SP.st_endpoint.func(rows)
-    assert list(exl["x"].fillna(-1)) == list(SP.st_x.func(ep).fillna(-1))
-    assert list(exl["y"].fillna(-1)) == list(SP.st_y.func(ep).fillna(-1))
-    assert list(exl["len"].fillna(-1)) == \
-        list(SP.st_length.func(rows).fillna(-1))
-    nl = SP.st_numgeoms_length.func(rows)
-    assert list(nl["n"].fillna(-1)) == \
-        list(SP.st_numgeometries.func(rows).fillna(-1))
-    assert list(nl["len"].fillna(-1)) == \
-        list(SP.st_length.func(rows).fillna(-1))
+    for field, exp in (("f0", SP.st_x.func(rows)),
+                       ("f1", SP.st_y.func(rows)),
+                       ("f2", SP.st_x.func(ep)),
+                       ("f3", SP.st_y.func(ep)),
+                       ("f4", SP.st_length.func(rows)),
+                       ("f5", SP.st_numgeometries.func(rows))):
+        assert list(got[field].fillna(-1)) == list(exp.fillna(-1)), field
