@@ -54,7 +54,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.io import _scan_key, read_parquet_cached as _rpc
+from ..sources.io import read_parquet_cached as _rpc, row_count
 from pyspark.sql import functions as F
 
 from .graph import connected_components
@@ -65,25 +65,9 @@ MIN_PTS = 5
 #: points per blob — fixes per-component size at every SF.
 BLOB = 25
 
-#: `sources.io._scan_key` (application id, path, mtime_ns, size) -> events
-#: row count (parquet footer metadata); memoized so the stats trio's
-#: repeated calls pay the count job once per file and session. Keyed on
-#: the file identity, not just the path, so a regenerated fixture in the
-#: same driver session invalidates naturally (r10 advice item 1); a path
-#: that cannot be stat-ed is counted every time.
-_N_CACHE: dict = {}
-
-
 def events_count(spark: SparkSession, sf_dir: str) -> int:
     """Memoized row count of events.parquet (footer metadata, exact)."""
-    path = f"{sf_dir}/events.parquet"
-    key = _scan_key(spark, path)
-    n = _N_CACHE.get(key)
-    if n is None:
-        n = spark.read.parquet(path).count()
-        if key is not None:
-            _N_CACHE[key] = n
-    return n
+    return row_count(spark, f"{sf_dir}/events.parquet")
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -176,15 +176,13 @@ LOCAL_CC_MAX_EDGES = 500_000
 LOCAL_CC_CONF = "spark.geoengine.cc.localMaxEdges"
 
 
-def _driver_union_find(cedges: DataFrame, rows=None) -> DataFrame:
+def _driver_union_find(cedges: DataFrame, rows: list) -> DataFrame:
     """(node, comp) for every node in the SMALL contracted edge list,
     comp = min node id of the component: classic union-find with path
     compression and union-by-min (the min-root invariant makes ranks
-    unnecessary and the result engine-independent). `rows` lets the
-    caller pass an already-collected edge list (r14: the size gate's
-    bounded collect doubles as the input, saving one scan)."""
-    if rows is None:
-        rows = cedges.collect()
+    unnecessary and the result engine-independent). `rows` is the edge
+    list the caller's size gate already collected; `cedges` gives the
+    session and the node type."""
     parent: dict = {}
 
     def find(x):

@@ -72,9 +72,8 @@ TILE = 1024
 #: safely under a 1000-executor broadcast budget.
 BROADCAST_MAX_ROWS = 2_000_000
 BROADCAST_CONF = "spark.geoengine.lof.broadcastMaxRows"
-#: shared with dbscan._points: one footer-count job per events fixture
-#: (keyed on file identity, r10 advice item 1) across the whole stats
-#: trio.
+#: shared with dbscan._points: one memoized footer count per events file
+#: across the whole stats trio.
 from .dbscan import events_count  # noqa: E402
 
 def _lof_points(spark: SparkSession, sf_dir: str) -> DataFrame:

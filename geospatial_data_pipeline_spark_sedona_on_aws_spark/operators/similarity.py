@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from ..sources.io import _scan_key, read_parquet_cached as _rpc
+from ..sources.io import read_parquet_cached as _rpc, row_count
 from pyspark.sql import functions as F
 
 TOPK = 10
@@ -60,23 +60,9 @@ LSH_PLANES_SQL = ("CASE " + " ".join(
     for p in range(LSH_MIN_PLANES, LSH_MAX_PLANES)
 ) + f" ELSE {LSH_MAX_PLANES} END")
 
-#: `sources.io._scan_key` -> embeddings row count; memoized like
-#: operators/dbscan.py's events_count so repeated plan builds pay the
-#: (parquet-footer metadata) count job once per file and session, and
-#: keyed on file identity so a regenerated fixture invalidates naturally.
-_EMB_N_CACHE: dict = {}
-
-
 def emb_count(spark: SparkSession, sf_dir: str) -> int:
     """Memoized row count of embeddings.parquet (footer metadata, exact)."""
-    path = f"{sf_dir}/embeddings.parquet"
-    key = _scan_key(spark, path)
-    n = _EMB_N_CACHE.get(key)
-    if n is None:
-        n = spark.read.parquet(path).count()
-        if key is not None:
-            _EMB_N_CACHE[key] = n
-    return n
+    return row_count(spark, f"{sf_dir}/embeddings.parquet")
 
 
 #: spread floor: at least this many embedding rows per task. A tiny
@@ -586,8 +572,8 @@ def lsh_ann(spark: SparkSession, sf_dir: str,
     the fixed-P spelling at 30×/decade (26.7 s sf1.0) because pairs grew
     ∝ probes·n²/2^P; with occupancy clamped, pairs per probe are linear in
     n and only the probe count (3P+1) grows logarithmically. n comes from
-    a memoized parquet-footer count (emb_count — the dbscan events_count
-    pattern, a bounded driver-side action), and the oracle computes the
+    a memoized parquet-footer count (emb_count, a bounded driver-side
+    action), and the oracle computes the
     SAME integer threshold ladder from count(*) in SQL.
     Scale shape is otherwise unchanged: equi-join on the probe bucket,
     never all-pairs; a pair can match at most once because the candidate's

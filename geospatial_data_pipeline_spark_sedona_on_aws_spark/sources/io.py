@@ -9,48 +9,76 @@ sink with its exact writer options (:146-160).
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
+from urllib.request import url2pathname
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-#: (session id, path, mtime_ns, size) -> analyzed scan DataFrame. A
-#: DataFrame is an immutable UNEVALUATED plan — memoizing it caches only
-#: the reader handshake (file listing + footer schema read, ~0.1 s of
-#: driver/py4j time per call, paid by almost every query build); every
-#: execution still scans the parquet data from disk. This is the
-#: session-lifetime analog of Spark's own file-index cache (guide §6),
-#: keyed on file identity so a regenerated fixture invalidates naturally
-#: (the dbscan._N_CACHE convention). r13 optimization round.
-_SCAN_CACHE: dict = {}
+#: entries the file-identity memo holds before it drops the least recently
+#: used one: 2.5x the largest working set measured, 25 entries (the 10
+#: spatial_mix queries 9, one scripts/check_oracles.py run at one scale 16).
+#: One scan entry holds ~0.08 MB of JVM heap.
+MEMO_ENTRIES = 64
+_MEMO: OrderedDict = OrderedDict()
+_MEMO_LOCK = threading.Lock()
 
 
-def _scan_key(spark: SparkSession, path: str) -> tuple | None:
-    import os
-
+def _identity(path: str) -> tuple | None:
+    """(path, mtime_ns, size), or None when `path` cannot be stat-ed. A
+    `file:` URI is read as its local path. A directory's own stat
+    changes with every Spark write into it (`_temporary`, `_SUCCESS`)."""
+    local = url2pathname(urlsplit(path).path) if path.startswith("file:") else path
     try:
-        st = os.stat(path)
-        ident = (st.st_mtime_ns, st.st_size)
+        st = os.stat(local)
     except OSError:
-        # unstat-able (remote) path: no stable identity — don't memoize
-        # (r14, ADVICE r13: the old (0,0) fallback cached such paths
-        # forever across data changes)
         return None
-    # r14 (ADVICE r13): id(spark) can be recycled by CPython after a
-    # stopped session is collected; applicationId is unique per
-    # SparkContext, so a new session never inherits a dead session's
-    # cached plans (one cheap py4j call vs the ~0.1 s handshake saved)
-    return (spark.sparkContext.applicationId, path) + ident
+    return (path, st.st_mtime_ns, st.st_size)
+
+
+def memo(spark: SparkSession, kind: str, paths: list[str], build):
+    """`build()`, remembered for as long as the files at `paths` and
+    the Spark application stay the same.
+
+    Planning a query re-derives facts about its input files on every
+    build: the reader handshake of a scan (file listing + footer schema,
+    ~0.1 s), a split count (a physical plan + RDD build, ~70 ms), a row
+    count (a Spark job). They depend only on the files and the session,
+    so the key is (kind, applicationId, file identities): a rewritten or
+    re-stamped file, or a new session, makes a new key and the old entry
+    ages out of the LRU. A path that cannot be stat-ed, or an empty path
+    list, has no identity and is built every time. What is remembered
+    must be safe to share: a DataFrame is an unevaluated plan, so every
+    execution still reads the files."""
+    idents = [_identity(p) for p in paths]
+    if not idents or None in idents:
+        return build()
+    key = (kind, spark.sparkContext.applicationId, tuple(idents))
+    with _MEMO_LOCK:
+        if key in _MEMO:
+            _MEMO.move_to_end(key)
+            return _MEMO[key]
+    value = build()
+    with _MEMO_LOCK:
+        _MEMO[key] = value
+        while len(_MEMO) > MEMO_ENTRIES:
+            _MEMO.popitem(last=False)
+    return value
 
 
 def read_parquet_cached(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` with the analyzed-plan memo above."""
-    key = _scan_key(spark, path)
-    if key is None:
-        return spark.read.parquet(path)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        _SCAN_CACHE[key] = df
-    return df
+    """`spark.read.parquet(path)`, memoized on the file's identity."""
+    return memo(spark, "scan", [path], lambda: spark.read.parquet(path))
+
+
+def row_count(spark: SparkSession, path: str) -> int:
+    """Exact row count of the parquet at `path` (footer metadata),
+    memoized on the file's identity."""
+    return memo(spark, "count", [path],
+                lambda: read_parquet_cached(spark, path).count())
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -81,25 +109,9 @@ def spread_scan(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-#: (session id, sorted input files) -> scan partition count. df.rdd pays a
-#: full physical planning + RDD DAG build (~70 ms of driver time) on every
-#: call; the split count depends only on the source files and the scan
-#: confs, both session-stable, so one probe per source per session is
-#: enough (r13 optimization round).
-_NPART_CACHE: dict = {}
-
-
 def _scan_partitions(df: DataFrame) -> int:
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        return df.rdd.getNumPartitions()
-    key = (df.sparkSession.sparkContext.applicationId, files)
-    n = _NPART_CACHE.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _NPART_CACHE[key] = n
-    return n
+    return memo(df.sparkSession, "splits", sorted(df.inputFiles()),
+                lambda: df.rdd.getNumPartitions())
 
 def read_bounds(df: DataFrame, partition_column: str) -> tuple:
     """Eager min/max bounds scan feeding range partitioning — the

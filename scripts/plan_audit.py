@@ -40,6 +40,7 @@ Usage: python scripts/plan_audit.py [sf_dir] > PLAN_AUDIT_r6.md
 
 from __future__ import annotations
 
+import ast
 import os
 import re
 import sys
@@ -207,8 +208,11 @@ def _collect_site_audit() -> list[str]:
     flags = []
     counts: dict[str, int] = {}
     for py in sorted(pkg.rglob("*.py")):
-        src = py.read_text()
-        n = len(re.findall(r"\.collect\(\)|\.toPandas\(\)", src))
+        # code only: a call node, not the text in a comment or docstring
+        n = sum(isinstance(node, ast.Call) and not node.args
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("collect", "toPandas")
+                for node in ast.walk(ast.parse(py.read_text())))
         if n:
             counts[py.name] = counts.get(py.name, 0) + n
     for name, n in sorted(counts.items()):

@@ -469,6 +469,10 @@ def test_plan_audit_flag_detectors():
     fused = ("+- ArrowEvalPython [fused(w#5, x#1)#7], [pythonUDF0#8], 200")
     assert PA.audit(fused)["flags"] == []
 
+    # the source-level collect audit counts call nodes, so `.collect()`
+    # in a comment or docstring is not a call site
+    assert PA._collect_site_audit() == []
+
 
 def test_bnl_build_sides_stay_bounded(spark):
     """r10 (r9 verdict item 7): the BroadcastNestedLoopJoin sites in
