@@ -17,7 +17,8 @@ combiner decomposition instead:
              partials, never raw rows) -> vectorized exact union area
 
 union_aggr (the geometry-valued variant) keeps the same two-level shape,
-with the input partitioning as the natural salt.
+with the input partitioning as the natural salt. dissolve_transform_area
+has no combine; its docstring gives the scale argument.
 """
 
 from __future__ import annotations
@@ -102,9 +103,8 @@ def _adaptive_partial(rect_arr: np.ndarray) -> np.ndarray:
     only when the total rect area overshoots 2x the bbox area, and keep
     the raw rects when the result didn't shrink — raw overlapping rects
     are equally valid partials (every consumer either re-decomposes the
-    merged set or runs an overlap-exact union). Shared by union_aggr,
-    dissolve_clip_area, and dissolve_transform_area so the tuning
-    constants cannot drift apart."""
+    merged set or runs an overlap-exact union). Shared by union_aggr and
+    dissolve_clip_area so the tuning constants cannot drift apart."""
     n = len(rect_arr)
     if n >= 8:
         areas = ((rect_arr[:, 2] - rect_arr[:, 0])
@@ -116,6 +116,20 @@ def _adaptive_partial(rect_arr: np.ndarray) -> np.ndarray:
             if len(cand) < n:
                 return cand
     return rect_arr
+
+
+def _concat_batches(batches) -> pd.DataFrame | None:
+    """One frame from a pandas stage's non-empty batches (None when there
+    are none), concatenated column by column with numpy. pd.concat checks
+    every value of an object column for NA one at a time, and the dissolve
+    stages ship mostly-None object columns (`__wkt`, `__gen`, `__gw`,
+    `__gwkt`): that check was 0.5 s of a 180 k-row finish."""
+    frames = [p for p in batches if len(p)]
+    if len(frames) <= 1:
+        return frames[0] if frames else None
+    return pd.DataFrame(
+        {c: np.concatenate([f[c].to_numpy() for f in frames])
+         for c in frames[0].columns}, copy=False)
 
 
 def _group_slices(whole: pd.DataFrame, keys: Sequence[str]):
@@ -206,10 +220,9 @@ def union_aggr(df: DataFrame, group_cols: Sequence[str], geom_col: str,
         return np.ascontiguousarray(rect_arr, dtype=np.float64).tobytes(), None
 
     def stage1(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [p for p in batches if len(p)]
-        if not frames:
+        whole = _concat_batches(batches)
+        if whole is None:
             return
-        whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
         ok = whole["__x1"].notna().to_numpy()
         rects_all = whole[["__x1", "__y1", "__x2", "__y2"]].to_numpy(
             dtype=np.float64, na_value=np.nan)
@@ -229,10 +242,9 @@ def union_aggr(df: DataFrame, group_cols: Sequence[str], geom_col: str,
         yield out
 
     def stage2(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [p for p in batches if len(p)]
-        if not frames:
+        whole = _concat_batches(batches)
+        if whole is None:
             return
-        whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
         rows_k, rows_u = [], []
         for kv, grp in whole.groupby(keys, sort=False, dropna=False):
             rows_k.append(kv if isinstance(kv, tuple) else (kv,))
@@ -436,8 +448,8 @@ def dissolve_clip_area(df: DataFrame, group_cols: Sequence[str], geom_col: str,
             if len(pdf):
                 acc.append(pdf[keys + bcols])
         parts = []
-        if acc:
-            whole = pd.concat(acc, ignore_index=True)
+        whole = _concat_batches(acc)
+        if whole is not None:
             # numpy grouping (lexsort + boundary split): one array pass and
             # ONE output frame — pandas groupby would build a small DataFrame
             # per (key, partition) group, which dominates at thousands of
@@ -466,8 +478,9 @@ def dissolve_clip_area(df: DataFrame, group_cols: Sequence[str], geom_col: str,
                 parts.append(pd.DataFrame(
                     [kv + (None, None, None, None, G.to_wkt(u))],
                     columns=keys + bcols + ["__gwkt"]))
-        if parts:
-            yield pd.concat(parts, ignore_index=True)
+        whole = _concat_batches(parts)
+        if whole is not None:
+            yield whole
 
     partials = routed.mapInPandas(combine, schema=bounds_schema)
     if _partials_only:
@@ -482,10 +495,9 @@ def dissolve_clip_area(df: DataFrame, group_cols: Sequence[str], geom_col: str,
     # partition arrives as one batch and groups split with a numpy lexsort,
     # so per-group cost is just the kernel call.
     def final_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [p for p in batches if len(p)]
-        if not frames:
+        whole = _concat_batches(batches)
+        if whole is None:
             return
-        whole = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
         order, starts, ends = _group_slices(whole, keys)
         kmat = whole[keys].to_numpy()[order]
         bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
@@ -536,7 +548,8 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
     (`crop_analytics_full_chain`): the chained form crosses the Arrow
     boundary three times (hygiene UDF pass, union stage 1, union stage 2),
     and at 600k rows each crossing costs more than all the JVM compute in
-    the plan combined. Semantics are preserved exactly:
+    the plan combined; this operator crosses it once, in the per-group
+    finish. Semantics are preserved exactly:
 
       * canonical-rect rows are PROVEN fixed points of the hygiene chain
         (functions/spatial._RECT_FIXED_RE, property-tested), so skipping
@@ -544,7 +557,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
         themselves take — just before the Arrow boundary instead of after;
       * non-rect rows get the real kernel hygiene
         (normalize→make_valid→normalize ≡ Buffer(MakeValid(FromWKT),0))
-        inside the combine stage;
+        inside the per-group finish;
       * the clip runs AFTER the union, on the same canonical band
         decomposition the oracle replicates — clip-before-union (the
         flagship's trick) would change the band structure and, post
@@ -553,18 +566,31 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
     Contract: `clip_bounds` are 4 numeric columns (x1, y1, x2, y2) of an
     axis-aligned clip rectangle, constant per group (they ride as extra
     grouping keys). A non-rectangular clip needs the general chained form.
-    NULL-geometry rows are skipped in the combine, so a group whose
-    members ALL have NULL geometry produces no output row (unlike a plain
-    Spark groupBy, which would emit the group with a NULL/0 aggregate) —
-    all-NULL groups are out of contract; pre-filter or coalesce geometries
-    upstream if such groups must appear in the result.
+    NULL-geometry rows are dropped in the JVM before the exchange, so a
+    group whose members ALL have NULL geometry produces no output row
+    (unlike a plain Spark groupBy, which would emit the group with a
+    NULL/0 aggregate) — all-NULL groups are out of contract; pre-filter or
+    coalesce geometries upstream if such groups must appear in the result.
     src_crs/dst_crs resolve through the kernel CRS registry (r5: 4326,
     3857, 5880, UTM 326xx/327xx) — the default pair composes the exact
     functions the fused mercator_to_polyconic path uses, bit-identically.
 
-    Scale shape = dissolve_clip_area's: JVM parse/route, adaptive map-side
-    combine, ONE shuffle of numeric partials, per-group finish. The finish
-    adds O(#bands) trig per group — independent of member count.
+    Scale shape: ONE keyed exchange feeding ONE Python stage. The JVM
+    projection routes each row as keys + clip bounds + either its 4 bbox
+    doubles (canonical rects) or its WKT (everything else) and drops NULL
+    geometries; `repartition(keys)` then brings every member of a group to
+    the per-group finish, which runs hygiene on the slow rows and the
+    canonical decompose → clip → transform → shoelace. There is no map-side
+    combine: a combine only shrinks a group whose rects saturate their
+    footprint (`_adaptive_partial`'s 2×-bbox test), real land-use parcels
+    are disjoint, and on them it passed every rect through unchanged, so
+    the finish already received every raw rect of a hot group, one Arrow
+    round trip later. The only work that moves to the reduce side is
+    slow-row hygiene; the union itself stays memory-capped
+    (`rectnp.MAX_CELLS`). Inputs that do saturate belong to
+    dissolve_clip_area and union_aggr, which keep their combiners and skew
+    proofs (tests/test_operators.py). The finish adds O(#bands) trig per
+    group — independent of member count.
     """
     from ..kernel import transform as T
 
@@ -575,17 +601,10 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
         return fwd_dst(*inv_src(x, y))
 
     keys = list(group_cols)
-    cb = list(clip_bounds)
-    keys_all = keys + cb
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.select(*keys_all).schema.fields
-    )
-    bounds_schema = (f"{key_schema}, `__x1` double, `__y1` double, "
-                     f"`__x2` double, `__y2` double, `__gwkt` string")
+    keys_all = keys + list(clip_bounds)
     bcols = ["__x1", "__y1", "__x2", "__y2"]
 
-    # ---- stage 1: JVM-side parse/route (NO clip — union first) ----------
+    # ---- JVM: parse/route (NO clip — union first), drop NULL geometries
     if geom_bounds is not None:
         bx1, by1, bx2, by2 = [f"cast(`{c}` as double)" for c in geom_bounds]
         g_ok = (f"({bx1} IS NOT NULL AND {by1} IS NOT NULL"
@@ -596,111 +615,63 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
         e = lambda i: f"try_element_at({arr}, {i})"  # noqa: E731
         g_ok = f"(`{geom_col}` IS NOT NULL AND {is_rect_sql(arr)})"
         gx = (e(1), e(2), e(3), e(6))
+    fast = f"coalesce({g_ok}, false)"
     if geom_expr is not None:
         # slow-path-only WKT construction — see dissolve_clip_area's
         # geom_expr note (r13 optimization round)
         assert geom_bounds is not None, "geom_expr requires geom_bounds"
-        gw_slot = (f"CASE WHEN NOT coalesce({g_ok}, false)"
-                   f" THEN ({geom_expr}) END AS __gw")
+        gw = geom_expr
     else:
-        gw_slot = (f"CASE WHEN NOT coalesce({g_ok}, false)"
-                   f" THEN `{geom_col}` END AS __gw")
+        gw = f"`{geom_col}`"
     routed = df.selectExpr(
         *[f"`{k}`" for k in keys_all],
-        f"coalesce({g_ok}, false) AS __fast",
-        f"CASE WHEN coalesce({g_ok}, false) THEN {gx[0]} END AS __x1",
-        f"CASE WHEN coalesce({g_ok}, false) THEN {gx[1]} END AS __y1",
-        f"CASE WHEN coalesce({g_ok}, false) THEN {gx[2]} END AS __x2",
-        f"CASE WHEN coalesce({g_ok}, false) THEN {gx[3]} END AS __y2",
-        gw_slot,
-    )
+        f"{fast} AS __fast",
+        *[f"CASE WHEN {fast} THEN {v} END AS {c}" for v, c in zip(gx, bcols)],
+        f"CASE WHEN NOT {fast} THEN ({gw}) END AS __gw",
+    ).where("__fast OR __gw IS NOT NULL").drop("__fast")
 
     def _hygiene_decompose(w: str):
         """Kernel hygiene (≡ Buffer(MakeValid(GeomFromWKT(w)), 0)) then
-        rectilinear decomposition; (rects, None) or (None, wkt)."""
+        rectilinear decomposition; (rects, None) or (None, geometry)."""
         g = G.normalize(G.make_valid(G.normalize(G.parse_wkt(w))))
         try:
             return G.rectilinear_decompose(g), None
         except G.GeomError:
-            return None, G.to_wkt(g)
+            return None, g
 
-    # ---- stage 2: adaptive map-side combine (same as dissolve_clip_area)
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc: list[pd.DataFrame] = []
-        gacc: list[tuple] = []
-        for pdf in batches:
-            slow = pdf.loc[~pdf["__fast"]]
-            if len(slow):
-                gw = slow["__gw"].to_numpy()
-                kv_rows = list(slow[keys_all].itertuples(index=False, name=None))
-                rows = []
-                for i in range(len(slow)):
-                    if gw[i] is None:
-                        continue
-                    rects, gwkt = _hygiene_decompose(gw[i])
-                    if rects is not None:
-                        rows.extend(kv_rows[i] + tuple(r) for r in rects)
-                    else:
-                        gacc.append(kv_rows[i] + (gwkt,))
-                if rows:
-                    acc.append(pd.DataFrame(rows, columns=keys_all + bcols))
-                pdf = pdf.loc[pdf["__fast"]]
-            if len(pdf):
-                acc.append(pdf[keys_all + bcols])
-        parts = []
-        if acc:
-            whole = pd.concat(acc, ignore_index=True)
-            order, starts, ends = _group_slices(whole, keys_all)
-            kmat = whole[keys_all].to_numpy()[order]
-            bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
-            out_k, out_b = [], []
-            for s, e in zip(starts, ends):
-                dec = _adaptive_partial(bmat[s:e])
-                out_b.append(dec)
-                out_k.append(np.repeat(kmat[s:s + 1], len(dec), axis=0))
-            kcat = np.concatenate(out_k)
-            part = pd.DataFrame(np.concatenate(out_b), columns=bcols)
-            for i, k in enumerate(keys_all):
-                part.insert(i, k, kcat[:, i])
-            part["__gwkt"] = None
-            parts.append(part)
-        if gacc:
-            gdf = pd.DataFrame(gacc, columns=keys_all + ["__gwkt"])
-            for kv, grp in gdf.groupby(keys_all, sort=False, dropna=False):
-                u = B.union_geom([G.parse_wkt(w) for w in grp["__gwkt"]])
-                kv = kv if isinstance(kv, tuple) else (kv,)
-                parts.append(pd.DataFrame(
-                    [kv + (None, None, None, None, G.to_wkt(u))],
-                    columns=keys_all + bcols + ["__gwkt"]))
-        if parts:
-            yield pd.concat(parts, ignore_index=True)
-
-    partials = routed.mapInPandas(combine, schema=bounds_schema)
-
-    # ---- stage 3: canonical decompose → clip → transform → area ---------
+    # ---- Python: hygiene → canonical decompose → clip → transform → area
     n_keys = len(keys)
 
     def finish(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [p for p in batches if len(p)]
-        if not frames:
+        whole = _concat_batches(batches)
+        if whole is None:
             return
-        whole = (pd.concat(frames, ignore_index=True)
-                 if len(frames) > 1 else frames[0])
         order, starts, ends = _group_slices(whole, keys_all)
         kmat = whole[keys_all].to_numpy()[order]
         bmat = whole[bcols].to_numpy(dtype=np.float64)[order]
-        gw = whole["__gwkt"].to_numpy()[order]
+        gw = whole["__gw"].to_numpy()[order]
+        slow = pd.notna(gw)
         areas = np.empty(len(starts), dtype=np.float64)
         for gi, (s, e) in enumerate(zip(starts, ends)):
             cx1, cy1, cx2, cy2 = (float(v) for v in kmat[s][n_keys:])
-            gwkts = [w for w in gw[s:e] if w is not None]
-            if gwkts:
-                # general members: union partials, convex-clip to the
-                # rect window, parity rinse, transform, shoelace
-                rect_rows = bmat[s:e][pd.isna(gw[s:e])]
-                geoms = [G.parse_wkt(w) for w in gwkts]
-                if len(rect_rows):
-                    disjoint = R.union_decompose(rect_rows)
+            rects = bmat[s:e][~slow[s:e]]
+            geoms, extra = [], []
+            for w in gw[s:e][slow[s:e]]:
+                pieces, g = _hygiene_decompose(w)
+                if g is None:
+                    extra.extend(pieces)
+                else:
+                    geoms.append(g)
+            if extra:
+                rects = np.concatenate(
+                    [rects, np.array(extra, dtype=np.float64)])
+            if geoms:
+                # general members: union, convex-clip to the rect window,
+                # parity rinse, transform, shoelace. rects_to_geom needs
+                # pairwise-disjoint members (its multipolygon follows
+                # even-odd parity), so the raw rects are decomposed first
+                if len(rects):
+                    disjoint = R.union_decompose(rects)
                     geoms.append(G.rects_to_geom([tuple(r) for r in disjoint]))
                 u = B.union_geom(geoms)
                 clip_ring = [(cx1, cy1), (cx2, cy1), (cx2, cy2), (cx1, cy2)]
@@ -710,7 +681,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
                     [[[point_transform(x, y) for x, y in ring]
                       for ring in poly] for poly in clipped])
                 continue
-            merged = R.union_decompose(bmat[s:e])
+            merged = R.union_decompose(rects)
             # clip each canonical band to the rect window (strict overlap)
             nx1 = np.maximum(merged[:, 0], cx1)
             ny1 = np.maximum(merged[:, 1], cy1)
@@ -731,7 +702,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
         out[out_col] = areas
         yield out
 
-    return partials.repartition(*keys_all).mapInPandas(
+    return routed.repartition(*keys_all).mapInPandas(
         finish,
         schema=", ".join(
             f"`{f.name}` {f.dataType.simpleString()}"

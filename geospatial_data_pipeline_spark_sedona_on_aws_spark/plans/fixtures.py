@@ -27,23 +27,27 @@ REGION_SIZE = 15
 def rect_wkt_sql(x1: str, y1: str, x2: str, y2: str) -> str:
     """SQL text building 'POLYGON ((x1 y1, x2 y1, x2 y2, x1 y2, x1 y1))'
     from integer coordinate expressions — identical text in Spark and
-    DuckDB. One string = one py4j parse (plan-BUILD cost; see
+    DuckDB. NULL when any coordinate is NULL: concat_ws skips NULL
+    arguments, so without the guard a NULL x1 built 'POLYGON ((, 0 ...'.
+    One string = one py4j parse (plan-BUILD cost; see
     dissolve.wkt_nums_sql)."""
     c = lambda v: f"cast({v} as string)"  # noqa: E731
-    return ("concat_ws('', 'POLYGON ((', "
+    any_null = " OR ".join(f"({v}) IS NULL" for v in (x1, y1, x2, y2))
+    return (f"CASE WHEN {any_null} THEN NULL ELSE concat_ws('', 'POLYGON ((', "
             f"{c(x1)}, ' ', {c(y1)}, ', ', "
             f"{c(x2)}, ' ', {c(y1)}, ', ', "
             f"{c(x2)}, ' ', {c(y2)}, ', ', "
             f"{c(x1)}, ' ', {c(y2)}, ', ', "
-            f"{c(x1)}, ' ', {c(y1)}, '))')")
+            f"{c(x1)}, ' ', {c(y1)}, '))') END")
 
 def rect_wkt(x1, y1, x2, y2):
     """Column form of rect_wkt_sql; string args take the one-parse SQL
     path, Columns keep the operator-built tree."""
     if all(isinstance(v, str) for v in (x1, y1, x2, y2)):
         return F.expr(rect_wkt_sql(x1, y1, x2, y2))
-    return F.concat_ws(
-        "",
+    # concat (not concat_ws) is NULL when any argument is: the SQL form's
+    # NULL guard
+    return F.concat(
         F.lit("POLYGON (("),
         x1.cast("string"), F.lit(" "), y1.cast("string"), F.lit(", "),
         x2.cast("string"), F.lit(" "), y1.cast("string"), F.lit(", "),
@@ -53,13 +57,20 @@ def rect_wkt(x1, y1, x2, y2):
         F.lit("))"),
     )
 
-def land_use_areas(spark: SparkSession, sf_dir: str, wkt: bool = True) -> DataFrame:
+def land_use_areas(spark: SparkSession, sf_dir: str, wkt: bool = True, *,
+                   spread: bool = True) -> DataFrame:
     """Fact table analog of core.land_use_areas: one rectangle per lineitem.
 
     Columns mirror the reference scan at spark_job/process_geodata.py:167:
     (region_id, season_id, land_type_id, property_id, land_geometry WKT)
     plus the raw integer rect coords (x1, y1, x2, y2) kept for closed-form
     oracle checks.
+
+    spread: fan an under-split scan out across cores (sources.io
+    .spread_scan). Callers that run per-row Python work before any
+    exchange need it; a caller whose first step is a keyed exchange passes
+    False, because that exchange already spreads the rows and a round-robin
+    spread before it is a sorted shuffle that buys nothing.
     """
     # The driver testdata is a single-row-group parquet file, so the scan
     # yields ONE real split regardless of maxPartitionBytes; the downstream
@@ -83,9 +94,10 @@ def land_use_areas(spark: SparkSession, sf_dir: str, wkt: bool = True) -> DataFr
         "region_id", "season_id", "land_type_id", "property_id",
         "x1", "y1", "x1 + w AS x2", "y1 + h AS y2",
     )
-    from ..sources.io import spread_scan
+    if spread:
+        from ..sources.io import spread_scan
 
-    df = spread_scan(df)
+        df = spread_scan(df)
     if not wkt:
         # wkt=False: caller adds land_geometry AFTER its join. Catalyst can't
         # defer a projection across a join, so building the WKT here would

@@ -117,7 +117,9 @@ def read_bounds(df: DataFrame, partition_column: str) -> tuple:
     """Eager min/max bounds scan feeding range partitioning — the
     reference's `_read_data_bounds` (spark_job/process_geodata.py:54-72):
     a 2-value global aggregate collected to the driver. On parquet the
-    min/max come from footer stats, so this is metadata-only."""
+    min/max are not answered from footer stats: each call runs two jobs
+    (partial and final aggregate over the column's values), plus one job
+    reading the footer schema when the file is new to the scan memo."""
     row = df.agg(
         F.max(partition_column).alias("mx"), F.min(partition_column).alias("mn")
     ).first()

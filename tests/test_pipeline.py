@@ -226,7 +226,7 @@ def test_fused_full_chain_equals_verbatim_chain(spark):
 
 def test_fused_full_chain_general_geometry_slow_path(spark):
     """Non-rect members route through the kernel hygiene inside the fused
-    combine: an L-shape (two rects' worth of area) grouped with rects must
+    finish: an L-shape (two rects' worth of area) grouped with rects must
     contribute its clipped, transformed area like the chain would."""
     from pyspark.sql import functions as F
 
@@ -288,12 +288,14 @@ def test_fused_full_chain_general_geometry_slow_path(spark):
 
 
 def test_fused_transform_area_randomized_vs_kernel_replay(spark):
-    """Randomized equivalence: mixed rect / L-shape / overlapping member
-    sets across several groups, fused operator vs a pure-kernel replay of
-    the same semantics (hygiene -> canonical decompose -> clip -> vertex
-    transform -> shoelace). Catches combine/finish bookkeeping errors the
-    fixed fixtures can't (group boundaries, partial merges, slow-path
-    routing)."""
+    """Randomized equivalence: mixed rect / L-shape / overlapping / NULL
+    member sets across several groups, fused operator vs a pure-kernel
+    replay of the same semantics (hygiene -> canonical decompose -> clip ->
+    vertex transform -> shoelace). Catches routing/finish bookkeeping errors
+    the fixed fixtures can't: group boundaries, one group's slow rows
+    arriving from several input partitions (the input is round-robin
+    spread), NULL members skipped, and an all-NULL group absent from the
+    output."""
     import random
 
     import numpy as np
@@ -324,8 +326,11 @@ def test_fused_transform_area_randomized_vs_kernel_replay(spark):
             rows.append((gid,
                          f"POLYGON (({x1} {y1}, {x1+w} {y1}, {x1+w} {y1+h},"
                          f" {x1} {y1+h}, {x1} {y1}))"))
-        if gid % 3 == 0:
-            # an L-shape member (slow path): two stacked rects
+        if gid % 4 == 1:
+            rows.append((gid, None))  # a NULL member is skipped
+        # L-shape members (slow path): two stacked rects each; group 0
+        # gets eight, so they land in several input partitions
+        for _ in range(8 if gid == 0 else 1 if gid % 3 == 0 else 0):
             x1, y1 = rng.randint(0, 60), rng.randint(0, 60)
             rows.append((gid, f"POLYGON (({x1} {y1}, {x1+10} {y1},"
                               f" {x1+10} {y1+5}, {x1+5} {y1+5},"
@@ -343,11 +348,16 @@ def test_fused_transform_area_randomized_vs_kernel_replay(spark):
         pieces = list(zip(nx1[keep], ny1[keep], nx2[keep], ny2[keep]))
         expected[gid] = (G.area(T.transform_geom(G.rects_to_geom(pieces)))
                          if pieces else 0.0)
+    rows += [(99, None), (99, None)]  # all-NULL group: no output row
     df = (
-        spark.createDataFrame(rows, "gid int, g string")
+        spark.createDataFrame(rows, "gid int, g string").repartition(4)
         .withColumn("cx1", F.lit(5.0)).withColumn("cy1", F.lit(5.0))
         .withColumn("cx2", F.lit(75.0)).withColumn("cy2", F.lit(75.0))
     )
+    # an L-shape has 7 vertices, a rect 5
+    slow_parts = (df.where("gid = 0 AND size(split(g, ',')) = 7")
+                  .select(F.spark_partition_id().alias("p")).distinct().count())
+    assert slow_parts > 1
     out = {r["gid"]: r["area"] for r in dissolve_transform_area(
         df, group_cols=["gid"], geom_col="g",
         clip_bounds=["cx1", "cy1", "cx2", "cy2"], out_col="area",
@@ -355,3 +365,48 @@ def test_fused_transform_area_randomized_vs_kernel_replay(spark):
     assert set(out) == set(expected)
     for gid, exp in expected.items():
         assert abs(out[gid] - exp) <= 1e-9 * max(1.0, exp), (gid, out[gid], exp)
+
+
+def test_fused_transform_area_skips_null_coordinates(spark, duck):
+    """A parcel with a NULL coordinate has no geometry. rect_wkt_sql used to
+    build 'POLYGON ((, 0 ...' for it (concat_ws skips NULLs), which failed
+    the whole dissolve with a bad-coordinate GeomError. Now its text is
+    NULL in both engines, the row is skipped, the valid rect of its group
+    still counts, and a group of only such rows gives no output row."""
+    import numpy as np
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import (
+        geom as G,
+    )
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import (
+        transform as T,
+    )
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators.dissolve import (
+        dissolve_transform_area,
+    )
+
+    wkt = fixtures.rect_wkt_sql("x1", "y1", "x2", "y2")
+    rows = [(1, None, 0, 4, 4), (1, 2, 2, 12, 6), (2, 3, None, 5, 5),
+            (2, None, 1, 2, 3)]
+    schema = "gid int, x1 bigint, y1 bigint, x2 bigint, y2 bigint"
+    df = spark.createDataFrame(rows, schema)
+    texts = [r[0] for r in df.selectExpr(wkt).collect()]
+    assert texts == [r[0] for r in df.select(fixtures.rect_wkt(
+        *[F.col(c) for c in ("x1", "y1", "x2", "y2")])).collect()]
+    values = ", ".join(
+        "(" + ", ".join("NULL" if v is None else str(v) for v in r[1:]) + ")"
+        for r in rows)
+    assert texts == [r[0] for r in duck.execute(
+        f"SELECT {wkt} FROM (VALUES {values}) t(x1, y1, x2, y2)").fetchall()]
+    assert texts == [None, "POLYGON ((2 2, 12 2, 12 6, 2 6, 2 2))", None, None]
+
+    out = dissolve_transform_area(
+        df.selectExpr("*", "0.0 AS cx1", "0.0 AS cy1", "10.0 AS cx2",
+                      "10.0 AS cy2"),
+        group_cols=["gid"], geom_col="g",
+        clip_bounds=["cx1", "cy1", "cx2", "cy2"],
+        geom_bounds=["x1", "y1", "x2", "y2"], out_col="area", geom_expr=wkt,
+    ).collect()
+    assert [r["gid"] for r in out] == [1]
+    want = G.area(T.transform_geom(G.rects_to_geom([(2.0, 2.0, 10.0, 6.0)])))
+    assert np.isclose(out[0]["area"], want, rtol=1e-12)

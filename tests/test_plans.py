@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.operators import similarity as SIM
@@ -68,6 +69,20 @@ def test_crop_analytics_skewed_single_shuffle(spark):
     fact_shuffles = re.findall(r"Exchange hashpartitioning\(region_id", live)
     assert len(fact_shuffles) == 1, plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.mark.parametrize("query", ["crop_analytics_full", "crop_analytics_utm"])
+def test_fused_dissolve_one_exchange_one_python_stage(spark, query):
+    """The fused full-chain dissolve routes parcels in the JVM straight into
+    one keyed exchange and one Python stage: no round-robin spread of the
+    fact scan before it, and no map-side combine."""
+    plan = physical_plan(getattr(P, query)(spark, SF_SMOKE))
+    live = plan.split("InMemoryRelation")[0]
+    assert len(re.findall(r"MapInPandas|MapInArrow", live)) == 1, plan
+    assert "RoundRobinPartitioning" not in plan, plan
+    # the one hash exchange is the fact rows' (the dimension's sits below
+    # its InMemoryRelation)
+    assert re.findall(r"Exchange hashpartitioning\((\w+)", live) == ["region_id"], plan
 
 
 def test_whole_stage_codegen_covers_relational_plans(spark):
