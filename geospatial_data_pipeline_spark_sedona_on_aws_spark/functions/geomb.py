@@ -32,7 +32,6 @@ either). Scale: row-local, per-Arrow-batch, no shuffle or driver state.
 
 from __future__ import annotations
 
-import re
 import struct
 
 import numpy as np
@@ -50,14 +49,15 @@ from pyspark.sql.types import (
 from ..kernel import geom as G
 from ..kernel import geomtypes as GT
 from ..kernel import packed as PK
+from . import lanes as LN
+from . import lanes_ops as LO
 from . import spatial as S
 
 # ------------------------------------------------------------ text -> WKB
 
-# vectorized rect edge: a WKT batch row matching the proven-fixed-point
-# rectangle pattern (spatial._RECT_FIXED_RE) skips the Python parser —
-# its WKB is assembled directly from the four extracted integers as one
-# structured-array write for the whole batch
+# vectorized rect edge: a canonical CCW rect row skips the Python
+# parser — its WKB is assembled directly from the four extracted
+# coordinates as one structured-array write for the whole batch
 _RECT_WKB_DT = np.dtype([
     ("hdr", "u1", (9,)),       # 01 + code 3 + nrings 1 (LE)
     ("npts", "<u4"),
@@ -102,52 +102,16 @@ def _geom_from_wkt_b_scalar(s):
     return GT.to_wkb(GT.parse_wkt(s))
 
 
-# General CCW rect WKT (float coordinates allowed, optional closing
-# vertex) — unlike the text surface's integer fixed-point regex this only
-# needs parse-equivalence, not text-fixed-point: the numbers are extracted
-# with the same strtod float() would use, the CCW check ((c-a)(d-b) > 0)
-# makes normalize() provably the identity, and the WKB is assembled
-# vectorized. Covers both the land_use integer rects AND JVM-concat float
-# rects (the transform fixtures).
-_NUM = r"(-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?)"
-_RECT_ANY_RE = (rf"^POLYGON \(\({_NUM} {_NUM}, {_NUM} \2, \3 {_NUM}, "
-                rf"\1 \4(?:, \1 \2)?\)\)$")
-
-# Typed text lanes (r9): canonical puntal/lineal WKT — exactly what
-# to_wkt / the fixtures / JVM concat emit — parses as a whole batch: one
-# fullmatch per lane, one join+split float conversion, one ragged WKB
-# emit (kernel/packed._emit_ragged). Anything anomalous (Z, EMPTY,
-# parenthesized MULTIPOINT members, stray whitespace) fails the fullmatch
-# and keeps the scalar path, mirroring the r8 typed-parse fast-path rule:
-# the lane only accepts strings the general parser parses identically.
-_NUM0 = r"-?\d+(?:\.\d+)?(?:[eE][-+]?\d+)?"
-_PAIR0 = rf"{_NUM0} {_NUM0}"
-_TEXT_LANES = (
-    ("POINT", re.compile(rf"POINT \({_PAIR0}\)"), 7, 1),
-    ("LINESTRING",
-     re.compile(rf"LINESTRING \({_PAIR0}(?:, {_PAIR0})+\)"), 12, 2),
-    ("MULTIPOINT",
-     re.compile(rf"MULTIPOINT \({_PAIR0}(?:, {_PAIR0})*\)"), 12, 4),
-)
-_TAG_RE = r"^(POINT|LINESTRING|MULTIPOINT) \("
-
-
-def _typed_lane_wkb(sub: pd.Series, plen: int, code: int):
-    """WKB bytes for fullmatch-validated canonical rows of one lane."""
-    bodies = sub.str[plen:-1]
-    counts = bodies.str.count(",").to_numpy(np.int64) + 1
-    joined = ",".join(bodies.tolist())
-    nums = np.array(joined.replace(",", " ").split(), dtype=np.float64)
-    if len(nums) != 2 * int(counts.sum()):
-        return None
-    coords = np.ascontiguousarray(nums.reshape(-1, 2))
-    m = len(sub)
+def _typed_lane_wkb(npts: np.ndarray, xy: np.ndarray, code: int) -> list:
+    """WKB bytes for m rows of one puntal/lineal kind, row i holding
+    npts[i] consecutive points of xy (kernel/packed._emit_ragged)."""
+    m = len(npts)
     ring_off = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(counts, out=ring_off[1:])
+    np.cumsum(npts, out=ring_off[1:])
     pb = PK.PackedBatch(
         m, np.full(m, code, dtype=np.int8),
         np.arange(m + 1, dtype=np.int64), ring_off,
-        np.ones(m, dtype=bool), coords, {})
+        np.ones(m, dtype=bool), np.ascontiguousarray(xy), {})
     return PK._emit_ragged(pb)
 
 
@@ -177,45 +141,30 @@ def st_geomfromwkt_b(s: pd.Series) -> pd.Series:
 
 
 def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    if not len(s):
-        return out
-    remaining = s.notna()
-    # one anchored tag pass dispatches rows to their lane; the lane's
-    # strict fullmatch then runs only on its own subset
-    tags = s.str.extract(_TAG_RE, expand=False)
-    for tag, pat, plen, code in _TEXT_LANES:
-        sub = remaining & (tags == tag)
-        if not sub.any():
-            continue
-        ok = s[sub].str.fullmatch(pat)
-        cand = sub.copy()
-        cand[sub] = (ok == True).to_numpy()  # noqa: E712 (null -> False)
-        if cand.any():
-            wkbs = _typed_lane_wkb(s[cand], plen, code)
-            if wkbs is not None:
-                out[cand] = wkbs
-                remaining &= ~cand
-    if not remaining.any():
-        return out
-    ext = s.str.extract(_RECT_ANY_RE)
-    mask = ext.notna().all(axis=1) & remaining
-    if mask.any():
-        a = pd.to_numeric(ext[0], errors="coerce").to_numpy(np.float64)
-        b = pd.to_numeric(ext[1], errors="coerce").to_numpy(np.float64)
-        c = pd.to_numeric(ext[2], errors="coerce").to_numpy(np.float64)
-        d = pd.to_numeric(ext[3], errors="coerce").to_numpy(np.float64)
-        ccw = (c > a) & (d > b)
-        ccw &= np.isfinite(a) & np.isfinite(b) & np.isfinite(c) \
-            & np.isfinite(d)
-        mask &= pd.Series(ccw, index=s.index)
-        if mask.any():
-            mn = mask.to_numpy()
-            out[mask] = _rect_wkb_batch(a[mn], b[mn], c[mn], d[mn])
-        remaining &= ~mask
-    if remaining.any():
-        out[remaining] = s[remaining].map(_geom_from_wkt_b_scalar)
-    return out
+    """Text edge off the shared lanes extracts: canonical POINT /
+    LINESTRING / MULTIPOINT text and CCW rects (closing vertex optional)
+    parse as whole batches. Numbers go through arrow's cast, the same
+    correctly rounded double float() gives, so every fast row is
+    byte-identical to the scalar parser; the CCW check ((c-a)(d-b) > 0)
+    makes normalize() provably the identity on rects. Anything else (Z,
+    EMPTY, parenthesized MULTIPOINT members, stray whitespace, CW or
+    non-finite rects) takes the scalar parser."""
+    f = LN._Fill(s)
+    m, g = f.b.extract(LN.FPOINT2)
+    if m.any():
+        f.put(m, _point_wkb_batch(LN._num(g, 0)[m], LN._num(g, 1)[m]))
+    for pat, code in ((LO.FLINE_ANY, PK.LINESTRING),
+                      (LO.FMPOINT_ANY, PK.MULTIPOINT)):
+        m, g = f.b.extract(pat)
+        if m.any():
+            f.put(m, _typed_lane_wkb(
+                *LN._body_xy(g[0], np.flatnonzero(m)), code))
+    g, ccw, _, _ = LN._poly5_walks(f.b, LO.FPOLY45)
+    if ccw.any():
+        a, b, c, d = (LN._num(g, i) for i in (0, 1, 2, 5))
+        ccw &= np.isfinite([a, b, c, d]).all(axis=0)
+        f.put(ccw, _rect_wkb_batch(a[ccw], b[ccw], c[ccw], d[ccw]))
+    return f.finish(_geom_from_wkt_b_scalar)
 
 
 @pandas_udf(StringType())
@@ -542,107 +491,39 @@ def _wkt_of(p: PK.PackedBatch, i: int):
     return None if tg is None else GT.to_wkt(tg)
 
 
-def _pair_predicate_b(a: pd.Series, b: pd.Series, law, scalar_fn
-                      ) -> pd.Series:
+def _bool_b(law, scalar_fn, bounds=PK.rect_bounds_np):
     """Binary twin of the text surface's _rect_pair_predicate: where both
-    sides are canonical rects (kernel/packed.rect_bounds_np — value-level,
-    no text contract needed) the DE-9IM law is whole-batch interval
-    arithmetic; every other row routes through the SAME scalar kernel as
-    the text UDFs (via one WKT conversion, fallback rows only)."""
-    pa = PK.pack_wkb(_tolist(a))
-    pb = PK.pack_wkb(_tolist(b))
-    bounds = PK.box_bounds_np if getattr(law, "_boxes_ok", False) \
-        else PK.rect_bounds_np
-    ma, ax1, ay1, ax2, ay2 = bounds(pa)
-    mb, bx1, by1, bx2, by2 = bounds(pb)
-    both = ma & mb
-    out = pd.Series([None] * pa.n, index=a.index, dtype="object")
-    if both.any():
-        vals = law(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-        out[both] = pd.Series(vals, index=a.index)[both].astype("object")
-    for i in np.flatnonzero(~both):
-        wa, wb = _wkt_of(pa, i), _wkt_of(pb, i)
-        out.iloc[i] = scalar_fn(wa, wb)
-    return out
-
-
-def _boxes_ok(law):
-    """Mark a DE-9IM interval law as valid for degenerate boxes (points)
-    too, enabling the box_bounds_np lane: intersects / disjoint /
-    contains(covers) / within / equals are pure interval statements at
-    any operand dimension; touches / overlaps / crosses are NOT (their
-    truth depends on operand dimension, e.g. a point inside a rect is
-    zero-area contact but not 'touches'), so they stay rect-only."""
-    law._boxes_ok = True
-    return law
-
-
-def _bool_b(law, scalar_fn):
+    sides' packed bounds are exact (kernel/packed.rect_bounds_np —
+    value-level, no text contract needed) the DE-9IM law is whole-batch
+    interval arithmetic; every other row routes through the SAME scalar
+    kernel as the text UDFs (via one WKT conversion, fallback rows
+    only)."""
     @pandas_udf(BooleanType())
     def fn(a: pd.Series, b: pd.Series) -> pd.Series:
-        return _pair_predicate_b(a, b, law, scalar_fn)
+        pa, pb = PK.pack_wkb(_tolist(a)), PK.pack_wkb(_tolist(b))
+        out = S._pair_law(bounds(pa), bounds(pb), law,
+                          lambda i: scalar_fn(_wkt_of(pa, i),
+                                              _wkt_of(pb, i)))
+        return pd.Series(out, index=a.index, dtype="object")
 
     return fn
 
 
-def _scalar_disjoint(x, y):
-    v = S._intersects(x, y)
-    return None if v is None else not v
-
-
-def _law_disjoint(*bb):
-    return ~S._law_intersects(*bb)
-
-
-def _law_touches(*bb):
-    return S._law_intersects(*bb) & ~S._law_strict(*bb)
-
-
-def _law_contains(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    """Closed-interval cover. The ENGINE's ST_Contains is covers
-    semantics — boundary-touching counts as contained, the documented
-    choice of functions/spatial._contains — so the closed law is exact
-    for every box combination, including degenerate point boxes (a point
-    on ∂A IS covered; two points contain each other iff equal, which the
-    closed law reduces to)."""
-    return (ax1 <= bx1) & (bx2 <= ax2) & (ay1 <= by1) & (by2 <= ay2)
-
-
-def _law_within(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    return _law_contains(bx1, by1, bx2, by2, ax1, ay1, ax2, ay2)
-
-
-def _law_overlaps(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    a_in_b = _law_within(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-    b_in_a = _law_contains(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-    return (S._law_strict(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-            & ~a_in_b & ~b_in_a)
-
-
-def _law_equals(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    return (ax1 == bx1) & (ay1 == by1) & (ax2 == bx2) & (ay2 == by2)
-
-
-def _law_crosses(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-    # areal×areal crosses is false by definition (DE-9IM dimension rule)
-    return np.zeros(len(np.atleast_1d(ax1)), dtype=bool)
-
-
-# boxes_ok (r9): intersects / disjoint / equals are pure closed-interval
-# statements at any operand dimension; contains / within use the
-# dimension-aware law above (strict interior for point operands). touches
-# / overlaps / crosses stay rect-only — their truth depends on operand
+# box_bounds_np (r9) also accepts degenerate boxes (points):
+# intersects / disjoint / equals / contains (covers) / within are pure
+# closed-interval statements at any operand dimension. touches /
+# overlaps / crosses stay rect-only — their truth depends on operand
 # dimension in ways bounds can't express (point-touches-point is false,
 # point-inside-rect is zero-boundary contact, ...).
-st_crosses_b = _bool_b(_law_crosses, S._crosses)
-st_intersects_b = _bool_b(_boxes_ok(S._law_intersects), S._intersects)
-st_disjoint_b = _bool_b(_boxes_ok(_law_disjoint), _scalar_disjoint)
-st_touches_b = _bool_b(_law_touches, S._touches)
-st_overlaps_b = _bool_b(_law_overlaps, S._overlaps)
-st_equals_b = _bool_b(_boxes_ok(_law_equals), S._equals)
-st_contains_b = _bool_b(_boxes_ok(_law_contains), S._contains)
-st_within_b = _bool_b(_boxes_ok(_law_within),
-                      lambda x, y: S._contains(y, x))
+_BOX = PK.box_bounds_np
+st_crosses_b = _bool_b(S._law_crosses, S._crosses)
+st_intersects_b = _bool_b(S._law_intersects, S._intersects, _BOX)
+st_disjoint_b = _bool_b(S._law_disjoint, S._disjoint, _BOX)
+st_touches_b = _bool_b(S._law_touches, S._touches)
+st_overlaps_b = _bool_b(S._law_overlaps, S._overlaps)
+st_equals_b = _bool_b(S._law_equals, S._equals, _BOX)
+st_contains_b = _bool_b(S._law_contains, S._contains, _BOX)
+st_within_b = _bool_b(S._law_within, lambda x, y: S._contains(y, x), _BOX)
 
 
 @pandas_udf(DoubleType())

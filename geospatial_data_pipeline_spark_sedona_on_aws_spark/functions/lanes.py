@@ -36,9 +36,11 @@ by tests/test_lanes.py):
 - text output is built from the captured input digit groups (already
   canonical) or through kernel _fmt for computed values.
 
-This is the same design as the r9 canonical-POLYGON parse lane
-(functions/spatial._RECT_FIXED_RE) and the typed lanes in geomb.py,
-extended from parsing to whole-function evaluation.
+These extracts are the engine's one vectorized WKT recogniser: the
+hygiene fixed-point masks and rect-predicate bounds
+(functions/spatial.py) and the carrier's text edge
+(functions/geomb.py) take their masks and groups from `batch_of(s)`
+too, so every UDF column of a projection shares one pass per pattern.
 """
 
 from __future__ import annotations
@@ -83,6 +85,9 @@ GCPOINT = _named(rf"^GEOMETRYCOLLECTION \(POINT \({_I} {_I}\)\)$")
 MLS2 = _named(rf"^MULTILINESTRING \(\({_I} {_I}, {_I} {_I}\), "
               rf"\({_I} {_I}, {_I} {_I}\)\)$")
 LINE_INTS = _named(rf"^LINESTRING \(({_P}(?:, {_P})+)\)$")
+_LS = rf"\({_P}(?:, {_P})+\)"
+#: integer MULTILINESTRING, >= 2 members of >= 2 points each
+MLS_INTS = _named(rf"^MULTILINESTRING \(({_LS}(?:, {_LS})+)\)$")
 MPOLY5 = _named(
     r"^MULTIPOLYGON \(\(\(%s %s, %s %s, %s %s, %s %s, %s %s\)\)\)$"
     % ((_I,) * 10))
@@ -125,8 +130,9 @@ class _Batch:
 #: over identical data — profiled at ~1-2 s of pyarrow `extract_regex`
 #: per UDF column per 600k rows in st_clearance_ops (16 columns). The
 #: memo holds a strong ref to the keyed Series, so its id() cannot be
-#: recycled while the entry lives (`b.s is s` is then conclusive); the
-#: small LRU bounds worker memory at a few batches of strings.
+#: recycled while the entry lives (`b.s is s` is then conclusive). Hits
+#: do not reorder the dict, so eviction is oldest-inserted first (FIFO,
+#: not LRU); the cap bounds worker memory at a few batches of strings.
 _BATCH_MEMO: dict = {}
 _BATCH_MEMO_MAX = 16
 
@@ -154,24 +160,41 @@ def _num(g, i) -> np.ndarray:
     return pc.cast(g[i], pa.float64()).to_numpy(zero_copy_only=False)
 
 
+def _body_xy(body: pa.Array, rows: np.ndarray):
+    """(points per row, (k, 2) float64 xy) of the validated
+    "x y, x y, ..." body captures at `rows` — one split and one cast
+    for the whole batch, the same correctly rounded parse as _num."""
+    parts = pc.split_pattern(
+        pc.replace_substring(body.take(pa.array(rows)), ", ", " "), " ")
+    npts = pc.list_value_length(parts).to_numpy(zero_copy_only=False) // 2
+    xy = pc.cast(pc.list_flatten(parts), pa.float64())
+    return (npts.astype(np.int64),
+            xy.to_numpy(zero_copy_only=False).reshape(-1, 2))
+
+
 def _join(*parts) -> pa.Array:
     """Vectorized concatenation; null in any part nulls the row."""
     return pc.binary_join_element_wise(*parts, "")
 
 
-def _poly5_walks(b: _Batch):
-    """Classify the POLY5 extract into the three canonical walks.
-    Returns (g, ccw, cw, bow): for ccw/cw, groups are
+def _poly5_walks(b: _Batch, pattern: str = POLY5):
+    """Classify a 5-vertex polygon extract into the three canonical
+    walks. Returns (g, ccw, cw, bow): for ccw/cw, groups are
     p1..p5 = (g0 g1),(g2 g3),(g4 g5),(g6 g7),(g8 g9); the shared
     structural equalities y2==y1, x3==x2, y4==y3, x4==x1 + closure hold
     for both rect walks, orientation decided by y3 vs y1; the bowtie
-    has its own equality set."""
-    valid, g = b.extract(POLY5)
+    has its own equality set. Text equality on the groups is what a
+    backreference would test. A pattern whose closing vertex is optional
+    (lanes_ops.FPOLY45) captures p5 as "" on unclosed rows, which
+    counts as closed: the parser closes the ring."""
+    valid, g = b.extract(pattern)
     if not valid.any():
         z = np.zeros(len(b.s), bool)
         return g, z, z, z
-    rectish = (valid & _eq(g, 3, 1) & _eq(g, 4, 2) & _eq(g, 7, 5)
-               & _eq(g, 6, 0) & _eq(g, 8, 0) & _eq(g, 9, 1))
+    closed = (pc.fill_null(pc.equal(g[8], ""), False).to_numpy(
+        zero_copy_only=False) | (_eq(g, 8, 0) & _eq(g, 9, 1)))
+    rectish = (valid & closed & _eq(g, 3, 1) & _eq(g, 4, 2)
+               & _eq(g, 7, 5) & _eq(g, 6, 0))
     x1 = _num(g, 0)
     y1 = _num(g, 1)
     x2 = _num(g, 2)
@@ -180,9 +203,8 @@ def _poly5_walks(b: _Batch):
     cw = rectish & (x2 > x1) & (y1 > y3)
     # bowtie A B, C D, C B, A D, A B: x3==x2, y3==y1, x4==x1, y4==y2
     y2 = _num(g, 3)
-    bow = (valid & _eq(g, 4, 2) & _eq(g, 5, 1) & _eq(g, 6, 0)
-           & _eq(g, 7, 3) & _eq(g, 8, 0) & _eq(g, 9, 1)
-           & (x2 > x1) & (y2 > y1))
+    bow = (valid & closed & _eq(g, 4, 2) & _eq(g, 5, 1) & _eq(g, 6, 0)
+           & _eq(g, 7, 3) & (x2 > x1) & (y2 > y1))
     return g, ccw, cw, bow
 
 

@@ -61,6 +61,10 @@ FLINE5 = _named(
     r"^LINESTRING \(%s %s, %s %s, %s %s, %s %s, %s %s\)$" % ((_F,) * 10))
 FPOLY5 = _named(
     r"^POLYGON \(\(%s %s, %s %s, %s %s, %s %s, %s %s\)\)$" % ((_F,) * 10))
+#: FPOLY5 with the closing vertex optional (JVM-concat rects often omit it)
+FPOLY45 = _named(
+    r"^POLYGON \(\(%s %s, %s %s, %s %s, %s %s(?:, %s %s)?\)\)$"
+    % ((_F,) * 10))
 IMPOINT4 = _named(
     r"^MULTIPOINT \(%s %s, %s %s, %s %s, %s %s\)$" % ((_I,) * 8))
 IGC_PPL = _named(
@@ -1523,35 +1527,26 @@ def length(s: pd.Series, scalar_fn) -> pd.Series:
     — per-row math.hypot fold (the scalar's exact sum order) over pairs
     parsed in ONE bulk pass. r14: the old per-row replace/split/float
     loop profiled at ~5 s/600k (the hottest line of st_clearance_ops);
-    now the matched bodies join into one string, split once, and convert
-    through one numpy float64 parse (the _typed_lane_wkb precedent —
-    same parser, bit-identical floats); only the hypot fold itself stays
+    now the matched bodies parse through one lanes._body_xy call (arrow
+    cast, bit-identical to float()); only the hypot fold itself stays
     per row, preserving the scalar's left-to-right sum order."""
-    import pyarrow.compute as pc
-
     f = _Fill(s)
     m, g = f.b.extract(FLINE_ANY)
     if m.any():
         rows = np.flatnonzero(m)
-        body = g[0].to_pandas().to_numpy()
-        npts = pc.count_substring(g[0], pattern=",").to_numpy(
-            zero_copy_only=False)[rows].astype(np.int64) + 1
-        joined = ",".join(body[i] for i in rows)
-        nums = np.array(joined.replace(",", " ").split(),
-                        dtype=np.float64)
-        if len(nums) == 2 * int(npts.sum()):
-            xs, ys = nums[0::2], nums[1::2]
-            off = np.zeros(len(rows) + 1, dtype=np.int64)
-            np.cumsum(npts, out=off[1:])
-            vals = np.full(len(s), None, dtype=object)
-            hyp = math.hypot
-            for j, i in enumerate(rows):
-                lo, hi = off[j], off[j + 1]
-                tot = 0
-                for k in range(lo, hi - 1):
-                    tot = tot + hyp(xs[k + 1] - xs[k], ys[k + 1] - ys[k])
-                vals[i] = tot
-            f.put(m, vals)
+        npts, xy = L._body_xy(g[0], rows)
+        xs, ys = xy[:, 0], xy[:, 1]
+        off = np.zeros(len(rows) + 1, dtype=np.int64)
+        np.cumsum(npts, out=off[1:])
+        vals = np.full(len(s), None, dtype=object)
+        hyp = math.hypot
+        for j, i in enumerate(rows):
+            lo, hi = off[j], off[j + 1]
+            tot = 0
+            for k in range(lo, hi - 1):
+                tot = tot + hyp(xs[k + 1] - xs[k], ys[k + 1] - ys[k])
+            vals[i] = tot
+        f.put(m, vals)
     f.put(f.b.match(FPOINT2), 0.0)
     return f.finish(scalar_fn)
 

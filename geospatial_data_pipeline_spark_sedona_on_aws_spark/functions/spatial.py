@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import functools
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
@@ -3333,44 +3334,28 @@ def _ear_clip(ring: list) -> list:
 
 # --------------------------------------------------------------- pandas UDFs
 
-# Vectorized rect fast path for the unary hygiene UDFs. A string matching
-# this pattern is PROVABLY a fixed point of parse→normalize→to_wkt (and of
-# make_valid, and of buffer(0)):
-#   - integer-text coordinates with no leading zeros/plus ("0|-?[1-9]\d*"),
-#     so float(t) is exact and _fmt(float(t)) == t (|v| < 1e15 checked);
-#   - the backrefs force the exact closed CCW rect vertex walk
+# Vectorized rect fast path for the unary hygiene UDFs. A row whose
+# POLY5 extract is the canonical CCW walk (lanes._poly5_walks) is
+# PROVABLY a fixed point of parse→normalize→to_wkt (and of make_valid,
+# and of buffer(0)):
+#   - integer-text coordinates of at most 7 digits, no leading zeros or
+#     plus (lanes._I), so float(t) is exact and _fmt(float(t)) == t;
+#   - the group equalities force the exact closed CCW rect vertex walk
 #     (A B, C B, C D, A D, A B): parse yields 5 points, dedupe drops only
 #     the closing duplicate, signed area (C-A)(D-B) > 0 keeps CCW, a rect
 #     has no self-intersections, and to_wkt re-emits the identical text.
-# Rows that match pass through untouched (C-level regex over the whole
-# Arrow batch); everything else takes the general kernel path. This is the
-# string-level analog of dissolve.py's JVM rect fast path — the hygiene
-# stage of the verbatim-parity chain drops from ~3 full Python
-# parse+serialize cycles per parcel to one vectorized regex test.
-import re as _re
-
-_INT = r"(0|-?[1-9]\d*)"
-_RECT_FIXED_RE = (
-    rf"^POLYGON \(\({_INT} {_INT}, {_INT} \2, \3 {_INT}, \1 \4, \1 \2\)\)$"
-)
-
-def _rect_fixed_mask(s: pd.Series) -> pd.Series:
+# Rows that match pass through untouched; everything else takes the
+# general kernel path. This is the string-level analog of dissolve.py's
+# JVM rect fast path — the hygiene stage of the verbatim-parity chain
+# drops from ~3 full Python parse+serialize cycles per parcel to one
+# shared RE2 extract per batch.
+def _rect_fixed_mask(s: pd.Series) -> np.ndarray:
     """True where the WKT is proven a fixed point of the hygiene chain."""
-    ext = s.str.extract(_RECT_FIXED_RE)
-    ok = ext.notna().all(axis=1)
-    if not ok.any():
-        return ok
-    a = pd.to_numeric(ext[0], errors="coerce")
-    b = pd.to_numeric(ext[1], errors="coerce")
-    c = pd.to_numeric(ext[2], errors="coerce")
-    d = pd.to_numeric(ext[3], errors="coerce")
-    num_ok = (c > a) & (d > b)
-    for col in (a, b, c, d):
-        num_ok &= col.abs() < 1e15
-    return ok & num_ok.fillna(False)
+    return LN._poly5_walks(LN.batch_of(s))[1]
 
-def _unary_hygiene(s: pd.Series, scalar_fn) -> pd.Series:
-    mask = _rect_fixed_mask(s)
+def _unary_hygiene(s: pd.Series, scalar_fn, mask=None) -> pd.Series:
+    if mask is None:
+        mask = _rect_fixed_mask(s)
     if mask.all():
         return s.copy()
     out = s.copy()
@@ -3379,43 +3364,21 @@ def _unary_hygiene(s: pd.Series, scalar_fn) -> pd.Series:
     return out
 
 # r9: canonical-puntal/lineal fixed points of parse→to_wkt, same premise
-# as _RECT_FIXED_RE (integer text ≤15 digits round-trips float exactly;
-# the spelling below IS to_wkt's emission — single-member multis are
+# as _rect_fixed_mask (small-integer text round-trips float exactly; the
+# lanes spellings ARE to_wkt's emission — single-member multis are
 # EXCLUDED because parse collapses them to the member kind; repeated /
 # unsorted / duplicate members all re-emit verbatim, property-pinned by
 # tests/test_chainrw.py::test_nonareal_fixed_mask_is_identity). Valid
 # ONLY for identity hygiene (ST_GeomFromWKT, non-areal ST_MakeValid) —
 # NOT for buffer(0), which maps puntal/lineal input to POLYGON EMPTY.
-_IN = r"(?:0|-?[1-9]\d{0,14})"
-_PRN = rf"{_IN} {_IN}"
-_LSN = rf"\({_PRN}(?:, {_PRN})+\)"
-_NONAREAL_FIXED_RE = _re.compile(
-    rf"POINT \({_PRN}\)"
-    rf"|LINESTRING {_LSN}"
-    rf"|MULTIPOINT \({_PRN}(?:, {_PRN})+\)"
-    rf"|MULTILINESTRING \({_LSN}(?:, {_LSN})+\)"
-)
-
-def _nonareal_fixed_mask(s: pd.Series) -> pd.Series:
-    m = s.str.fullmatch(_NONAREAL_FIXED_RE)
-    # fullmatch on object dtype yields object with NaN for nulls; the
-    # == True comparison avoids pandas' deprecated fillna downcast
-    return (m == True).astype(bool)  # noqa: E712
+def _nonareal_fixed_mask(s: pd.Series) -> np.ndarray:
+    b = LN.batch_of(s)
+    return (b.match(LN.POINT2) | b.match(LN.LINE_INTS)
+            | b.match(LN.MPOINT) | b.match(LN.MLS_INTS))
 
 def _identity_hygiene(s: pd.Series, scalar_fn) -> pd.Series:
-    # nonareal mask first: it fast-rejects areal strings at the first
-    # character, while the rect extract (backreference pattern) is the
-    # expensive one — run it only on the rows the nonareal mask left
-    mask = _nonareal_fixed_mask(s)
-    rem = ~mask
-    if rem.any():
-        mask.loc[rem] = _rect_fixed_mask(s[rem])
-    if mask.all():
-        return s.copy()
-    out = s.copy()
-    slow = ~mask
-    out[slow] = s[slow].map(scalar_fn, na_action="ignore")
-    return out
+    return _unary_hygiene(
+        s, scalar_fn, _nonareal_fixed_mask(s) | _rect_fixed_mask(s))
 
 @pandas_udf(StringType())
 def st_geomfromwkt(s: pd.Series) -> pd.Series:
@@ -3434,11 +3397,13 @@ def st_makevalid(s: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def st_buffer(s: pd.Series, d: pd.Series) -> pd.Series:
     # buffer(0) is the topology rinse — same fixed-point fast path as the
-    # other hygiene UDFs; nonzero offsets always take the kernel path
-    dd = pd.to_numeric(d, errors="coerce")
-    mask = _rect_fixed_mask(s) & (dd == 0)
+    # other hygiene UDFs; nonzero offsets always take the kernel path,
+    # so a batch without a zero offset skips the extract
+    mask = (pd.to_numeric(d, errors="coerce") == 0).to_numpy()
+    if mask.any():
+        mask &= _rect_fixed_mask(s)
     out = s.copy()
-    slow = (~mask).to_numpy()
+    slow = ~mask
     if slow.any():
         out[slow] = pd.Series(
             [_buffer(g, x) for g, x in zip(s[slow], d[slow])],
@@ -3678,18 +3643,26 @@ def _binary_bool(fn, a: pd.Series, b: pd.Series) -> pd.Series:
 
 def _rect_bounds_series(s: pd.Series):
     """(mask, x1, y1, x2, y2) for rows that are PROVABLY canonical rects
-    (the same _RECT_FIXED_RE contract the hygiene fast path relies on:
-    integer text, closed CCW walk, |v| < 1e15 so parsing is exact)."""
-    ext = s.str.extract(_RECT_FIXED_RE)
-    ok = ext.notna().all(axis=1)
-    x1 = pd.to_numeric(ext[0], errors="coerce")
-    y1 = pd.to_numeric(ext[1], errors="coerce")
-    x2 = pd.to_numeric(ext[2], errors="coerce")
-    y2 = pd.to_numeric(ext[3], errors="coerce")
-    num_ok = (x2 > x1) & (y2 > y1)
-    for col in (x1, y1, x2, y2):
-        num_ok &= col.abs() < 1e15
-    return ok & num_ok.fillna(False), x1, y1, x2, y2
+    (the _rect_fixed_mask contract: small-integer text, closed CCW walk,
+    so parsing is exact)."""
+    g, ccw, _, _ = LN._poly5_walks(LN.batch_of(s))
+    return (ccw, *(LN._num(g, i) for i in (0, 1, 2, 5)))
+
+def _pair_law(a_bounds, b_bounds, law, row_fn) -> np.ndarray:
+    """One DE-9IM predicate over a batch of pairs. Each side's bounds are
+    (mask, x1, y1, x2, y2) with mask marking rows whose bounds ARE the
+    geometry; where both sides are marked, the interval law decides the
+    whole batch at once, and every other row i is row_fn(i). Shared by
+    the text (_rect_pair_predicate) and binary (geomb) surfaces."""
+    ma, *ab = a_bounds
+    mb, *bb = b_bounds
+    both = ma & mb
+    out = np.full(len(ma), None, dtype=object)
+    if both.any():
+        out[both] = law(*ab, *bb)[both]
+    for i in np.flatnonzero(~both):
+        out[i] = row_fn(i)
+    return out
 
 def _rect_pair_predicate(a: pd.Series, b: pd.Series, law, scalar_fn
                          ) -> pd.Series:
@@ -3699,26 +3672,51 @@ def _rect_pair_predicate(a: pd.Series, b: pd.Series, law, scalar_fn
     against the scalar path by test_prop_rect_predicates_interval_law);
     every other row takes the scalar kernel. On the bbox-shaped data a
     100 TB pre-filter stage actually carries, no row pays a WKT parse."""
-    ma, ax1, ay1, ax2, ay2 = _rect_bounds_series(a)
-    mb, bx1, by1, bx2, by2 = _rect_bounds_series(b)
-    both = (ma & mb).to_numpy()
-    out = pd.Series([None] * len(a), index=a.index, dtype="object")
-    if both.any():
-        vals = law(ax1.to_numpy(), ay1.to_numpy(),
-                   ax2.to_numpy(), ay2.to_numpy(),
-                   bx1.to_numpy(), by1.to_numpy(),
-                   bx2.to_numpy(), by2.to_numpy())
-        out[both] = pd.Series(vals, index=a.index)[both].astype("object")
-    slow = ~both
-    if slow.any():
-        out[slow] = [scalar_fn(x, y) for x, y in zip(a[slow], b[slow])]
-    return out
+    av, bv = a.tolist(), b.tolist()
+    out = _pair_law(_rect_bounds_series(a), _rect_bounds_series(b), law,
+                    lambda i: scalar_fn(av[i], bv[i]))
+    return pd.Series(out, index=a.index, dtype="object")
 
+# DE-9IM interval laws over (a bounds, b bounds), exact for rect×rect.
+# Only intersects / disjoint / equals / contains / within also hold for
+# degenerate (point) boxes; see geomb's box_bounds_np lane.
 def _law_intersects(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     return ((ax1 <= bx2) & (bx1 <= ax2) & (ay1 <= by2) & (by1 <= ay2))
 
 def _law_strict(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
     return ((ax1 < bx2) & (bx1 < ax2) & (ay1 < by2) & (by1 < ay2))
+
+def _law_disjoint(*bb):
+    return ~_law_intersects(*bb)
+
+def _law_touches(*bb):
+    return _law_intersects(*bb) & ~_law_strict(*bb)
+
+def _law_contains(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    """Closed-interval cover. The ENGINE's ST_Contains is covers
+    semantics — boundary-touching counts as contained, the documented
+    choice of _contains — so the closed law is exact for every box
+    combination, including degenerate point boxes (a point on ∂A IS
+    covered; two points contain each other iff equal, which the closed
+    law reduces to)."""
+    return (ax1 <= bx1) & (bx2 <= ax2) & (ay1 <= by1) & (by2 <= ay2)
+
+def _law_within(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    return _law_contains(bx1, by1, bx2, by2, ax1, ay1, ax2, ay2)
+
+def _law_overlaps(*bb):
+    return _law_strict(*bb) & ~_law_within(*bb) & ~_law_contains(*bb)
+
+def _law_equals(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
+    return (ax1 == bx1) & (ay1 == by1) & (ax2 == bx2) & (ay2 == by2)
+
+def _law_crosses(ax1, *_):
+    # areal×areal crosses is false by definition (DE-9IM dimension rule)
+    return np.zeros(len(np.atleast_1d(ax1)), dtype=bool)
+
+def _disjoint(x, y):
+    v = _intersects(x, y)
+    return None if v is None else not v
 
 @pandas_udf(BooleanType())
 def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -3726,48 +3724,23 @@ def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
 
 @pandas_udf(BooleanType())
 def st_disjoint(a: pd.Series, b: pd.Series) -> pd.Series:
-    def scalar(x, y):
-        v = _intersects(x, y)
-        return None if v is None else not v
-
-    def law(*bb):
-        return ~_law_intersects(*bb)
-
-    return _rect_pair_predicate(a, b, law, scalar)
+    return _rect_pair_predicate(a, b, _law_disjoint, _disjoint)
 
 @pandas_udf(BooleanType())
 def st_touches(a: pd.Series, b: pd.Series) -> pd.Series:
-    def law(*bb):
-        return _law_intersects(*bb) & ~_law_strict(*bb)
-
-    return _rect_pair_predicate(a, b, law, _touches)
+    return _rect_pair_predicate(a, b, _law_touches, _touches)
 
 @pandas_udf(BooleanType())
 def st_crosses(a: pd.Series, b: pd.Series) -> pd.Series:
-    def law(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-        import numpy as np
-
-        # areal×areal crosses is false by definition
-        return np.zeros(len(ax1), dtype=bool)
-
-    return _rect_pair_predicate(a, b, law, _crosses)
+    return _rect_pair_predicate(a, b, _law_crosses, _crosses)
 
 @pandas_udf(BooleanType())
 def st_overlaps(a: pd.Series, b: pd.Series) -> pd.Series:
-    def law(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-        a_in_b = (bx1 <= ax1) & (ax2 <= bx2) & (by1 <= ay1) & (ay2 <= by2)
-        b_in_a = (ax1 <= bx1) & (bx2 <= ax2) & (ay1 <= by1) & (by2 <= ay2)
-        return (_law_strict(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2)
-                & ~a_in_b & ~b_in_a)
-
-    return _rect_pair_predicate(a, b, law, _overlaps)
+    return _rect_pair_predicate(a, b, _law_overlaps, _overlaps)
 
 @pandas_udf(BooleanType())
 def st_equals(a: pd.Series, b: pd.Series) -> pd.Series:
-    def law(ax1, ay1, ax2, ay2, bx1, by1, bx2, by2):
-        return ((ax1 == bx1) & (ay1 == by1) & (ax2 == bx2) & (ay2 == by2))
-
-    return _rect_pair_predicate(a, b, law, _equals)
+    return _rect_pair_predicate(a, b, _law_equals, _equals)
 
 @pandas_udf(StringType())
 def st_relate(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -3830,8 +3803,6 @@ def st_asgeojson(s: pd.Series) -> pd.Series:
 def st_geomfromgeojson(s: pd.Series) -> pd.Series:
     return s.map(_geom_from_geojson, na_action="ignore")
 
-_INT_POINT_RE = r"^POINT \((0|-?[1-9]\d*) (0|-?[1-9]\d*)\)$"
-
 def _geohash_vec_int(lon, lat, precision: int):
     """Vectorized geohash for integer-valued coordinates: the quantization
     ((lon+180)·2^nlon)//360 is EXACT in int64 (no float rounding), and the
@@ -3839,8 +3810,6 @@ def _geohash_vec_int(lon, lat, precision: int):
     quantization), so this fast path is bit-identical to the scalar
     algorithm. ~60 numpy ops per batch instead of 5·p Python-loop steps
     per row."""
-    import numpy as np
-
     nbits = 5 * precision
     nlon = (nbits + 1) // 2
     nlat = nbits // 2
@@ -3867,37 +3836,26 @@ def _geohash_vec_int(lon, lat, precision: int):
 
 @pandas_udf(StringType())
 def st_geohash(s: pd.Series, p: pd.Series) -> pd.Series:
-    # fast path: integer-coordinate POINT WKT with a constant precision
-    # per batch (the common bucketing shape) → exact int64 quantization,
-    # no per-row parse or bisection; everything else takes the scalar path
+    # fast path: integer-coordinate POINT WKT (lanes.POINT2) with a
+    # constant precision per batch (the common bucketing shape) → exact
+    # int64 quantization, no per-row parse or bisection; everything else
+    # takes the scalar path
     pp = pd.to_numeric(p, errors="coerce")
     prec = pp.dropna().unique()
+    out = np.full(len(s), None, dtype=object)
+    mask = np.zeros(len(s), bool)
     if len(prec) == 1 and 1 <= int(prec[0]) <= 12:
-        k = int(prec[0])
-        ext = s.str.extract(_INT_POINT_RE)
-        lon = pd.to_numeric(ext[0], errors="coerce")
-        lat = pd.to_numeric(ext[1], errors="coerce")
-        mask = (lon.notna() & lat.notna() & pp.notna()
-                & lon.between(-180, 180) & lat.between(-90, 90))
-        if mask.all():
-            return pd.Series(
-                _geohash_vec_int(lon.to_numpy(), lat.to_numpy(), k),
-                index=s.index)
+        m, g = LN.batch_of(s).extract(LN.POINT2)
+        lon, lat = LN._num(g, 0), LN._num(g, 1)
+        mask = (m & pp.notna().to_numpy() & (np.abs(lon) <= 180)
+                & (np.abs(lat) <= 90))
         if mask.any():
-            out = pd.Series(
-                [None if g is None or pd.isna(kk) else _geohash(g, int(kk))
-                 for g, kk in zip(s[~mask], pp[~mask])],
-                index=s.index[~mask], dtype="object",
-            )
-            fast = pd.Series(
-                _geohash_vec_int(lon[mask].to_numpy(),
-                                 lat[mask].to_numpy(), k),
-                index=s.index[mask], dtype="object",
-            )
-            return pd.concat([fast, out]).reindex(s.index)
-    return pd.Series(
-        [None if g is None or pd.isna(kk) else _geohash(g, int(kk))
-         for g, kk in zip(s, pp)], index=s.index)
+            out[mask] = _geohash_vec_int(lon[mask], lat[mask],
+                                         int(prec[0]))
+    for i in np.flatnonzero(~mask):
+        g, kk = s.iat[i], pp.iat[i]
+        out[i] = None if g is None or pd.isna(kk) else _geohash(g, int(kk))
+    return pd.Series(out, index=s.index)
 
 @pandas_udf(StringType())
 def st_lineinterpolatepoint(s: pd.Series, f: pd.Series) -> pd.Series:

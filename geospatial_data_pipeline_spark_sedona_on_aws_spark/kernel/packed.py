@@ -1025,8 +1025,8 @@ def rect_bounds_np(p: PackedBatch):
     """(mask, x1, y1, x2, y2): rows that are PROVABLY the canonical CCW
     axis-aligned rectangle walk (x1 y1, x2 y1, x2 y2, x1 y2) with
     positive extent — the binary-carrier twin of the text surface's
-    _RECT_FIXED_RE contract (no integer-text requirement: the carrier
-    needs value equality, not text fixed-points)."""
+    spatial._rect_fixed_mask contract (no integer-text requirement: the
+    carrier needs value equality, not text fixed-points)."""
     rpg = p.rings_per_geom()
     cand = (p.kind == POLYGON) & (rpg == 1)
     x1 = np.full(p.n, np.nan)

@@ -552,7 +552,7 @@ def dissolve_transform_area(df: DataFrame, group_cols: Sequence[str],
     finish. Semantics are preserved exactly:
 
       * canonical-rect rows are PROVEN fixed points of the hygiene chain
-        (functions/spatial._RECT_FIXED_RE, property-tested), so skipping
+        (functions/spatial._rect_fixed_mask, property-tested), so skipping
         the UDFs for them is the same fixed-point fast path the UDFs
         themselves take — just before the Arrow boundary instead of after;
       * non-rect rows get the real kernel hygiene

@@ -168,26 +168,65 @@ def test_prop_packed_transform_equals_scalar(seed):
         assert np.abs(ea - ga).max() < 1e-6
 
 
-def test_geomfromwkt_b_rect_fast_path_matches_scalar():
+def _repr_rects(rng: random.Random, n: int) -> list:
+    """CCW float rects whose coordinates are 17-significant-digit repr
+    strings — the spelling a correctly rounded parse must reproduce."""
+    out = []
+    for i in range(n):
+        a, b = rng.uniform(-200, 200), rng.uniform(-200, 200)
+        c, d = a + rng.uniform(1e-3, 1), b + rng.uniform(1e-3, 1)
+        a, b, c, d = map(repr, (a, b, c, d))
+        close = f", {a} {b}" if i % 2 else ""
+        out.append(f"POLYGON (({a} {b}, {c} {b}, {c} {d}, {a} {d}{close}))")
+    return out
+
+
+def test_geomfromwkt_b_rect_fast_path_matches_scalar(monkeypatch):
+    """The text edge's fast rows are byte-identical to the scalar parser
+    — in particular its float coordinates parse to the same double as
+    float() (a non-correctly-rounded parse differs in the last ulp on
+    about one 17-digit repr in six)."""
     fn = GB.st_geomfromwkt_b.func
     import pandas as pd
 
-    rows = [
+    fast_rows = [
         "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",      # closed integer rect
         "POLYGON ((0 0, 4 0, 4 4, 0 4))",           # open integer rect
         "POLYGON ((-52.35 -11.16, -52.34 -11.16, -52.34 -11.15,"
         " -52.35 -11.15))",                          # float rect (concat)
-        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW -> slow path
+        "POLYGON ((-56.49 -11.3, -56.480000000000004 -11.3,"
+        " -56.480000000000004 -11.290000000000001,"
+        " -56.49 -11.290000000000001, -56.49 -11.3))",
+        "POLYGON ((1e0 2E1, 4 2E1, 4 3.5e+1, 1e0 3.5e+1, 1e0 2E1))",
+        "POLYGON ((007 -01.50, 10 -01.50, 10 4, 007 4, 007 -01.50))",
+        "POLYGON ((-0 -0, 4 -0, 4 4, -0 4, -0 -0))",
         "POINT (3 7)",
+        "POINT (-0.30000000000000004 1e-7)",
         "LINESTRING (0 0, 5 5)",
+        "MULTIPOINT (1.0000000000000002 2, 3 4e2)",
+    ] + _repr_rects(random.Random(7), 400)
+    slow_rows = [
+        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW
         None,
         "POLYGON ((0 0, 10 0, 10 2, 2 2, 2 10, 0 10))",  # L-shape
         "POLYGON Z ((0 0 1, 4 0 1, 4 4 1, 0 4 1))",
+        "POLYGON ((0 0, 4.0 0, 4 4, 0 4, 0 0))",    # 4.0 vs 4: not a walk
+        "POLYGON ((0 0, 1e999 0, 1e999 4, 0 4, 0 0))",  # non-finite
+        "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))\n",
     ]
-    got = fn(pd.Series(rows)).tolist()
+    rows = fast_rows + slow_rows
     exp = [GB._geom_from_wkt_b_scalar(s) for s in rows]
+    seen = []
+
+    def scalar(s):
+        seen.append(s)
+        return exp[rows.index(s)]
+
+    monkeypatch.setattr(GB, "_geom_from_wkt_b_scalar", scalar)
+    got = fn(pd.Series(rows)).tolist()
     for g, e, s in zip(got, exp, rows):
         assert g == e, s
+    assert not set(seen) & set(fast_rows), set(seen) & set(fast_rows)
 
 
 @pytest.mark.usefixtures("spark")

@@ -559,8 +559,9 @@ def test_nonareal_fixed_mask_is_identity(seed):
     """Every string _nonareal_fixed_mask accepts must be an exact fixed
     point of parse→to_wkt (the ST_GeomFromWKT / non-areal ST_MakeValid
     contract); adversarial near-misses (floats, single-member multis,
-    leading zeros, extra spaces, Z) must be REJECTED by the mask and then
-    agree with the scalar path anyway."""
+    leading zeros, extra spaces, Z, 8-digit ints, a trailing newline)
+    must be REJECTED by the mask and then agree with the scalar path
+    anyway."""
     import pandas as pd
 
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
@@ -596,8 +597,22 @@ def test_nonareal_fixed_mask_is_identity(seed):
         else:
             rows.append(f"POLYGON (({x} {y}, {x+3} {y}, {x+3} {y+3},"
                         f" {x} {y+3}, {x} {y}))")
+    # pinned edges: 3-point MULTILINESTRING members are claimed; 8-digit
+    # ints and a trailing newline are not (the scalar path answers them)
+    edges = [
+        ("MULTILINESTRING ((0 0, 1 0, 1 1), (2 2, 3 3))", True),
+        ("MULTILINESTRING ((0 0, 1 0), (2 2, 3 3), (4 4, 5 5, 6 7))", True),
+        ("POINT (-5 9999999)", True),
+        ("POINT (12345678 0)", False),
+        ("LINESTRING (0 0, 12345678 1)", False),
+        ("POINT (1 2)\n", False),
+        ("LINESTRING (0 0, 1 1)\n", False),
+        (None, False),
+    ]
+    rows += [w for w, _ in edges]
     ser = pd.Series(rows, dtype=object)
     mask = S._nonareal_fixed_mask(ser)
+    assert mask[-len(edges):].tolist() == [m for _, m in edges]
     for w, m in zip(rows, mask):
         if w is None:
             assert not m

@@ -320,14 +320,23 @@ def test_rect_fixed_point_fast_path_identity():
         "POLYGON ((0 0, 4 0, 0 4, 4 4, 0 0))",          # bowtie -> slow
         "MULTIPOLYGON (((0 0, 2 0, 2 2, 0 2, 0 0)))",   # multi -> slow
         None,
+        # 8-digit ints: beyond the lanes' exact-int atom -> slow, and the
+        # scalar path still answers them
+        "POLYGON ((10000000 0, 20000000 0, 20000000 5, 10000000 5,"
+        " 10000000 0))",
+        "POLYGON ((3 4, 10 4, 10 9, 3 9, 3 4))\n",      # trailing newline
     ]
     s = pd.Series(cases)
-    assert S._rect_fixed_mask(s).tolist() == [True] * 3 + [False] * 7
+    assert S._rect_fixed_mask(s).tolist() == [True] * 3 + [False] * 9
     for scalar in (S._geom_from_wkt, S._make_valid):
         fast = S._unary_hygiene(s, scalar)
         slow = s.map(scalar, na_action="ignore")
         for f, sl in zip(fast, slow):
             assert (f == sl) or (pd.isna(f) and pd.isna(sl)), (f, sl)
+    # ST_Buffer(g, 0) shares the mask; nonzero offsets never take it
+    for d in ([0.0] * len(cases), [0.0, 1.0] * (len(cases) // 2)):
+        got = S.st_buffer.func(s, pd.Series(d)).tolist()
+        assert got == [S._buffer(g, x) for g, x in zip(cases, d)]
 
 
 # ------------------------------------------------- CRS registry (round 5)

@@ -253,3 +253,43 @@ def test_length_lane_equals_scalar():
     got = pd.Series(S.st_length.func(s), dtype=object)
     want = s.map(S._length, na_action="ignore")
     _eq_series(got, want, "ST_Length")
+
+
+def test_predicate_udfs_share_one_poly5_extract(monkeypatch):
+    """The six st_predicates UDF bodies over three distinct input Series
+    (parcel, region, shifted parcel) run ONE POLY5 extract per Series:
+    the batch memo in lanes.batch_of is what makes the text predicates
+    cheap, so a regression to per-UDF parsing shows up here."""
+    import pyarrow.compute as pc
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import lanes as LN
+
+    a, b, c, d = _rects(64)
+
+    def rects(dx):
+        return pd.Series(
+            [f"POLYGON (({A + dx} {B}, {C + dx} {B}, {C + dx} {D}, "
+             f"{A + dx} {D}, {A + dx} {B}))"
+             for A, B, C, D in zip(a, b, c, d)], dtype=object)
+
+    land, region, shifted = rects(0), rects(5), rects(1)
+    calls = []
+    real = pc.extract_regex
+
+    def counting(arr, pattern, **kw):
+        calls.append(pattern)
+        return real(arr, pattern=pattern, **kw)
+
+    monkeypatch.setattr(pc, "extract_regex", counting)
+    outs = [S.st_intersects.func(land, region),
+            S.st_disjoint.func(land, region),
+            S.st_touches.func(land, region),
+            S.st_overlaps.func(land, region),
+            S.st_equals.func(land, shifted),
+            S.st_crosses.func(land, region)]
+    assert calls.count(LN.POLY5) == 3, calls
+    want = [S._intersects, S._disjoint, S._touches, S._overlaps,
+            S._equals, S._crosses]
+    for got, fn, other in zip(outs, want, [region] * 4 + [shifted, region]):
+        exp = pd.Series([fn(x, y) for x, y in zip(land, other)])
+        _eq_series(got, exp, fn.__name__)
