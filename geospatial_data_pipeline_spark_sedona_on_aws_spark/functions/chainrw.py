@@ -1,34 +1,26 @@
-"""Chain rewrite: compile nested text-named ST_ compositions onto the WKB
-binary carrier (r8 verdict item 1).
+"""Projection fuser for text-spelled ST_ compositions, and the SQL-text
+rewrites the engine applies before it.
 
 A user spelling the reference's own chain —
-``F.expr("ST_Area(ST_Buffer(ST_GeomFromWKT(w), d))")``, the shape of
-``spark_job/process_geodata.py:120-139`` — pays a WKT text round trip
-between every stage: each registered pandas UDF parses its WKT input and
-serializes WKT output. The ``_B`` twins (functions/geomb.py) chain through
-WKB ``BinaryType`` with packed-numpy batch kernels instead, which the r7/r8
-profiles measured at ~63% of chained scalar cost saved.
+``ST_Area(ST_Buffer(ST_GeomFromWKT(w), d))``, the shape of
+``spark_job/process_geodata.py:120-139`` — through plain Spark pays for
+each registered pandas UDF on its own: a WKT parse and a WKT format per
+stage, one UDF chain per output column, and an extra Arrow round trip at
+every multi-argument UDF. `select_st` fuses every maximal subtree of
+scalar pandas UDF calls in a projection into ONE struct UDF (see its
+docstring), and inside that UDF the nodes that form a carrier chain
+(`_Fusion.packed`) run their packed bodies from functions/geomb.py: the
+geometry travels from node to node as a kernel/packed.PackedBatch, is
+decoded once per distinct geometry input and encoded only where it
+surfaces. The r7/r8 profiles measured the WKT round trips at ~63% of
+chained scalar cost. Binary==text parity for every body is
+property-pinned by tests/test_binary_carrier.py; which nodes run packed
+is pinned by tests/test_chainrw.py.
 
-This module is the expression/builder layer that makes the TEXT SPELLING
-get carrier speed: ``rewrite(expr)`` parses a SQL expression string, finds
-maximal subtrees where every node has a registered ``_B`` twin and at least
-one geometry argument is itself a twin-covered producer (i.e. a real chain,
-not a lone call), and re-emits them as the ``_B`` pipeline — ``
-ST_GeomFromWKT_B`` at the text→WKB edge, ``ST_AsText_B`` wherever a
-geometry value surfaces back to the user. Single un-chained calls are left
-on the text path (rewriting them would ADD a WKB hop without removing a
-WKT one). Binary==text parity for every twin is property-pinned by
-tests/test_binary_carrier.py; the rewritten path is pinned by
-tests/test_chainrw.py.
-
-Spark-first note: chained Python UDFs in one projection are collapsed by
-Catalyst into a single ArrowEvalPython node, so the WKB bytes between
-stages never hit an exchange — the rewrite changes serialization format
-and kernel, not the shuffle structure (plan-audited).
-
-`select_st` then runs the projection fuser (see its docstring): all the
-scalar pandas UDF calls of one projection become one struct UDF that
-evaluates each distinct subtree once.
+The text rewrites here are `rewrite` (the _FUSE scalar-consumer
+fusions, applied before the fuser) and `salt_union_aggr_sql` (the
+ST_Union_Aggr two-phase salt, applied by `sql_st`). Both copy every
+token they do not recognize verbatim.
 """
 
 from __future__ import annotations
@@ -37,49 +29,14 @@ import functools
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StructField, StructType
 from pyspark.util import PythonEvalType
 
-# ---------------------------------------------------------------- specs
-#
-# text name (lower) -> (B name, geometry-arg positions, output kind)
-# output kind: "geom"  = twin returns WKB (text version returns WKT)
-#              "scalar" = twin returns the same scalar as the text twin
-#              "text"  = twin already returns text (ST_AsText_B)
-_SPEC = {
-    "st_geomfromwkt": ("ST_GeomFromWKT_B", (), "geom"),
-    "st_geomfromtext": ("ST_GeomFromWKT_B", (), "geom"),
-    "st_astext": ("ST_AsText_B", (0,), "text"),
-    "st_area": ("ST_Area_B", (0,), "scalar"),
-    "st_npoints": ("ST_NPoints_B", (0,), "scalar"),
-    "st_numpoints": ("ST_NPoints_B", (0,), "scalar"),
-    "st_length": ("ST_Length_B", (0,), "scalar"),
-    "st_x": ("ST_X_B", (0,), "scalar"),
-    "st_y": ("ST_Y_B", (0,), "scalar"),
-    "st_centroid": ("ST_Centroid_B", (0,), "geom"),
-    "st_envelope": ("ST_Envelope_B", (0,), "geom"),
-    "st_transform": ("ST_Transform_B", (0,), "geom"),
-    "st_bufferround": ("ST_BufferRound_B", (0,), "geom"),
-    "st_distance": ("ST_Distance_B", (0, 1), "scalar"),
-    "st_intersects": ("ST_Intersects_B", (0, 1), "scalar"),
-    "st_disjoint": ("ST_Disjoint_B", (0, 1), "scalar"),
-    "st_touches": ("ST_Touches_B", (0, 1), "scalar"),
-    "st_overlaps": ("ST_Overlaps_B", (0, 1), "scalar"),
-    "st_equals": ("ST_Equals_B", (0, 1), "scalar"),
-    "st_contains": ("ST_Contains_B", (0, 1), "scalar"),
-    "st_within": ("ST_Within_B", (0, 1), "scalar"),
-    "st_crosses": ("ST_Crosses_B", (0, 1), "scalar"),
-}
-
-# Hygiene names are near-identity on the text surface (geometry is
-# carried AS canonical WKT: st_astext is `return s`, st_geomfromwkt is a
-# fixed-point check on canonical input) — a chain made ONLY of these is
-# cheaper on text than any carrier round trip, so rewriting requires at
-# least one genuine compute op in the chain.
-_HYGIENE = {"st_geomfromwkt", "st_geomfromtext", "st_astext"}
+from ..kernel import packed as PK
+from . import geomb as GB
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -194,58 +151,11 @@ def _parse(s: str, i: int = 0, stops: str = ""):
     return items, i, (s[i] if i < n else "")
 
 
-def _producer(call: _Call):
-    """Twin spec if this call produces geometry (its B twin returns WKB)."""
-    spec = _SPEC.get(call.name.lower())
-    if spec and spec[2] == "geom":
-        return spec
-    return None
-
-
-def _chain_stats(call: _Call):
-    """(size, compute) over the maximal B-chain rooted here: size counts
-    twin-covered calls (this call + recursively, geometry args that are
-    sole producer calls); compute is True if any of them is a genuine
-    compute op (not text-identity hygiene)."""
-    spec = _SPEC.get(call.name.lower())
-    if spec is None:
-        return 0, False
-    total = 1
-    compute = call.name.lower() not in _HYGIENE
-    for pos in spec[1]:
-        if pos < len(call.args):
-            inner = call.args[pos].sole_call()
-            if inner is not None and _producer(inner):
-                sz, cp = _chain_stats(inner)
-                total += sz
-                compute = compute or cp
-    return total, compute
-
-
-def _emit_b(call: _Call) -> str:
-    """Emit the B-twin form of a twin-covered call; geometry args become
-    WKB (nested producer chains stay binary, everything else parses once
-    at the edge via ST_GeomFromWKT_B)."""
-    b_name, geom_args, _ = _SPEC[call.name.lower()]
-    parts = []
-    for i, arg in enumerate(call.args):
-        if i in geom_args:
-            inner = arg.sole_call()
-            if inner is not None and _producer(inner):
-                parts.append(_emit_b(inner))
-            else:
-                parts.append(
-                    f"ST_GeomFromWKT_B({_emit_expr(arg).strip()})")
-        else:
-            parts.append(_emit_expr(arg).strip())
-    return f"{b_name}({', '.join(parts)})"
-
-
 #: scalar-consumer fusions (r13): (outer, inner) -> fused text function.
 #: The fused kernel computes the outer scalar WITHOUT materializing the
 #: inner geometry (ST_NPoints∘ST_Segmentize is a pure vertex-count
 #: formula; the densified ring itself is never built). Applied before
-#: the carrier rewrite; fused == composition is parity-pinned
+#: the projection fuser; fused == composition is parity-pinned
 #: (tests/test_chainrw.py).
 _FUSE = {
     ("st_npoints", "st_segmentize"): "ST_SegmentizeNPoints",
@@ -260,19 +170,9 @@ def _emit_call(call: _Call) -> str:
         if fused is not None:
             inner = ",".join(_emit_expr(a) for a in fuse_inner.args)
             return f"{fused}({inner})"
-    spec = _SPEC.get(call.name.lower())
-    size, compute = _chain_stats(call) if spec is not None else (0, False)
-    if spec is not None and size >= 2 and compute:
-        core = _emit_b(call)
-        if spec[2] == "geom":
-            # geometry surfacing to the user: canonical WKT text edge
-            # (ST_AsText_B(ST_GeomFromWKT_B(w)) == ST_GeomFromWKT(w),
-            # pinned by the binary==text property suite)
-            return f"ST_AsText_B({core})"
-        return core
-    # not rewritable here — still recurse: chains may hide in any arg.
-    # Join with a bare "," (args keep their original surrounding
-    # whitespace) so an untouched subtree reproduces its input verbatim.
+    # recurse: fusions may hide in any arg. Join with a bare "," (args
+    # keep their original surrounding whitespace) so an untouched subtree
+    # reproduces its input verbatim.
     inner = ",".join(_emit_expr(a) for a in call.args)
     return f"{call.name}({inner})"
 
@@ -283,17 +183,10 @@ def _emit_expr(expr: _Expr) -> str:
 
 
 def rewrite(expr: str) -> str:
-    """Rewrite one SQL expression string: every maximal nested
-    registered-ST_ composition (chain of >= 2 twin-covered calls) is
-    re-emitted on the WKB carrier; everything else is returned verbatim."""
+    """One SQL expression string with the _FUSE scalar-consumer fusions
+    applied; everything else is returned verbatim."""
     items, _, _ = _parse(expr)
     return _emit_expr(_Expr(items))
-
-
-def st_expr(expr: str) -> Column:
-    """F.expr with the chain rewrite applied — the engine's builder for
-    text-spelled ST_ compositions."""
-    return F.expr(rewrite(expr))
 
 
 # ------------------------------------------------- projection fuser
@@ -363,6 +256,7 @@ class _Fusion:
     def __init__(self):
         self.leaves: dict = {}     # leaf text -> argument index
         self.nodes: dict = {}      # (fn, refs) -> node index (dep order)
+        self.carrier: list = []    # node index -> GB.Carrier or None
         self.outs: dict = {}       # ref -> field index
         self.calls = 0
 
@@ -378,8 +272,11 @@ class _Fusion:
                 text = _emit_expr(a).strip()
                 refs.append(("c", self.leaves.setdefault(
                     text, len(self.leaves))))
-        node = self.nodes.setdefault((fn, tuple(refs)), len(self.nodes))
-        return ("v", node, field)
+        key = (fn, tuple(refs))
+        if key not in self.nodes:
+            self.nodes[key] = len(self.nodes)
+            self.carrier.append(GB.CARRIER.get(call.name.lower()))
+        return ("v", self.nodes[key], field)
 
     def _field(self, ref) -> str:
         return f"__fz.f{self.outs.setdefault(ref, len(self.outs))}"
@@ -406,9 +303,42 @@ class _Fusion:
                            + ",".join(self.emit(a) for a in x.args) + ")")
         return "".join(out)
 
+    def packed(self) -> set:
+        """The nodes that run their packed body (functions/geomb.CARRIER):
+        every member of a carrier chain, i.e. of >= 2 nodes with a body
+        linked through geometry arguments that a geometry-producing body
+        fills, at least one of them not hygiene (ST_GeomFromWKT /
+        ST_AsText). A lone call, or a parse straight into a serialize, is
+        cheaper on its text UDF than a decode and an encode. A name
+        without a body ends the chain at its node; chains inside its
+        arguments still form."""
+        comp = list(range(len(self.nodes)))
+
+        def root(k):
+            while comp[k] != k:
+                k = comp[k]
+            return k
+
+        for k, (_, refs) in enumerate(self.nodes):
+            c = self.carrier[k]
+            for pos in c.geom if c else ():
+                if pos < len(refs) and refs[pos][0] == "v":
+                    j = refs[pos][1]
+                    if self.carrier[j] and self.carrier[j].produces:
+                        comp[root(j)] = root(k)
+        chains: dict = {}
+        for k in range(len(comp)):
+            chains.setdefault(root(k), []).append(k)
+        return {k for ks in chains.values() if len(ks) >= 2
+                and not all(self.carrier[k].hygiene for k in ks)
+                for k in ks}
+
     def udf(self):
         """The struct pandas_udf; call it on the leaves, in order."""
         steps, outs = list(self.nodes), list(self.outs)
+        packed = self.packed()
+        bodies = [self.carrier[k] if k in packed else None
+                  for k in range(len(steps))]
 
         def dtype(ref):
             rt = steps[ref[1]][0].returnType
@@ -419,15 +349,38 @@ class _Fusion:
 
         def fused(*cols: pd.Series) -> pd.DataFrame:
             vals: list = []
+            codec = GB.Codec()
+            decoded: dict = {}     # leaf or plain node -> PackedBatch
+            encoded: dict = {}     # packed node -> its column
 
             def get(ref):
                 if ref[0] == "c":
                     return cols[ref[1]]
-                v = vals[ref[1]]
+                k, v = ref[1], vals[ref[1]]
+                if isinstance(v, PK.PackedBatch):
+                    if k not in encoded:
+                        encoded[k] = codec.encode(
+                            v, steps[k][0].returnType, cols[0].index)
+                    v = encoded[k]
                 return v if ref[2] is None else v[ref[2]]
 
-            for fn, refs in steps:
-                vals.append(fn.func(*map(get, refs)))
+            def get_packed(ref):
+                v = vals[ref[1]] if ref[0] == "v" else None
+                if isinstance(v, PK.PackedBatch):
+                    return v
+                if ref not in decoded:
+                    decoded[ref] = codec.decode(get(ref))
+                return decoded[ref]
+
+            for (fn, refs), c in zip(steps, bodies):
+                if c is None:
+                    vals.append(fn.func(*map(get, refs)))
+                    continue
+                v = c.body(*(get_packed(r) if i in c.geom else get(r)
+                             for i, r in enumerate(refs)))
+                if isinstance(v, pd.Series):
+                    v.index = cols[0].index
+                vals.append(v)
             return pd.DataFrame({f"f{k}": get(r)
                                  for k, r in enumerate(outs)})
 
@@ -435,8 +388,8 @@ class _Fusion:
 
 
 def select_st(df: DataFrame, *exprs: str) -> DataFrame:
-    """df.selectExpr with the chain rewrite applied to every expression,
-    then the projection fuser.
+    """df.selectExpr through the projection fuser (after the _FUSE
+    rewrite).
 
     Spark evaluates Python UDFs badly when they share work: EvalPythonExec
     runs one chain per OUTPUT column, so a UDF subtree read by two outputs
@@ -448,9 +401,13 @@ def select_st(df: DataFrame, *exprs: str) -> DataFrame:
     them as ONE struct pandas_udf whose arguments are the deduplicated
     UDF-free leaf expressions; its body calls each distinct subtree's
     registered function once, in dependency order, and the outputs read
-    its fields (`__fz.f0`...). A projection with fewer than two UDF calls
-    is a plain select. Registration (text + _B twins) must already have
-    happened (functions.spatial.register_spatial_functions)."""
+    its fields (`__fz.f0`...). Inside that body a carrier chain
+    (_Fusion.packed) passes packed batches from node to node: each
+    distinct geometry input decodes once, and a packed value is encoded
+    only where it surfaces, as an output or as the argument of a UDF
+    without a packed body. A projection with fewer than two UDF calls is
+    a plain select. Registration must already have happened
+    (functions.spatial.register_spatial_functions)."""
     fz = _Fusion()
     texts = [rewrite(e) for e in exprs]
     fused = [fz.emit(_Expr(_parse(t)[0])) for t in texts]
@@ -466,15 +423,14 @@ def select_st(df: DataFrame, *exprs: str) -> DataFrame:
 
 
 def sql_st(spark: SparkSession, sql: str) -> DataFrame:
-    """spark.sql with the engine rewrites applied to the whole statement:
-    first the ST_Union_Aggr auto-salt (salt_union_aggr_sql below), then
-    the carrier chain rewrite — both safe because they only touch
-    recognized ST_ call trees / the strict canonical GROUP BY shape and
-    copy every other token (strings, identifiers, keywords) verbatim."""
+    """spark.sql with the ST_Union_Aggr auto-salt (salt_union_aggr_sql
+    below) applied to the whole statement — safe because it only touches
+    the strict canonical GROUP BY shape and copies every other token
+    (strings, identifiers, keywords) verbatim."""
     from .spatial import register_spatial_functions
 
     register_spatial_functions(spark)
-    return spark.sql(rewrite(salt_union_aggr_sql(sql)))
+    return spark.sql(salt_union_aggr_sql(sql))
 
 
 # ---------------------------------------------- ST_Union_Aggr auto-salt

@@ -1,16 +1,27 @@
-"""Binary-carrier ST_* functions: WKB BinaryType between chained stages.
+"""Binary carrier: ST_ function bodies over packed geometry batches.
 
-The text surface (functions/spatial.py) re-parses and re-serializes WKT at
-every stage of a chained `F.expr("ST_…(ST_…(…))")` — measured at ~63% of
-the buffer→area→npoints chain (SCALING.md, r7). These `_B`-suffixed twins
-carry kernel-ISO WKB (kernel/geomtypes.py:to_wkb byte layout) between
-stages instead, decode each Arrow batch into ONE packed coordinate array
-(kernel/packed.py), and run the measures / the CRS projection / the convex
-round buffer as whole-batch numpy math. WKT appears only at the
-user-facing edges:
+The text surface (functions/spatial.py) parses and formats WKT in every
+UDF, so a chained `ST_…(ST_…(…))` pays a text round trip per stage —
+measured at ~63% of the buffer→area→npoints chain (SCALING.md, r7). Each
+carrier function here is instead ONE body over kernel/packed.PackedBatch:
+geometry arguments come in packed, a geometry result goes out packed, a
+scalar result goes out as a pandas Series, and the measures, the CRS
+projection, the convex round buffer, centroid, envelope and the
+rect/point predicates run as whole-batch numpy math.
 
-    ST_GeomFromWKT_B(wkt)            -> binary   (text -> carrier, once)
-    ST_AsText_B(bin)                 -> string   (carrier -> text, once)
+`CARRIER` maps each text name and each `_B` name that has such a body to
+(body, geometry-argument positions, geometry result?). It has two users:
+
+- functions/chainrw's projection fuser runs a carrier chain as these
+  bodies inside one fused Python call. `Codec` decodes each distinct
+  geometry input once and encodes a packed value only where it surfaces:
+  WKT for a text name, WKB for a `_B` name;
+- `REGISTRY_B` registers every `_B` name as its body behind one adapter
+  (decode the geometry arguments, run the body, encode a geometry
+  result), so queries that spell the `_B` names keep working:
+
+    ST_GeomFromWKT_B(wkt)            -> binary   (text -> carrier)
+    ST_AsText_B(bin)                 -> string   (carrier -> text)
     ST_BufferRound_B(bin, d, q)      -> binary
     ST_Transform_B(bin, src, dst)    -> binary
     ST_Area_B / ST_Length_B(bin)     -> double
@@ -19,10 +30,13 @@ user-facing edges:
                                         areal rings closed — the binary
                                         twin of the WKT-numbers split)
 
-Semantics parity is pinned two ways: every `_B` function falls back to the
-SAME scalar kernel as its text twin for rows the vectorized path doesn't
-cover (Z, GEOMETRYCOLLECTION, non-convex buffers), and
-tests/test_binary_carrier.py property-tests binary == text per family.
+A text geometry input enters through the text edge below (one batch
+parse, the same hygiene as the text ST_GeomFromWKT) and then one
+`pack_wkb`; a binary input through `pack_wkb` alone. Rows the vectorized
+kernels do not cover (Z, GEOMETRYCOLLECTION, non-convex buffers, …) go
+through the SAME scalar kernel as the text twin, and a geometry such a
+kernel produces stays in the batch as its WKB bytes (kind -1).
+tests/test_binary_carrier.py pins binary == text per family.
 
 This is the PySpark-native equivalent of Sedona's binary GeometryUDT
 interchange (the reference's five-call ST_ chain at
@@ -33,9 +47,13 @@ either). Scale: row-local, per-Arrow-batch, no shuffle or driver state.
 from __future__ import annotations
 
 import struct
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
@@ -106,13 +124,8 @@ def _typed_lane_wkb(npts: np.ndarray, xy: np.ndarray, code: int) -> list:
     """WKB bytes for m rows of one puntal/lineal kind, row i holding
     npts[i] consecutive points of xy (kernel/packed._emit_ragged)."""
     m = len(npts)
-    ring_off = np.zeros(m + 1, dtype=np.int64)
-    np.cumsum(npts, out=ring_off[1:])
-    pb = PK.PackedBatch(
-        m, np.full(m, code, dtype=np.int8),
-        np.arange(m + 1, dtype=np.int64), ring_off,
-        np.ones(m, dtype=bool), np.ascontiguousarray(xy), {})
-    return PK._emit_ragged(pb)
+    return PK._emit_ragged(PK.assemble(np.full(m, code), np.ones(m, np.int64),
+                                       npts, np.ascontiguousarray(xy)))
 
 
 def _from_wkt_full_series(s: pd.Series) -> pd.Series:
@@ -133,11 +146,6 @@ def _from_wkt_full_series(s: pd.Series) -> pd.Series:
             out[:] = taken
             return out
     return _geom_from_wkt_b_series(s)
-
-
-@pandas_udf(BinaryType())
-def st_geomfromwkt_b(s: pd.Series) -> pd.Series:
-    return _from_wkt_full_series(s)
 
 
 def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
@@ -167,101 +175,7 @@ def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
     return f.finish(_geom_from_wkt_b_scalar)
 
 
-@pandas_udf(StringType())
-def st_astext_b(b: pd.Series) -> pd.Series:
-    p = PK.pack_wkb(_tolist(b))
-    return pd.Series(PK.unpack_wkt(p), index=b.index, dtype=object)
-
-
-def _tolist(b: pd.Series) -> list:
-    return [bytes(v) if v is not None else None for v in b.tolist()]
-
-
-# ------------------------------------------------------------ measures
-
-def _area_b_series(b: pd.Series) -> pd.Series:
-    p = PK.pack_wkb(_tolist(b))
-    ar = PK.area_np(p)
-    out = pd.Series(ar, index=b.index)
-    for i, raw in p.fallback.items():
-        # Z / GC rows: same convention as the text _area (strip_z; GC
-        # sums areal members)
-        out.iloc[i] = GT.area_of(GT.strip_z(GT.parse_wkb(raw)))
-    out[np.asarray(p.kind) == 0] = None
-    return out
-
-
-@pandas_udf(DoubleType())
-def st_area_b(b: pd.Series) -> pd.Series:
-    return _area_b_series(b)
-
-
-def _npoints_b_series(b: pd.Series) -> pd.Series:
-    p = PK.pack_wkb(_tolist(b))
-    npts = PK.npoints_np(p)
-    out = pd.Series(npts, index=b.index, dtype="Int64")
-    for i, raw in p.fallback.items():
-        out.iloc[i] = GT.npoints(GT.parse_wkb(raw))
-    out[np.asarray(p.kind) == 0] = None
-    return out
-
-
-@pandas_udf(LongType())
-def st_npoints_b(b: pd.Series) -> pd.Series:
-    return _npoints_b_series(b)
-
-
-@pandas_udf(DoubleType())
-def st_length_b(b: pd.Series) -> pd.Series:
-    p = PK.pack_wkb(_tolist(b))
-    ln = PK.length_np(p)
-    out = pd.Series(ln, index=b.index)
-    for i, raw in p.fallback.items():
-        out.iloc[i] = GT.length(GT.parse_wkb(raw))
-    out[np.asarray(p.kind) == 0] = None
-    return out
-
-
-def _coords_b_series(b: pd.Series) -> pd.Series:
-    """Flattened [x1, y1, x2, y2, …] per geometry, areal rings CLOSED —
-    element-for-element the numbers a WKT-text split would yield
-    (operators/dissolve.wkt_nums_sql), so try_element_at positions match."""
-    p = PK.pack_wkb(_tolist(b))
-    out: list = [None] * p.n
-    ro, go = p.ring_off, p.geom_off
-    areal = (3, 6)
-    for i in range(p.n):
-        k = int(p.kind[i])
-        if k == 0:
-            continue
-        if k == -1:
-            tg = GT.parse_wkb(p.fallback[i])
-            out[i] = [float(v) for pt in GT.points_of(tg) for v in pt[:2]]
-            continue
-        parts = []
-        for r in range(go[i], go[i + 1]):
-            ring = p.coords[ro[r]:ro[r + 1]]
-            parts.append(ring)
-            if k in areal and len(ring):
-                parts.append(ring[:1])
-        out[i] = (np.concatenate(parts).ravel().tolist() if parts else [])
-    return pd.Series(out, index=b.index, dtype=object)
-
-
-@pandas_udf(ArrayType(DoubleType()))
-def st_coords_b(b: pd.Series) -> pd.Series:
-    return _coords_b_series(b)
-
-
-# ---------------------------------------------------- shape ops (r8 late)
-
 _PT_HDR = b"\x01" + struct.pack("<I", 1)
-
-
-def _point_wkb(x: float, y: float) -> bytes:
-    return _PT_HDR + struct.pack("<2d", x, y)
-
-
 _PT_DT = np.dtype([("hdr", "u1", (5,)), ("xy", "<f8", (2,))])
 
 
@@ -277,84 +191,149 @@ def _point_wkb_batch(xs, ys) -> list:
     return [big[i * w:(i + 1) * w] for i in range(m)]
 
 
-def _centroid_b_scalar(tg):
-    """Same dispatch as the text _centroid, WKB end (strip_z projection;
-    areal via the normalized area-weighted form, puntal/lineal via the
-    JTS by-dimension conventions, GEOMETRYCOLLECTION raises)."""
-    tg = GT.strip_z(tg)
-    kind, data = tg
-    if kind in ("POLYGON", "MULTIPOLYGON"):
-        c = S._centroid_areal_val(G.normalize(data))
-    else:
-        c = GT.centroid(tg)  # raises for GEOMETRYCOLLECTION (parity)
-    return None if c is None else _point_wkb(c[0], c[1])
+def _tolist(b: pd.Series) -> list:
+    return [bytes(v) if v is not None else None for v in b.tolist()]
 
 
-@pandas_udf(BinaryType())
-def st_centroid_b(b: pd.Series) -> pd.Series:
-    p = PK.pack_wkb(_tolist(b))
-    elig, cx, cy = PK.centroid_np(p)
-    elig_l, lx, ly = PK.lineal_centroid_np(p)
-    if elig_l.any():
-        cx = np.where(elig_l, lx, cx)
-        cy = np.where(elig_l, ly, cy)
-        elig = elig | elig_l
-    out: list = [None] * p.n
-    ei = np.flatnonzero(elig)
-    if len(ei):
-        wkbs = _point_wkb_batch(cx[ei], cy[ei])
-        for j, i in enumerate(ei):
-            out[i] = wkbs[j]
-    for i in np.flatnonzero(~elig):
-        if p.kind[i] == 0:
-            continue
-        out[i] = _centroid_b_scalar(PK.row_tgeom(p, i))
-    return pd.Series(out, index=b.index, dtype=object)
+class Codec:
+    """One batch's geometry conversions. `decode` turns a text or binary
+    column into a PackedBatch; `encode` turns a packed result back into
+    the column type its function returns (WKT for StringType, WKB
+    otherwise). A packed value that surfaces unchanged as binary reuses
+    the WKB it was decoded from."""
+
+    def __init__(self):
+        self._wkb: dict = {}           # id(batch) -> (batch, its WKB)
+
+    def decode(self, s: pd.Series) -> PK.PackedBatch:
+        first = next((v for v in s if v is not None), None)
+        wkb = (_from_wkt_full_series(s).tolist() if isinstance(first, str)
+               else _tolist(s))
+        p = PK.pack_wkb(wkb)
+        self._wkb[id(p)] = (p, wkb)
+        return p
+
+    def encode(self, p: PK.PackedBatch, rtype, index) -> pd.Series:
+        if isinstance(rtype, StringType):
+            vals = _wkt_batch(p)
+        else:
+            src, wkb = self._wkb.get(id(p), (None, None))
+            vals = wkb if src is p else PK.unpack_wkb(p)
+        return pd.Series(vals, index=index, dtype=object)
 
 
-@pandas_udf(BinaryType())
-def st_envelope_b(b: pd.Series) -> pd.Series:
-    """JTS getEnvelope shape rules off the vectorized bounds: areal input
-    always yields the 4-corner polygon (text-path parity); other kinds
-    degrade to POINT / flat LINESTRING / POLYGON EMPTY. The three common
-    shapes (proper box, point, flat line) each emit as one batch write
-    (r9: the per-row GT.to_wkb loop dominated the rewritten envelope
-    chain)."""
-    p = PK.pack_wkb(_tolist(b))
-    bb = PK.bounds_np(p)
-    out: list = [None] * p.n
-    x1, y1, x2, y2 = bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3]
-    live = p.kind > 0
-    nonempty = live & (x1 == x1)
-    areal = (p.kind == 3) | (p.kind == 6)
-    box = nonempty & (areal | ((x1 != x2) & (y1 != y2)))
-    if box.any():
-        bi = np.flatnonzero(box)
-        wkbs = _rect_wkb_batch(x1[bi], y1[bi], x2[bi], y2[bi])
-        for j, i in enumerate(bi):
-            out[i] = wkbs[j]
-    pt = nonempty & ~box & (x1 == x2) & (y1 == y2)
-    if pt.any():
-        pi = np.flatnonzero(pt)
-        wkbs = _point_wkb_batch(x1[pi], y1[pi])
-        for j, i in enumerate(pi):
-            out[i] = wkbs[j]
-    flat = nonempty & ~box & ~pt
-    for i in np.flatnonzero(flat):
-        out[i] = GT.to_wkb(("LINESTRING", [[(x1[i], y1[i]),
-                                            (x2[i], y2[i])]]))
-    for i in np.flatnonzero(live & ~nonempty):
-        out[i] = GT.to_wkb(("POLYGON", []))
+def _closed_rings(p: PK.PackedBatch):
+    """(coordinate index of every ring point with areal rings closed,
+    points per ring, areal ring mask, geometry row per ring)."""
+    ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
+    close = np.isin(p.kind[ring_geom], PK._AREAL)
+    take = p.ring_len() + close
+    idx = PK._multi_arange(p.ring_off[:-1], take)
+    idx[(np.cumsum(take) - 1)[close]] = p.ring_off[:-1][close]
+    return idx, take, close, ring_geom
+
+
+def _wkt_batch(p: PK.PackedBatch) -> list:
+    """PK.unpack_wkt as whole-batch string ops: numbers through
+    lanes.fmt_f64_full (bit-equal to the kernel's _fmt), then arrow list
+    joins from points to rings to rows; a one-member multi prints as its
+    single kind, as GT.to_wkt does. Rows held as bytes, rows with a
+    non-finite coordinate and multi-polygon rows go per row."""
+    idx, take, close, ring_geom = _closed_rings(p)
+    sx, okx = LN.fmt_f64_full(p.coords[:, 0])
+    sy, oky = LN.fmt_f64_full(p.coords[:, 1])
+    pts = pc.binary_join_element_wise(sx, sy, " ").take(pa.array(idx))
+    ring_off = np.zeros(len(take) + 1, dtype=np.int64)
+    np.cumsum(take, out=ring_off[1:])
+    rings = pc.binary_join(pa.ListArray.from_arrays(ring_off, pts), ", ")
+    rings = pc.binary_join_element_wise("(", rings, ")", "")
+    body = pc.binary_join(pa.ListArray.from_arrays(p.geom_off, rings),
+                          ", ").to_numpy(zero_copy_only=False)
+    k, nr = p.kind, p.rings_per_geom()
+    areal, lineal = np.isin(k, PK._AREAL), np.isin(k, PK._LINEAL)
+    puntal = np.isin(k, PK._PUNTAL)
+    npolys = np.bincount(ring_geom, weights=p.outer & close, minlength=p.n)
+    multi = np.where(k == PK.MULTIPOINT, np.bincount(
+        ring_geom, weights=take, minlength=p.n), nr) > 1
+    out = np.select(
+        [nr == 0, puntal & multi, puntal, lineal & multi, lineal],
+        ["", "MULTIPOINT ", "POINT ", "MULTILINESTRING (", "LINESTRING "],
+        "POLYGON (").astype(object)
+    out[nr > 0] += body[nr > 0]
+    out[(lineal & multi) | (areal & (nr > 0))] += ")"
+    out[(nr == 0) & puntal] = "POINT EMPTY"
+    out[(nr == 0) & lineal] = "LINESTRING EMPTY"
+    out[(nr == 0) & areal] = "POLYGON EMPTY"
+    out[k == 0] = None
+    bad = ~(okx & oky)
+    slow = (k == -1) | (npolys > 1) | (np.bincount(
+        np.repeat(np.arange(p.n), np.diff(p.geom_coord_off()))[bad],
+        minlength=p.n) > 0)
+    for i in np.flatnonzero(slow).tolist():
+        out[i] = GT.to_wkt(PK.row_tgeom(p, i))
+    return out.tolist()
+
+
+# ------------------------------------------------------------ bodies
+#
+# Geometry arguments arrive as PackedBatch, every other argument as the
+# pandas Series Spark passed. Scalar results are Series over the batch's
+# row positions.
+
+def _same(p: PK.PackedBatch) -> PK.PackedBatch:
+    """ST_GeomFromWKT / ST_AsText: the geometry itself (the text edge
+    already ran at decode; the encoding is chosen where it surfaces)."""
+    return p
+
+
+def _area(p: PK.PackedBatch) -> pd.Series:
+    out = pd.Series(PK.area_np(p))
     for i, raw in p.fallback.items():
-        tg = GT.strip_z(GT.parse_wkb(raw))
-        out[i] = GT.to_wkb(GT.parse_wkt(GT.envelope_wkt(tg)))
-    return pd.Series(out, index=b.index, dtype=object)
+        # Z / GC rows: same convention as the text _area (strip_z; GC
+        # sums areal members)
+        out.iloc[i] = GT.area_of(GT.strip_z(GT.parse_wkb(raw)))
+    out[p.kind == 0] = None
+    return out
 
 
-def _xy_b(b: pd.Series, axis: int) -> pd.Series:
-    """ST_X/ST_Y off the carrier: coordinate for POINT rows, null for
-    any other kind (the Sedona convention, same as the text _st_xy)."""
-    p = PK.pack_wkb(_tolist(b))
+def _npoints(p: PK.PackedBatch) -> pd.Series:
+    out = pd.Series(PK.npoints_np(p), dtype="Int64")
+    for i, raw in p.fallback.items():
+        out.iloc[i] = GT.npoints(GT.parse_wkb(raw))
+    out[p.kind == 0] = None
+    return out
+
+
+def _length(p: PK.PackedBatch) -> pd.Series:
+    out = pd.Series(PK.length_np(p))
+    for i, raw in p.fallback.items():
+        out.iloc[i] = GT.length(GT.parse_wkb(raw))
+    out[p.kind == 0] = None
+    return out
+
+
+def _coords(p: PK.PackedBatch) -> pd.Series:
+    """Flattened [x1, y1, x2, y2, …] per geometry, areal rings CLOSED —
+    element-for-element the numbers a WKT-text split would yield
+    (operators/dissolve.wkt_nums_sql), so try_element_at positions match.
+    One gather over the whole batch; rows held as bytes go per row."""
+    idx, take, _, ring_geom = _closed_rings(p)
+    flat = p.coords[idx].ravel().tolist()
+    row_off = np.zeros(p.n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(ring_geom, weights=2 * take,
+                          minlength=p.n).astype(np.int64), out=row_off[1:])
+    out: list = [None] * p.n
+    for i in np.flatnonzero(p.kind > 0).tolist():
+        out[i] = flat[row_off[i]:row_off[i + 1]]
+    for i, raw in p.fallback.items():
+        tg = GT.parse_wkb(raw)
+        out[i] = [float(v) for pt in GT.points_of(tg) for v in pt[:2]]
+    return pd.Series(out, dtype=object)
+
+
+def _xy(p: PK.PackedBatch, axis: int) -> pd.Series:
+    """ST_X/ST_Y: coordinate for POINT rows, null for any other kind
+    (the Sedona convention, same as the text _st_xy)."""
     co = p.geom_coord_off()
     vals = np.full(p.n, np.nan)
     pts = (p.kind == PK.POINT) & (co[:-1] < co[1:])
@@ -364,175 +343,156 @@ def _xy_b(b: pd.Series, axis: int) -> pd.Series:
         v = S._st_xy(GT.to_wkt(GT.parse_wkb(raw)), axis)
         if v is not None:
             vals[i] = v
-    return pd.Series(vals, index=b.index)
+    return pd.Series(vals)
 
 
-@pandas_udf(DoubleType())
-def st_x_b(b: pd.Series) -> pd.Series:
-    return _xy_b(b, 0)
+def _centroid_scalar(tg):
+    """Same dispatch as the text _centroid (strip_z projection; areal via
+    the normalized area-weighted form, puntal/lineal via the JTS
+    by-dimension conventions, GEOMETRYCOLLECTION raises)."""
+    tg = GT.strip_z(tg)
+    kind, data = tg
+    if kind in ("POLYGON", "MULTIPOLYGON"):
+        return S._centroid_areal_val(G.normalize(data))
+    return GT.centroid(tg)  # raises for GEOMETRYCOLLECTION (parity)
 
 
-@pandas_udf(DoubleType())
-def st_y_b(b: pd.Series) -> pd.Series:
-    return _xy_b(b, 1)
+def _centroid(p: PK.PackedBatch) -> PK.PackedBatch:
+    elig, cx, cy = PK.centroid_np(p)
+    elig_l, lx, ly = PK.lineal_centroid_np(p)
+    cx = np.where(elig_l, lx, cx)
+    cy = np.where(elig_l, ly, cy)
+    elig = elig | elig_l
+    for i in np.flatnonzero(~elig & (p.kind != 0)):
+        c = _centroid_scalar(PK.row_tgeom(p, i))
+        if c is not None:
+            cx[i], cy[i] = c
+            elig[i] = True
+    return PK.assemble(np.where(elig, PK.POINT, 0), elig,
+                       np.ones(int(elig.sum()), dtype=np.int64),
+                       np.column_stack([cx[elig], cy[elig]]))
 
 
-# ------------------------------------------------------------ transforms
+def _envelope(p: PK.PackedBatch) -> PK.PackedBatch:
+    """JTS getEnvelope shape rules off the vectorized bounds: areal input
+    always yields the 4-corner polygon (text-path parity); other kinds
+    degrade to POINT / flat LINESTRING / POLYGON EMPTY."""
+    bb = PK.bounds_np(p)
+    x1, y1, x2, y2 = bb[:, 0], bb[:, 1], bb[:, 2], bb[:, 3]
+    live = p.kind > 0
+    nonempty = live & (x1 == x1)
+    areal = np.isin(p.kind, PK._AREAL)
+    box = nonempty & (areal | ((x1 != x2) & (y1 != y2)))
+    pt = nonempty & ~box & (x1 == x2) & (y1 == y2)
+    flat = nonempty & ~box & ~pt
+    kind = np.select([box | (live & ~nonempty), pt, flat],
+                     [PK.POLYGON, PK.POINT, PK.LINESTRING], 0)
+    npts = np.select([box, pt, flat], [4, 1, 2], 0)
+    first = np.cumsum(npts) - npts       # each row's first coordinate
+    # box: x1 y1, x2 y1, x2 y2, x1 y2 (the CCW walk, stored open);
+    # point: x1 y1; flat line: x1 y1, x2 y2
+    xy = np.empty((int(npts.sum()), 2))
+    xy[first[nonempty]] = np.column_stack([x1, y1])[nonempty]
+    far = box | flat
+    xy[first[far] + 1] = np.column_stack([x2, np.where(box, y1, y2)])[far]
+    xy[first[box] + 2] = np.column_stack([x2, y2])[box]
+    xy[first[box] + 3] = np.column_stack([x1, y2])[box]
+    return _put_scalar(
+        PK.assemble(kind, nonempty, npts[nonempty], xy),
+        np.asarray(list(p.fallback), dtype=np.int64),
+        lambda i: GT.to_wkb(GT.parse_wkt(GT.envelope_wkt(
+            GT.strip_z(GT.parse_wkb(p.fallback[i]))))))
 
-def _transform_b_series(b: pd.Series, src: pd.Series,
-                        dst: pd.Series) -> pd.Series:
-    if len(b) == 0:
-        return pd.Series([], dtype=object)
-    if src.nunique(dropna=False) == 1 and dst.nunique(dropna=False) == 1 \
+
+def _transform(p: PK.PackedBatch, src: pd.Series,
+               dst: pd.Series) -> PK.PackedBatch:
+    if p.n and src.nunique(dropna=False) == 1 \
+            and dst.nunique(dropna=False) == 1 \
             and src.iloc[0] is not None and dst.iloc[0] is not None:
-        p = PK.pack_wkb(_tolist(b))
         try:
-            q = PK.transform_np(p, str(src.iloc[0]), str(dst.iloc[0]))
+            return PK.transform_np(p, str(src.iloc[0]), str(dst.iloc[0]))
         except ValueError as exc:
             raise G.GeomError(f"ST_Transform: {exc}") from exc
-        return pd.Series(PK.unpack_wkb(q), index=b.index, dtype=object)
     # mixed CRS pairs in one batch: per-row scalar
-    out = []
-    for raw, a, c in zip(_tolist(b), src, dst):
-        if raw is None:
-            out.append(None)
-        else:
-            tg = GT.parse_wkb(raw)
-            out.append(GT.to_wkb(PK._transform_tgeom(tg, str(a), str(c))))
-    return pd.Series(out, index=b.index, dtype=object)
+    return _put_scalar(_no_rings(p.n), np.flatnonzero(p.kind != 0),
+                       lambda i: GT.to_wkb(PK._transform_tgeom(
+                           PK.row_tgeom(p, i), str(src.iloc[i]),
+                           str(dst.iloc[i]))))
 
 
-@pandas_udf(BinaryType())
-def st_transform_b(b: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
-    return _transform_b_series(b, src, dst)
+def _no_rings(n: int) -> PK.PackedBatch:
+    """n NULL rows, to be filled by _put_scalar."""
+    return PK.assemble(np.zeros(n, dtype=np.int8), np.zeros(n, np.int64),
+                       [], np.empty((0, 2)))
 
 
-# ------------------------------------------------------------ buffer
+def _put_scalar(out: PK.PackedBatch, rows, row_fn) -> PK.PackedBatch:
+    """Fill `rows` of `out` (rows that own no rings) with the WKB bytes
+    row_fn(i) a scalar kernel produced, held as kind -1; a None result
+    leaves the row NULL."""
+    for i in rows.tolist():
+        raw = row_fn(i)
+        if raw is not None:
+            out.kind[i] = -1
+            out.fallback[i] = raw
+    return out
 
-def _buffer_round_b_scalar(raw: bytes, d: float, q: int) -> bytes:
-    """Fallback for rows the vectorized convex walk doesn't cover: same
-    scalar kernel as the text ST_BufferRound, WKB at both ends."""
-    wkt = GT.to_wkt(GT.parse_wkb(raw))
-    res = S._buffer_round(wkt, d, q)
-    return GT.to_wkb(GT.parse_wkt(res))
+
+def _buffer_round_scalar(tg, d: float, q: int) -> bytes:
+    """Rows the vectorized convex walk doesn't cover: same scalar kernel
+    as the text ST_BufferRound, WKB out."""
+    return GT.to_wkb(GT.parse_wkt(S._buffer_round(GT.to_wkt(tg), d, q)))
 
 
-def _bufferround_b_series(b: pd.Series, d: pd.Series,
-                          q: pd.Series) -> pd.Series:
-    vals = _tolist(b)
+def _buffer_round(p: PK.PackedBatch, d: pd.Series,
+                  q: pd.Series) -> PK.PackedBatch:
     dd = pd.to_numeric(d, errors="coerce").to_numpy(dtype=np.float64,
                                                     na_value=np.nan)
-    quad = 8
-    qn = pd.to_numeric(q, errors="coerce").dropna()
-    if len(qn):
-        if qn.nunique() > 1:
-            # per-row quadsegs: the vectorized walk assumes one q for the
-            # whole batch, so varying-q batches go row-by-row through the
-            # same scalar kernel as the text twin with each row's own q.
-            qq = pd.to_numeric(q, errors="coerce").to_numpy(
-                dtype=np.float64, na_value=np.nan)
-            out: list = [None] * len(vals)
-            for i, raw in enumerate(vals):
-                if raw is None or dd[i] != dd[i]:
-                    continue
-                qi = 8 if qq[i] != qq[i] else int(qq[i])
-                out[i] = _buffer_round_b_scalar(raw, float(dd[i]), qi)
-            return pd.Series(out, index=b.index, dtype=object)
-        quad = int(qn.iloc[0])
-    p = PK.pack_wkb(vals)
+    qq = pd.to_numeric(q, errors="coerce").to_numpy(dtype=np.float64,
+                                                    na_value=np.nan)
+    dd = np.where(qq == qq, dd, np.nan)   # NULL quadsegs: NULL, as text
+    qn = np.unique(qq[qq == qq])
+    todo = (p.kind != 0) & (dd == dd)
+    if len(qn) > 1:
+        # per-row quadsegs: the vectorized walk assumes one q for the
+        # whole batch, so varying-q batches go row-by-row through the
+        # same scalar kernel as the text twin with each row's own q.
+        return _put_scalar(_no_rings(p.n), np.flatnonzero(todo), lambda i:
+                           _buffer_round_scalar(PK.row_tgeom(p, i),
+                                                float(dd[i]), int(qq[i])))
+    quad = int(qn[0]) if len(qn) else 8
     fast, coords, off = PK.buffer_round_np(p, np.nan_to_num(dd), quad)
-    out: list = [None] * p.n
-    rl = np.diff(off)
-    if len(rl) and (rl == rl[0]).all() and rl[0] >= 3:
-        # uniform output rings (e.g. every parcel buffers to a 36-gon):
-        # one structured-array write for the whole batch
-        L = int(rl[0])
-        m = len(rl)
-        dt = np.dtype([("hdr", "u1", (13,)),
-                       ("xy", "<f8", ((L + 1) * 2,))])
-        arr = np.empty(m, dtype=dt)
-        arr["hdr"] = np.frombuffer(
-            bytes(_RECT_HDR)[:9] + struct.pack("<I", L + 1),
-            dtype=np.uint8)
-        xy = arr["xy"].reshape(m, L + 1, 2)
-        rings = coords.reshape(m, L, 2)
-        xy[:, :L] = rings
-        xy[:, L] = rings[:, 0]
-        big = arr.tobytes()
-        w = dt.itemsize
-        fi = 0
-        for i in np.flatnonzero(fast):
-            out[i] = big[fi * w:(fi + 1) * w]
-            fi += 1
-    else:
-        hdr = bytes(_RECT_HDR)  # 01 + POLYGON + nrings=1
-        fi = 0
-        for i in np.flatnonzero(fast):
-            ring = coords[off[fi]:off[fi + 1]]
-            out[i] = (hdr + struct.pack("<I", len(ring) + 1)
-                      + ring.tobytes() + ring[0].tobytes())
-            fi += 1
-    for i in np.flatnonzero(~fast):
-        if vals[i] is None or dd[i] != dd[i]:
-            continue
-        out[i] = _buffer_round_b_scalar(vals[i], float(dd[i]), quad)
-    return pd.Series(out, index=b.index, dtype=object)
+    out = PK.assemble(np.where(fast, PK.POLYGON, 0), fast, np.diff(off),
+                      coords)
+    return _put_scalar(out, np.flatnonzero(todo & ~fast), lambda i:
+                       _buffer_round_scalar(PK.row_tgeom(p, i),
+                                            float(dd[i]), quad))
 
-
-@pandas_udf(BinaryType())
-def st_bufferround_b(b: pd.Series, d: pd.Series, q: pd.Series) -> pd.Series:
-    return _bufferround_b_series(b, d, q)
-
-
-# ------------------------------------------------- predicates (r8 late)
 
 def _wkt_of(p: PK.PackedBatch, i: int):
     tg = PK.row_tgeom(p, i)
     return None if tg is None else GT.to_wkt(tg)
 
 
-def _bool_b(law, scalar_fn, bounds=PK.rect_bounds_np):
+def _pred(law, scalar_fn, bounds=PK.rect_bounds_np):
     """Binary twin of the text surface's _rect_pair_predicate: where both
     sides' packed bounds are exact (kernel/packed.rect_bounds_np —
     value-level, no text contract needed) the DE-9IM law is whole-batch
     interval arithmetic; every other row routes through the SAME scalar
-    kernel as the text UDFs (via one WKT conversion, fallback rows
-    only)."""
-    @pandas_udf(BooleanType())
-    def fn(a: pd.Series, b: pd.Series) -> pd.Series:
-        pa, pb = PK.pack_wkb(_tolist(a)), PK.pack_wkb(_tolist(b))
+    kernel as the text UDFs (via one WKT conversion, those rows only)."""
+    def body(pa: PK.PackedBatch, pb: PK.PackedBatch) -> pd.Series:
         out = S._pair_law(bounds(pa), bounds(pb), law,
                           lambda i: scalar_fn(_wkt_of(pa, i),
                                               _wkt_of(pb, i)))
-        return pd.Series(out, index=a.index, dtype="object")
+        return pd.Series(out, dtype="object")
 
-    return fn
-
-
-# box_bounds_np (r9) also accepts degenerate boxes (points):
-# intersects / disjoint / equals / contains (covers) / within are pure
-# closed-interval statements at any operand dimension. touches /
-# overlaps / crosses stay rect-only — their truth depends on operand
-# dimension in ways bounds can't express (point-touches-point is false,
-# point-inside-rect is zero-boundary contact, ...).
-_BOX = PK.box_bounds_np
-st_crosses_b = _bool_b(S._law_crosses, S._crosses)
-st_intersects_b = _bool_b(S._law_intersects, S._intersects, _BOX)
-st_disjoint_b = _bool_b(S._law_disjoint, S._disjoint, _BOX)
-st_touches_b = _bool_b(S._law_touches, S._touches)
-st_overlaps_b = _bool_b(S._law_overlaps, S._overlaps)
-st_equals_b = _bool_b(S._law_equals, S._equals, _BOX)
-st_contains_b = _bool_b(S._law_contains, S._contains, _BOX)
-st_within_b = _bool_b(S._law_within, lambda x, y: S._contains(y, x), _BOX)
+    return body
 
 
-@pandas_udf(DoubleType())
-def st_distance_b(a: pd.Series, b: pd.Series) -> pd.Series:
+def _distance(pa: PK.PackedBatch, pb: PK.PackedBatch) -> pd.Series:
     """Box×box pairs (rects AND single points — the bounds ARE the
     geometry for both): axis-gap hypot over the whole batch; everything
     else the scalar kernel (same closest-pair semantics as ST_Distance)."""
-    pa = PK.pack_wkb(_tolist(a))
-    pb = PK.pack_wkb(_tolist(b))
     ma, ax1, ay1, ax2, ay2 = PK.box_bounds_np(pa)
     mb, bx1, by1, bx2, by2 = PK.box_bounds_np(pb)
     both = ma & mb
@@ -542,35 +502,97 @@ def st_distance_b(a: pd.Series, b: pd.Series) -> pd.Series:
         gy = np.maximum(0.0, np.maximum(by1 - ay2, ay1 - by2))
         out[both] = np.hypot(gx, gy)[both]
     for i in np.flatnonzero(~both):
-        wa, wb = _wkt_of(pa, i), _wkt_of(pb, i)
-        v = S._distance(wa, wb)
+        v = S._distance(_wkt_of(pa, i), _wkt_of(pb, i))
         if v is not None:
             out[i] = v
-    return pd.Series(out, index=a.index)
+    return pd.Series(out)
 
 
-# ------------------------------------------------------------ registration
+# ------------------------------------------------------------ the table
 
-REGISTRY_B = {
-    "ST_GeomFromWKT_B": st_geomfromwkt_b,
-    "ST_AsText_B": st_astext_b,
-    "ST_Area_B": st_area_b,
-    "ST_NPoints_B": st_npoints_b,
-    "ST_Length_B": st_length_b,
-    "ST_Coords_B": st_coords_b,
-    "ST_Transform_B": st_transform_b,
-    "ST_BufferRound_B": st_bufferround_b,
-    "ST_Centroid_B": st_centroid_b,
-    "ST_Envelope_B": st_envelope_b,
-    "ST_X_B": st_x_b,
-    "ST_Y_B": st_y_b,
-    "ST_Intersects_B": st_intersects_b,
-    "ST_Disjoint_B": st_disjoint_b,
-    "ST_Touches_B": st_touches_b,
-    "ST_Overlaps_B": st_overlaps_b,
-    "ST_Equals_B": st_equals_b,
-    "ST_Contains_B": st_contains_b,
-    "ST_Within_B": st_within_b,
-    "ST_Crosses_B": st_crosses_b,
-    "ST_Distance_B": st_distance_b,
-}
+# box_bounds_np (r9) also accepts degenerate boxes (points):
+# intersects / disjoint / equals / contains (covers) / within are pure
+# closed-interval statements at any operand dimension. touches /
+# overlaps / crosses stay rect-only — their truth depends on operand
+# dimension in ways bounds can't express (point-touches-point is false,
+# point-inside-rect is zero-boundary contact, ...).
+_BOX = PK.box_bounds_np
+_BOOL = BooleanType()
+
+#: (text names, _B name, body, geometry-argument positions, _B type)
+_ROWS = [
+    (("ST_GeomFromWKT", "ST_GeomFromText"), "ST_GeomFromWKT_B", _same, (0,),
+     BinaryType()),
+    (("ST_AsText",), "ST_AsText_B", _same, (0,), StringType()),
+    (("ST_Area",), "ST_Area_B", _area, (0,), DoubleType()),
+    (("ST_NPoints", "ST_NumPoints"), "ST_NPoints_B", _npoints, (0,),
+     LongType()),
+    (("ST_Length",), "ST_Length_B", _length, (0,), DoubleType()),
+    ((), "ST_Coords_B", _coords, (0,), ArrayType(DoubleType())),
+    (("ST_Transform",), "ST_Transform_B", _transform, (0,), BinaryType()),
+    (("ST_BufferRound",), "ST_BufferRound_B", _buffer_round, (0,),
+     BinaryType()),
+    (("ST_Centroid",), "ST_Centroid_B", _centroid, (0,), BinaryType()),
+    (("ST_Envelope",), "ST_Envelope_B", _envelope, (0,), BinaryType()),
+    (("ST_X",), "ST_X_B", partial(_xy, axis=0), (0,), DoubleType()),
+    (("ST_Y",), "ST_Y_B", partial(_xy, axis=1), (0,), DoubleType()),
+    (("ST_Intersects",), "ST_Intersects_B",
+     _pred(S._law_intersects, S._intersects, _BOX), (0, 1), _BOOL),
+    (("ST_Disjoint",), "ST_Disjoint_B",
+     _pred(S._law_disjoint, S._disjoint, _BOX), (0, 1), _BOOL),
+    (("ST_Touches",), "ST_Touches_B",
+     _pred(S._law_touches, S._touches), (0, 1), _BOOL),
+    (("ST_Overlaps",), "ST_Overlaps_B",
+     _pred(S._law_overlaps, S._overlaps), (0, 1), _BOOL),
+    (("ST_Equals",), "ST_Equals_B",
+     _pred(S._law_equals, S._equals, _BOX), (0, 1), _BOOL),
+    (("ST_Contains",), "ST_Contains_B",
+     _pred(S._law_contains, S._contains, _BOX), (0, 1), _BOOL),
+    (("ST_Within",), "ST_Within_B",
+     _pred(S._law_within, lambda x, y: S._contains(y, x), _BOX), (0, 1),
+     _BOOL),
+    (("ST_Crosses",), "ST_Crosses_B",
+     _pred(S._law_crosses, S._crosses), (0, 1), _BOOL),
+    (("ST_Distance",), "ST_Distance_B", _distance, (0, 1), DoubleType()),
+]
+
+
+class Carrier(NamedTuple):
+    """A packed body, its geometry-argument positions, and whether its
+    result is a geometry (what a `_B` twin returns as binary or text)."""
+    body: Callable
+    geom: tuple
+    produces: bool
+
+    @property
+    def hygiene(self) -> bool:
+        """The identity body of ST_GeomFromWKT / ST_AsText: computes
+        nothing."""
+        return self.body is _same
+
+
+#: lower-cased SQL name (text and _B) -> Carrier
+CARRIER = {
+    name.lower(): Carrier(body, geom, isinstance(rt, (BinaryType,
+                                                      StringType)))
+    for texts, b, body, geom, rt in _ROWS for name in (*texts, b)}
+
+
+def _adapt(name: str, body, geom, rtype):
+    """The registered `_B` UDF: decode the geometry arguments, run the
+    body, encode a geometry result."""
+    def fn(*cols: pd.Series) -> pd.Series:
+        c = Codec()
+        out = body(*(c.decode(v) if i in geom else v
+                     for i, v in enumerate(cols)))
+        if isinstance(out, PK.PackedBatch):
+            return c.encode(out, rtype, cols[0].index)
+        out.index = cols[0].index
+        return out
+
+    fn.__name__ = fn.__qualname__ = name.lower()
+    return pandas_udf(fn, rtype)
+
+
+REGISTRY_B = {b: _adapt(b, body, geom, rt)
+              for _, b, body, geom, rt in _ROWS}

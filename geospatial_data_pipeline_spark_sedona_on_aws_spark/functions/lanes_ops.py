@@ -1555,8 +1555,8 @@ def centroid(s: pd.Series, scalar_fn) -> pd.Series:
     """Areal centroid of canonical single-ring 5-point polygons: the
     normalize step (dedupe + orient CCW) and _centroid_areal_val are
     replicated exactly; claims require 4 consecutive-distinct stored
-    vertices and a nonzero signed area. Output is the scalar's %.10g
-    POINT text (formatted per matched row)."""
+    vertices and a nonzero signed area. Output is the scalar's
+    shortest-repr POINT text."""
     f = _Fill(s)
     closed, xs, ys = _fpoly5_closed(f.b)
     if closed.any():
@@ -1604,7 +1604,7 @@ def centroid(s: pd.Series, scalar_fn) -> pd.Series:
                 cx = sx / sa
                 cy = sy / sa
             vals = np.full(len(s), None, dtype=object)
-            for i in np.nonzero(m)[0]:
-                vals[i] = f"POINT ({cx[i]:.10g} {cy[i]:.10g})"
+            fx, fy = L._fmt_np(cx, m), L._fmt_np(cy, m)
+            vals[m] = "POINT (" + fx[m] + " " + fy[m] + ")"
             f.put(m, vals)
     return f.finish(scalar_fn)

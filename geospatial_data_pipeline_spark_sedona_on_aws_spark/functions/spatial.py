@@ -2838,18 +2838,15 @@ def _centroid(s: str | None) -> str | None:
         # length-weighted midpoint average (kernel/geomtypes.centroid);
         # GEOMETRYCOLLECTION raises (documented unsupported)
         c = GT.centroid(tg)
-        if c is None:
-            return None
-        # exact shortest-repr formatting (G._fmt), NOT %.10g: truncating
-        # to 10 significant digits manufactures values exactly on .5
-        # rounding boundaries, which Spark (HALF_UP) and an oracle
-        # computing at full precision then round differently
-        return GT.to_wkt(("POINT", [c]))
-    g = G.normalize(G.parse_wkt(s))
-    c = _centroid_areal_val(g)
+    else:
+        c = _centroid_areal_val(G.normalize(G.parse_wkt(s)))
     if c is None:
         return None
-    return f"POINT ({c[0]:.10g} {c[1]:.10g})"
+    # exact shortest-repr formatting (G._fmt), NOT %.10g: truncating to
+    # 10 significant digits manufactures values exactly on .5 rounding
+    # boundaries, which Spark (HALF_UP) and an oracle computing at full
+    # precision then round differently
+    return GT.to_wkt(("POINT", [c]))
 
 
 def _centroid_areal_val(g) -> tuple | None:

@@ -1,31 +1,32 @@
-"""Packed numpy batch representation for the binary (WKB) geometry
-interchange between chained ST_* stages.
+"""Packed numpy batch: the in-memory form of the binary (WKB) geometry
+carrier.
 
-The text carrier re-parses and re-serializes WKT at EVERY stage of a
-chained expression — the r7 profile measured parse+format at ~63% of the
-buffer→area→npoints chain. This module is the structural fix (r7 verdict
-item 1): a whole Arrow batch of WKB values decodes into ONE coordinate
-array plus offset tables, every vectorizable operator (area, npoints,
-length, CRS transform, convex round buffer) runs as numpy array math over
-the entire batch, and the result re-encodes to WKB with `ndarray.tobytes`
-— no per-coordinate text ever. WKT appears only at the user-facing edges
-(ST_GeomFromWKT_B in, ST_AsText_B out).
+A whole Arrow batch of geometries decodes into ONE coordinate array plus
+offset tables, and every vectorizable operator (area, npoints, length,
+CRS transform, convex round buffer, centroid, envelope) runs as numpy
+array math over the entire batch. Carrier bodies (functions/geomb.py)
+take and return this form, so a chain of them inside one fused Python
+call (functions/chainrw.py) decodes each geometry input once and encodes
+only where a geometry value surfaces. `unpack_wkb` / `unpack_wkt` are
+those surface encoders.
 
 The WKB layout is the kernel's own ISO little-endian form
-(kernel/geomtypes.py:to_wkb), so the binary carrier interoperates with the
-already-registered ST_GeomFromWKB / ST_AsBinary text-surface functions.
-Sedona passes binary GeometryUDT between operators the same way
-(reference spark_job/process_geodata.py:102-139 chains five ST_ calls with
-zero text round trips); this is the PySpark-native equivalent.
+(kernel/geomtypes.py:to_wkb), so the carrier interoperates with the
+registered ST_GeomFromWKB / ST_AsBinary functions. Sedona passes binary
+GeometryUDT between operators the same way (reference
+spark_job/process_geodata.py:102-139 chains five ST_ calls with zero text
+round trips).
 
 Scale note: everything here is per-Arrow-batch and row-local — no driver
-state, no shuffle implications. At 100 TB the carrier simply rides the
-existing columnar exchange; the win is pure CPU per executor core.
+state, no shuffle implications.
 
 Representation (one PackedBatch per Arrow batch):
     kind      int8 (n,)   WKB type code 1..6; 0 = SQL NULL;
-                          -1 = fallback row (Z / GEOMETRYCOLLECTION /
-                          big-endian — original bytes kept verbatim)
+                          -1 = a row held as its WKB bytes (in `fallback`):
+                          Z / GEOMETRYCOLLECTION / big-endian input, or a
+                          row a scalar kernel produced. unpack_wkb and
+                          unpack_wkt emit such rows verbatim and every
+                          vectorized kernel sends them to its scalar path
     geom_off  int64 (n+1,) ring-index range per geometry
     ring_off  int64 (R+1,) coord-index range per ring (rings stored OPEN:
                           no closing duplicate, like kernel/geom.py)
@@ -140,16 +141,9 @@ def pack_wkb(vals) -> PackedBatch:
         kinds.append(code)
         rings_per.append(nr)
 
-    n = len(kinds)
-    kind = np.asarray(kinds, dtype=np.int8)
-    geom_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(rings_per, out=geom_off[1:])
-    ring_off = np.zeros(len(ring_lens) + 1, dtype=np.int64)
-    np.cumsum(ring_lens, out=ring_off[1:])
     coords = (np.concatenate(chunks) if chunks
               else np.empty((0, 2), dtype=np.float64))
-    return PackedBatch(n, kind, geom_off, ring_off,
-                       np.asarray(outer, dtype=bool), coords, fallback)
+    return assemble(kinds, rings_per, ring_lens, coords, outer, fallback)
 
 
 def _pack_uniform_poly1(vals: list):
@@ -441,12 +435,24 @@ def _assemble(n, present, code, rings_per_row, ring_lens, outer, coords):
     kind[present] = code
     rp = np.zeros(n, dtype=np.int64)
     rp[present] = rings_per_row
-    geom_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(rp, out=geom_off[1:])
-    ring_off = np.zeros(len(ring_lens) + 1, dtype=np.int64)
-    np.cumsum(ring_lens, out=ring_off[1:])
-    return PackedBatch(n, kind, geom_off, ring_off,
-                       np.asarray(outer, dtype=bool), coords, {})
+    return assemble(kind, rp, ring_lens, coords, outer)
+
+
+def assemble(kind, rings_per_geom, ring_len, coords, outer=None,
+             fallback=None) -> PackedBatch:
+    """A PackedBatch from per-row kinds and ring counts plus per-ring
+    lengths over row-major `coords` (outer defaults to all True: no
+    holes)."""
+    geom_off = np.zeros(len(kind) + 1, dtype=np.int64)
+    np.cumsum(rings_per_geom, out=geom_off[1:])
+    ring_off = np.zeros(len(ring_len) + 1, dtype=np.int64)
+    np.cumsum(ring_len, out=ring_off[1:])
+    if outer is None:
+        outer = np.ones(len(ring_len), dtype=bool)
+    return PackedBatch(len(kind), np.asarray(kind, dtype=np.int8), geom_off,
+                       ring_off, np.asarray(outer, dtype=bool),
+                       np.asarray(coords, dtype=np.float64).reshape(-1, 2),
+                       fallback or {})
 
 
 def _rd_ring(b: bytes, off: int, u32, closed: bool):
@@ -540,71 +546,6 @@ def _pack_one(b: bytes, code: int, u32, ring_lens, outer, chunks) -> int:
             first = False
             nr += 1
     return nr
-
-
-def pack_geoms(tgeoms) -> PackedBatch:
-    """Pack parsed tgeoms (kernel/geomtypes tuples, or None) — the
-    ST_GeomFromWKT_B edge, where the text has just been parsed anyway.
-    2D simple types pack directly; Z / GC become fallback rows carrying
-    their own to_wkb bytes."""
-    kinds = []
-    ring_lens: list[int] = []
-    outer: list[bool] = []
-    rings_per: list[int] = []
-    chunks: list[np.ndarray] = []
-    fallback: dict[int, bytes] = {}
-
-    for i, tg in enumerate(tgeoms):
-        if tg is None:
-            kinds.append(0)
-            rings_per.append(0)
-            continue
-        kind, data = tg
-        code = GT._WKB_CODE.get(kind)
-        if code is None or code == 7:
-            kinds.append(-1)
-            rings_per.append(0)
-            fallback[i] = GT.to_wkb(tg)
-            continue
-        nr = 0
-        if code in _PUNTAL:
-            if data:
-                chunks.append(np.asarray(data, dtype=np.float64))
-                ring_lens.append(len(data))
-                outer.append(True)
-                nr = 1
-        elif code in _LINEAL:
-            for path in data:
-                if not path:
-                    continue
-                chunks.append(np.asarray(path, dtype=np.float64))
-                ring_lens.append(len(path))
-                outer.append(True)
-                nr += 1
-        else:
-            for poly in data:
-                first = True
-                for ring in poly:
-                    if not ring:
-                        continue
-                    chunks.append(np.asarray(ring, dtype=np.float64))
-                    ring_lens.append(len(ring))
-                    outer.append(first)
-                    first = False
-                    nr += 1
-        kinds.append(code)
-        rings_per.append(nr)
-
-    n = len(kinds)
-    geom_off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(rings_per, out=geom_off[1:])
-    ring_off = np.zeros(len(ring_lens) + 1, dtype=np.int64)
-    np.cumsum(ring_lens, out=ring_off[1:])
-    coords = (np.concatenate(chunks) if chunks
-              else np.empty((0, 2), dtype=np.float64))
-    return PackedBatch(n, np.asarray(kinds, dtype=np.int8), geom_off,
-                       ring_off, np.asarray(outer, dtype=bool), coords,
-                       fallback)
 
 
 # ---------------------------------------------------------------- unpack
@@ -877,25 +818,35 @@ def unpack_wkt(p: PackedBatch) -> list:
 
 # ----------------------------------------------------- vectorized measures
 
-def _per_ring_reduce(p: PackedBatch, per_coord: np.ndarray) -> np.ndarray:
-    """Sequential (left-to-right, Python-order-identical) per-ring sums."""
-    nring = len(p.ring_off) - 1
-    if nring == 0:
-        return np.zeros(0, dtype=np.float64)
-    sums = np.zeros(nring, dtype=np.float64)
-    nonempty = p.ring_off[:-1] < p.ring_off[1:]
-    if per_coord.size:
-        red = np.add.reduceat(per_coord, p.ring_off[:-1][nonempty])
-        sums[nonempty] = red
-    return sums
-
-
-def _per_geom_reduce(p: PackedBatch, per_ring: np.ndarray) -> np.ndarray:
-    out = np.zeros(p.n, dtype=np.float64)
-    nonempty = p.geom_off[:-1] < p.geom_off[1:]
-    if per_ring.size and nonempty.any():
-        out[nonempty] = np.add.reduceat(per_ring,
-                                        p.geom_off[:-1][nonempty])
+def _seq_sums(vals: np.ndarray, off: np.ndarray) -> np.ndarray:
+    """Per-segment sums of vals[off[i]:off[i+1]] in the scalar kernels'
+    order: `acc = 0.0; acc += v` left to right, bit for bit.
+    np.add.reduceat is not that (it adds pairwise, with 8 partial
+    accumulators from 9 elements on). So this folds by column: step j
+    adds every segment's j-th value. Equal segment lengths reshape into
+    rows and add strided columns; ragged ones sort the segments longest
+    first, so step j touches only those still longer than j."""
+    lens = off[1:] - off[:-1]
+    out = np.zeros(len(lens), dtype=np.float64)
+    if not len(lens) or not vals.size:
+        return out
+    top = int(lens.max())
+    if top == 0:
+        return out
+    if (lens == top).all():
+        rows = vals[off[0]:off[-1]].reshape(len(lens), top)
+        acc = rows[:, 0] + 0.0          # the fold's 0.0 + v0 (-0.0 -> 0.0)
+        for j in range(1, top):
+            acc += rows[:, j]
+        return acc
+    order = np.argsort(-lens, kind="stable")
+    start, ls = off[:-1][order], lens[order]
+    live = np.searchsorted(-ls, -np.arange(top), side="left")
+    acc = np.zeros(len(lens), dtype=np.float64)
+    for j in range(top):
+        k = live[j]
+        acc[:k] += vals[start[:k] + j]
+    out[order] = acc
     return out
 
 
@@ -921,10 +872,10 @@ def area_np(p: PackedBatch) -> np.ndarray:
         term = (x - x0) * (y[nxt] - y0) - (x[nxt] - x0) * (y - y0)
     else:
         term = np.zeros(0, dtype=np.float64)
-    ring_area = _per_ring_reduce(p, term) / 2.0
+    ring_area = _seq_sums(term, p.ring_off) / 2.0
     contrib = np.abs(ring_area)
     np.negative(contrib, where=~p.outer, out=contrib)
-    out = _per_geom_reduce(p, contrib)
+    out = _seq_sums(contrib, p.geom_off)
     # only areal kinds have area; fallback rows handled by caller
     out[~np.isin(p.kind, _AREAL)] = 0.0
     return out
@@ -940,14 +891,14 @@ def ring_signed_area_np(p: PackedBatch) -> np.ndarray:
         term = (x - x0) * (y[nxt] - y0) - (x[nxt] - x0) * (y - y0)
     else:
         term = np.zeros(0, dtype=np.float64)
-    return _per_ring_reduce(p, term) / 2.0
+    return _seq_sums(term, p.ring_off) / 2.0
 
 
 def npoints_np(p: PackedBatch) -> np.ndarray:
     """Per-geometry vertex count, matching GT.npoints: areal rings count
     the closing duplicate (+1 per ring); puntal/lineal count as stored."""
     rl = p.ring_len().astype(np.float64)
-    per_geom = _per_geom_reduce(p, rl).astype(np.int64)
+    per_geom = _seq_sums(rl, p.geom_off).astype(np.int64)
     nrings = p.rings_per_geom()
     areal = np.isin(p.kind, _AREAL)
     per_geom[areal] += nrings[areal]
@@ -972,8 +923,8 @@ def length_np(p: PackedBatch) -> np.ndarray:
         seg = seg * seg_mask
     else:
         seg = np.zeros(0, dtype=np.float64)
-    per_ring = _per_ring_reduce(p, seg)
-    out = _per_geom_reduce(p, per_ring)
+    per_ring = _seq_sums(seg, p.ring_off)
+    out = _seq_sums(per_ring, p.geom_off)
     out[np.isin(p.kind, _PUNTAL)] = 0.0
     out[p.kind <= 0] = 0.0
     return out
@@ -1092,9 +1043,10 @@ def lineal_centroid_np(p: PackedBatch):
     ln[wrap] = 0.0
     mx = (x + x[nxt]) * 0.5 * ln
     my = (y + y[nxt]) * 0.5 * ln
-    g_tot = _per_geom_reduce(p, _per_ring_reduce(p, ln))
-    g_mx = _per_geom_reduce(p, _per_ring_reduce(p, mx))
-    g_my = _per_geom_reduce(p, _per_ring_reduce(p, my))
+    # GT.centroid folds every segment of the geometry in one running
+    # sum (no per-part subtotal)
+    co = p.geom_coord_off()
+    g_tot, g_mx, g_my = (_seq_sums(v, co) for v in (ln, mx, my))
     good = elig & (g_tot > 0)
     cx[good] = g_mx[good] / g_tot[good]
     cy[good] = g_my[good] / g_tot[good]
@@ -1102,10 +1054,12 @@ def lineal_centroid_np(p: PackedBatch):
 
 
 def centroid_np(p: PackedBatch):
-    """Vectorized area-weighted centroid for SINGLE-RING areal rows (the
-    same cross accumulation as functions/spatial._centroid_areal_val, in
-    the same order). Returns (eligible mask, cx, cy) — multi-ring /
-    non-areal / empty rows are not eligible and take the scalar path."""
+    """Vectorized area-weighted centroid for SINGLE-RING areal rows whose
+    ring normalize() leaves as it is (CCW, consecutive vertices
+    distinct): the same cross accumulation as
+    functions/spatial._centroid_areal_val, in the same order, so equal
+    bit for bit. Returns (eligible mask, cx, cy) — every other row is not
+    eligible and takes the scalar path."""
     rpg = p.rings_per_geom()
     elig = np.isin(p.kind, _AREAL) & (rpg == 1)
     cx_out = np.full(p.n, np.nan)
@@ -1114,10 +1068,14 @@ def centroid_np(p: PackedBatch):
         return elig, cx_out, cy_out
     x, y = p.coords[:, 0], p.coords[:, 1]
     nxt = _next_in_ring(p)
+    dup = (x == x[nxt]) & (y == y[nxt])
+    kept = (ring_signed_area_np(p) > 0) & (_seq_sums(dup * 1.0,
+                                                     p.ring_off) == 0)
+    elig[elig] = kept[p.geom_off[:-1][elig]]
     cross = x * y[nxt] - x[nxt] * y
-    ring_a2 = _per_ring_reduce(p, cross)
-    ring_cx = _per_ring_reduce(p, (x + x[nxt]) * cross)
-    ring_cy = _per_ring_reduce(p, (y + y[nxt]) * cross)
+    ring_a2 = _seq_sums(cross, p.ring_off)
+    ring_cx = _seq_sums((x + x[nxt]) * cross, p.ring_off)
+    ring_cy = _seq_sums((y + y[nxt]) * cross, p.ring_off)
     ring_of = p.geom_off[:-1]
     r = ring_of[elig]
     sa = ring_a2[r] / 2.0

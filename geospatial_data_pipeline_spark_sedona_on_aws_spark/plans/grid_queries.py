@@ -42,14 +42,18 @@ def st_grid_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ST_Square and ST_Hexagon (vertex readbacks through the WKT round
     trip — repr round-trips doubles exactly), exercised per land_use
     row with per-row zoom/size/address."""
+    from ..functions import chainrw
+
     lu = _lu(spark, sf_dir)
-    return lu.selectExpr(
+    cells = lu.selectExpr(
         "property_id",
         "2 + property_id % 10 AS z",
         "x1 % 4 AS tx", "y1 % 4 AS ty",
         "CAST(1 + property_id % 3 AS DOUBLE) AS s",
         "x1 - 50 AS gi", "y1 - 50 AS gj",
-    ).selectExpr(
+    )
+    return chainrw.select_st(
+        cells,
         "property_id",
         "ST_XMin(ST_TileEnvelope(z, tx, ty)) AS tile_xmin",
         "ST_XMax(ST_TileEnvelope(z, tx, ty)) AS tile_xmax",

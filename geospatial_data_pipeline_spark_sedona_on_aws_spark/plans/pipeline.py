@@ -220,10 +220,10 @@ def st_buffer_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     (4 edges ×2 endpoints + 4 arcs ×(q-1) interior points = 36) pins the
     join geometry, not just the measure.
 
-    r8: the chain runs on the BINARY carrier (functions/geomb.py) — WKB
-    BinaryType between the registered `_B` stages, parsed once at the
-    text edge and never re-serialized to text; the buffer itself is the
-    whole-batch vectorized convex walk (kernel/packed.buffer_round_np).
+    The chain is a carrier chain (functions/geomb.py): parsed once at
+    the text edge, one packed batch from the buffer to both measures,
+    never re-serialized; the buffer itself is the whole-batch vectorized
+    convex walk (kernel/packed.buffer_round_np).
     Semantics are pinned equal to the text-surface twin by
     tests/test_binary_carrier.py (same scalar kernel on fallback rows,
     coordinate-level equality on the fast path)."""
@@ -254,6 +254,7 @@ def st_name_parity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     σ = L/(1−f), s = b·σ = a·L); the self-overlapping two-rect
     multipolygon unions to area 6 by inclusion–exclusion; the translated
     cross subdivides into a translation-invariant piece count."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
     from ..kernel import transform as _T
 
@@ -277,7 +278,8 @@ def st_name_parity_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring = ("concat_ws('', 'LINESTRING (', x1, ' ', y1, ', ', x2, ' ',"
             " y1, ', ', x2, ' ', y2, ', ', x1, ' ', y2, ', ', x1, ' ',"
             " y1, ')')")
-    return deg.selectExpr(
+    return chainrw.select_st(
+        deg,
         "property_id",
         "ST_NRings(ST_MakeEnvelope(x1, y1, x2, y2)) AS nrings",
         "CAST(size(ST_DumpPoints(ST_MakeEnvelope(x1, y1, x2, y2))) AS BIGINT) AS dump_np",
@@ -381,30 +383,32 @@ ST_NAME_PARITY_OPS_ORACLE = ST_NAME_PARITY_OPS_ORACLE_TEMPLATE.format(
 
 
 def st_binary_carrier_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The r8 WKB binary carrier end-to-end across its widened surface
-    (functions/geomb.py): one text parse at the edge, then centroid →
-    X/Y, buffer → envelope → area, all chained on BinaryType with zero
-    intermediate WKT. Closed forms on the parcel rects: centroid =
-    midpoints; the round buffer's envelope is the rect grown by d on
-    every side, area (w+2d)(h+2d); the buffered solid is symmetric, so
-    its centroid equals the rect center too (pins the arc walk's
-    symmetry, not just its area)."""
+    """The binary carrier end-to-end across its widened surface
+    (functions/geomb.py), spelled with the plain Sedona names: the
+    projection fuser decodes the parcel text once, then centroid → X/Y
+    and buffer → envelope → area / centroid → X run as packed bodies
+    with zero intermediate WKT or WKB. Closed forms on the parcel rects:
+    centroid = midpoints; the round buffer's envelope is the rect grown
+    by d on every side, area (w+2d)(h+2d); the buffered solid is
+    symmetric, so its centroid equals the rect center too (pins the arc
+    walk's symmetry, not just its area)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
-    return lu.selectExpr(
+    buf = ("ST_BufferRound(land_geometry,"
+           " CAST((1 + property_id % 5) / 4.0 AS DOUBLE), 8)")
+    return chainrw.select_st(
+        lu,
         "property_id",
-        "ST_GeomFromWKT_B(land_geometry) AS __g",
-        "CAST((1 + property_id % 5) / 4.0 AS DOUBLE) AS d",
-    ).selectExpr(
-        "property_id",
-        "CAST(round(ST_X_B(ST_Centroid_B(__g)) * 100) AS BIGINT) AS cx_q",
-        "CAST(round(ST_Y_B(ST_Centroid_B(__g)) * 100) AS BIGINT) AS cy_q",
-        "CAST(round(ST_Area_B(ST_Envelope_B(ST_BufferRound_B(__g, d, 8)))"
-        " * 100) AS BIGINT) AS benv_area_q",
-        "CAST(round(ST_X_B(ST_Centroid_B(ST_BufferRound_B(__g, d, 8)))"
-        " * 100) AS BIGINT) AS bcx_q",
+        "CAST(round(ST_X(ST_Centroid(land_geometry)) * 100) AS BIGINT)"
+        " AS cx_q",
+        "CAST(round(ST_Y(ST_Centroid(land_geometry)) * 100) AS BIGINT)"
+        " AS cy_q",
+        f"CAST(round(ST_Area(ST_Envelope({buf})) * 100) AS BIGINT)"
+        " AS benv_area_q",
+        f"CAST(round(ST_X(ST_Centroid({buf})) * 100) AS BIGINT) AS bcx_q",
     )
 
 
@@ -451,6 +455,7 @@ def st_buffer_line_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     Radii are exact binary fractions ≤ the shapes' feature sizes, so the
     direct offset walk (never the union fallback) produces the geometry
     and both engines agree to ~1e-9 — quantized at 1e-2."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -468,23 +473,21 @@ def st_buffer_line_point(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat('LINESTRING (', x1, ' ', y1, ', ', x2, ' ', y1, ', ',"
         " x2, ' ', y2, ', ', x1, ' ', y2, ', ', x1, ' ', y1, ')')"
         " AS __ring_wkt",
-    ).selectExpr(
-        "property_id",
-        "ST_BufferRound(__seg_wkt, d, 8) AS __seg",
-        "ST_BufferRound(__pt_wkt, d, 8) AS __pt",
-        "ST_BufferRound(__ell_wkt, dl, 8) AS __ell",
-        "ST_BufferRound(__ring_wkt, da, 8) AS __ring",
     )
-    return out.selectExpr(
+    seg, pt, ell, ring = (f"ST_BufferRound(__{k}_wkt, {r}, 8)" for k, r in
+                          (("seg", "d"), ("pt", "d"), ("ell", "dl"),
+                           ("ring", "da")))
+    return chainrw.select_st(
+        out,
         "property_id",
-        "CAST(round(ST_Area(__seg) * 100) AS BIGINT) AS seg_area_q",
-        "ST_NPoints(__seg) AS seg_np",
-        "CAST(round(ST_Area(__pt) * 100) AS BIGINT) AS pt_area_q",
-        "ST_NPoints(__pt) AS pt_np",
-        "CAST(round(ST_Area(__ell) * 100) AS BIGINT) AS ell_area_q",
-        "ST_NPoints(__ell) AS ell_np",
-        "CAST(round(ST_Area(__ring) * 100) AS BIGINT) AS ring_area_q",
-        "ST_NPoints(__ring) AS ring_np",
+        f"CAST(round(ST_Area({seg}) * 100) AS BIGINT) AS seg_area_q",
+        f"ST_NPoints({seg}) AS seg_np",
+        f"CAST(round(ST_Area({pt}) * 100) AS BIGINT) AS pt_area_q",
+        f"ST_NPoints({pt}) AS pt_np",
+        f"CAST(round(ST_Area({ell}) * 100) AS BIGINT) AS ell_area_q",
+        f"ST_NPoints({ell}) AS ell_np",
+        f"CAST(round(ST_Area({ring}) * 100) AS BIGINT) AS ring_area_q",
+        f"ST_NPoints({ring}) AS ring_np",
     )
 
 ST_BUFFER_LINE_POINT_ORACLE = f"""
@@ -843,6 +846,7 @@ def st_triangulate_ops(spark: SparkSession, sf_dir: str,
     st_polygonize_ops precedent): each row pays ~4 full triangulation /
     Voronoi builds (77-118 us each, measured), and the parity proof
     does not get stronger by repeating the closed forms 600k times."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -857,7 +861,8 @@ def st_triangulate_ops(spark: SparkSession, sf_dir: str,
                " (x1 + x2) / 2.0, ' ', y1, ')')")
     line3 = ("concat('MULTIPOINT (', x1, ' ', y1, ', ', x1 + 1, ' ',"
              " y1 + 1, ', ', x1 + 2, ' ', y1 + 2, ')')")
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         f"ST_NumGeometries(ST_DelaunayTriangles({mp})) AS dt_n",
         f"CAST(round(ST_Area(ST_DelaunayTriangles({mp})) * 100)"
@@ -907,6 +912,7 @@ def st_concave_hull(spark: SparkSession, sf_dir: str,
     the registry — measured >60 s at sf0.1 unsampled), and the parity
     proof does not get stronger by repeating the same closed-form check
     600k times."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -933,7 +939,8 @@ def st_concave_hull(spark: SparkSession, sf_dir: str,
             + ", ', ', ".join(f"x1 + {x}, ' ', y1 + {y}"
                               for x, y in sorted(cpts))
             + ", ')')")
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         f"CAST(round(ST_Area(ST_ConcaveHull({corners}, 1.0D)) * 100)"
         " AS BIGINT) AS cvx_area_q",
@@ -1163,27 +1170,29 @@ def st_subdivide_ops(spark: SparkSession, sf_dir: str,
     st_polygonize_ops precedent): each row pays two recursive
     bbox-halving clip cascades; the closed forms do not get stronger
     repeated 600k times."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
     lu = fixtures.land_use_areas(spark, sf_dir)
     if _sampled:
         lu = lu.where("property_id % 10 = 3")
-    return (
+    crosses = (
         lu.selectExpr("property_id", "x1", "y1", "x2", "y2",
                       "land_geometry", *_CROSS_DIMS[0].split(", "))
         .selectExpr("property_id", "x1", "y1", "ca", "cb", "land_geometry",
                     *_CROSS_DIMS[1].split(", "))
         .selectExpr("property_id", "land_geometry",
                     f"{_cross_wkt_sql()} AS cross_wkt")
-        .selectExpr(
-            "property_id",
-            "ST_NumGeometries(ST_Subdivide(land_geometry, 8)) AS rect_n",
-            "CAST(round(ST_Area(ST_Subdivide(cross_wkt, 8)) * 100)"
-            " AS BIGINT) AS cross_area_q",
-            "ST_NumGeometries(ST_Subdivide(cross_wkt, 8)) >= 2"
-            " AS cross_split",
-        )
+    )
+    return chainrw.select_st(
+        crosses,
+        "property_id",
+        "ST_NumGeometries(ST_Subdivide(land_geometry, 8)) AS rect_n",
+        "CAST(round(ST_Area(ST_Subdivide(cross_wkt, 8)) * 100)"
+        " AS BIGINT) AS cross_area_q",
+        "ST_NumGeometries(ST_Subdivide(cross_wkt, 8)) >= 2"
+        " AS cross_split",
     )
 
 ST_SUBDIVIDE_OPS_ORACLE = f"""
@@ -1666,10 +1675,10 @@ def st_point_line_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     round(x * 1e6). The values are sqrt(integer) (irrational unless
     exact), so no value sits near a rounding boundary.
 
-    r9: the expression text below is UNCHANGED (plain Sedona names, the
-    reference's own spelling) but now runs through the chain rewriter
-    (functions/chainrw.py) — nested ST_ compositions execute on the WKB
-    carrier with text edges; binary==text parity is property-pinned."""
+    The expression text below is the reference's own spelling (plain
+    Sedona names); through the projection fuser (functions/chainrw.py)
+    its nested ST_ compositions run as carrier chains over packed
+    batches with text edges; binary==text parity is property-pinned."""
     from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
@@ -1961,10 +1970,10 @@ def st_transform_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     property test), six orders below the quantum. Vertex count is also
     pinned (transform preserves ring structure).
 
-    r8: the double transform chains on the BINARY carrier — one text
-    parse at the edge, both projections as whole-batch numpy over the
-    packed coordinate array, measures straight off the WKB (never back
-    through text; functions/geomb.py)."""
+    The double transform is a carrier chain (functions/geomb.py): one
+    text parse at the edge, both projections as whole-batch numpy over
+    the packed coordinate array, measures straight off it (never back
+    through text or WKB)."""
     from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
@@ -2032,8 +2041,8 @@ def st_transform_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "property_id", "lon1", "lat1",
         "lon1 + 0.01 AS lon2", "lat1 + 0.01 AS lat2",
     )
-    # r8: binary carrier — the degree-rect WKT parses once at the edge,
-    # both projections and the coordinate extraction run off packed WKB
+    # carrier chain: the degree-rect WKT parses once at the edge, both
+    # projections and the coordinate extraction run off one packed batch
     # (ST_Coords_B emits the same closed-ring number order the WKT-text
     # split produced, so the try_element_at positions are unchanged)
     wkt = ("concat_ws('', 'POLYGON ((', lon1, ' ', lat1, ', ', lon2, ' ',"
@@ -2484,6 +2493,7 @@ def st_geomcollection_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: row-local projection over one Arrow-batched UDF stage; no
     joins beyond the broadcast region dim, no shuffles."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -2495,7 +2505,8 @@ def st_geomcollection_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
           " py, ')))')")
     lz = ("concat('LINESTRING Z (', px, ' ', py, ' 1, ', px + dx, ' ',"
           " py, ' 5)')")
-    return j.selectExpr(
+    return chainrw.select_st(
+        j,
         "point_id",
         f"ST_NumGeometries({gc}) AS n_members",
         f"ST_GeometryType({gc}) AS gc_type",
@@ -3029,6 +3040,7 @@ def st_linear_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns l1/(l1+3) — Python keeps the FIRST zero-distance projection
     (strict <), i.e. segment 1's arc; ST_ClosestPoint of a rect to a
     point is the integer-exact coordinate clamp."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -3036,7 +3048,8 @@ def st_linear_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     line = ("concat('LINESTRING (', px, ' ', py, ', ', px + dx, ' ',"
             " py + dy, ', ', px + dx, ' ', py + dy + 3, ')')")
     probe = "concat('POINT (', px + 60, ' ', py + 60, ')')"
-    return j.selectExpr(
+    return chainrw.select_st(
+        j,
         "point_id",
         f"CAST(round(ST_X(ST_LineInterpolatePoint({line}, 0.5)) * 1e6)"
         " AS BIGINT) AS interp_x_q",
@@ -3234,6 +3247,7 @@ def st_geohash_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     accessor composition (ST_PointN ∘ ST_ExteriorRing ∘
     ST_GeomFromGeoHash) and the in-plan ST_Contains asserts the decoded
     cell covers its source point on every row."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
     from ..sources.io import spread_scan
 
@@ -3244,20 +3258,18 @@ def st_geohash_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(o_custkey % 100) * 3 - 150 AS lon",
         "(o_orderkey * 7) % 100 - 50 AS lat",
     ).where("o_orderkey % 5 = 0"))
-    hashed = pts.selectExpr(
-        "point_id", "lon", "lat",
-        "ST_GeoHash(concat('POINT (', lon, ' ', lat, ')'), 4) AS gh4",
-    )
-    sw = "ST_PointN(ST_ExteriorRing(ST_GeomFromGeoHash(gh4)), 1)"
-    ctr = "ST_PointFromGeoHash(gh4)"
-    return hashed.selectExpr(
+    gh4 = "ST_GeoHash(concat('POINT (', lon, ' ', lat, ')'), 4)"
+    sw = f"ST_PointN(ST_ExteriorRing(ST_GeomFromGeoHash({gh4})), 1)"
+    ctr = f"ST_PointFromGeoHash({gh4})"
+    return chainrw.select_st(
+        pts,
         "point_id",
-        "gh4",
+        f"{gh4} AS gh4",
         f"CAST(round(ST_X({sw}) * 128) AS BIGINT) AS west128",
         f"CAST(round(ST_Y({sw}) * 256) AS BIGINT) AS south256",
         f"CAST(round(ST_X({ctr}) * 256) AS BIGINT) AS cx256",
         f"CAST(round(ST_Y({ctr}) * 512) AS BIGINT) AS cy512",
-        "ST_Contains(ST_GeomFromGeoHash(gh4),"
+        f"ST_Contains(ST_GeomFromGeoHash({gh4}),"
         " concat('POINT (', lon, ' ', lat, ')')) AS cell_covers_point",
     )
 

@@ -391,7 +391,8 @@ def st_polygonize_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
               " x1 + 8, ' ', y1 + 8, ', ', x1, ' ', y1 + 8, ', ', x1, ' ', y1, '), "
               "LINESTRING (', x1 + 2, ' ', y1 + 2, ', ', x1 + 4, ' ', y1 + 2, ', ',"
               " x1 + 4, ' ', y1 + 4, ', ', x1 + 2, ' ', y1 + 4, ', ', x1 + 2, ' ', y1 + 2, '))')")
-    return lu.selectExpr(
+    return chainrw.select_st(
+        lu,
         "property_id",
         f"CAST(ST_NumGeometries(ST_Polygonize({grid})) AS BIGINT) AS n_cells",
         f"ST_Area(ST_GeometryN(ST_Polygonize({grid}), 0)) AS cell_area",

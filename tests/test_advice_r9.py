@@ -56,7 +56,7 @@ def test_bufferround_b_per_row_quadsegs():
     qs = [4, 16, 8, 12]
     ds = [1.0, 2.0, 0.5, 1.0]
     b = pd.Series([GT.to_wkb(GT.parse_wkt(w)) for w in wkts], dtype=object)
-    out = GB.st_bufferround_b.func(
+    out = GB.REGISTRY_B["ST_BufferRound_B"].func(
         b, pd.Series(ds), pd.Series(qs, dtype="int64"))
     for i, (w, d, q) in enumerate(zip(wkts, ds, qs)):
         exp = S._buffer_round(w, d, q)
@@ -69,7 +69,7 @@ def test_bufferround_b_per_row_quadsegs():
             assert abs(pe[0] - pg[0]) < 1e-9 and abs(pe[1] - pg[1]) < 1e-9
 
     # constant-q batches still take the vectorized walk and match
-    out2 = GB.st_bufferround_b.func(
+    out2 = GB.REGISTRY_B["ST_BufferRound_B"].func(
         b, pd.Series(ds), pd.Series([8] * 4, dtype="int64"))
     for i, (w, d) in enumerate(zip(wkts, ds)):
         exp = S._buffer_round(w, d, 8)

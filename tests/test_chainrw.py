@@ -1,9 +1,10 @@
-"""Chain rewriter (r8 verdict item 1) + ragged packed codec (item 2).
+"""Carrier chains in the projection fuser + ragged packed codec.
 
-Layer 1: `chainrw.rewrite` string-level unit tests — chains of >= 2
-twin-covered calls move to the `_B` carrier, lone calls and hygiene-only
-chains stay on text, and non-ST_ tokens (strings, identifiers, keywords,
-arithmetic, parenthesised groups) are copied verbatim.
+Layer 1: which fused nodes run their packed body (`_Fusion.packed`) —
+chains of >= 2 calls with packed bodies run packed, lone calls and
+hygiene-only chains stay on their text UDFs, and non-ST_ tokens
+(strings, identifiers, keywords, arithmetic, parenthesised groups) are
+copied verbatim.
 
 Layer 2: `kernel/packed._pack_ragged` / `_emit_ragged` engagement tests —
 single-kind variable-shape batches must take the vectorized lane (not
@@ -11,8 +12,8 @@ silently fall back to the per-row loop) and round-trip byte-identical to
 geomtypes.to_wkb; anomalous batches (mixed kinds, big-endian, Z, trailing
 bytes) must bail to the strict loop and still round-trip.
 
-Layer 3: Spark parity — the SAME query text through `select_st` (rewritten
-and fused) and through plain `selectExpr` (text path) returns identical
+Layer 3: Spark parity — the SAME query text through `select_st` (fused,
+carrier chains packed) and through plain `selectExpr` (text path) returns identical
 rows, on the reference's own chain spelling
 (spark_job/process_geodata.py:120-139) and on every registry query that
 builds its projection with `select_st`.
@@ -32,111 +33,131 @@ from hypothesis import strategies as st
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
+from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import transform as T
 
 from .conftest import SF_SMOKE
 
 
 # ------------------------------------------------------------- layer 1
 
+def _packed(*exprs) -> list:
+    """Python names of the fused nodes that run their packed body, one
+    entry per node, sorted."""
+    fz = CR._Fusion()
+    for e in exprs:
+        fz.emit(CR._Expr(CR._parse(CR.rewrite(e))[0]))
+    names = {k: fn.func.__name__ for (fn, _), k in fz.nodes.items()}
+    return sorted(names[k] for k in fz.packed())
+
+
 def test_rewrite_simple_chain_moves_to_carrier():
-    got = CR.rewrite("ST_Area(ST_GeomFromWKT(wkt)) AS a")
-    assert got == "ST_Area_B(ST_GeomFromWKT_B(wkt)) AS a"
+    assert _packed("ST_Area(ST_GeomFromWKT(wkt)) AS a") == \
+        ["st_area", "st_geomfromwkt"]
 
 
 def test_rewrite_geometry_output_gets_text_edge():
-    got = CR.rewrite("ST_BufferRound(ST_GeomFromWKT(w), 0.5, 8) AS g")
-    # geometry surfacing to the user comes back as canonical WKT
-    assert got == ("ST_AsText_B(ST_BufferRound_B(ST_GeomFromWKT_B(w),"
-                   " 0.5, 8)) AS g")
+    # the buffered geometry surfaces to the user: encoded as WKT there
+    assert _packed("ST_BufferRound(ST_GeomFromWKT(w), 0.5, 8) AS g") == \
+        ["st_buffer_round", "st_geomfromwkt"]
 
 
 def test_rewrite_three_deep_chain_single_parse_edge():
-    got = CR.rewrite(
-        "ST_Area(ST_Transform(ST_GeomFromWKT(w), 'EPSG:4326', 'EPSG:3857'))")
-    assert got == ("ST_Area_B(ST_Transform_B(ST_GeomFromWKT_B(w), "
-                   "'EPSG:4326', 'EPSG:3857'))")
+    assert _packed("ST_Area(ST_Transform(ST_GeomFromWKT(w), 'EPSG:4326',"
+                   " 'EPSG:3857'))") == \
+        ["st_area", "st_geomfromwkt", "st_transform"]
 
 
 def test_rewrite_lone_call_left_on_text_path():
-    # a single un-chained call: rewriting would ADD a WKB hop
+    # a single un-chained call: packing would ADD a decode and an encode
     for expr in ("ST_Area(geom_col)", "ST_GeomFromWKT(wkt) AS g",
                  "ST_AsText(g) AS t"):
-        assert CR.rewrite(expr) == expr
+        assert _packed(expr) == [], expr
 
 
 def test_rewrite_hygiene_only_chain_left_on_text_path():
-    # parse -> serialize round trip with no compute op in between: the
-    # text twins are near-identity on canonical input, cheaper than any
-    # carrier round trip
-    e = "ST_AsText(ST_GeomFromWKT(wkt_pt)) AS pt_rt"
-    assert CR.rewrite(e) == e
+    # parse -> serialize with no compute op in between: the text twins
+    # are near-identity on canonical input, cheaper than any carrier
+    # round trip
+    assert _packed("ST_AsText(ST_GeomFromWKT(wkt_pt)) AS pt_rt") == []
 
 
 def test_rewrite_compute_inside_hygiene_chain_rewrites():
-    got = CR.rewrite("ST_AsText(ST_Centroid(ST_GeomFromWKT(w))) AS c")
-    assert got == "ST_AsText_B(ST_Centroid_B(ST_GeomFromWKT_B(w))) AS c"
+    assert _packed("ST_AsText(ST_Centroid(ST_GeomFromWKT(w))) AS c") == \
+        ["st_astext", "st_centroid", "st_geomfromwkt"]
 
 
 def test_rewrite_binary_predicate_both_edges():
-    got = CR.rewrite(
-        "ST_Intersects(ST_GeomFromWKT(a), ST_GeomFromWKT(b)) AS hit")
-    assert got == ("ST_Intersects_B(ST_GeomFromWKT_B(a), "
-                   "ST_GeomFromWKT_B(b)) AS hit")
+    # two distinct leaves: two ST_GeomFromWKT nodes, one decode each
+    assert _packed("ST_Intersects(ST_GeomFromWKT(a), ST_GeomFromWKT(b))"
+                   " AS hit") == \
+        ["st_geomfromwkt", "st_geomfromwkt", "st_intersects"]
 
 
 def test_rewrite_mixed_edges_one_parsed_one_raw():
-    # only one geometry arg is itself a producer; the other parses once
-    # at the edge
-    got = CR.rewrite("ST_Distance(ST_Centroid(ST_GeomFromWKT(a)), "
-                     "ST_GeomFromWKT(b))")
-    assert got == ("ST_Distance_B(ST_Centroid_B(ST_GeomFromWKT_B(a)), "
-                   "ST_GeomFromWKT_B(b))")
+    # only one geometry arg is itself a producer chain; the other is a
+    # GeomFromWKT node of its own leaf
+    assert _packed("ST_Distance(ST_Centroid(ST_GeomFromWKT(a)), "
+                   "ST_GeomFromWKT(b))") == \
+        ["st_centroid", "st_distance", "st_geomfromwkt", "st_geomfromwkt"]
 
 
 def test_rewrite_preserves_non_st_tokens_verbatim():
     e = ("CASE WHEN upper(name) = 'ST_FAKE(X)' THEN round("
          "ST_Area(ST_GeomFromWKT(w)) * 100, 2) ELSE length('a,b((') END"
          " AS v")
-    got = CR.rewrite(e)
+    fz, out = _fuse(e)
     # the string literals and every non-ST_ token survive untouched
-    assert "'ST_FAKE(X)'" in got
-    assert "'a,b(('" in got
-    assert got.replace(
-        "ST_Area_B(ST_GeomFromWKT_B(w))",
-        "ST_Area(ST_GeomFromWKT(w))") == e
+    assert out == [e.replace("ST_Area(ST_GeomFromWKT(w))", "__fz.f0")]
+    assert _packed(e) == ["st_area", "st_geomfromwkt"]
 
 
 def test_rewrite_unknown_st_name_blocks_that_node_but_not_args():
-    # ST_ConvexHull has no _B twin: it stays text, but the chain INSIDE
-    # its argument still rewrites independently
-    got = CR.rewrite("ST_ConvexHull(ST_GeomFromWKT(w))")
-    assert got == "ST_ConvexHull(ST_GeomFromWKT(w))"
-    got2 = CR.rewrite("ST_NPoints(ST_ConvexHull(ST_GeomFromWKT(w)))")
-    assert got2 == "ST_NPoints(ST_ConvexHull(ST_GeomFromWKT(w)))"
+    # ST_ConvexHull has no packed body: it runs its text UDF, and the
+    # hygiene-only GeomFromWKT inside stays text too
+    assert _packed("ST_ConvexHull(ST_GeomFromWKT(w))") == []
+    assert _packed("ST_NPoints(ST_ConvexHull(ST_GeomFromWKT(w)))") == []
+    # ... while a chain INSIDE its argument still forms
+    assert _packed("ST_NPoints(ST_ConvexHull(ST_Centroid("
+                   "ST_GeomFromWKT(w))))") == ["st_centroid",
+                                               "st_geomfromwkt"]
 
 
 # parenthesised (non-call) groups inside a call's arguments: the group's
 # ')' must not close the enclosing call, and calls inside the group stay
-# visible to the rewrite
+# visible to the fuser
 PAREN_EXPRS = [
     ("ST_Distance(ST_GeomFromWKT((w)), ST_Centroid(ST_GeomFromWKT(v)))"
      " AS d",
-     "ST_Distance_B(ST_GeomFromWKT_B((w)), ST_Centroid_B(ST_GeomFromWKT_B(v)))"
-     " AS d"),
+     "st_centroid st_distance st_geomfromwkt st_geomfromwkt"),
     ("ST_Area(ST_BufferRound(w, (1 + p) / 4.0, 8)) AS a",
-     "ST_Area_B(ST_BufferRound_B(ST_GeomFromWKT_B(w), (1 + p) / 4.0, 8))"
-     " AS a"),
+     "st_area st_buffer_round"),
 ]
 
 
 @pytest.mark.parametrize("expr,want", PAREN_EXPRS)
 def test_rewrite_parenthesised_arguments(expr, want):
-    assert CR.rewrite(expr) == want
+    assert _packed(expr) == want.split()
+    fz, _ = _fuse(expr)
+    assert {"(w)", "w"} & set(fz.leaves)
 
 
 def test_rewrite_case_insensitive_names():
-    got = CR.rewrite("st_area(st_geomfromwkt(wkt)) AS a")
-    assert got == "ST_Area_B(ST_GeomFromWKT_B(wkt)) AS a"
+    assert _packed("st_area(st_geomfromwkt(wkt)) AS a") == \
+        ["st_area", "st_geomfromwkt"]
+
+
+def test_shared_node_joins_the_chain():
+    # ST_GeomFromWKT(w) is one node read by a hygiene output and by a
+    # compute chain: it runs packed once, and rt is its WKT encoding
+    assert _packed("ST_AsText(ST_GeomFromWKT(w)) AS rt",
+                   "ST_Area(ST_GeomFromWKT(w)) AS a") == \
+        ["st_area", "st_astext", "st_geomfromwkt"]
+
+
+def test_b_names_share_the_bodies():
+    assert _packed("ST_Coords_B(ST_Transform_B(ST_GeomFromWKT_B(w),"
+                   " 'EPSG:4326', 'EPSG:32722')) AS c") == \
+        ["st_coords_b", "st_geomfromwkt_b", "st_transform_b"]
 
 
 # ------------------------------------------------------------- layer 2
@@ -296,8 +317,8 @@ def test_select_st_equals_text_path_on_reference_chain(spark):
         " AS d_paren",
         "ST_Area(ST_BufferRound(wkt, (1 + id % 5) / 4.0, 8)) AS buf_paren",
     ]
-    # guard: the rewriter actually fires on these (not a silent no-op)
-    assert any("_B(" in CR.rewrite(e) for e in exprs)
+    # guard: carrier chains actually form on these (not a silent no-op)
+    assert _packed(*exprs)
     got = CR.select_st(df, *exprs).orderBy("id").collect()
     exp = df.selectExpr(*exprs).orderBy("id").collect()
     assert len(got) == len(exp)
@@ -381,6 +402,10 @@ SELECT_ST_QUERIES = [
     "st_edit_line_ops", "st_misc_ops", "st_from_text_ops",
     "st_orientation_ops", "st_clearance_ops", "st_buffer_round",
     "st_transform_roundtrip", "st_transform_utm", "st_point_line_ops",
+    "st_name_parity_ops", "st_binary_carrier_ops", "st_buffer_line_point",
+    "st_triangulate_ops", "st_concave_hull", "st_subdivide_ops",
+    "st_grid_ops", "st_polygonize_ops", "st_geohash_decode",
+    "st_geomcollection_ops", "st_linear_ref",
 ]
 
 
@@ -405,26 +430,10 @@ def test_select_st_query_equals_plain_select(spark, monkeypatch, name):
                 assert gv == ev, (g, e)
 
 
-def _dump_nodes(name: str) -> int:
-    """Fewest ArrowEvalPython nodes among the query's committed plan
-    dumps (plans/r13, plans/r14)."""
-    import glob
-    import os
-    import re
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    dumps = [f for f in glob.glob(os.path.join(root, "plans", "r1*",
-                                               f"{name}_*.txt"))
-             if f.endswith(("_after.txt", "_before.txt"))]
-    assert dumps, name
-    return min(len(set(re.findall(r"ArrowEvalPython \((\d+)\)",
-                                  open(f).read()))) for f in dumps)
-
-
 @pytest.mark.parametrize("name", SELECT_ST_QUERIES)
 def test_select_st_query_plan_shape(spark, name):
-    """No more ArrowEvalPython nodes than the committed dump, and every
-    distinct UDF subtree is evaluated under exactly one result id."""
+    """Exactly one ArrowEvalPython node, and every distinct UDF subtree
+    is evaluated under exactly one result id."""
     import re
     import sys
 
@@ -438,7 +447,7 @@ def test_select_st_query_plan_shape(spark, name):
     plan = QUERIES[name](spark, SF_SMOKE)._jdf.queryExecution() \
         .executedPlan().toString()
     lines = [ln for ln in plan.splitlines() if "ArrowEvalPython [" in ln]
-    assert 1 <= len(lines) <= _dump_nodes(name), plan
+    assert len(lines) == 1, plan
     ids: dict = {}
     for ln in lines:
         for out in PA._udf_outputs(ln):
@@ -536,10 +545,10 @@ def test_box_predicate_boundary_parity_binary_equals_text():
     a = pd.Series([rect] * len(pts) + ["POINT (1 2)", "POINT (1 2)"],
                   dtype=object)
     b = pd.Series(pts + ["POINT (1 2)", "POINT (3 4)"], dtype=object)
-    wa = GB.st_geomfromwkt_b.func(a)
-    wb = GB.st_geomfromwkt_b.func(b)
+    wa = GB.REGISTRY_B["ST_GeomFromWKT_B"].func(a)
+    wb = GB.REGISTRY_B["ST_GeomFromWKT_B"].func(b)
     for name in ("contains", "within", "intersects", "disjoint", "equals"):
-        bfn = getattr(GB, f"st_{name}_b").func
+        bfn = GB.REGISTRY_B[f"ST_{name.title()}_B"].func
         got = bfn(wa, wb).tolist()
         tfn = {
             "contains": S._contains,
@@ -674,3 +683,120 @@ def test_fused_segmentize_npoints_parity(spark):
         assert r.fused == r.composed, r
     # spot-check the closed form on the unit-step rect: 2(w+h)+1
     assert both[0].fused == 2 * (9 + 4) + 1
+
+
+# ------------------------------------------- packed batches in the body
+
+def _fused_body(*exprs):
+    """(fused body function, its leaf texts) for a projection."""
+    fz = CR._Fusion()
+    for e in exprs:
+        fz.emit(CR._Expr(CR._parse(CR.rewrite(e))[0]))
+    return fz.udf().func, list(fz.leaves)
+
+
+def _count_codec(monkeypatch) -> dict:
+    calls = {"pack_wkb": 0, "unpack_wkb": 0}
+    for name in calls:
+        real = getattr(PK, name)
+
+        def counted(*a, _real=real, _name=name):
+            calls[_name] += 1
+            return _real(*a)
+
+        monkeypatch.setattr(PK, name, counted)
+    return calls
+
+
+def test_centroid_text_full_precision_lone_and_carrier():
+    """A lone ST_Centroid (text UDF, rect lane or scalar) and the same
+    centroid through a carrier chain print the same shortest-repr text:
+    the doubles are equal bit for bit, and neither side cuts them to 10
+    significant digits."""
+    import pandas as pd
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
+
+    g = pd.Series([
+        "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0),"
+        " (2 2, 2 4, 4 4, 4 2, 2 2))",
+        "POLYGON ((0.1 0.2, 3.7 0.3, 1.9 2.9, 0.1 0.2))",
+        "POLYGON ((0.1 0.2, 3.7 0.2, 3.7 2.9, 0.1 2.9, 0.1 0.2))",
+    ], dtype=object)
+    lone = S.st_centroid.func(g).tolist()
+    body, leaves = _fused_body(
+        "ST_AsText(ST_Centroid(ST_GeomFromWKT(g))) AS c")
+    assert leaves == ["g"]
+    carrier = body(g)["f0"].tolist()
+    assert lone[0] == "POINT (5.083333333333333 5.083333333333333)"
+    assert lone == carrier
+
+
+@pytest.mark.parametrize("name", ["st_buffer_round", "st_transform_utm"])
+def test_fused_body_decodes_each_leaf_once(spark, monkeypatch, name):
+    """One batch through the registry query's fused body: one pack_wkb
+    per distinct geometry leaf, and no WKB encode (no `_B` geometry
+    output surfaces in either projection)."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
+
+    seen: dict = {}
+    real_select, real_udf = CR.select_st, CR._Fusion.udf
+
+    def select_st(df, *exprs):
+        seen["df"] = df
+        return real_select(df, *exprs)
+
+    def udf(self):
+        seen["fz"] = self
+        return real_udf(self)
+
+    monkeypatch.setattr(CR, "select_st", select_st)
+    monkeypatch.setattr(CR._Fusion, "udf", udf)
+    QUERIES[name](spark, SF_SMOKE)
+    fz = seen["fz"]
+    pdf = seen["df"].selectExpr(*fz.leaves).limit(2000).toPandas()
+    cols = [pdf.iloc[:, k] for k in range(len(fz.leaves))]
+    body = real_udf(fz).func
+    calls = _count_codec(monkeypatch)
+    out = body(*cols)
+    assert len(out) == len(pdf) > 0
+    assert calls == {"pack_wkb": 1, "unpack_wkb": 0}, calls
+
+
+def test_fused_body_encodes_where_a_b_geometry_surfaces(monkeypatch):
+    import pandas as pd
+
+    t = "ST_Transform_B(ST_GeomFromWKT_B(w), 'EPSG:3857', 'EPSG:5880')"
+    body, leaves = _fused_body(f"ST_Area_B({t}) AS a", f"{t} AS t",
+                               f"ST_AsText_B({t}) AS txt")
+    assert leaves == ["w", "'EPSG:3857'", "'EPSG:5880'"]
+    w = pd.Series(["POLYGON ((0 0, 40 0, 40 30, 0 30, 0 0))", None,
+                   "POINT (5 7)"], dtype=object)
+    cols = [w] + [pd.Series([v] * 3) for v in ("EPSG:3857", "EPSG:5880")]
+    calls = _count_codec(monkeypatch)
+    out = body(*cols)
+    assert calls == {"pack_wkb": 1, "unpack_wkb": 1}, calls
+    exp = [None if v is None else GT.to_wkb(GT.map_coords(
+        GT.parse_wkt(v), lambda x, y: T.transform_point(
+            x, y, "EPSG:3857", "EPSG:5880"))) for v in w]
+    assert out["f1"].tolist() == exp
+    assert out["f2"].tolist() == [None if e is None else
+                                  GT.to_wkt(GT.parse_wkb(e)) for e in exp]
+
+
+def test_carrier_buffer_null_arguments_are_null():
+    """A NULL radius or NULL quadsegs gives NULL on the carrier, as on
+    the text ST_BufferRound."""
+    import pandas as pd
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
+
+    g = pd.Series(["POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"] * 3, dtype=object)
+    d = pd.Series([1.0, None, 1.0])
+    q = pd.Series([8.0, 8.0, None])
+    body, leaves = _fused_body(
+        "ST_Area(ST_BufferRound(ST_GeomFromWKT(g), d, q)) AS a")
+    assert leaves == ["g", "d", "q"]
+    got = body(g, d, q)["f0"].tolist()
+    exp = S.st_area.func(S.st_buffer_round.func(g, d, q)).tolist()
+    assert got[0] == exp[0] and all(v != v for v in got[1:] + exp[1:])
