@@ -13,9 +13,12 @@ docstring), and inside that UDF the nodes that form a carrier chain
 geometry travels from node to node as a kernel/packed.PackedBatch, is
 decoded once per distinct geometry input and encoded only where it
 surfaces. The r7/r8 profiles measured the WKT round trips at ~63% of
-chained scalar cost. Binary==text parity for every body is
-property-pinned by tests/test_binary_carrier.py; which nodes run packed
-is pinned by tests/test_chainrw.py.
+chained scalar cost. Decoding is a plain parse and the areal hygiene is
+ST_GeomFromWKT's own body, so a fused chain, its lone calls and the `_B`
+spelling give a raw leaf the same answer (tests/test_path_parity.py).
+Binary==text parity for every body is property-pinned by
+tests/test_binary_carrier.py; which nodes run packed is pinned by
+tests/test_chainrw.py.
 
 The text rewrites here are `rewrite` (the _FUSE scalar-consumer
 fusions, applied before the fuser) and `salt_union_aggr_sql` (the
@@ -308,8 +311,11 @@ class _Fusion:
         every member of a carrier chain, i.e. of >= 2 nodes with a body
         linked through geometry arguments that a geometry-producing body
         fills, at least one of them not hygiene (ST_GeomFromWKT /
-        ST_AsText). A lone call, or a parse straight into a serialize, is
-        cheaper on its text UDF than a decode and an encode. A name
+        ST_AsText). A lone call stays on its text UDF: for a lane-backed
+        function (the measures, ST_X / ST_Y, the interval predicates)
+        or a parse straight into a serialize that is cheaper than a
+        decode and an encode, and the text UDFs of geomb.REGISTRY_TEXT
+        are that one-node decode, body and encode already. A name
         without a body ends the chain at its node; chains inside its
         arguments still form."""
         comp = list(range(len(self.nodes)))

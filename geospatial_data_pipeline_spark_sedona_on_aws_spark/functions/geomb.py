@@ -10,7 +10,8 @@ projection, the convex round buffer, centroid, envelope and the
 rect/point predicates run as whole-batch numpy math.
 
 `CARRIER` maps each text name and each `_B` name that has such a body to
-(body, geometry-argument positions, geometry result?). It has two users:
+(body, geometry-argument positions, geometry result?). It has three
+users:
 
 - functions/chainrw's projection fuser runs a carrier chain as these
   bodies inside one fused Python call. `Codec` decodes each distinct
@@ -29,14 +30,21 @@ rect/point predicates run as whole-batch numpy math.
     ST_Coords_B(bin)                 -> array<double>  (flattened x,y …,
                                         areal rings closed — the binary
                                         twin of the WKT-numbers split)
+- `REGISTRY_TEXT` registers five text names (ST_Transform, ST_Envelope,
+  ST_BufferRound, ST_Contains, ST_Within) as the same adapter with WKT
+  out: called alone, their body beats a per-row text loop.
 
-A text geometry input enters through the text edge below (one batch
-parse, the same hygiene as the text ST_GeomFromWKT) and then one
-`pack_wkb`; a binary input through `pack_wkb` alone. Rows the vectorized
+Decoding is a plain parse. A text geometry input enters through the text
+edge below (one batch parse) and then one `pack_wkb`; a binary input
+through `pack_wkb` alone. The areal hygiene (kernel/geom.normalize) is
+the body of ST_GeomFromWKT, where the text surface applies it, so every
+path gives a raw leaf the same answer. Rows the vectorized
 kernels do not cover (Z, GEOMETRYCOLLECTION, non-convex buffers, …) go
-through the SAME scalar kernel as the text twin, and a geometry such a
-kernel produces stays in the batch as its WKB bytes (kind -1).
-tests/test_binary_carrier.py pins binary == text per family.
+through the SAME scalar kernel as the text surface, and a geometry such
+a kernel produces stays in the batch as its WKB bytes (kind -1).
+tests/test_binary_carrier.py pins binary == text per family, and
+tests/test_path_parity.py pins every path against the scalar kernels on
+raw input.
 
 This is the PySpark-native equivalent of Sedona's binary GeometryUDT
 interchange (the reference's five-call ST_ chain at
@@ -108,16 +116,10 @@ def _rect_wkb_batch(a, b, c, d) -> list:
     return [big[i * w:(i + 1) * w] for i in range(n)]
 
 
-def _geom_from_wkt_b_scalar(s):
-    """Text edge for one non-rect row: same hygiene as the text
-    st_geomfromwkt (parse + normalize areal, typed parse otherwise),
-    emitting WKB instead of canonical WKT."""
-    if s is None:
-        return None
-    if S._is_areal(s):
-        g = G.normalize(G.parse_wkt(s))
-        return GT.to_wkb(("POLYGON" if len(g) <= 1 else "MULTIPOLYGON", g))
-    return GT.to_wkb(GT.parse_wkt(s))
+def _wkt_to_wkb(s):
+    """Text edge for one row the batch groups do not claim: a plain
+    parse, WKB out."""
+    return None if s is None else GT.to_wkb(GT.parse_wkt(s))
 
 
 def _typed_lane_wkb(npts: np.ndarray, xy: np.ndarray, code: int) -> list:
@@ -153,10 +155,9 @@ def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
     LINESTRING / MULTIPOINT text and CCW rects (closing vertex optional)
     parse as whole batches. Numbers go through arrow's cast, the same
     correctly rounded double float() gives, so every fast row is
-    byte-identical to the scalar parser; the CCW check ((c-a)(d-b) > 0)
-    makes normalize() provably the identity on rects. Anything else (Z,
-    EMPTY, parenthesized MULTIPOINT members, stray whitespace, CW or
-    non-finite rects) takes the scalar parser."""
+    byte-identical to the scalar parser. Anything else (Z, EMPTY,
+    parenthesized MULTIPOINT members, stray whitespace, CW or non-finite
+    rects) takes the scalar parser."""
     f = LN._Fill(s)
     m, g = f.b.extract(LN.FPOINT2)
     if m.any():
@@ -172,7 +173,7 @@ def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
         a, b, c, d = (LN._num(g, i) for i in (0, 1, 2, 5))
         ccw &= np.isfinite([a, b, c, d]).all(axis=0)
         f.put(ccw, _rect_wkb_batch(a[ccw], b[ccw], c[ccw], d[ccw]))
-    return f.finish(_geom_from_wkt_b_scalar)
+    return f.finish(_wkt_to_wkb)
 
 
 _PT_HDR = b"\x01" + struct.pack("<I", 1)
@@ -196,11 +197,12 @@ def _tolist(b: pd.Series) -> list:
 
 
 class Codec:
-    """One batch's geometry conversions. `decode` turns a text or binary
-    column into a PackedBatch; `encode` turns a packed result back into
-    the column type its function returns (WKT for StringType, WKB
-    otherwise). A packed value that surfaces unchanged as binary reuses
-    the WKB it was decoded from."""
+    """One batch's geometry conversions. `decode` parses a text or binary
+    column into a PackedBatch, with no hygiene (that is ST_GeomFromWKT's
+    body); `encode` turns a packed result back into the column type its
+    function returns (WKT for StringType, WKB otherwise). A packed value
+    that surfaces unchanged as binary reuses the WKB it was decoded
+    from."""
 
     def __init__(self):
         self._wkb: dict = {}           # id(batch) -> (batch, its WKB)
@@ -281,9 +283,53 @@ def _wkt_batch(p: PK.PackedBatch) -> list:
 # row positions.
 
 def _same(p: PK.PackedBatch) -> PK.PackedBatch:
-    """ST_GeomFromWKT / ST_AsText: the geometry itself (the text edge
-    already ran at decode; the encoding is chosen where it surfaces)."""
+    """ST_AsText: the geometry itself (the encoding is chosen where it
+    surfaces)."""
     return p
+
+
+def _normalize(p: PK.PackedBatch) -> PK.PackedBatch:
+    """ST_GeomFromWKT / ST_GeomFromText: the text surface's areal hygiene
+    (kernel/geom.normalize: outer rings CCW, holes CW, repeated vertices
+    and degenerate rings dropped, one polygon printed as POLYGON). A row
+    normalize() leaves as it is passes through; a ring whose only fault
+    is its orientation is reversed in a copy of the coordinates; a row
+    with a repeated vertex or a degenerate ring is normalized on its own
+    and held as its WKB (kind -1). Other kinds, Z and GEOMETRYCOLLECTION
+    rows stay as they are, as on the text path."""
+    areal = np.isin(p.kind, PK._AREAL)
+    if not areal.any():
+        return p
+    ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
+    repeat, sa = PK.ring_faults_np(p)
+    on = areal[ring_geom]
+    bad = on & (repeat | (p.ring_len() < 3) | (sa == 0))
+    flip = on & ~bad & ((sa > 0) != p.outer)
+    slow = np.bincount(ring_geom[bad], minlength=p.n) > 0
+    one = np.bincount(ring_geom, weights=p.outer, minlength=p.n) <= 1
+    kind = np.where(areal & one, PK.POLYGON, p.kind).astype(np.int8)
+    coords = p.coords
+    if flip.any():
+        start, ln = p.ring_off[:-1][flip], p.ring_len()[flip]
+        at = PK._multi_arange(start, ln)
+        coords = coords.copy()
+        coords[at] = p.coords[np.repeat(2 * start + ln - 1, ln) - at]
+    if not slow.any():
+        if coords is p.coords and (kind == p.kind).all():
+            return p                 # unchanged: its decoded WKB stands
+        return PK.PackedBatch(p.n, kind, p.geom_off, p.ring_off, p.outer,
+                              coords, p.fallback)
+    keep = ~slow[ring_geom]
+    out = PK.assemble(np.where(slow, -1, kind),
+                      np.where(slow, 0, p.rings_per_geom()),
+                      p.ring_len()[keep],
+                      coords[np.repeat(keep, p.ring_len())],
+                      p.outer[keep], dict(p.fallback))
+    for i in np.flatnonzero(slow).tolist():
+        g = G.normalize(PK.row_tgeom(p, i)[1])
+        out.fallback[i] = GT.to_wkb(
+            ("POLYGON" if len(g) <= 1 else "MULTIPOLYGON", g))
+    return out
 
 
 def _area(p: PK.PackedBatch) -> pd.Series:
@@ -406,15 +452,18 @@ def _envelope(p: PK.PackedBatch) -> PK.PackedBatch:
 
 def _transform(p: PK.PackedBatch, src: pd.Series,
                dst: pd.Series) -> PK.PackedBatch:
+    """A NULL source or target CRS gives a NULL row, as in Sedona."""
     if p.n and src.nunique(dropna=False) == 1 \
-            and dst.nunique(dropna=False) == 1 \
-            and src.iloc[0] is not None and dst.iloc[0] is not None:
+            and dst.nunique(dropna=False) == 1:
+        if pd.isna(src.iloc[0]) or pd.isna(dst.iloc[0]):
+            return _no_rings(p.n)
         try:
             return PK.transform_np(p, str(src.iloc[0]), str(dst.iloc[0]))
         except ValueError as exc:
             raise G.GeomError(f"ST_Transform: {exc}") from exc
     # mixed CRS pairs in one batch: per-row scalar
-    return _put_scalar(_no_rings(p.n), np.flatnonzero(p.kind != 0),
+    live = (p.kind != 0) & src.notna().to_numpy() & dst.notna().to_numpy()
+    return _put_scalar(_no_rings(p.n), np.flatnonzero(live),
                        lambda i: GT.to_wkb(PK._transform_tgeom(
                            PK.row_tgeom(p, i), str(src.iloc[i]),
                            str(dst.iloc[i]))))
@@ -439,8 +488,8 @@ def _put_scalar(out: PK.PackedBatch, rows, row_fn) -> PK.PackedBatch:
 
 
 def _buffer_round_scalar(tg, d: float, q: int) -> bytes:
-    """Rows the vectorized convex walk doesn't cover: same scalar kernel
-    as the text ST_BufferRound, WKB out."""
+    """Rows the vectorized convex walk doesn't cover: the scalar
+    spatial._buffer_round, WKB out."""
     return GT.to_wkb(GT.parse_wkt(S._buffer_round(GT.to_wkt(tg), d, q)))
 
 
@@ -450,13 +499,13 @@ def _buffer_round(p: PK.PackedBatch, d: pd.Series,
                                                     na_value=np.nan)
     qq = pd.to_numeric(q, errors="coerce").to_numpy(dtype=np.float64,
                                                     na_value=np.nan)
-    dd = np.where(qq == qq, dd, np.nan)   # NULL quadsegs: NULL, as text
+    dd = np.where(qq == qq, dd, np.nan)   # NULL quadsegs: NULL
     qn = np.unique(qq[qq == qq])
     todo = (p.kind != 0) & (dd == dd)
     if len(qn) > 1:
         # per-row quadsegs: the vectorized walk assumes one q for the
         # whole batch, so varying-q batches go row-by-row through the
-        # same scalar kernel as the text twin with each row's own q.
+        # scalar kernel with each row's own q.
         return _put_scalar(_no_rings(p.n), np.flatnonzero(todo), lambda i:
                            _buffer_round_scalar(PK.row_tgeom(p, i),
                                                 float(dd[i]), int(qq[i])))
@@ -521,8 +570,8 @@ _BOOL = BooleanType()
 
 #: (text names, _B name, body, geometry-argument positions, _B type)
 _ROWS = [
-    (("ST_GeomFromWKT", "ST_GeomFromText"), "ST_GeomFromWKT_B", _same, (0,),
-     BinaryType()),
+    (("ST_GeomFromWKT", "ST_GeomFromText"), "ST_GeomFromWKT_B", _normalize,
+     (0,), BinaryType()),
     (("ST_AsText",), "ST_AsText_B", _same, (0,), StringType()),
     (("ST_Area",), "ST_Area_B", _area, (0,), DoubleType()),
     (("ST_NPoints", "ST_NumPoints"), "ST_NPoints_B", _npoints, (0,),
@@ -566,9 +615,9 @@ class Carrier(NamedTuple):
 
     @property
     def hygiene(self) -> bool:
-        """The identity body of ST_GeomFromWKT / ST_AsText: computes
-        nothing."""
-        return self.body is _same
+        """The body of ST_GeomFromWKT or ST_AsText: it normalizes or
+        passes the geometry, and computes nothing from it."""
+        return self.body in (_same, _normalize)
 
 
 #: lower-cased SQL name (text and _B) -> Carrier
@@ -579,8 +628,9 @@ CARRIER = {
 
 
 def _adapt(name: str, body, geom, rtype):
-    """The registered `_B` UDF: decode the geometry arguments, run the
-    body, encode a geometry result."""
+    """The registered one-node UDF: decode the geometry arguments, run
+    the body, encode a geometry result as `rtype` (WKB for a `_B` name,
+    WKT for a text name)."""
     def fn(*cols: pd.Series) -> pd.Series:
         c = Codec()
         out = body(*(c.decode(v) if i in geom else v
@@ -596,3 +646,17 @@ def _adapt(name: str, body, geom, rtype):
 
 REGISTRY_B = {b: _adapt(b, body, geom, rt)
               for _, b, body, geom, rt in _ROWS}
+
+#: Text names registered as the one-node adapter, WKT out: a decode +
+#: body + encode beats a per-row text loop 4-12x on 60 k rects. The
+#: lane-backed text UDFs (ST_Area, ST_NPoints, ST_Length, ST_Centroid,
+#: ST_X, ST_Y, the six interval predicates, ST_GeomFromWKT, ST_AsText)
+#: are faster than the adapter when called alone, and ST_Distance's box
+#: path is not yet bit-equal to its scalar kernel.
+_TEXT_ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound",
+                 "ST_Contains", "ST_Within")
+REGISTRY_TEXT = {
+    t: _adapt(t, body, geom, StringType() if isinstance(rt, BinaryType)
+              else rt)
+    for texts, _, body, geom, rt in _ROWS for t in texts
+    if t in _TEXT_ADAPTED}

@@ -41,7 +41,6 @@ from ..kernel import geom as G
 from ..kernel import geomtypes as GT
 from . import lanes as LN
 from . import lanes_ops as LO
-from ..kernel import transform as T
 
 # ------------------------------------------------------------ scalar impls
 
@@ -80,11 +79,14 @@ def _is_areal(s: str) -> bool:
     return len(s[k:j].split()) == 2
 
 def _geom_from_wkt(s: str | None) -> str | None:
+    """Typed parse; 2D areal geometry (an SRID= prefix included) is
+    normalized, as the carrier's ST_GeomFromWKT body does."""
     if s is None:
         return None
-    if not _is_areal(s):
-        return GT.to_wkt(GT.parse_wkt(s))
-    return G.to_wkt(G.normalize(G.parse_wkt(s)))
+    kind, data = GT.parse_wkt(s)
+    if kind in ("POLYGON", "MULTIPOLYGON"):
+        return G.to_wkt(G.normalize(data))
+    return GT.to_wkt((kind, data))
 
 def _make_valid(s: str | None) -> str | None:
     if s is None:
@@ -2882,44 +2884,6 @@ def _area(s: str | None) -> float | None:
         return GT.area_of(GT.strip_z(GT.parse_wkt(s)))
     return G.area(G.parse_wkt(s))
 
-def _transform(s: str | None, src: str, dst: str) -> str | None:
-    if s is None:
-        return None
-    if not _is_areal(s):
-        # per-vertex reprojection through the CRS registry, type (and z,
-        # passed through untouched — the Sedona 2D-transform convention)
-        # preserved; GC members recurse (kernel map_coords)
-        try:
-            return GT.to_wkt(GT.map_coords(
-                GT.parse_wkt(s),
-                lambda x, y: T.transform_point(x, y, src, dst)))
-        except ValueError as exc:
-            raise G.GeomError(f"ST_Transform: {exc}") from exc
-    if (src, dst) == ("EPSG:3857", "EPSG:5880"):
-        return G.to_wkt(T.transform_geom(G.parse_wkt(s)))
-    if (src, dst) == ("EPSG:5880", "EPSG:3857"):
-        # inverse pair (Newton fixpoint of the forward — kernel/transform.py)
-        return G.to_wkt(T.transform_geom_inverse(G.parse_wkt(s)))
-    # general pairs through the CRS registry (4326, 3857, 5880, UTM
-    # 326xx/327xx — kernel/transform.resolve_crs); unknown CRS raises
-    try:
-        return G.to_wkt(T.transform_geom_crs(G.parse_wkt(s), src, dst))
-    except ValueError as exc:
-        raise G.GeomError(f"ST_Transform: {exc}") from exc
-
-def _envelope(s: str | None) -> str | None:
-    if s is None:
-        return None
-    if not _is_areal(s):
-        # JTS getEnvelope degenerate shapes: POINT for a point-sized
-        # envelope, 2-point LINESTRING for a flat one, else the rect
-        return GT.envelope_wkt(GT.parse_wkt(s))
-    g = G.parse_wkt(s)
-    if not g:
-        return "POLYGON EMPTY"
-    x1, y1, x2, y2 = G.bounds(g)
-    return G.to_wkt([[[(x1, y1), (x2, y1), (x2, y2), (x1, y2)]]])
-
 # ------------------------------------------------ name-parity batch (r8)
 
 def _nrings(s: str | None) -> int | None:
@@ -3419,89 +3383,12 @@ def st_area(s: pd.Series) -> pd.Series:
     return LO.area(s, _area).astype("float64")
 
 @pandas_udf(StringType())
-def st_transform(s: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
-    # batch fast path (r7): when the whole Arrow batch shares one
-    # (src, dst) pair — the universal case, they are literals — gather
-    # every 2D areal row's coordinates into ONE numpy array, run the
-    # vectorized projection (kernel/transform.transform_points_np:
-    # identical formulas and seeds, per-batch Newton), and rebuild.
-    # Non-areal / Z / GC / null rows fall back to the scalar per row.
-    if len(s) and src.nunique(dropna=False) == 1 \
-            and dst.nunique(dropna=False) == 1:
-        a, b = src.iloc[0], dst.iloc[0]
-        if a is not None and b is not None:
-            return _transform_batch(s, str(a), str(b))
-    return pd.Series(
-        [_transform(g, a, b) for g, a, b in zip(s, src, dst)], index=s.index
-    )
-
-def _transform_batch(s: pd.Series, src: str, dst: str) -> pd.Series:
-    import numpy as np
-
-    try:
-        T._resolve_crs_np(src)
-        T._resolve_crs_np(dst)
-    except ValueError as exc:
-        raise G.GeomError(f"ST_Transform: {exc}") from exc
-    shapes = []          # (row position, geometry structure) for fast rows
-    xs: list[float] = []
-    ys: list[float] = []
-    slow_idx = []
-    out = [None] * len(s)
-    vals = s.tolist()
-    for i, w in enumerate(vals):
-        if w is None or not _is_areal(w):
-            slow_idx.append(i)
-            continue
-        try:
-            g = G.parse_wkt(w)
-        except G.GeomError:
-            slow_idx.append(i)
-            continue
-        struct = [[len(ring) for ring in poly] for poly in g]
-        shapes.append((i, struct))
-        for poly in g:
-            for ring in poly:
-                for (x, y) in ring:
-                    xs.append(x)
-                    ys.append(y)
-    if xs:
-        bx, by = T.transform_points_np(np.asarray(xs), np.asarray(ys),
-                                       src, dst)
-        pos = 0
-        for (i, struct) in shapes:
-            polys = []
-            for ring_lens in struct:
-                rings = []
-                for ln in ring_lens:
-                    rings.append(list(zip(bx[pos:pos + ln].tolist(),
-                                          by[pos:pos + ln].tolist())))
-                    pos += ln
-                polys.append(rings)
-            out[i] = G.to_wkt(polys)
-    for i in slow_idx:
-        out[i] = _transform(vals[i], src, dst)
-    return pd.Series(out, index=s.index)
-
-@pandas_udf(StringType())
-def st_envelope(s: pd.Series) -> pd.Series:
-    return s.map(_envelope, na_action="ignore")
-
-@pandas_udf(StringType())
 def st_union(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([_union2(x, y) for x, y in zip(a, b)], index=a.index)
 
 @pandas_udf(StringType())
 def st_difference(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([_difference(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(BooleanType())
-def st_contains(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_contains(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(BooleanType())
-def st_within(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_contains(y, x) for x, y in zip(a, b)], index=a.index)
 
 @pandas_udf(DoubleType())
 def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -3525,17 +3412,6 @@ def st_dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
 @pandas_udf(StringType())
 def st_centroid(s: pd.Series) -> pd.Series:
     return LO.centroid(s, _centroid)
-
-@pandas_udf(StringType())
-def st_buffer_round(s: pd.Series, d: pd.Series, quadsegs: pd.Series) -> pd.Series:
-    # NULL in any argument propagates NULL out, matching the
-    # na_action="ignore" contract of the other ST_* UDFs
-    return pd.Series(
-        [None if g is None or pd.isna(x) or pd.isna(q)
-         else _buffer_round(g, float(x), int(q))
-         for g, x, q in zip(s, d, quadsegs)],
-        index=s.index,
-    )
 
 @pandas_udf(StringType())
 def st_convexhull(s: pd.Series) -> pd.Series:
@@ -4446,20 +4322,15 @@ _REGISTRY = {
     "ST_Buffer": st_buffer,
     "ST_Intersection": st_intersection,
     "ST_Area": st_area,
-    "ST_Transform": st_transform,
-    "ST_Envelope": st_envelope,
     "ST_ClippedArea": st_clipped_area,
     "ST_Union": st_union,
     "ST_Difference": st_difference,
     "ST_SymDifference": st_symdifference,
     "ST_MakeLine": st_makeline,
     "ST_Normalize": st_normalize,
-    "ST_Contains": st_contains,
-    "ST_Within": st_within,
     "ST_Distance": st_distance,
     "ST_DWithin": st_dwithin,
     "ST_Centroid": st_centroid,
-    "ST_BufferRound": st_buffer_round,
     "ST_ConvexHull": st_convexhull,
     "ST_NPoints": st_npoints,
     "ST_SimplifyLine": st_simplifyline,
@@ -4604,7 +4475,8 @@ def udf_table() -> dict:
     from . import geomb, grid, spatial_ext
 
     return {
-        **_REGISTRY, **geomb.REGISTRY_B, **spatial_ext.REGISTRY_EXT,
+        **_REGISTRY, **geomb.REGISTRY_TEXT, **geomb.REGISTRY_B,
+        **spatial_ext.REGISTRY_EXT,
         **grid.REGISTRY_GRID,
         # singular/plural + dimension-tag aliases (PostGIS registers both)
         "ST_NumInteriorRing": st_numinteriorrings,

@@ -894,6 +894,21 @@ def ring_signed_area_np(p: PackedBatch) -> np.ndarray:
     return _seq_sums(term, p.ring_off) / 2.0
 
 
+def ring_faults_np(p: PackedBatch):
+    """Per ring, the two facts kernel/geom.normalize acts on: whether
+    two consecutive vertices are equal (the wrap from last to first
+    included), and the anchored signed area (> 0 is CCW; 0 is
+    degenerate). Bit-equal to the scalar's, so a row whose rings have no
+    repeat and the wanted sign is one normalize() leaves as it is."""
+    x, y = p.coords[:, 0], p.coords[:, 1]
+    nxt = _next_in_ring(p)
+    dup = (x == x[nxt]) & (y == y[nxt])
+    ring_of = np.repeat(np.arange(len(p.ring_off) - 1), p.ring_len())
+    repeat = np.bincount(ring_of[dup], minlength=len(p.ring_off) - 1) > 0
+    with np.errstate(invalid="ignore"):        # inf - inf: NaN area
+        return repeat, ring_signed_area_np(p)
+
+
 def npoints_np(p: PackedBatch) -> np.ndarray:
     """Per-geometry vertex count, matching GT.npoints: areal rings count
     the closing duplicate (+1 per ring); puntal/lineal count as stored."""
@@ -932,9 +947,11 @@ def length_np(p: PackedBatch) -> np.ndarray:
 
 def transform_np(p: PackedBatch, src: str, dst: str) -> PackedBatch:
     """CRS-transform every coordinate of the batch in one vectorized call
-    (kernel/transform.transform_points_np — identical formulas and Newton
-    seeds as the scalar path). Fallback rows go through the scalar
-    transform on their parsed tgeom."""
+    (kernel/transform.transform_points_np — the scalar path's formulas
+    and Newton seeds; numpy's tan/log/exp/arctan differ from libm in the
+    last ulp, so coordinates agree to a few ulps, not bit for bit).
+    Fallback rows go through the scalar transform on their parsed
+    tgeom."""
     if len(p.coords):
         bx, by = T.transform_points_np(p.coords[:, 0].copy(),
                                        p.coords[:, 1].copy(), src, dst)
@@ -1066,12 +1083,11 @@ def centroid_np(p: PackedBatch):
     cy_out = np.full(p.n, np.nan)
     if not elig.any():
         return elig, cx_out, cy_out
+    repeat, sa = ring_faults_np(p)
+    kept = (sa > 0) & ~repeat
+    elig[elig] = kept[p.geom_off[:-1][elig]]
     x, y = p.coords[:, 0], p.coords[:, 1]
     nxt = _next_in_ring(p)
-    dup = (x == x[nxt]) & (y == y[nxt])
-    kept = (ring_signed_area_np(p) > 0) & (_seq_sums(dup * 1.0,
-                                                     p.ring_off) == 0)
-    elig[elig] = kept[p.geom_off[:-1][elig]]
     cross = x * y[nxt] - x[nxt] * y
     ring_a2 = _seq_sums(cross, p.ring_off)
     ring_cx = _seq_sums((x + x[nxt]) * cross, p.ring_off)

@@ -58,7 +58,7 @@ def test_rewrite_simple_chain_moves_to_carrier():
 def test_rewrite_geometry_output_gets_text_edge():
     # the buffered geometry surfaces to the user: encoded as WKT there
     assert _packed("ST_BufferRound(ST_GeomFromWKT(w), 0.5, 8) AS g") == \
-        ["st_buffer_round", "st_geomfromwkt"]
+        ["st_bufferround", "st_geomfromwkt"]
 
 
 def test_rewrite_three_deep_chain_single_parse_edge():
@@ -130,7 +130,7 @@ PAREN_EXPRS = [
      " AS d",
      "st_centroid st_distance st_geomfromwkt st_geomfromwkt"),
     ("ST_Area(ST_BufferRound(w, (1 + p) / 4.0, 8)) AS a",
-     "st_area st_buffer_round"),
+     "st_area st_bufferround"),
 ]
 
 
@@ -798,5 +798,6 @@ def test_carrier_buffer_null_arguments_are_null():
         "ST_Area(ST_BufferRound(ST_GeomFromWKT(g), d, q)) AS a")
     assert leaves == ["g", "d", "q"]
     got = body(g, d, q)["f0"].tolist()
-    exp = S.st_area.func(S.st_buffer_round.func(g, d, q)).tolist()
+    buf = S.udf_table()["ST_BufferRound"].func
+    exp = S.st_area.func(buf(g, d, q)).tolist()
     assert got[0] == exp[0] and all(v != v for v in got[1:] + exp[1:])

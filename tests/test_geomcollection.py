@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import struct
 
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -154,7 +155,8 @@ def test_geomcollection_accessor_scalars():
     assert S._npoints(gc) == 8
     assert S._dimension_of(gc) == 2
     assert S._is_empty("GEOMETRYCOLLECTION EMPTY") is True
-    assert S._envelope(gc) == "POLYGON ((0 0, 3 0, 3 4, 0 4, 0 0))"
+    assert S.udf_table()["ST_Envelope"].func(pd.Series([gc]))[0] == \
+        "POLYGON ((0 0, 3 0, 3 4, 0 4, 0 0))"
     assert S._is_valid(gc) is True
     # GeoJSON GeometryCollection round trip
     gj = S._as_geojson(gc)
@@ -162,8 +164,6 @@ def test_geomcollection_accessor_scalars():
     assert S._geom_from_geojson(gj) == gc
     # nested collections flatten through ST_Dump (PostGIS convention)
     nested = f"GEOMETRYCOLLECTION (POINT (9 9), {gc})"
-    import pandas as pd
-
     assert S.st_dump.func(pd.Series([nested]))[0] == [
         "POINT (9 9)", "POINT (1 2)", "LINESTRING (0 0, 3 4)",
         "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"]
@@ -193,8 +193,9 @@ def test_z_accessor_scalars():
     assert S._reverse("LINESTRING Z (0 0 1, 1 1 2)") == \
         "LINESTRING Z (1 1 2, 0 0 1)"
     # transform reprojects x/y and passes z through (Sedona convention)
-    kind, data = GT.parse_wkt(
-        S._transform("POINT Z (0 0 7)", "EPSG:4326", "EPSG:3857"))
+    kind, data = GT.parse_wkt(S.udf_table()["ST_Transform"].func(
+        *(pd.Series([v]) for v in ("POINT Z (0 0 7)", "EPSG:4326",
+                                   "EPSG:3857")))[0])
     assert kind == "POINT Z"
     x, y, z = data[0]
     assert x == 0.0 and abs(y) < 1e-6 and z == 7.0

@@ -478,17 +478,22 @@ def test_polyconic_inverse_known_point():
 def test_st_transform_rejects_unknown_pair():
     """Since r5 the CRS registry resolves 4326/3857/5880/UTM — the reject
     contract now applies to codes OUTSIDE the registry (e.g. Lambert-93)."""
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import _transform
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel.geom import GeomError
-
+    import pandas as pd
     import pytest
 
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import udf_table
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel.geom import GeomError
+
+    def transform(w, src, dst):
+        return udf_table()["ST_Transform"].func(
+            *(pd.Series([v]) for v in (w, src, dst)))[0]
+
     with pytest.raises(GeomError):
-        _transform("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
-                   "EPSG:4326", "EPSG:2154")
+        transform("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
+                  "EPSG:4326", "EPSG:2154")
     # the formerly-rejected 4326->3857 pair now resolves via the registry
-    out = _transform("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
-                     "EPSG:4326", "EPSG:3857")
+    out = transform("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))",
+                    "EPSG:4326", "EPSG:3857")
     assert out.startswith("POLYGON")
 
 
@@ -668,7 +673,6 @@ def test_trajectory_cells_straddling_arrow_batches(spark):
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (  # noqa: E402
     _centroid,
     _distance,
-    _envelope,
     _geom_from_wkt,
     _length,
     _st_xy,
@@ -753,6 +757,14 @@ def test_prop_point_rect_distance_and_contains(px, py):
     inside = 0 <= px <= 10 and 0 <= py <= 8
     assert _contains(rect, pw) == inside
     assert _contains(pw, rect) is False
+
+
+def _envelope(w):
+    import pandas as pd
+
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import udf_table
+
+    return udf_table()["ST_Envelope"].func(pd.Series([w], dtype=object))[0]
 
 
 def test_envelope_shape_rules():
