@@ -11,14 +11,12 @@ scalar pandas UDF calls in a projection into ONE struct UDF (see its
 docstring), and inside that UDF the nodes that form a carrier chain
 (`_Fusion.packed`) run their packed bodies from functions/geomb.py: the
 geometry travels from node to node as a kernel/packed.PackedBatch, is
-decoded once per distinct geometry input and encoded only where it
-surfaces. The r7/r8 profiles measured the WKT round trips at ~63% of
+parsed once per distinct geometry input and formatted as WKT only where
+it surfaces. The r7/r8 profiles measured the WKT round trips at ~63% of
 chained scalar cost. Decoding is a plain parse and the areal hygiene is
-ST_GeomFromWKT's own body, so a fused chain, its lone calls and the `_B`
-spelling give a raw leaf the same answer (tests/test_path_parity.py).
-Binary==text parity for every body is property-pinned by
-tests/test_binary_carrier.py; which nodes run packed is pinned by
-tests/test_chainrw.py.
+ST_GeomFromWKT's own body, so a fused chain and its lone calls give a
+raw leaf the same answer (tests/test_path_parity.py); which nodes run
+packed is pinned by tests/test_chainrw.py.
 
 The text rewrites here are `rewrite` (the _FUSE scalar-consumer
 fusions, applied before the fuser) and `salt_union_aggr_sql` (the
@@ -355,19 +353,19 @@ class _Fusion:
 
         def fused(*cols: pd.Series) -> pd.DataFrame:
             vals: list = []
-            codec = GB.Codec()
             decoded: dict = {}     # leaf or plain node -> PackedBatch
-            encoded: dict = {}     # packed node -> its column
+            # id(packed value) -> its WKT column; ST_AsText passes its
+            # argument's batch on, so the two share one encode
+            encoded: dict = {}
 
             def get(ref):
                 if ref[0] == "c":
                     return cols[ref[1]]
-                k, v = ref[1], vals[ref[1]]
+                v = vals[ref[1]]
                 if isinstance(v, PK.PackedBatch):
-                    if k not in encoded:
-                        encoded[k] = codec.encode(
-                            v, steps[k][0].returnType, cols[0].index)
-                    v = encoded[k]
+                    if id(v) not in encoded:
+                        encoded[id(v)] = GB.encode(v, cols[0].index)
+                    v = encoded[id(v)]
                 return v if ref[2] is None else v[ref[2]]
 
             def get_packed(ref):
@@ -375,7 +373,7 @@ class _Fusion:
                 if isinstance(v, PK.PackedBatch):
                     return v
                 if ref not in decoded:
-                    decoded[ref] = codec.decode(get(ref))
+                    decoded[ref] = GB.decode(get(ref))
                 return decoded[ref]
 
             for (fn, refs), c in zip(steps, bodies):
@@ -409,9 +407,9 @@ def select_st(df: DataFrame, *exprs: str) -> DataFrame:
     registered function once, in dependency order, and the outputs read
     its fields (`__fz.f0`...). Inside that body a carrier chain
     (_Fusion.packed) passes packed batches from node to node: each
-    distinct geometry input decodes once, and a packed value is encoded
-    only where it surfaces, as an output or as the argument of a UDF
-    without a packed body. A projection with fewer than two UDF calls is
+    distinct geometry input decodes once, and a packed value is formatted
+    as WKT only where it surfaces, as an output or as the argument of a
+    UDF without a packed body. A projection with fewer than two UDF calls is
     a plain select. Registration must already have happened
     (functions.spatial.register_spatial_functions)."""
     fz = _Fusion()

@@ -1,4 +1,4 @@
-"""Binary carrier: ST_ function bodies over packed geometry batches.
+"""Carrier bodies: ST_ functions over packed geometry batches.
 
 The text surface (functions/spatial.py) parses and formats WKT in every
 UDF, so a chained `ST_…(ST_…(…))` pays a text round trip per stage —
@@ -9,42 +9,30 @@ scalar result goes out as a pandas Series, and the measures, the CRS
 projection, the convex round buffer, centroid, envelope and the
 rect/point predicates run as whole-batch numpy math.
 
-`CARRIER` maps each text name and each `_B` name that has such a body to
-(body, geometry-argument positions, geometry result?). It has three
-users:
+Text is the only geometry format that crosses the SQL boundary.
+`CARRIER` maps each SQL name that has a body to (body, geometry-argument
+positions, geometry result?). It has two users:
 
 - functions/chainrw's projection fuser runs a carrier chain as these
-  bodies inside one fused Python call. `Codec` decodes each distinct
-  geometry input once and encodes a packed value only where it surfaces:
-  WKT for a text name, WKB for a `_B` name;
-- `REGISTRY_B` registers every `_B` name as its body behind one adapter
-  (decode the geometry arguments, run the body, encode a geometry
-  result), so queries that spell the `_B` names keep working:
+  bodies inside one fused Python call: `decode` parses each distinct
+  geometry input once, and `encode` formats WKT only where a packed
+  value surfaces;
+- `REGISTRY_TEXT` registers six names as the same decode, body and
+  encode behind one adapter: ST_Transform, ST_Envelope, ST_BufferRound,
+  ST_Contains and ST_Within, whose body called alone beats a per-row
+  text loop, and ST_Coords (array<double>: flattened x, y …, areal rings
+  closed, the numbers a WKT-text split yields), an engine extension with
+  no text twin.
 
-    ST_GeomFromWKT_B(wkt)            -> binary   (text -> carrier)
-    ST_AsText_B(bin)                 -> string   (carrier -> text)
-    ST_BufferRound_B(bin, d, q)      -> binary
-    ST_Transform_B(bin, src, dst)    -> binary
-    ST_Area_B / ST_Length_B(bin)     -> double
-    ST_NPoints_B(bin)                -> bigint
-    ST_Coords_B(bin)                 -> array<double>  (flattened x,y …,
-                                        areal rings closed — the binary
-                                        twin of the WKT-numbers split)
-- `REGISTRY_TEXT` registers five text names (ST_Transform, ST_Envelope,
-  ST_BufferRound, ST_Contains, ST_Within) as the same adapter with WKT
-  out: called alone, their body beats a per-row text loop.
-
-Decoding is a plain parse. A text geometry input enters through the text
-edge below (one batch parse) and then one `pack_wkb`; a binary input
-through `pack_wkb` alone. The areal hygiene (kernel/geom.normalize) is
-the body of ST_GeomFromWKT, where the text surface applies it, so every
-path gives a raw leaf the same answer. Rows the vectorized
-kernels do not cover (Z, GEOMETRYCOLLECTION, non-convex buffers, …) go
-through the SAME scalar kernel as the text surface, and a geometry such
-a kernel produces stays in the batch as its WKB bytes (kind -1).
-tests/test_binary_carrier.py pins binary == text per family, and
-tests/test_path_parity.py pins every path against the scalar kernels on
-raw input.
+Decoding is a plain parse. Canonical rows become packed rows straight
+from the lanes extracts; every other row takes the scalar parser. The
+areal hygiene (kernel/geom.normalize) is the body of ST_GeomFromWKT,
+where the text surface applies it, so every path gives a raw leaf the
+same answer. Rows the vectorized kernels do not cover (Z,
+GEOMETRYCOLLECTION, non-convex buffers, …) go through the SAME scalar
+kernel as the text surface, and a geometry such a kernel produces stays
+in the batch as its WKB bytes (kind -1). tests/test_path_parity.py pins
+every path against the scalar kernels on raw input.
 
 This is the PySpark-native equivalent of Sedona's binary GeometryUDT
 interchange (the reference's five-call ST_ chain at
@@ -54,7 +42,6 @@ either). Scale: row-local, per-Arrow-batch, no shuffle or driver state.
 
 from __future__ import annotations
 
-import struct
 from functools import partial
 from typing import Callable, NamedTuple
 
@@ -65,7 +52,6 @@ import pyarrow.compute as pc
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     LongType,
@@ -79,149 +65,77 @@ from . import lanes as LN
 from . import lanes_ops as LO
 from . import spatial as S
 
-# ------------------------------------------------------------ text -> WKB
-
-# vectorized rect edge: a canonical CCW rect row skips the Python
-# parser — its WKB is assembled directly from the four extracted
-# coordinates as one structured-array write for the whole batch
-_RECT_WKB_DT = np.dtype([
-    ("hdr", "u1", (9,)),       # 01 + code 3 + nrings 1 (LE)
-    ("npts", "<u4"),
-    ("xy", "<f8", (10,)),      # closed CCW rect walk
-])
-_RECT_HDR = np.frombuffer(
-    b"\x01" + struct.pack("<I", 3) + struct.pack("<I", 1), dtype="u1")
+# ------------------------------------------------------------ text edge
 
 
-def _rect_wkb_batch(a, b, c, d) -> list:
-    """WKB bytes for n axis-aligned rects (x1=a, y1=b, x2=c, y2=d),
-    byte-identical to GT.to_wkb(("POLYGON", [[(a,b),(c,b),(c,d),(a,d)]]))."""
-    n = len(a)
-    arr = np.empty(n, dtype=_RECT_WKB_DT)
-    arr["hdr"] = _RECT_HDR
-    arr["npts"] = 5
-    xy = arr["xy"]
-    xy[:, 0] = a
-    xy[:, 1] = b
-    xy[:, 2] = c
-    xy[:, 3] = b
-    xy[:, 4] = c
-    xy[:, 5] = d
-    xy[:, 6] = a
-    xy[:, 7] = d
-    xy[:, 8] = a
-    xy[:, 9] = b
-    big = arr.tobytes()
-    w = _RECT_WKB_DT.itemsize
-    return [big[i * w:(i + 1) * w] for i in range(n)]
-
-
-def _wkt_to_wkb(s):
-    """Text edge for one row the batch groups do not claim: a plain
-    parse, WKB out."""
-    return None if s is None else GT.to_wkb(GT.parse_wkt(s))
-
-
-def _typed_lane_wkb(npts: np.ndarray, xy: np.ndarray, code: int) -> list:
-    """WKB bytes for m rows of one puntal/lineal kind, row i holding
-    npts[i] consecutive points of xy (kernel/packed._emit_ragged)."""
-    m = len(npts)
-    return PK._emit_ragged(PK.assemble(np.full(m, code), np.ones(m, np.int64),
-                                       npts, np.ascontiguousarray(xy)))
-
-
-def _from_wkt_full_series(s: pd.Series) -> pd.Series:
-    out = pd.Series([None] * len(s), index=s.index, dtype=object)
-    if not len(s):
-        return out
+def decode(s: pd.Series) -> PK.PackedBatch:
+    """A WKT column as a PackedBatch, with no hygiene (that is
+    ST_GeomFromWKT's body). Dimension-joined geometry columns repeat a
+    handful of distinct strings across the whole batch (e.g. 50 region
+    rects x 600k rows): from 4096 rows on, a batch that is <= 1/4
+    distinct parses each distinct value ONCE and gathers it back.
+    factorize is one hash pass (~0.2 us/row)."""
     if len(s) >= 4096:
-        # dimension-joined geometry columns repeat a handful of distinct
-        # strings across the whole batch (e.g. 50 region rects x 600k
-        # rows) — factorize, parse each distinct ONCE, gather back.
-        # factorize is one hash pass (~0.2 us/row), repaid whenever the
-        # batch is <= 1/4 distinct.
         codes, uniques = pd.factorize(s)
         if len(uniques) <= len(s) // 4:
-            uw = _geom_from_wkt_b_series(pd.Series(uniques, dtype=object))
-            taken = uw.to_numpy(dtype=object).take(codes)
-            taken[codes < 0] = None            # NaN/None inputs
-            out[:] = taken
-            return out
-    return _geom_from_wkt_b_series(s)
+            return PK.take(_parse(pd.Series(uniques, dtype=object)), codes)
+    return _parse(s)
 
 
-def _geom_from_wkt_b_series(s: pd.Series) -> pd.Series:
-    """Text edge off the shared lanes extracts: canonical POINT /
-    LINESTRING / MULTIPOINT text and CCW rects (closing vertex optional)
-    parse as whole batches. Numbers go through arrow's cast, the same
-    correctly rounded double float() gives, so every fast row is
-    byte-identical to the scalar parser. Anything else (Z, EMPTY,
-    parenthesized MULTIPOINT members, stray whitespace, CW or non-finite
-    rects) takes the scalar parser."""
-    f = LN._Fill(s)
-    m, g = f.b.extract(LN.FPOINT2)
+def _parse(s: pd.Series) -> PK.PackedBatch:
+    """Text edge off the shared lanes extracts: canonical POINT,
+    LINESTRING and MULTIPOINT text and the CCW and CW rect walks
+    (closing vertex optional) become one packed ring per row, in walk
+    order, straight from the captured numbers. Numbers go through
+    arrow's cast, the same correctly rounded double float() gives, so
+    every such row equals the scalar parse. Any other row (Z, EMPTY,
+    holes, parenthesized MULTIPOINT members, stray whitespace,
+    non-finite rects) takes the scalar parser, and only those rows go
+    through WKB."""
+    b = LN.batch_of(s)
+    pieces = []                 # (rows, kind, points per row, xy)
+    m, g = b.extract(LN.FPOINT2)
     if m.any():
-        f.put(m, _point_wkb_batch(LN._num(g, 0)[m], LN._num(g, 1)[m]))
-    for pat, code in ((LO.FLINE_ANY, PK.LINESTRING),
+        pieces.append((m, PK.POINT, 1, np.column_stack(
+            [LN._num(g, 0)[m], LN._num(g, 1)[m]])))
+    for pat, kind in ((LO.FLINE_ANY, PK.LINESTRING),
                       (LO.FMPOINT_ANY, PK.MULTIPOINT)):
-        m, g = f.b.extract(pat)
+        m, g = b.extract(pat)
         if m.any():
-            f.put(m, _typed_lane_wkb(
-                *LN._body_xy(g[0], np.flatnonzero(m)), code))
-    g, ccw, _, _ = LN._poly5_walks(f.b, LO.FPOLY45)
-    if ccw.any():
-        a, b, c, d = (LN._num(g, i) for i in (0, 1, 2, 5))
-        ccw &= np.isfinite([a, b, c, d]).all(axis=0)
-        f.put(ccw, _rect_wkb_batch(a[ccw], b[ccw], c[ccw], d[ccw]))
-    return f.finish(_wkt_to_wkb)
+            pieces.append((m, kind, *LN._body_xy(g[0], np.flatnonzero(m))))
+    g, ccw, cw, _ = LN._poly5_walks(b, LO.FPOLY45)
+    m = ccw | cw
+    if m.any():
+        a, y1, c, y3 = (LN._num(g, i)[m] for i in (0, 1, 2, 5))
+        ok = np.isfinite([a, y1, c, y3]).all(axis=0)
+        m[m] = ok
+        pieces.append((m, PK.POLYGON, 4, np.column_stack(
+            [a, y1, c, y1, c, y3, a, y3])[ok].reshape(-1, 2)))
+    done = np.zeros(len(s), dtype=bool)
+    for m, *_ in pieces:
+        done |= m
+    rest = np.flatnonzero(~done & s.notna().to_numpy())
+    slow = PK.pack_wkb([GT.to_wkb(GT.parse_wkt(v))
+                        for v in s.to_numpy()[rest]])
+    fast = int(done.sum())
+    out = PK.assemble(
+        np.concatenate([np.full(m.sum(), k) for m, k, _, _ in pieces]
+                       + [slow.kind]),
+        np.concatenate([np.ones(fast, np.int64), slow.rings_per_geom()]),
+        np.concatenate([np.broadcast_to(k, m.sum()) for m, _, k, _ in pieces]
+                       + [slow.ring_len()]),
+        np.concatenate([xy for *_, xy in pieces] + [slow.coords]),
+        np.concatenate([np.ones(fast, bool), slow.outer]),
+        {fast + i: v for i, v in slow.fallback.items()})
+    order = np.concatenate([np.flatnonzero(m) for m, *_ in pieces] + [rest])
+    pos = np.full(len(s), -1, dtype=np.int64)
+    pos[order] = np.arange(len(order))
+    return PK.take(out, pos)
 
 
-_PT_HDR = b"\x01" + struct.pack("<I", 1)
-_PT_DT = np.dtype([("hdr", "u1", (5,)), ("xy", "<f8", (2,))])
-
-
-def _point_wkb_batch(xs, ys) -> list:
-    """POINT WKB for n coordinate pairs in one structured-array write."""
-    m = len(xs)
-    arr = np.empty(m, dtype=_PT_DT)
-    arr["hdr"] = np.frombuffer(_PT_HDR, dtype=np.uint8)
-    arr["xy"][:, 0] = xs
-    arr["xy"][:, 1] = ys
-    big = arr.tobytes()
-    w = _PT_DT.itemsize
-    return [big[i * w:(i + 1) * w] for i in range(m)]
-
-
-def _tolist(b: pd.Series) -> list:
-    return [bytes(v) if v is not None else None for v in b.tolist()]
-
-
-class Codec:
-    """One batch's geometry conversions. `decode` parses a text or binary
-    column into a PackedBatch, with no hygiene (that is ST_GeomFromWKT's
-    body); `encode` turns a packed result back into the column type its
-    function returns (WKT for StringType, WKB otherwise). A packed value
-    that surfaces unchanged as binary reuses the WKB it was decoded
-    from."""
-
-    def __init__(self):
-        self._wkb: dict = {}           # id(batch) -> (batch, its WKB)
-
-    def decode(self, s: pd.Series) -> PK.PackedBatch:
-        first = next((v for v in s if v is not None), None)
-        wkb = (_from_wkt_full_series(s).tolist() if isinstance(first, str)
-               else _tolist(s))
-        p = PK.pack_wkb(wkb)
-        self._wkb[id(p)] = (p, wkb)
-        return p
-
-    def encode(self, p: PK.PackedBatch, rtype, index) -> pd.Series:
-        if isinstance(rtype, StringType):
-            vals = _wkt_batch(p)
-        else:
-            src, wkb = self._wkb.get(id(p), (None, None))
-            vals = wkb if src is p else PK.unpack_wkb(p)
-        return pd.Series(vals, index=index, dtype=object)
+def encode(p: PK.PackedBatch, index) -> pd.Series:
+    """A packed geometry result as its WKT column."""
+    return pd.Series(_wkt_batch(p), index=index, dtype=object)
 
 
 def _closed_rings(p: PK.PackedBatch):
@@ -236,7 +150,7 @@ def _closed_rings(p: PK.PackedBatch):
 
 
 def _wkt_batch(p: PK.PackedBatch) -> list:
-    """PK.unpack_wkt as whole-batch string ops: numbers through
+    """GT.to_wkt of every row as whole-batch string ops: numbers through
     lanes.fmt_f64_full (bit-equal to the kernel's _fmt), then arrow list
     joins from points to rings to rows; a one-member multi prints as its
     single kind, as GT.to_wkt does. Rows held as bytes, rows with a
@@ -283,8 +197,7 @@ def _wkt_batch(p: PK.PackedBatch) -> list:
 # row positions.
 
 def _same(p: PK.PackedBatch) -> PK.PackedBatch:
-    """ST_AsText: the geometry itself (the encoding is chosen where it
-    surfaces)."""
+    """ST_AsText: the geometry itself (WKT where it surfaces)."""
     return p
 
 
@@ -316,7 +229,7 @@ def _normalize(p: PK.PackedBatch) -> PK.PackedBatch:
         coords[at] = p.coords[np.repeat(2 * start + ln - 1, ln) - at]
     if not slow.any():
         if coords is p.coords and (kind == p.kind).all():
-            return p                 # unchanged: its decoded WKB stands
+            return p                 # unchanged
         return PK.PackedBatch(p.n, kind, p.geom_off, p.ring_off, p.outer,
                               coords, p.fallback)
     keep = ~slow[ring_geom]
@@ -567,48 +480,41 @@ def _distance(pa: PK.PackedBatch, pb: PK.PackedBatch) -> pd.Series:
 # point-inside-rect is zero-boundary contact, ...).
 _BOX = PK.box_bounds_np
 _BOOL = BooleanType()
+_GEOM = StringType()
 
-#: (text names, _B name, body, geometry-argument positions, _B type)
+#: (SQL names, body, geometry-argument positions, result type)
 _ROWS = [
-    (("ST_GeomFromWKT", "ST_GeomFromText"), "ST_GeomFromWKT_B", _normalize,
-     (0,), BinaryType()),
-    (("ST_AsText",), "ST_AsText_B", _same, (0,), StringType()),
-    (("ST_Area",), "ST_Area_B", _area, (0,), DoubleType()),
-    (("ST_NPoints", "ST_NumPoints"), "ST_NPoints_B", _npoints, (0,),
-     LongType()),
-    (("ST_Length",), "ST_Length_B", _length, (0,), DoubleType()),
-    ((), "ST_Coords_B", _coords, (0,), ArrayType(DoubleType())),
-    (("ST_Transform",), "ST_Transform_B", _transform, (0,), BinaryType()),
-    (("ST_BufferRound",), "ST_BufferRound_B", _buffer_round, (0,),
-     BinaryType()),
-    (("ST_Centroid",), "ST_Centroid_B", _centroid, (0,), BinaryType()),
-    (("ST_Envelope",), "ST_Envelope_B", _envelope, (0,), BinaryType()),
-    (("ST_X",), "ST_X_B", partial(_xy, axis=0), (0,), DoubleType()),
-    (("ST_Y",), "ST_Y_B", partial(_xy, axis=1), (0,), DoubleType()),
-    (("ST_Intersects",), "ST_Intersects_B",
-     _pred(S._law_intersects, S._intersects, _BOX), (0, 1), _BOOL),
-    (("ST_Disjoint",), "ST_Disjoint_B",
-     _pred(S._law_disjoint, S._disjoint, _BOX), (0, 1), _BOOL),
-    (("ST_Touches",), "ST_Touches_B",
-     _pred(S._law_touches, S._touches), (0, 1), _BOOL),
-    (("ST_Overlaps",), "ST_Overlaps_B",
-     _pred(S._law_overlaps, S._overlaps), (0, 1), _BOOL),
-    (("ST_Equals",), "ST_Equals_B",
-     _pred(S._law_equals, S._equals, _BOX), (0, 1), _BOOL),
-    (("ST_Contains",), "ST_Contains_B",
-     _pred(S._law_contains, S._contains, _BOX), (0, 1), _BOOL),
-    (("ST_Within",), "ST_Within_B",
-     _pred(S._law_within, lambda x, y: S._contains(y, x), _BOX), (0, 1),
+    (("ST_GeomFromWKT", "ST_GeomFromText"), _normalize, (0,), _GEOM),
+    (("ST_AsText",), _same, (0,), _GEOM),
+    (("ST_Area",), _area, (0,), DoubleType()),
+    (("ST_NPoints", "ST_NumPoints"), _npoints, (0,), LongType()),
+    (("ST_Length",), _length, (0,), DoubleType()),
+    (("ST_Coords",), _coords, (0,), ArrayType(DoubleType())),
+    (("ST_Transform",), _transform, (0,), _GEOM),
+    (("ST_BufferRound",), _buffer_round, (0,), _GEOM),
+    (("ST_Centroid",), _centroid, (0,), _GEOM),
+    (("ST_Envelope",), _envelope, (0,), _GEOM),
+    (("ST_X",), partial(_xy, axis=0), (0,), DoubleType()),
+    (("ST_Y",), partial(_xy, axis=1), (0,), DoubleType()),
+    (("ST_Intersects",), _pred(S._law_intersects, S._intersects, _BOX),
+     (0, 1), _BOOL),
+    (("ST_Disjoint",), _pred(S._law_disjoint, S._disjoint, _BOX), (0, 1),
      _BOOL),
-    (("ST_Crosses",), "ST_Crosses_B",
-     _pred(S._law_crosses, S._crosses), (0, 1), _BOOL),
-    (("ST_Distance",), "ST_Distance_B", _distance, (0, 1), DoubleType()),
+    (("ST_Touches",), _pred(S._law_touches, S._touches), (0, 1), _BOOL),
+    (("ST_Overlaps",), _pred(S._law_overlaps, S._overlaps), (0, 1), _BOOL),
+    (("ST_Equals",), _pred(S._law_equals, S._equals, _BOX), (0, 1), _BOOL),
+    (("ST_Contains",), _pred(S._law_contains, S._contains, _BOX), (0, 1),
+     _BOOL),
+    (("ST_Within",), _pred(S._law_within, lambda x, y: S._contains(y, x),
+                           _BOX), (0, 1), _BOOL),
+    (("ST_Crosses",), _pred(S._law_crosses, S._crosses), (0, 1), _BOOL),
+    (("ST_Distance",), _distance, (0, 1), DoubleType()),
 ]
 
 
 class Carrier(NamedTuple):
     """A packed body, its geometry-argument positions, and whether its
-    result is a geometry (what a `_B` twin returns as binary or text)."""
+    result is a geometry (WKT where it surfaces)."""
     body: Callable
     geom: tuple
     produces: bool
@@ -620,23 +526,19 @@ class Carrier(NamedTuple):
         return self.body in (_same, _normalize)
 
 
-#: lower-cased SQL name (text and _B) -> Carrier
-CARRIER = {
-    name.lower(): Carrier(body, geom, isinstance(rt, (BinaryType,
-                                                      StringType)))
-    for texts, b, body, geom, rt in _ROWS for name in (*texts, b)}
+#: lower-cased SQL name -> Carrier
+CARRIER = {name.lower(): Carrier(body, geom, rt == _GEOM)
+           for names, body, geom, rt in _ROWS for name in names}
 
 
 def _adapt(name: str, body, geom, rtype):
     """The registered one-node UDF: decode the geometry arguments, run
-    the body, encode a geometry result as `rtype` (WKB for a `_B` name,
-    WKT for a text name)."""
+    the body, encode a geometry result as WKT."""
     def fn(*cols: pd.Series) -> pd.Series:
-        c = Codec()
-        out = body(*(c.decode(v) if i in geom else v
+        out = body(*(decode(v) if i in geom else v
                      for i, v in enumerate(cols)))
         if isinstance(out, PK.PackedBatch):
-            return c.encode(out, rtype, cols[0].index)
+            return encode(out, cols[0].index)
         out.index = cols[0].index
         return out
 
@@ -644,19 +546,15 @@ def _adapt(name: str, body, geom, rtype):
     return pandas_udf(fn, rtype)
 
 
-REGISTRY_B = {b: _adapt(b, body, geom, rt)
-              for _, b, body, geom, rt in _ROWS}
-
-#: Text names registered as the one-node adapter, WKT out: a decode +
-#: body + encode beats a per-row text loop 4-12x on 60 k rects. The
-#: lane-backed text UDFs (ST_Area, ST_NPoints, ST_Length, ST_Centroid,
-#: ST_X, ST_Y, the six interval predicates, ST_GeomFromWKT, ST_AsText)
-#: are faster than the adapter when called alone, and ST_Distance's box
-#: path is not yet bit-equal to its scalar kernel.
-_TEXT_ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound",
-                 "ST_Contains", "ST_Within")
-REGISTRY_TEXT = {
-    t: _adapt(t, body, geom, StringType() if isinstance(rt, BinaryType)
-              else rt)
-    for texts, _, body, geom, rt in _ROWS for t in texts
-    if t in _TEXT_ADAPTED}
+#: Names registered as the one-node adapter. A decode + body + encode
+#: beats a per-row text loop 4-12x on 60 k rects; ST_Coords has no text
+#: UDF at all. The lane-backed text UDFs (ST_Area, ST_NPoints,
+#: ST_Length, ST_Centroid, ST_X, ST_Y, the six interval predicates,
+#: ST_GeomFromWKT, ST_AsText) are faster than the adapter when called
+#: alone, and ST_Distance's box path is not yet bit-equal to its scalar
+#: kernel.
+_ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound", "ST_Contains",
+            "ST_Within", "ST_Coords")
+REGISTRY_TEXT = {name: _adapt(name, body, geom, rt)
+                 for names, body, geom, rt in _ROWS for name in names
+                 if name in _ADAPTED}

@@ -538,33 +538,35 @@ def rotate_y(s: pd.Series, t: pd.Series, scalar_fn) -> pd.Series:
 # ----------------------------------------------------------- hex / WKB
 
 def as_hexewkb(s: pd.Series, scalar_fn) -> pd.Series:
-    from . import geomb as GB
-
     f = _Fill(s)
     g, ccw, _, _ = _poly5_walks(f.b)
     if ccw.any():
-        a, bb = _num(g, 0), _num(g, 1)
-        c, d = _num(g, 2), _num(g, 5)
-        idx = np.nonzero(ccw)[0]
-        wkbs = GB._rect_wkb_batch(a[idx], bb[idx], c[idx], d[idx])
-        # fixed-width rows: hex the concatenated buffer once, slice per
-        # row (10x cheaper than per-row bytes.hex())
-        f.put(ccw, _hex_fixed(wkbs, idx, len(s)))
+        a, bb, c, d = (_num(g, i)[ccw] for i in (0, 1, 2, 5))
+        f.put(ccw, _hex_rows(ccw, _RECT_HDR,
+                             (a, bb, c, bb, c, d, a, d, a, bb)))
     m, g = f.b.extract(POINT2)
     if m.any():
-        x, y = _num(g, 0), _num(g, 1)
-        idx = np.nonzero(m)[0]
-        wkbs = GB._point_wkb_batch(x[idx], y[idx])
-        f.put(m, _hex_fixed(wkbs, idx, len(s)))
+        f.put(m, _hex_rows(m, _POINT_HDR, (_num(g, 0)[m], _num(g, 1)[m])))
     return f.finish(scalar_fn)
 
 
-def _hex_fixed(wkbs: list, idx: np.ndarray, n: int) -> np.ndarray:
-    vals = np.full(n, None, dtype=object)
-    if len(wkbs):
-        w = len(wkbs[0]) * 2
-        big = b"".join(wkbs).hex().upper()
-        vals[idx] = [big[i * w:(i + 1) * w] for i in range(len(wkbs))]
+# WKB headers (little-endian): POINT; POLYGON of one 5-point ring
+_POINT_HDR = bytes.fromhex("0101000000")
+_RECT_HDR = bytes.fromhex("01030000000100000005000000")
+
+
+def _hex_rows(mask: np.ndarray, hdr: bytes, cols) -> np.ndarray:
+    """Upper-case hex WKB of the masked rows, each `hdr` followed by the
+    doubles `cols` give it — byte-identical to GT.to_wkb(...).hex(). The
+    rows are fixed width: one buffer is hexed, then sliced per row (10x
+    cheaper than per-row bytes.hex())."""
+    m = int(mask.sum())
+    raw = np.empty((m, len(hdr) + 8 * len(cols)), dtype=np.uint8)
+    raw[:, :len(hdr)] = np.frombuffer(hdr, dtype=np.uint8)
+    raw[:, len(hdr):] = np.column_stack(cols).astype("<f8").view(np.uint8)
+    big, w = raw.tobytes().hex().upper(), 2 * raw.shape[1]
+    vals = np.full(len(mask), None, dtype=object)
+    vals[mask] = [big[i * w:(i + 1) * w] for i in range(m)]
     return vals
 
 
@@ -679,64 +681,6 @@ def line_from_multipoint(s: pd.Series, scalar_fn) -> pd.Series:
 
 
 # ----------------------------------------------------- accessor lanes
-
-def area(s: pd.Series, scalar_fn) -> pd.Series:
-    f = _Fill(s)
-    g, ccw, cw, _ = _poly5_walks(f.b)
-    m = ccw | cw
-    if m.any():
-        x1, x2 = _num(g, 0), _num(g, 2)
-        ylo = np.minimum(_num(g, 1), _num(g, 5))
-        yhi = np.maximum(_num(g, 1), _num(g, 5))
-        # anchored shoelace of a small-int rect is exactly w*h
-        f.put(m, (x2 - x1) * (yhi - ylo))
-    return f.finish(scalar_fn)
-
-
-def _count_commas(b: _Batch) -> np.ndarray:
-    return pc.count_substring(b.arr, pattern=",").to_numpy(
-        zero_copy_only=False).astype(float)
-
-
-def npoints(s: pd.Series, scalar_fn) -> pd.Series:
-    f = _Fill(s)
-    _, ccw, cw, _ = _poly5_walks(f.b)
-    f.put(ccw | cw, 5)
-    commas = None
-    for pat in (LINE_INTS, MPOINT):
-        m = f.b.match(pat)
-        if m.any():
-            if commas is None:
-                commas = _count_commas(f.b)
-            f.put(m, commas + 1)
-    return f.finish(scalar_fn)
-
-
-def st_z(s: pd.Series, scalar_fn) -> pd.Series:
-    f = _Fill(s)
-    m, g = f.b.extract(POINTZ)
-    if m.any():
-        f.put(m, _num(g, 2))
-    return f.finish(scalar_fn)
-
-
-def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
-    f = _Fill(s)
-    f.put(f.b.match(GCPOINT), 1)
-    f.put(f.b.match(MLS2), 2)
-    # GC of exactly two bare LINESTRING members — ForceCollection(MLS2)
-    # output, the st_orientation_ops chain
-    f.put(f.b.match(_GC2LINE), 2)
-    m = f.b.match(MPOINT)
-    if m.any():
-        f.put(m, _count_commas(f.b) + 1)
-    return f.finish(scalar_fn)
-
-
-_GC2LINE = _named(
-    rf"^GEOMETRYCOLLECTION \(LINESTRING \((?:{_P})(?:, (?:{_P}))+\), "
-    rf"LINESTRING \((?:{_P})(?:, (?:{_P}))+\)\)$")
-
 
 def num_interior_rings(s: pd.Series, scalar_fn) -> pd.Series:
     f = _Fill(s)
@@ -859,29 +803,6 @@ def simplify_vw(s: pd.Series, tol: pd.Series, scalar_fn) -> pd.Series:
             [scalar_fn(w, v) for w, v in zip(s[rest], tol[rest])],
             index=s[rest].index, dtype=object)
     return out
-
-
-# ------------------------------------------------------- length lane
-
-def length(s: pd.Series, scalar_fn) -> pd.Series:
-    """Canonical integer LINESTRINGs: per-row math.hypot fold over the
-    extracted coordinate pairs — the same left-to-right sum as
-    GT.length, skipping only the WKT parse. math.hypot (not np.hypot,
-    whose libm may differ in the last ulp) keeps bit-parity."""
-    f = _Fill(s)
-    m, g = f.b.extract(LINE_INTS)
-    if m.any():
-        body = g[0].to_pandas().to_numpy()
-        vals = np.full(len(s), None, dtype=object)
-        hyp = math.hypot
-        for i in np.nonzero(m)[0]:
-            nums = body[i].replace(",", " ").split()
-            it = iter(nums)
-            pts = [(float(a), float(b)) for a, b in zip(it, it)]
-            vals[i] = sum(hyp(q[0] - p[0], q[1] - p[1])
-                          for p, q in zip(pts, pts[1:]))
-        f.put(m, vals)
-    return f.finish(scalar_fn)
 
 
 # ----------------------------------------------- float point accessors

@@ -75,6 +75,11 @@ FGC2L2 = _named(
     rf"LINESTRING \({_F} {_F}, {_F} {_F}\)\)$")
 FGC1L2 = _named(
     rf"^GEOMETRYCOLLECTION \(LINESTRING \({_F} {_F}, {_F} {_F}\)\)$")
+#: a GC of exactly two bare integer LINESTRING members — ForceCollection
+#: of an integer MULTILINESTRING, the st_orientation_ops chain
+_GC2LINE = _named(
+    rf"^GEOMETRYCOLLECTION \(LINESTRING \((?:{L._P})(?:, (?:{L._P}))+\), "
+    rf"LINESTRING \((?:{L._P})(?:, (?:{L._P}))+\)\)$")
 #: fully-validating generic bodies (claimable for counting accessors)
 FLINE_ANY = _named(rf"^LINESTRING \(({_FP}(?:, {_FP})+)\)$")
 FPOLY_1RING = _named(
@@ -85,11 +90,6 @@ FMPOINT_ANY = _named(rf"^MULTIPOINT \(({_FP}(?:, {_FP})*)\)$")
 def _npnum(x) -> np.ndarray:
     """Numeric ndarray of a possibly-object arg Series (NaN = unclaimed)."""
     return pd.to_numeric(x, errors="coerce").to_numpy(dtype=float)
-
-
-def _vals(g, n: int):
-    """First n captured groups as float64 ndarrays."""
-    return [_num(g, i) for i in range(n)]
 
 
 def _fallback2(out, claimed, a, b, row_fn) -> pd.Series:
@@ -1511,7 +1511,7 @@ def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
     f.put(f.b.match(FGC1L2), 1)
     f.put(f.b.match(L.GCPOINT), 1)
     f.put(f.b.match(L.MLS2), 2)
-    f.put(f.b.match(L._GC2LINE), 2)
+    f.put(f.b.match(_GC2LINE), 2)
     for pat in (FLINE_ANY, FPOINT2, FPOINTZ, FPOLY5):
         f.put(f.b.match(pat), 1)
     m = f.b.match(FMPOINT_ANY)
@@ -1523,9 +1523,8 @@ def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
 
 
 def length(s: pd.Series, scalar_fn) -> pd.Series:
-    """Float generalization of lanes.length: any canonical 2D LINESTRING
-    — per-row math.hypot fold (the scalar's exact sum order) over pairs
-    parsed in ONE bulk pass. r14: the old per-row replace/split/float
+    """Any canonical 2D LINESTRING — per-row math.hypot fold (the
+    scalar's exact sum order) over pairs parsed in ONE bulk pass. r14: the old per-row replace/split/float
     loop profiled at ~5 s/600k (the hottest line of st_clearance_ops);
     now the matched bodies parse through one lanes._body_xy call (arrow
     cast, bit-identical to float()); only the hypot fold itself stays

@@ -3510,10 +3510,6 @@ def st_clipped_area(subject: pd.Series, clip: pd.Series) -> pd.Series:
         out.append(G.area(G.parse_wkt(w)))
     return pd.Series(out, index=subject.index, dtype="float64")
 
-def _binary_bool(fn, a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([fn(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="object")
-
 def _rect_bounds_series(s: pd.Series):
     """(mask, x1, y1, x2, y2) for rows that are PROVABLY canonical rects
     (the _rect_fixed_mask contract: small-integer text, closed CCW walk,
@@ -4475,7 +4471,7 @@ def udf_table() -> dict:
     from . import geomb, grid, spatial_ext
 
     return {
-        **_REGISTRY, **geomb.REGISTRY_TEXT, **geomb.REGISTRY_B,
+        **_REGISTRY, **geomb.REGISTRY_TEXT,
         **spatial_ext.REGISTRY_EXT,
         **grid.REGISTRY_GRID,
         # singular/plural + dimension-tag aliases (PostGIS registers both)
@@ -4488,9 +4484,7 @@ def udf_table() -> dict:
 def register_spatial_functions(spark: SparkSession) -> None:
     """Name-parity registration so F.expr("ST_Area(g)") etc. resolve —
     the engine's stand-in for SedonaSqlExtensions
-    (reference airflow_dag/dag_geo_pipeline.py:20). Also registers the
-    `_B`-suffixed binary-carrier twins (functions/geomb.py), which chain
-    through WKB BinaryType instead of WKT text."""
+    (reference airflow_dag/dag_geo_pipeline.py:20)."""
     if getattr(spark, "_spark_graft_st_registered", False):
         # ~200 names × one py4j round trip each ≈ 0.5–1 s of driver time;
         # every registry query calls this, so make repeat calls free

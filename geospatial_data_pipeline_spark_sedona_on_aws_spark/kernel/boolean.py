@@ -104,9 +104,6 @@ def _trap_poly(lo, hi, y_lo: float, y_hi: float):
         pts += [((xl1 + xh1) / 2.0, y_hi)]
     return [pts] if len(pts) >= 3 else None
 
-def _mid_x(iv, ym):
-    return (_x_at(iv[0], ym) + _x_at(iv[1], ym)) / 2.0
-
 def intersection_traps(ga: list, gb: list):
     """Yield (lo_edge, hi_edge, y_lo, y_hi) trapezoids of ga ∩ gb."""
     ea, eb = _edges(ga), _edges(gb)

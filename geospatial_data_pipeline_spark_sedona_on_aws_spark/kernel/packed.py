@@ -1,21 +1,20 @@
-"""Packed numpy batch: the in-memory form of the binary (WKB) geometry
-carrier.
+"""Packed numpy batch: the engine's in-memory form of a geometry column
+inside a Python UDF.
 
-A whole Arrow batch of geometries decodes into ONE coordinate array plus
+A whole Arrow batch of geometries becomes ONE coordinate array plus
 offset tables, and every vectorizable operator (area, npoints, length,
 CRS transform, convex round buffer, centroid, envelope) runs as numpy
 array math over the entire batch. Carrier bodies (functions/geomb.py)
 take and return this form, so a chain of them inside one fused Python
-call (functions/chainrw.py) decodes each geometry input once and encodes
-only where a geometry value surfaces. `unpack_wkb` / `unpack_wkt` are
-those surface encoders.
+call (functions/chainrw.py) parses each text geometry input once and
+formats WKT only where a geometry value surfaces. Sedona passes its
+binary GeometryUDT between operators the same way (reference
+spark_job/process_geodata.py:102-139 chains five ST_ calls with zero
+text round trips).
 
-The WKB layout is the kernel's own ISO little-endian form
-(kernel/geomtypes.py:to_wkb), so the carrier interoperates with the
-registered ST_GeomFromWKB / ST_AsBinary functions. Sedona passes binary
-GeometryUDT between operators the same way (reference
-spark_job/process_geodata.py:102-139 chains five ST_ calls with zero text
-round trips).
+`pack_wkb` reads the kernel's own ISO little-endian WKB
+(kernel/geomtypes.py:to_wkb): the text edge sends it the rows its batch
+extracts do not claim, parsed one by one. `take` gathers rows.
 
 Scale note: everything here is per-Arrow-batch and row-local — no driver
 state, no shuffle implications.
@@ -24,9 +23,8 @@ Representation (one PackedBatch per Arrow batch):
     kind      int8 (n,)   WKB type code 1..6; 0 = SQL NULL;
                           -1 = a row held as its WKB bytes (in `fallback`):
                           Z / GEOMETRYCOLLECTION / big-endian input, or a
-                          row a scalar kernel produced. unpack_wkb and
-                          unpack_wkt emit such rows verbatim and every
-                          vectorized kernel sends them to its scalar path
+                          row a scalar kernel produced. Every vectorized
+                          kernel sends such rows to its scalar path
     geom_off  int64 (n+1,) ring-index range per geometry
     ring_off  int64 (R+1,) coord-index range per ring (rings stored OPEN:
                           no closing duplicate, like kernel/geom.py)
@@ -548,233 +546,27 @@ def _pack_one(b: bytes, code: int, u32, ring_lens, outer, chunks) -> int:
     return nr
 
 
-# ---------------------------------------------------------------- unpack
+# ------------------------------------------------------------------ rows
 
-_HDR = {c: b"\x01" + struct.pack("<I", c) for c in range(1, 8)}
-
-
-def _ring_bytes(arr: np.ndarray, closed: bool) -> bytes:
-    npts = len(arr) + (1 if closed and len(arr) else 0)
-    body = arr.tobytes()
-    if closed and len(arr):
-        body += arr[0].tobytes()
-    return struct.pack("<I", npts) + body
-
-
-def _unpack_uniform_poly1(p: PackedBatch):
-    """Vectorized WKB encode when every non-null row is a single-ring
-    POLYGON of the same vertex count. Returns None when not uniform."""
-    if p.fallback or not p.n:
-        return None
-    present = p.kind == POLYGON
-    if not present.any() or not ((p.kind == 0) | present).all():
-        return None
-    rpg = p.rings_per_geom()
-    if not (rpg[present] == 1).all() or (rpg[~present] != 0).any():
-        return None
-    rl = p.ring_len()
-    L = int(rl[0]) if len(rl) else 0
-    if L < 3 or not (rl == L).all():
-        return None
-    m = int(present.sum())
-    dt = np.dtype([("hdr", "u1", (13,)), ("xy", "<f8", ((L + 1) * 2,))])
-    arr = np.empty(m, dtype=dt)
-    arr["hdr"] = np.frombuffer(
-        b"\x01\x03\x00\x00\x00\x01\x00\x00\x00"
-        + struct.pack("<I", L + 1), dtype=np.uint8)
-    xy = arr["xy"].reshape(m, L + 1, 2)
-    rings = p.coords.reshape(m, L, 2)
-    xy[:, :L] = rings
-    xy[:, L] = rings[:, 0]
-    big = arr.tobytes()
-    w = dt.itemsize
-    out: list = [None] * p.n
-    j = 0
-    for i in np.flatnonzero(present):
-        out[i] = big[j * w:(j + 1) * w]
-        j += 1
-    return out
-
-
-def _emit_ragged(p: PackedBatch):
-    """Vectorized WKB encode for single-kind batches (r9 twin of
-    _pack_ragged): per-row byte lengths from the ring tables, headers
-    scattered at computed positions, coordinates written through the
-    header-knockout mask (stream order == row-major ring order). Returns
-    None when the batch doesn't qualify (the per-row encoder handles it),
-    byte-identical to GT.to_wkb otherwise."""
-    if p.fallback or not p.n:
-        return None
-    present = p.kind > 0
-    if not present.any():
-        return [None] * p.n
-    code = int(p.kind[present][0])
-    if code > 5 or not ((p.kind == 0) | (p.kind == code)).all():
-        return None
-    m = int(present.sum())
-    rpg = p.rings_per_geom()[present]          # rings per present row
-    ring_len = p.ring_len()                    # per ring, row-major
-    R = len(ring_len)
-    if code == POINT:
-        row_bytes = np.full(m, 21, dtype=np.int64)
-    elif code == LINESTRING:
-        # 0 or 1 ring per row; npts = ring len (0 when empty)
-        npts = np.zeros(m, dtype=np.int64)
-        npts[rpg > 0] = ring_len
-        row_bytes = 9 + 16 * npts
-    elif code == MULTIPOINT:
-        npts = np.zeros(m, dtype=np.int64)
-        npts[rpg > 0] = ring_len
-        row_bytes = 9 + 21 * npts
-    elif code == POLYGON:
-        per_ring = 4 + 16 * (ring_len + 1)     # count + closed ring
-        cum = np.zeros(R + 1, dtype=np.int64)
-        np.cumsum(per_ring, out=cum[1:])
-        go = p.geom_off[np.flatnonzero(present)]
-        go_end = p.geom_off[np.flatnonzero(present) + 1]
-        row_bytes = 9 + cum[go_end] - cum[go]
-    else:                                      # MULTILINESTRING
-        per_ring = 9 + 16 * ring_len           # member hdr + count + pts
-        cum = np.zeros(R + 1, dtype=np.int64)
-        np.cumsum(per_ring, out=cum[1:])
-        go = p.geom_off[np.flatnonzero(present)]
-        go_end = p.geom_off[np.flatnonzero(present) + 1]
-        row_bytes = 9 + cum[go_end] - cum[go]
-    starts = np.zeros(m, dtype=np.int64)
-    np.cumsum(row_bytes[:-1], out=starts[1:])
-    total = int(starts[-1] + row_bytes[-1]) if m else 0
-    out8 = np.empty(total, dtype=np.uint8)
-    hdr_mask = np.zeros(total, dtype=bool)     # True = header byte
-
-    def put_u32(pos: np.ndarray, val: np.ndarray):
-        vb = val.astype("<u4").view(np.uint8).reshape(-1, 4)
-        for i in range(4):
-            out8[pos + i] = vb[:, i]
-        idx = (pos[:, None] + np.arange(4)).ravel()
-        hdr_mask[idx] = True
-
-    def put_hdr5(pos: np.ndarray, c: int):
-        out8[pos] = 1
-        put_u32(pos + 1, np.full(len(pos), c, dtype=np.int64))
-        hdr_mask[pos] = True
-
-    put_hdr5(starts, code)
-    if code == POINT:
-        # fixed 16-byte payload; EMPTY rows carry NaN NaN
-        xy = np.full((m, 2), np.nan)
-        xy[rpg > 0] = p.coords
-        idx = (starts[:, None] + np.arange(5, 21)).ravel()
-        out8[idx] = xy.astype("<f8").view(np.uint8).reshape(m, 16).ravel()
-    elif code in (LINESTRING, MULTIPOINT):
-        put_u32(starts + 5, npts)
-        if code == MULTIPOINT and R:
-            # member headers every 21 bytes after the 9-byte row header
-            mb = np.repeat(starts + 9, npts) + 21 * _multi_arange(
-                np.zeros(m, dtype=np.int64), npts)
-            put_hdr5(mb, POINT)
-        cmask = ~hdr_mask
-        out8[cmask] = p.coords.astype("<f8").view(np.uint8).ravel()
-    else:
-        nrings = go_end - go
-        put_u32(starts + 5, nrings)
-        # per-ring header positions: ring r of row i sits at
-        # starts[i] + 9 + (cum[r] - cum[go[i]]); null rows own no rings,
-        # so the global ring order is exactly the present-row-major order
-        if R:
-            ring_pos = np.repeat(starts + 9 - cum[go], nrings) + cum[:-1]
-            if code == MULTILINESTRING:
-                put_hdr5(ring_pos, LINESTRING)
-                put_u32(ring_pos + 5, ring_len)
-            else:
-                put_u32(ring_pos, ring_len + 1)
-            # coordinate stream: each ring's points, POLYGON rings closed
-            if code == POLYGON:
-                src = _multi_arange(p.ring_off[:-1], ring_len + 1)
-                endpos = np.cumsum(ring_len + 1) - 1
-                src[endpos] = p.ring_off[:-1]
-                pts = p.coords[src]
-            else:
-                pts = p.coords
-            cmask = ~hdr_mask
-            out8[cmask] = pts.astype("<f8").view(np.uint8).ravel()
-    big = out8.tobytes()
-    out: list = [None] * p.n
-    ends = starts + row_bytes
-    j = 0
-    for i in np.flatnonzero(present):
-        out[i] = big[starts[j]:ends[j]]
-        j += 1
-    return out
-
-
-def unpack_wkb(p: PackedBatch) -> list:
-    """PackedBatch -> list of WKB bytes / None, byte-identical to
-    kernel/geomtypes.to_wkb of the same geometry."""
-    fast = _unpack_uniform_poly1(p)
-    if fast is not None:
-        return fast
-    try:
-        fast = _emit_ragged(p)
-    except (ValueError, IndexError, OverflowError):
-        fast = None
-    if fast is not None:
-        return fast
-    out: list = [None] * p.n
-    ro, go = p.ring_off, p.geom_off
-    c = p.coords
-    pk = struct.pack
-    for i in range(p.n):
-        k = int(p.kind[i])
-        if k == 0:
-            continue
-        if k == -1:
-            out[i] = p.fallback[i]
-            continue
-        r0, r1 = go[i], go[i + 1]
-        if k == POINT:
-            if r0 == r1:
-                out[i] = _HDR[POINT] + pk("<2d", float("nan"), float("nan"))
-            else:
-                out[i] = _HDR[POINT] + c[ro[r0]].tobytes()
-        elif k == LINESTRING:
-            arr = c[ro[r0]:ro[r1]] if r1 > r0 else c[:0]
-            out[i] = _HDR[LINESTRING] + _ring_bytes(arr, closed=False)
-        elif k == POLYGON:
-            parts = [_HDR[POLYGON], pk("<I", r1 - r0)]
-            for r in range(r0, r1):
-                parts.append(_ring_bytes(c[ro[r]:ro[r + 1]], closed=True))
-            out[i] = b"".join(parts)
-        elif k == MULTIPOINT:
-            npts = int(ro[r1] - ro[r0]) if r1 > r0 else 0
-            parts = [_HDR[MULTIPOINT], pk("<I", npts)]
-            base = ro[r0] if r1 > r0 else 0
-            for j in range(npts):
-                parts.append(_HDR[POINT])
-                parts.append(c[base + j].tobytes())
-            out[i] = b"".join(parts)
-        elif k == MULTILINESTRING:
-            parts = [_HDR[MULTILINESTRING], pk("<I", r1 - r0)]
-            for r in range(r0, r1):
-                parts.append(_HDR[LINESTRING])
-                parts.append(_ring_bytes(c[ro[r]:ro[r + 1]], closed=False))
-            out[i] = b"".join(parts)
-        else:  # MULTIPOLYGON
-            # group rings into polygons at each outer flag
-            polys: list = []
-            for r in range(r0, r1):
-                if p.outer[r] or not polys:
-                    polys.append([r])
-                else:
-                    polys[-1].append(r)
-            parts = [_HDR[MULTIPOLYGON], pk("<I", len(polys))]
-            for rings in polys:
-                parts.append(_HDR[POLYGON])
-                parts.append(pk("<I", len(rings)))
-                for r in rings:
-                    parts.append(_ring_bytes(c[ro[r]:ro[r + 1]],
-                                             closed=True))
-            out[i] = b"".join(parts)
-    return out
+def take(p: PackedBatch, idx) -> PackedBatch:
+    """Rows idx of p as a new batch, in idx order; -1 gives a NULL row.
+    The one row gather of the packed form: the text edge orders its
+    pieces with it and expands a batch of distinct values to the rows
+    that repeat them."""
+    idx = np.asarray(idx, dtype=np.int64)
+    if len(idx) == p.n and (idx == np.arange(p.n)).all():
+        return p
+    live = idx >= 0
+    src = np.where(live, idx, 0)
+    kind = np.where(live, p.kind[src] if p.n else 0, 0)
+    nr = np.where(live, p.rings_per_geom()[src] if p.n else 0, 0)
+    rings = _multi_arange(p.geom_off[src], nr)
+    ring_len = p.ring_len()[rings]
+    fallback = {i: p.fallback[j] for i, j in zip(
+        np.flatnonzero(kind == -1).tolist(), idx[kind == -1].tolist())}
+    return assemble(kind, nr, ring_len,
+                    p.coords[_multi_arange(p.ring_off[rings], ring_len)],
+                    p.outer[rings], fallback)
 
 
 def row_tgeom(p: PackedBatch, i: int):
@@ -804,16 +596,6 @@ def row_tgeom(p: PackedBatch, i: int):
         else:
             polys[-1].append(rings[r - r0])
     return ("POLYGON" if k == POLYGON else "MULTIPOLYGON", polys)
-
-
-def unpack_wkt(p: PackedBatch) -> list:
-    """PackedBatch -> canonical WKT strings (the user-facing text edge;
-    identical text to GT.to_wkt of the same geometry)."""
-    out: list = [None] * p.n
-    for i in range(p.n):
-        if p.kind[i] != 0:
-            out[i] = GT.to_wkt(row_tgeom(p, i))
-    return out
 
 
 # ----------------------------------------------------- vectorized measures

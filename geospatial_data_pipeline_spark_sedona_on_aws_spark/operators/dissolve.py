@@ -58,25 +58,6 @@ def is_rect_sql(arr: str) -> str:
             f" AND {e(3)} = {e(5)} AND {e(6)} = {e(8)} AND {e(9)} = {e(1)}"
             f" AND {e(10)} = {e(2)} AND {e(3)} > {e(1)} AND {e(6)} > {e(2)})")
 
-def wkt_nums(col):
-    """Column form of wkt_nums_sql (names/fragments go through the one-parse
-    SQL path; Column inputs keep the operator-built tree)."""
-    if isinstance(col, str):
-        return F.expr(wkt_nums_sql(col))
-    trimmed = F.regexp_replace(col, r"^[^-0-9.]+|[^-0-9.eE+]+$", "")
-    return F.split(trimmed, "[^-0-9.eE+]+").cast("array<double>")
-
-def is_rect(arr):
-    """Column form of is_rect_sql (see there for semantics)."""
-    if isinstance(arr, str):
-        return F.expr(is_rect_sql(arr))
-    e = lambda i: F.try_element_at(arr, F.lit(i))  # noqa: E731
-    return (
-        (F.size(arr) == 10)
-        & (e(1) == e(7)) & (e(2) == e(4)) & (e(3) == e(5)) & (e(6) == e(8))
-        & (e(9) == e(1)) & (e(10) == e(2)) & (e(3) > e(1)) & (e(6) > e(2))
-    )
-
 def rect_bounds(col: str) -> list:
     """(x1, y1, x2, y2) Columns of a canonical-rectangle WKT column (a name
     or SQL fragment), NULL when the WKT is not a canonical rectangle. Meant

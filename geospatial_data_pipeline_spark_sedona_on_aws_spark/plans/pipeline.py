@@ -2043,13 +2043,13 @@ def st_transform_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # carrier chain: the degree-rect WKT parses once at the edge, both
     # projections and the coordinate extraction run off one packed batch
-    # (ST_Coords_B emits the same closed-ring number order the WKT-text
+    # (ST_Coords emits the same closed-ring number order the WKT-text
     # split produced, so the try_element_at positions are unchanged)
     wkt = ("concat_ws('', 'POLYGON ((', lon1, ' ', lat1, ', ', lon2, ' ',"
            " lat1, ', ', lon2, ' ', lat2, ', ', lon1, ' ', lat2, '))')")
-    utm = f"ST_Transform_B(ST_GeomFromWKT_B({wkt}), 'EPSG:4326', 'EPSG:32722')"
-    fwd = f"ST_Coords_B({utm})"
-    back = f"ST_Coords_B(ST_Transform_B({utm}, 'EPSG:32722', 'EPSG:4326'))"
+    utm = f"ST_Transform(ST_GeomFromWKT({wkt}), 'EPSG:4326', 'EPSG:32722')"
+    fwd = f"ST_Coords({utm})"
+    back = f"ST_Coords(ST_Transform({utm}, 'EPSG:32722', 'EPSG:4326'))"
     return chainrw.select_st(
         deg,
         "property_id",
@@ -2317,13 +2317,16 @@ FROM j
 
 
 def st_binary_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The DE-9IM predicate family on the WKB BINARY carrier
-    (functions/geomb.py `_B` twins) — the same parcel×region pairs, the
-    same interval closed forms, the SAME oracle as st_predicates: a
-    standing equivalence pin between the text and binary surfaces on
-    real data, and the carrier's join-predicate story (a 100 TB
-    pre-filter stage evaluates these against packed rect bounds with
-    zero per-row text)."""
+    """The DE-9IM predicate family on the packed carrier
+    (functions/geomb.py): each predicate reads ST_GeomFromWKT of its
+    operands, so the projection fuser runs the six as packed bodies over
+    one decode per distinct operand. The same parcel×region pairs, the
+    same interval closed forms, the SAME oracle as st_predicates, whose
+    lone text UDFs take the lanes: a standing equivalence pin between
+    the fused packed path and the lane path on real data, and the
+    carrier's join-predicate story (a 100 TB pre-filter stage evaluates
+    these against packed rect bounds with zero per-row text)."""
+    from ..functions import chainrw
     from ..functions.spatial import register_spatial_functions
 
     register_spatial_functions(spark)
@@ -2333,19 +2336,16 @@ def st_binary_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "inner")
     shifted = fixtures.rect_wkt_sql(
         "x1 + property_id % 2", "y1", "x2 + property_id % 2", "y2")
-    return j.selectExpr(
+    a, b = "ST_GeomFromWKT(land_geometry)", "ST_GeomFromWKT(region_geometry)"
+    return chainrw.select_st(
+        j,
         "property_id",
-        "ST_GeomFromWKT_B(land_geometry) AS __a",
-        "ST_GeomFromWKT_B(region_geometry) AS __b",
-        f"ST_GeomFromWKT_B({shifted}) AS __s",
-    ).selectExpr(
-        "property_id",
-        "ST_Intersects_B(__a, __b) AS intersects_rr",
-        "ST_Disjoint_B(__a, __b) AS disjoint_rr",
-        "ST_Touches_B(__a, __b) AS touches_rr",
-        "ST_Overlaps_B(__a, __b) AS overlaps_rr",
-        "ST_Equals_B(__a, __s) AS equals_shift",
-        "ST_Crosses_B(__a, __b) AS crosses_rr",
+        f"ST_Intersects({a}, {b}) AS intersects_rr",
+        f"ST_Disjoint({a}, {b}) AS disjoint_rr",
+        f"ST_Touches({a}, {b}) AS touches_rr",
+        f"ST_Overlaps({a}, {b}) AS overlaps_rr",
+        f"ST_Equals({a}, ST_GeomFromWKT({shifted})) AS equals_shift",
+        f"ST_Crosses({a}, {b}) AS crosses_rr",
     )
 
 

@@ -81,10 +81,10 @@ QUERIES: dict[str, QueryFn] = {
     # unchanged — plus the q3/nation_revenue/top_customers rotation rows,
     # judge-replica-verified twice) ---
     "st_buffer_round": P.st_buffer_round,       # round-join ε-buffer
-    "st_binary_carrier_ops": P.st_binary_carrier_ops,  # r8: WKB carrier breadth
+    "st_binary_carrier_ops": P.st_binary_carrier_ops,  # r8: packed carrier breadth
     "st_name_parity_ops": P.st_name_parity_ops,  # r8: name-parity batch
     "st_union_aggr_salted": P.st_union_aggr_salted,  # r8: two-phase UDAF
-    "st_binary_predicates": P.st_binary_predicates,  # r8: DE-9IM on WKB
+    "st_binary_predicates": P.st_binary_predicates,  # r8: DE-9IM on the carrier
     "st_buffer_line_point": P.st_buffer_line_point,  # r7: lineal/puntal
     "st_affine_ops": P.st_affine_ops,           # r7: affine/precision
     "st_measure_ops": P.st_measure_ops,         # r7: distance measures
@@ -503,9 +503,9 @@ _R7_WINDOW = [
 ]
 # ======================================================================
 # Round-8 rotation (VERDICT r7 item 7): tier 1 = (a) the r8 blast radius
-# — the binary-carrier rewires (st_buffer_round / st_transform_roundtrip
-# / st_transform_utm now chain on WKB through functions/geomb.py +
-# kernel/packed.py), the brand-new stdlib-JPEG decode query, the
+# — the carrier rewires (st_buffer_round / st_transform_roundtrip
+# / st_transform_utm now chain on packed batches through
+# functions/geomb.py + kernel/packed.py), the brand-new stdlib-JPEG decode query, the
 # chunk-folded grouped UDAFs (st_aggr_ops), and every query downstream
 # of the r7-advice scalar fixes (_is_areal whitespace, Z/GC buffer
 # dispatch, GC perimeter, degenerate ST_Expand) — the fused==verbatim
@@ -515,9 +515,9 @@ _R7_WINDOW = [
 _R8_WINDOW = [
     # --- binary-carrier rewires + new query + UDAF fold (r8 code) ---
     "multimodal_jpeg_decode",    # NEW: stdlib baseline JPEG round trip
-    "st_buffer_round",           # WKB carrier + vectorized convex walk
-    "st_transform_roundtrip",    # WKB carrier, double projection
-    "st_transform_utm",          # WKB carrier + ST_Coords_B extraction
+    "st_buffer_round",           # packed carrier + vectorized convex walk
+    "st_transform_roundtrip",    # packed carrier, double projection
+    "st_transform_utm",          # packed carrier + ST_Coords extraction
     "st_aggr_ops",               # chunk-folded UDAFs (bounded hold)
     # --- r7-advice scalar fixes' blast radius ---
     "st_buffer_line_point",      # lineal/puntal buffer dispatch changed
@@ -544,7 +544,7 @@ _R8_WINDOW = [
     "set_ops",
     "top_customers_per_nation",
     "training_mix",
-    "st_binary_predicates",      # NEW r8 late: DE-9IM on the WKB carrier
+    "st_binary_predicates",      # NEW r8 late: DE-9IM on the carrier
     # (udtf_token_explode deferred to r9 — cumulative-ledger green,
     # text family stays seated via repetition_scores + training_mix;
     # brand-new code earns the gate first)
@@ -565,7 +565,7 @@ _R8_WINDOW = [
     "distinct_agg",
     "cube_sales",
     "customers_without_orders",
-    "st_binary_carrier_ops",     # NEW r8 late: widened WKB carrier
+    "st_binary_carrier_ops",     # NEW r8 late: widened packed carrier
     # --- next-stalest family rows (5; window_zoo deferred — judge
     # replica r7 keeps it verified) ---
     "exact_dedup",
@@ -584,7 +584,7 @@ _R8_WINDOW = [
 # Round-9 rotation (VERDICT r8 item 7): tier 1 = (a) the r9 blast radius
 # — the chain rewriter (st_point_line_ops runs the reference spelling on
 # the WKB carrier), the ragged packed codec + typed text lanes + box
-# predicate lanes + factorize-uniques parse (every *_B query), the
+# predicate lanes + factorize-uniques parse (every carrier query), the
 # canonical puntal/lineal hygiene fixed points (every hygiene caller:
 # the crop chains, st_accessors, st_predicates), the hot-cell block
 # decomposition (both range-join doors + the fallback), the auto-salted

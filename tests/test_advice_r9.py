@@ -3,8 +3,9 @@
 1. jpeg_decode converts a stray mid-block restart marker (_RestartMarker
    escaping _BitReader._fill when no restart is expected) into JpegError —
    the documented 'corrupt streams raise JpegError' contract.
-2. st_bufferround_b honors PER-ROW quadsegs: a batch with varying q must
-   match the text twin row-for-row, not apply the first q batch-wide.
+2. the carrier's ST_BufferRound honors PER-ROW quadsegs: a batch with
+   varying q must match the scalar row-for-row, not apply the first q
+   batch-wide.
 3. _unary_union on a mixed-dimension GEOMETRYCOLLECTION preserves the
    lineal/puntal members alongside the areal union (PostGIS semantics),
    instead of silently dropping them.
@@ -24,7 +25,6 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.multimodal.jpegcodec import (
@@ -48,32 +48,32 @@ def test_stray_restart_marker_raises_jpegerror():
         jpeg_decode(corrupt)
 
 
-# -------------------------------------- 2. per-row quadsegs in _B buffer
+# ------------------------------- 2. per-row quadsegs in the carrier buffer
 
 def test_bufferround_b_per_row_quadsegs():
+    """The registered ST_BufferRound (the carrier body behind the
+    one-node adapter) honours each row's own quadsegs."""
+    fn = S.udf_table()["ST_BufferRound"].func
     wkts = ["POINT (0 0)", "POINT (10 10)", "POINT (-5 3)",
             "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"]
     qs = [4, 16, 8, 12]
     ds = [1.0, 2.0, 0.5, 1.0]
-    b = pd.Series([GT.to_wkb(GT.parse_wkt(w)) for w in wkts], dtype=object)
-    out = GB.REGISTRY_B["ST_BufferRound_B"].func(
-        b, pd.Series(ds), pd.Series(qs, dtype="int64"))
+    g = pd.Series(wkts, dtype=object)
+    out = fn(g, pd.Series(ds), pd.Series(qs, dtype="int64"))
     for i, (w, d, q) in enumerate(zip(wkts, ds, qs)):
         exp = S._buffer_round(w, d, q)
-        got = GT.to_wkt(GT.parse_wkb(out.iloc[i]))
-        ne = len(GT.parse_wkt(exp)[1][0][0])
-        ng = len(GT.parse_wkb(out.iloc[i])[1][0][0])
-        assert ng == ne, f"row {i}: q={q} -> {ng} verts, text twin {ne}"
+        got = out.iloc[i]
         ge, gg = GT.parse_wkt(exp), GT.parse_wkt(got)
+        ne, ng = len(ge[1][0][0]), len(gg[1][0][0])
+        assert ng == ne, f"row {i}: q={q} -> {ng} verts, text twin {ne}"
         for pe, pg in zip(ge[1][0][0], gg[1][0][0]):
             assert abs(pe[0] - pg[0]) < 1e-9 and abs(pe[1] - pg[1]) < 1e-9
 
     # constant-q batches still take the vectorized walk and match
-    out2 = GB.REGISTRY_B["ST_BufferRound_B"].func(
-        b, pd.Series(ds), pd.Series([8] * 4, dtype="int64"))
+    out2 = fn(g, pd.Series(ds), pd.Series([8] * 4, dtype="int64"))
     for i, (w, d) in enumerate(zip(wkts, ds)):
         exp = S._buffer_round(w, d, 8)
-        assert len(GT.parse_wkb(out2.iloc[i])[1][0][0]) == \
+        assert len(GT.parse_wkt(out2.iloc[i])[1][0][0]) == \
             len(GT.parse_wkt(exp)[1][0][0])
 
 

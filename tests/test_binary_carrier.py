@@ -1,18 +1,21 @@
-"""Binary (WKB) carrier == text (WKT) carrier, property-tested per family
-(r7 verdict item 8: the perf change must not silently shift semantics).
+"""Packed carrier == text surface, property-tested per family (r7
+verdict item 8: the perf change must not silently shift semantics).
 
 Three layers:
-  1. kernel/packed.py codec: pack/unpack round trips are byte-identical
-     to geomtypes.to_wkb, and the vectorized measures equal the typed
-     kernel scalar-for-scalar, over hypothesis-generated geometry.
+  1. kernel/packed.py and the carrier's text edge: packed rows equal the
+     typed kernel's geometry (pack_wkb against GT.to_wkb, geomb.decode
+     against GT.parse_wkt, the WKT encoder against GT.to_wkt), and the
+     vectorized measures equal the typed kernel scalar-for-scalar, over
+     hypothesis-generated geometry.
   2. the vectorized convex round buffer equals the scalar walk
      coordinate-for-coordinate (1e-9, trig-libm ulp slack) with the same
      ring structure and vertex counts.
-  3. the registered `_B` UDF surface — each `_B` name is its packed
-     body behind the one adapter, the same bodies the fuser's carrier
-     chains run — equals the text surface through a live SparkSession on
-     a mixed batch (rects, L-shapes, lines, points, multis, holes, Z, GC,
-     NULLs).
+  3. fused == lone through a live SparkSession on a mixed batch (rects,
+     L-shapes, lines, points, multis, holes, Z, GC, NULLs): a projection
+     through chainrw.select_st runs its chains as packed bodies, the same
+     text through plain selectExpr runs the registered UDFs call by call.
+     tests/test_path_parity.py covers transform, envelope, buffer,
+     GeomFromWKT, contains and within; these cover the rest.
 """
 
 from __future__ import annotations
@@ -89,12 +92,84 @@ def test_prop_packed_codec_round_trips(seed):
     tg = [GT.parse_wkt(w) if w is not None else None for w in wkts]
     wkb = [GT.to_wkb(t) if t is not None else None for t in tg]
     p = PK.pack_wkb(wkb)
-    assert PK.unpack_wkb(p) == wkb
-    for i, w in enumerate(PK.unpack_wkt(p)):
-        exp = GT.to_wkt(tg[i]) if tg[i] is not None else None
-        assert w == exp
-    # the carrier's whole-batch text encoder prints the same text
-    assert GB._wkt_batch(p) == PK.unpack_wkt(p)
+    assert _rows_wkb(p) == wkb
+    # the carrier's whole-batch text encoder prints GT.to_wkt's text
+    assert GB._wkt_batch(p) == [None if t is None else GT.to_wkt(t)
+                                for t in tg]
+
+
+def _rows_wkb(p) -> list:
+    """Each packed row written back through the typed kernel."""
+    return [None if p.kind[i] == 0 else GT.to_wkb(PK.row_tgeom(p, i))
+            for i in range(p.n)]
+
+
+def _mixed_column(rng: random.Random, n: int) -> list:
+    """Seeded rows of every shape the text edge meets: canonical points,
+    lines and multipoints, CCW and CW rect walks (closed and open),
+    17-digit floats, a hole, MULTIPOLYGON, Z, EMPTY and NULL."""
+    out = []
+    for i in range(n):
+        x, y = rng.randint(-900, 900), rng.randint(-900, 900)
+        w, h = rng.randint(1, 50), rng.randint(1, 50)
+        fx, fy = rng.uniform(-200, 200), rng.uniform(-200, 200)
+        out.append([
+            f"POINT ({x} {y})",
+            f"POINT ({fx!r} {fy!r})",
+            f"LINESTRING ({x} {y}, {fx!r} {fy!r}, {x + w} {y})",
+            f"MULTIPOINT ({x} {y}, {fx!r} {fy!r})",
+            f"POLYGON (({x} {y}, {x + w} {y}, {x + w} {y + h},"
+            f" {x} {y + h}, {x} {y}))",
+            f"POLYGON (({x} {y + h}, {x + w} {y + h}, {x + w} {y},"
+            f" {x} {y}))",                                     # CW, open
+            f"POLYGON (({fx!r} {fy!r}, {fx + w!r} {fy!r}, {fx + w!r}"
+            f" {fy - h!r}, {fx!r} {fy - h!r}, {fx!r} {fy!r}))",  # CW float
+            f"POLYGON (({x} {y}, {x + 40} {y}, {x + 40} {y + 40},"
+            f" {x} {y + 40}), ({x + 5} {y + 5}, {x + 5} {y + 9},"
+            f" {x + 9} {y + 9}, {x + 9} {y + 5}))",
+            f"MULTIPOLYGON ((({x} {y}, {x + w} {y}, {x + w} {y + h},"
+            f" {x} {y})), (({x + 99} {y}, {x + 99} {y + 3},"
+            f" {x + 96} {y})))",
+            f"POINT Z ({x} {y} {w})",
+            "LINESTRING EMPTY",
+            "POLYGON EMPTY",
+            None,
+        ][i % 13])
+    return out
+
+
+@pytest.mark.parametrize("n,distinct", [(390, 390), (6500, 91)])
+def test_decode_equals_scalar_parse_on_mixed_column(monkeypatch, n,
+                                                    distinct):
+    """Every row of a mixed-kind column decodes to GT.parse_wkt's
+    geometry, whichever piece of the text edge claims it; a column with
+    an unparsable row raises as the scalar parser does. The second case
+    is a >= 4096-row column of few distinct values, so it takes the
+    factorize-and-gather path."""
+    import pandas as pd
+
+    rng = random.Random(n)
+    base = _mixed_column(rng, distinct)
+    rows = [base[i % distinct] for i in range(n)]
+    parsed: list = []
+    real = GB._parse
+
+    def parse(s):
+        parsed.append(len(s))
+        return real(s)
+
+    monkeypatch.setattr(GB, "_parse", parse)
+    p = GB.decode(pd.Series(rows, dtype=object))
+    assert p.n == n
+    assert parsed == [n if n < 4096 else len(set(base) - {None})]
+    for i, w in enumerate(rows):
+        assert PK.row_tgeom(p, i) == (None if w is None
+                                      else GT.parse_wkt(w)), w
+    bad = pd.Series(rows[:20] + ["POLYGON ((0 0, 1 1, 0 0"], dtype=object)
+    with pytest.raises(Exception) as scalar:
+        GT.parse_wkt(bad.iloc[-1])
+    with pytest.raises(scalar.type):
+        GB.decode(bad)
 
 
 def _long_float_rings(rng: random.Random, n: int) -> list:
@@ -210,7 +285,7 @@ def _repr_rects(rng: random.Random, n: int) -> list:
 
 
 def _hygiene_wkb(s):
-    """ST_GeomFromWKT per row, WKB out: typed parse, 2D areal rows
+    """ST_GeomFromWKT per row, as WKB: typed parse, 2D areal rows
     normalized (spatial._geom_from_wkt without its WKT round trip, which
     would print -0 as 0)."""
     if s is None:
@@ -223,17 +298,19 @@ def _hygiene_wkb(s):
 
 
 def test_geomfromwkt_b_rect_fast_path_matches_scalar(monkeypatch):
-    """The text edge's fast rows skip the scalar parser and
-    ST_GeomFromWKT_B equals the text ST_GeomFromWKT's hygiene as WKB — in
+    """The text edge's fast rows skip the scalar parser, and decode +
+    the ST_GeomFromWKT body equal the text ST_GeomFromWKT's hygiene — in
     particular float coordinates parse to the same double as float() (a
     non-correctly-rounded parse differs in the last ulp on about one
-    17-digit repr in six)."""
-    fn = GB.REGISTRY_B["ST_GeomFromWKT_B"].func
+    17-digit repr in six), and a CW walk is reversed by the hygiene, not
+    by the parse."""
     import pandas as pd
 
     fast_rows = [
         "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",      # closed integer rect
         "POLYGON ((0 0, 4 0, 4 4, 0 4))",           # open integer rect
+        "POLYGON ((0 4, 4 4, 4 0, 0 0, 0 4))",      # CW walk
+        "POLYGON ((0 4, 4 4, 4 0, 0 0))",           # open CW walk
         "POLYGON ((-52.35 -11.16, -52.34 -11.16, -52.34 -11.15,"
         " -52.35 -11.15))",                          # float rect (concat)
         "POLYGON ((-56.49 -11.3, -56.480000000000004 -11.3,"
@@ -248,7 +325,7 @@ def test_geomfromwkt_b_rect_fast_path_matches_scalar(monkeypatch):
         "MULTIPOINT (1.0000000000000002 2, 3 4e2)",
     ] + _repr_rects(random.Random(7), 400)
     slow_rows = [
-        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW
+        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW, left first
         None,
         "POLYGON ((0 0, 10 0, 10 2, 2 2, 2 10, 0 10))",  # L-shape
         "POLYGON Z ((0 0 1, 4 0 1, 4 4 1, 0 4 1))",
@@ -259,114 +336,132 @@ def test_geomfromwkt_b_rect_fast_path_matches_scalar(monkeypatch):
     rows = fast_rows + slow_rows
     exp = [_hygiene_wkb(s) for s in rows]
     seen = []
-    real = GB._wkt_to_wkb
+    real = GT.parse_wkt
 
     def scalar(s):
         seen.append(s)
         return real(s)
 
-    monkeypatch.setattr(GB, "_wkt_to_wkb", scalar)
-    got = fn(pd.Series(rows)).tolist()
-    for g, e, s in zip(got, exp, rows):
+    monkeypatch.setattr(GT, "parse_wkt", scalar)
+    p = GB._normalize(GB.decode(pd.Series(rows)))
+    monkeypatch.setattr(GT, "parse_wkt", real)
+    for g, e, s in zip(_rows_wkb(p), exp, rows):
         assert g == e, s
     assert not set(seen) & set(fast_rows), set(seen) & set(fast_rows)
+    assert set(seen) == set(slow_rows) - {None}
+
+
+def test_cw_rect_batch_takes_no_scalar_parse(monkeypatch):
+    """A column of CW rect walks, integer and float, closed and open, is
+    claimed whole by the text edge: zero GT.parse_wkt calls, the walk
+    kept in its order by the decode, and reversed (as the scalar
+    ST_GeomFromWKT reverses it) only by the hygiene body."""
+    import pandas as pd
+
+    rng = random.Random(13)
+    rows = []
+    for i in range(600):
+        a, b = rng.uniform(-200, 200), rng.uniform(-200, 200)
+        c, d = a + rng.uniform(1e-3, 9), b - rng.uniform(1e-3, 9)
+        if i % 2:
+            a, b, c, d = (str(round(v)) for v in (a, b, c + 1, d - 1))
+        else:
+            a, b, c, d = map(repr, (a, b, c, d))
+        close = f", {a} {b}" if i % 3 else ""
+        rows.append(f"POLYGON (({a} {b}, {c} {b}, {c} {d}, {a} {d}{close}))")
+    calls = []
+    real = GT.parse_wkt
+    monkeypatch.setattr(GT, "parse_wkt",
+                        lambda s: calls.append(s) or real(s))
+    p = GB.decode(pd.Series(rows))
+    assert calls == []
+    monkeypatch.setattr(GT, "parse_wkt", real)
+    for i, w in enumerate(rows):
+        assert PK.row_tgeom(p, i) == GT.parse_wkt(w), w
+    q = GB._normalize(p)
+    for i, w in enumerate(rows):
+        assert GT.to_wkt(PK.row_tgeom(q, i)) == S._geom_from_wkt(w), w
+
+
+def _fused_vs_lone(spark, df, exprs) -> list:
+    """(fused row, lone row) pairs of one projection, ordered by id: the
+    fused side must actually run packed chains."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
+        register_spatial_functions,
+    )
+
+    register_spatial_functions(spark)
+    fz = CR._Fusion()
+    for e in exprs:
+        fz.emit(CR._Expr(CR._parse(e)[0]))
+    assert fz.packed()
+    fused = CR.select_st(df, "id", *exprs).orderBy("id").collect()
+    lone = df.selectExpr("id", *exprs).orderBy("id").collect()
+    assert len(fused) == len(lone) > 0
+    return list(zip(fused, lone))
 
 
 @pytest.mark.usefixtures("spark")
 def test_binary_surface_equals_text_surface(spark):
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        register_spatial_functions,
-    )
-
-    register_spatial_functions(spark)
+    """Fused packed measures == the lone text UDFs (lanes or scalar)."""
     rng = random.Random(404)
     wkts = _random_wkts(rng, 40)
     df = spark.createDataFrame(
         [(i, w) for i, w in enumerate(wkts)], "id int, g string")
-    df.createOrReplaceTempView("bin_vs_text")
-    rows = spark.sql("""
-      SELECT id,
-             ST_AsText_B(ST_GeomFromWKT_B(g)) AS rt_b,
-             ST_AsText(ST_GeomFromWKT(g)) AS rt_t,
-             ST_Area_B(ST_GeomFromWKT_B(g)) AS area_b,
-             ST_Area(ST_GeomFromWKT(g)) AS area_t,
-             ST_NPoints_B(ST_GeomFromWKT_B(g)) AS np_b,
-             ST_NPoints(ST_GeomFromWKT(g)) AS np_t,
-             ST_Length_B(ST_GeomFromWKT_B(g)) AS len_b,
-             ST_Length(ST_GeomFromWKT(g)) AS len_t,
-             ST_Area_B(ST_BufferRound_B(ST_GeomFromWKT_B(g),
-                 1 + id % 3, 8)) AS buf_b,
-             ST_Area(ST_BufferRound(ST_GeomFromWKT(g),
-                 1 + id % 3, 8)) AS buf_t
-      FROM bin_vs_text ORDER BY id
-    """).collect()
-    for r in rows:
-        assert r["rt_b"] == r["rt_t"], r
-        for pair in (("area_b", "area_t"), ("len_b", "len_t")):
-            a, b = r[pair[0]], r[pair[1]]
-            assert (a is None) == (b is None), r
+    g = "ST_GeomFromWKT(g)"
+    pairs = _fused_vs_lone(spark, df, [
+        f"ST_AsText({g}) AS rt", f"ST_Area({g}) AS area",
+        f"ST_NPoints({g}) AS np", f"ST_Length({g}) AS len",
+        f"ST_Area(ST_BufferRound({g}, 1 + id % 3, 8)) AS buf"])
+    for f, t in pairs:
+        assert f["rt"] == t["rt"], (f, t)
+        assert f["np"] == t["np"], (f, t)
+        for k in ("area", "len"):
+            a, b = f[k], t[k]
+            assert (a is None) == (b is None), (f, t)
             if a is not None and a == a and b == b:
-                assert abs(a - b) < 1e-9, r
-        assert r["np_b"] == r["np_t"], r
-        a, b = r["buf_b"], r["buf_t"]
-        assert (a is None) == (b is None), r
+                assert abs(a - b) < 1e-9, (f, t)
+        a, b = f["buf"], t["buf"]
+        assert (a is None) == (b is None), (f, t)
         if a is not None:
-            assert abs(a - b) < 1e-6 * max(1.0, abs(b)), r
+            assert abs(a - b) < 1e-6 * max(1.0, abs(b)), (f, t)
 
 
 @pytest.mark.usefixtures("spark")
 def test_binary_shape_ops_equal_text_surface(spark):
-    """r8 late widening: ST_Centroid_B / ST_Envelope_B / ST_X_B / ST_Y_B
-    == their text twins over the mixed corpus (GEOMETRYCOLLECTION rows
-    excluded — ST_Centroid raises on GC on BOTH surfaces)."""
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        register_spatial_functions,
-    )
-
-    register_spatial_functions(spark)
+    """Fused ST_Centroid / ST_Envelope / ST_X / ST_Y == their lone text
+    UDFs over the mixed corpus (GEOMETRYCOLLECTION rows excluded —
+    ST_Centroid raises on GC on BOTH paths)."""
     rng = random.Random(71)
     wkts = [w for w in _random_wkts(rng, 40)
             if w is None or not w.startswith("GEOMETRYCOLLECTION")]
     df = spark.createDataFrame(
         [(i, w) for i, w in enumerate(wkts)], "id int, g string")
-    df.createOrReplaceTempView("bin_shape")
-    rows = spark.sql("""
-      SELECT id,
-             ST_AsText_B(ST_Centroid_B(ST_GeomFromWKT_B(g))) AS c_b,
-             ST_Centroid(ST_GeomFromWKT(g)) AS c_t,
-             ST_AsText_B(ST_Envelope_B(ST_GeomFromWKT_B(g))) AS e_b,
-             ST_Envelope(ST_GeomFromWKT(g)) AS e_t,
-             ST_X_B(ST_Centroid_B(ST_GeomFromWKT_B(g))) AS x_b,
-             ST_X(ST_Centroid(ST_GeomFromWKT(g))) AS x_t,
-             ST_Y_B(ST_Centroid_B(ST_GeomFromWKT_B(g))) AS y_b,
-             ST_Y(ST_Centroid(ST_GeomFromWKT(g))) AS y_t
-      FROM bin_shape ORDER BY id
-    """).collect()
+    c = "ST_Centroid(ST_GeomFromWKT(g))"
+    pairs = _fused_vs_lone(spark, df, [
+        f"ST_AsText({c}) AS c", "ST_AsText(ST_Envelope(ST_GeomFromWKT(g)))"
+        " AS e", f"ST_X({c}) AS x", f"ST_Y({c}) AS y"])
     n_checked = 0
-    for r in rows:
-        # both surfaces fold the centroid sums left to right and print
-        # the shortest repr: the same text
-        assert r["c_b"] == r["c_t"], r
-        n_checked += r["c_b"] is not None
-        assert (r["e_b"] is None) == (r["e_t"] is None), r
-        if r["e_b"] is not None:
-            assert r["e_b"] == r["e_t"], r
-        for a, t in (("x_b", "x_t"), ("y_b", "y_t")):
-            va, vt = r[a], r[t]
+    for f, t in pairs:
+        # both paths fold the centroid sums left to right and print the
+        # shortest repr: the same text
+        assert f["c"] == t["c"], (f, t)
+        n_checked += f["c"] is not None
+        assert f["e"] == t["e"], (f, t)
+        for k in ("x", "y"):
+            va, vt = f[k], t[k]
             if va is None or va != va:
-                assert vt is None or vt != vt, r
+                assert vt is None or vt != vt, (f, t)
             else:
-                assert va == vt, r
+                assert va == vt, (f, t)
     assert n_checked > 10
 
 
 @pytest.mark.usefixtures("spark")
 def test_binary_transform_chain_equals_text(spark):
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        register_spatial_functions,
-    )
-
-    register_spatial_functions(spark)
+    """A fused transform chain over float rects == the lone ST_Transform
+    within the engine's 1e-6 coordinate contract."""
     rng = random.Random(17)
     rows = []
     for i in range(40):
@@ -375,18 +470,12 @@ def test_binary_transform_chain_equals_text(spark):
         rows.append((i, f"POLYGON (({x1} {y1}, {x1+50} {y1},"
                         f" {x1+50} {y1+30}, {x1} {y1+30}))"))
     df = spark.createDataFrame(rows, "id int, g string")
-    df.createOrReplaceTempView("bin_tf")
-    out = spark.sql("""
-      SELECT id,
-             ST_AsText_B(ST_Transform_B(ST_GeomFromWKT_B(g),
-                 'EPSG:3857', 'EPSG:5880')) AS t_b,
-             ST_Transform(g, 'EPSG:3857', 'EPSG:5880') AS t_t
-      FROM bin_tf ORDER BY id
-    """).collect()
-    for r in out:
-        ga = np.asarray(GT.points_of(GT.parse_wkt(r["t_b"])))
-        gb = np.asarray(GT.points_of(GT.parse_wkt(r["t_t"])))
-        assert np.abs(ga - gb).max() < 1e-6, r["id"]
+    pairs = _fused_vs_lone(spark, df, [
+        "ST_AsText(ST_Transform(g, 'EPSG:3857', 'EPSG:5880')) AS t"])
+    for f, t in pairs:
+        ga = np.asarray(GT.points_of(GT.parse_wkt(f["t"])))
+        gb = np.asarray(GT.points_of(GT.parse_wkt(t["t"])))
+        assert np.abs(ga - gb).max() < 1e-6, f["id"]
 
 
 def test_fused_struct_udfs_equal_composition(spark):
@@ -408,13 +497,13 @@ def test_fused_struct_udfs_equal_composition(spark):
         (3, "POLYGON ((5 5, 9 5, 9 9, 5 9, 5 5))"),             # closed rect
     ]
     df = spark.createDataFrame(rows, "id int, g string")
-    buf = "ST_BufferRound_B(ST_GeomFromWKT_B(g), 0.5, 8)"
-    fwd = "ST_Transform_B(ST_GeomFromWKT_B(g), 'EPSG:3857', 'EPSG:5880')"
-    rt = f"ST_Transform_B({fwd}, 'EPSG:5880', 'EPSG:3857')"
+    buf = "ST_BufferRound(ST_GeomFromWKT(g), 0.5, 8)"
+    fwd = "ST_Transform(ST_GeomFromWKT(g), 'EPSG:3857', 'EPSG:5880')"
+    rt = f"ST_Transform({fwd}, 'EPSG:5880', 'EPSG:3857')"
     exprs = ["id",
-             f"ST_Area_B({buf}) AS b_area", f"ST_NPoints_B({buf}) AS b_np",
-             f"ST_Area_B({rt}) AS t_area", f"ST_NPoints_B({rt}) AS t_np",
-             f"ST_Coords_B({fwd}) AS fwd", f"ST_Coords_B({rt}) AS rt"]
+             f"ST_Area({buf}) AS b_area", f"ST_NPoints({buf}) AS b_np",
+             f"ST_Area({rt}) AS t_area", f"ST_NPoints({rt}) AS t_np",
+             f"ST_Coords({fwd}) AS fwd", f"ST_Coords({rt}) AS rt"]
     fused = CR.select_st(df, *exprs)
     assert "fused(" in fused._jdf.queryExecution().executedPlan().toString()
     comp = df.selectExpr(*exprs)
@@ -470,15 +559,10 @@ def test_prop_typed_parse_fast_path_equals_general(seed):
 
 @pytest.mark.usefixtures("spark")
 def test_binary_predicates_equal_text_surface(spark):
-    """r8 late widening: the DE-9IM `_B` family == the text family over
-    mixed rect / L-shape / point pairs (rect×rect rides the vectorized
-    interval law off packed bounds; everything else the shared scalar
-    kernel)."""
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        register_spatial_functions,
-    )
-
-    register_spatial_functions(spark)
+    """The fused DE-9IM family == the lone text family over mixed rect /
+    L-shape / point pairs (rect×rect rides the vectorized interval law
+    off packed bounds on the fused side and off the lanes' rect extract
+    on the lone side; everything else the shared scalar kernel)."""
     rng = random.Random(29)
     rows = []
     for i in range(120):
@@ -496,47 +580,30 @@ def test_binary_predicates_equal_text_surface(spark):
         b = (f"POLYGON (({x2} {y2}, {x2+w2} {y2}, {x2+w2} {y2+h2},"
              f" {x2} {y2+h2}, {x2} {y2}))")
         rows.append((i, a, b))
-    spark.createDataFrame(rows, "id int, a string, b string") \
-        .createOrReplaceTempView("bin_pred")
-    res = spark.sql("""
-      SELECT id,
-        ST_Intersects_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS i_b,
-        ST_Intersects(a, b) AS i_t,
-        ST_Disjoint_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS d_b,
-        ST_Disjoint(a, b) AS d_t,
-        ST_Touches_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS t_b,
-        ST_Touches(a, b) AS t_t,
-        ST_Overlaps_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS o_b,
-        ST_Overlaps(a, b) AS o_t,
-        ST_Contains_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS c_b,
-        ST_Contains(a, b) AS c_t,
-        ST_Within_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS w_b,
-        ST_Within(a, b) AS w_t,
-        ST_Crosses_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS x_b,
-        ST_Crosses(a, b) AS x_t,
-        ST_Equals_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(a)) AS e_b,
-        ST_Distance_B(ST_GeomFromWKT_B(a), ST_GeomFromWKT_B(b)) AS dist_b,
-        ST_Distance(a, b) AS dist_t
-      FROM bin_pred ORDER BY id
-    """).collect()
-    for r in res:
-        for p in ("i", "d", "t", "o", "c", "w", "x"):
-            assert r[f"{p}_b"] == r[f"{p}_t"], (r["id"], p)
-        assert r["e_b"] is True
-        assert abs(r["dist_b"] - r["dist_t"]) <= 1e-9 * max(
-            1.0, abs(r["dist_t"])), r["id"]
+    df = spark.createDataFrame(rows, "id int, a string, b string")
+    ga, gb = "ST_AsText(a)", "ST_AsText(b)"
+    names = ("Intersects", "Disjoint", "Touches", "Overlaps", "Contains",
+             "Within", "Crosses", "Equals")
+    pairs = _fused_vs_lone(spark, df, [
+        f"ST_{n}({ga}, {gb}) AS {n.lower()}" for n in names]
+        + [f"ST_Equals({ga}, {ga}) AS self_eq",
+           f"ST_Distance({ga}, {gb}) AS dist"])
+    for f, t in pairs:
+        for n in names:
+            assert f[n.lower()] == t[n.lower()], (f["id"], n)
+        assert f["self_eq"] is True and t["self_eq"] is True
+        assert abs(f["dist"] - t["dist"]) <= 1e-9 * max(
+            1.0, abs(t["dist"])), f["id"]
 
 
 def test_packed_big_endian_fallback_rows():
-    """Big-endian WKB rows become opaque fallback rows: unpack returns
-    the ORIGINAL bytes verbatim, and the `_B` measure/transform UDFs
-    route them through the scalar kernels (GT.parse_wkb reads either
-    byte order)."""
+    """Big-endian WKB rows become opaque fallback rows that keep their
+    ORIGINAL bytes, and the measure, transform and text bodies route
+    them through the scalar kernels (GT.parse_wkb reads either byte
+    order)."""
     import struct as _s
 
     import pandas as pd
-
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
 
     # big-endian POINT (3, 4)
     be_pt = b"\x00" + _s.pack(">I", 1) + _s.pack(">2d", 3.0, 4.0)
@@ -551,41 +618,45 @@ def test_packed_big_endian_fallback_rows():
     p = PK.pack_wkb([be_pt, be_poly, le_poly, None])
     assert int(p.kind[0]) == -1 and int(p.kind[1]) == -1
     assert int(p.kind[2]) == 3 and int(p.kind[3]) == 0
-    rt = PK.unpack_wkb(p)
-    assert rt[0] == be_pt and rt[1] == be_poly and rt[2] == le_poly
-    assert rt[3] is None
+    assert p.fallback == {0: be_pt, 1: be_poly}
+    assert _rows_wkb(p) == [GT.to_wkb(GT.parse_wkb(be_pt)), le_poly,
+                            le_poly, None]
 
-    s = pd.Series([be_pt, be_poly, le_poly, None])
-    ar = GB.REGISTRY_B["ST_Area_B"].func(s)
+    def body(name, *args):
+        return GB.CARRIER[name].body(p, *args)
+
+    ar = body("st_area")
     assert ar.iloc[0] == 0.0 and ar.iloc[1] == 12.0 and ar.iloc[2] == 12.0
-    npt = GB.REGISTRY_B["ST_NPoints_B"].func(s)
+    npt = body("st_npoints")
     assert npt.iloc[0] == 1 and npt.iloc[1] == 5 and npt.iloc[2] == 5
-    # transform routes fallbacks through the scalar path and re-emits LE
-    tr = GB.REGISTRY_B["ST_Transform_B"].func(
-        s, pd.Series(["EPSG:3857"] * 4), pd.Series(["EPSG:3857"] * 4))
-    for i in (0, 1, 2):
-        tg = GT.parse_wkb(bytes(tr.iloc[i]))
-        assert tg[0] in ("POINT", "POLYGON")
-    wkt = GB.REGISTRY_B["ST_AsText_B"].func(s)
+    # transform routes fallbacks through the scalar path
+    crs = pd.Series(["EPSG:3857"] * 4)
+    tr = GB.encode(body("st_transform", crs, crs), crs.index)
+    assert tr.iloc[3] is None
+    for i, raw in enumerate((be_pt, be_poly, le_poly)):
+        got, want = GT.parse_wkt(tr.iloc[i]), GT.parse_wkb(raw)
+        assert got[0] == want[0]
+        assert np.abs(np.asarray(GT.points_of(got))
+                      - np.asarray(GT.points_of(want))).max() < 1e-6
+    wkt = GB.encode(body("st_astext"), crs.index)
     assert wkt.iloc[0] == "POINT (3 4)"
     assert wkt.iloc[1] == wkt.iloc[2]
 
 
 def test_packed_z_and_gc_fallback_through_b_surface():
-    """Z and GEOMETRYCOLLECTION WKB rows ride the fallback lane through
-    the binary measures with the same conventions as the text surface
-    (strip_z areas, GC sums)."""
+    """Z and GEOMETRYCOLLECTION text decodes to fallback rows (the scalar
+    parse, then pack_wkb), and the measure bodies give them the text
+    surface's conventions (strip_z areas, GC sums)."""
     import pandas as pd
 
-    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
-
-    z_poly = GT.to_wkb(GT.parse_wkt(
-        "POLYGON Z ((0 0 1, 4 0 1, 4 3 1, 0 3 1))"))
-    gc = GT.to_wkb(GT.parse_wkt(
-        "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)),"
-        " POINT (9 9))"))
-    s = pd.Series([z_poly, gc])
-    ar = GB.REGISTRY_B["ST_Area_B"].func(s)
+    s = pd.Series(["POLYGON Z ((0 0 1, 4 0 1, 4 3 1, 0 3 1))",
+                   "GEOMETRYCOLLECTION (POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0)),"
+                   " POINT (9 9))"])
+    p = GB.decode(s)
+    assert p.kind.tolist() == [-1, -1]
+    ar = GB.CARRIER["st_area"].body(p)
     assert ar.iloc[0] == 12.0 and ar.iloc[1] == 4.0
-    npt = GB.REGISTRY_B["ST_NPoints_B"].func(s)
+    npt = GB.CARRIER["st_npoints"].body(p)
     assert npt.iloc[0] == 5 and npt.iloc[1] == 6
+    assert (ar.tolist(), npt.tolist()) == (
+        S.st_area.func(s).tolist(), S.st_npoints.func(s).tolist())

@@ -6,11 +6,12 @@ hygiene-only chains stay on their text UDFs, and non-ST_ tokens
 (strings, identifiers, keywords, arithmetic, parenthesised groups) are
 copied verbatim.
 
-Layer 2: `kernel/packed._pack_ragged` / `_emit_ragged` engagement tests —
-single-kind variable-shape batches must take the vectorized lane (not
-silently fall back to the per-row loop) and round-trip byte-identical to
-geomtypes.to_wkb; anomalous batches (mixed kinds, big-endian, Z, trailing
-bytes) must bail to the strict loop and still round-trip.
+Layer 2: `kernel/packed._pack_ragged` engagement tests — single-kind
+variable-shape batches must take the vectorized lane (not silently fall
+back to the per-row loop), and every packed row written back through
+geomtypes.to_wkb must give the input bytes; anomalous batches (mixed
+kinds, big-endian, Z, trailing bytes) must bail to the strict loop and
+still decode.
 
 Layer 3: Spark parity — the SAME query text through `select_st` (fused,
 carrier chains packed) and through plain `selectExpr` (text path) returns identical
@@ -154,16 +155,22 @@ def test_shared_node_joins_the_chain():
         ["st_area", "st_astext", "st_geomfromwkt"]
 
 
-def test_b_names_share_the_bodies():
-    assert _packed("ST_Coords_B(ST_Transform_B(ST_GeomFromWKT_B(w),"
+def test_coords_chain_runs_packed():
+    assert _packed("ST_Coords(ST_Transform(ST_GeomFromWKT(w),"
                    " 'EPSG:4326', 'EPSG:32722')) AS c") == \
-        ["st_coords_b", "st_geomfromwkt_b", "st_transform_b"]
+        ["st_coords", "st_geomfromwkt", "st_transform"]
 
 
 # ------------------------------------------------------------- layer 2
 
 def _wkb(w: str) -> bytes:
     return GT.to_wkb(GT.parse_wkt(w))
+
+
+def _rows_wkb(p) -> list:
+    """Each packed row written back through the typed kernel."""
+    return [None if p.kind[i] == 0 else GT.to_wkb(PK.row_tgeom(p, i))
+            for i in range(p.n)]
 
 
 def _codec_case(rng: random.Random, kind: str) -> str:
@@ -206,13 +213,8 @@ def test_ragged_lane_engages_and_round_trips(kind):
     # the vectorized lane must ENGAGE on a single-kind ragged batch
     ragged = PK._pack_ragged(wkb)
     assert ragged is not None, f"{kind}: ragged decode did not engage"
-    # ... and what pack_wkb returns must round-trip byte-identically
-    p = PK.pack_wkb(wkb)
-    assert PK.unpack_wkb(p) == wkb
-    # the vectorized encoder must also engage and agree
-    emitted = PK._emit_ragged(p)
-    assert emitted is not None, f"{kind}: ragged encode did not engage"
-    assert emitted == wkb
+    # ... and what pack_wkb returns must hold the same geometry
+    assert _rows_wkb(PK.pack_wkb(wkb)) == wkb
 
 
 def test_ragged_lane_polygon_closing_dup_and_open_rings():
@@ -224,7 +226,7 @@ def test_ragged_lane_polygon_closing_dup_and_open_rings():
     p = PK._pack_ragged([a, a, b])
     assert p is not None
     assert (p.ring_len() == 4).all()
-    assert PK.unpack_wkb(p) == [a, a, b]
+    assert _rows_wkb(p) == [a, a, b]
 
 
 def test_ragged_lane_with_empties():
@@ -232,8 +234,7 @@ def test_ragged_lane_with_empties():
            None, _wkb("LINESTRING (1 1, 2 2, 3 3)")]
     p = PK._pack_ragged(wkb)
     assert p is not None
-    assert PK.unpack_wkb(p) == wkb
-    assert PK._emit_ragged(p) == wkb
+    assert _rows_wkb(p) == wkb
 
 
 def test_ragged_lane_bails_on_anomalies():
@@ -250,16 +251,16 @@ def test_ragged_lane_bails_on_anomalies():
     assert PK._pack_ragged([ls + b"\x00"]) is None
     # truncated payload
     assert PK._pack_ragged([ls[:-8]]) is None
-    # ... and the full codec still handles each via the strict path
+    # ... and pack_wkb still handles each via the strict path
     mixed = [ls, pt, z, None]
-    assert PK.unpack_wkb(PK.pack_wkb(mixed)) == mixed
+    assert _rows_wkb(PK.pack_wkb(mixed)) == mixed
 
 
 def test_ragged_lane_multipoint_member_headers():
     w = _wkb("MULTIPOINT (1 2, 3 4, 5 6)")
     p = PK._pack_ragged([w])
     assert p is not None
-    out = PK._emit_ragged(p)[0]
+    out = _rows_wkb(p)[0]
     # member headers present every 21 bytes after the 9-byte row header
     assert out == w
     assert out[9] == 1 and struct.unpack("<I", out[10:14])[0] == 1
@@ -545,11 +546,10 @@ def test_box_predicate_boundary_parity_binary_equals_text():
     a = pd.Series([rect] * len(pts) + ["POINT (1 2)", "POINT (1 2)"],
                   dtype=object)
     b = pd.Series(pts + ["POINT (1 2)", "POINT (3 4)"], dtype=object)
-    wa = GB.REGISTRY_B["ST_GeomFromWKT_B"].func(a)
-    wb = GB.REGISTRY_B["ST_GeomFromWKT_B"].func(b)
+    wa = GB.CARRIER["st_geomfromwkt"].body(GB.decode(a))
+    wb = GB.CARRIER["st_geomfromwkt"].body(GB.decode(b))
     for name in ("contains", "within", "intersects", "disjoint", "equals"):
-        bfn = GB.REGISTRY_B[f"ST_{name.title()}_B"].func
-        got = bfn(wa, wb).tolist()
+        got = GB.CARRIER[f"st_{name}"].body(wa, wb).tolist()
         tfn = {
             "contains": S._contains,
             "within": lambda x, y: S._contains(y, x),
@@ -696,15 +696,21 @@ def _fused_body(*exprs):
 
 
 def _count_codec(monkeypatch) -> dict:
-    calls = {"pack_wkb": 0, "unpack_wkb": 0}
-    for name in calls:
-        real = getattr(PK, name)
+    """Counts the carrier's text decodes and WKT encodes, the per-row
+    scalar parses, and the WKB writes."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
+
+    calls = {}
+    for mod, name in ((GB, "decode"), (GB, "encode"), (GT, "parse_wkt"),
+                      (GT, "to_wkb")):
+        real = getattr(mod, name)
+        calls[name] = 0
 
         def counted(*a, _real=real, _name=name):
             calls[_name] += 1
             return _real(*a)
 
-        monkeypatch.setattr(PK, name, counted)
+        monkeypatch.setattr(mod, name, counted)
     return calls
 
 
@@ -734,9 +740,10 @@ def test_centroid_text_full_precision_lone_and_carrier():
 
 @pytest.mark.parametrize("name", ["st_buffer_round", "st_transform_utm"])
 def test_fused_body_decodes_each_leaf_once(spark, monkeypatch, name):
-    """One batch through the registry query's fused body: one pack_wkb
-    per distinct geometry leaf, and no WKB encode (no `_B` geometry
-    output surfaces in either projection)."""
+    """One batch through the registry query's fused body: one decode per
+    distinct geometry leaf, no scalar parse and no WKB written (the
+    fixture rects are canonical), and no geometry formatted (none
+    surfaces in either projection)."""
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.registry import QUERIES
 
     seen: dict = {}
@@ -760,28 +767,31 @@ def test_fused_body_decodes_each_leaf_once(spark, monkeypatch, name):
     calls = _count_codec(monkeypatch)
     out = body(*cols)
     assert len(out) == len(pdf) > 0
-    assert calls == {"pack_wkb": 1, "unpack_wkb": 0}, calls
+    assert calls == {"decode": 1, "encode": 0, "parse_wkt": 0,
+                     "to_wkb": 0}, calls
 
 
-def test_fused_body_encodes_where_a_b_geometry_surfaces(monkeypatch):
+def test_fused_body_encodes_where_a_geometry_surfaces(monkeypatch):
+    """A geometry that surfaces is formatted as WKT once, however many
+    outputs read it, and no WKB is written."""
     import pandas as pd
 
-    t = "ST_Transform_B(ST_GeomFromWKT_B(w), 'EPSG:3857', 'EPSG:5880')"
-    body, leaves = _fused_body(f"ST_Area_B({t}) AS a", f"{t} AS t",
-                               f"ST_AsText_B({t}) AS txt")
+    t = "ST_Transform(ST_GeomFromWKT(w), 'EPSG:3857', 'EPSG:5880')"
+    body, leaves = _fused_body(f"ST_Area({t}) AS a", f"{t} AS t",
+                               f"ST_AsText({t}) AS txt")
     assert leaves == ["w", "'EPSG:3857'", "'EPSG:5880'"]
     w = pd.Series(["POLYGON ((0 0, 40 0, 40 30, 0 30, 0 0))", None,
                    "POINT (5 7)"], dtype=object)
     cols = [w] + [pd.Series([v] * 3) for v in ("EPSG:3857", "EPSG:5880")]
-    calls = _count_codec(monkeypatch)
-    out = body(*cols)
-    assert calls == {"pack_wkb": 1, "unpack_wkb": 1}, calls
-    exp = [None if v is None else GT.to_wkb(GT.map_coords(
+    exp = [None if v is None else GT.to_wkt(GT.map_coords(
         GT.parse_wkt(v), lambda x, y: T.transform_point(
             x, y, "EPSG:3857", "EPSG:5880"))) for v in w]
+    calls = _count_codec(monkeypatch)
+    out = body(*cols)
+    assert calls == {"decode": 1, "encode": 1, "parse_wkt": 0,
+                     "to_wkb": 0}, calls
     assert out["f1"].tolist() == exp
-    assert out["f2"].tolist() == [None if e is None else
-                                  GT.to_wkt(GT.parse_wkb(e)) for e in exp]
+    assert out["f2"].tolist() == exp
 
 
 def test_carrier_buffer_null_arguments_are_null():

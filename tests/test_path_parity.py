@@ -4,13 +4,12 @@ One fixed seed, no Spark. The corpus is seeded integer and 17-digit
 float rects and points plus edge rows the fixtures never hold: CW rings,
 a repeated vertex, degenerate rings, a CCW hole, MULTIPOLYGON,
 LINESTRING, POLYGON Z, GEOMETRYCOLLECTION, an SRID= prefix, EMPTY,
-NULL and a ring the parser rejects. Each expression runs on three paths:
+NULL and a ring the parser rejects. Each expression runs on two paths:
 
 - lone: the registered text UDFs composed call by call (`.func`), as a
   plain `selectExpr` runs them;
 - fused: the body `chainrw._Fusion` generates for the projection, whose
-  carrier chains run packed;
-- `_B`: the same composition over the `_B` names (functions/geomb).
+  carrier chains run packed.
 
 The paths must agree byte for byte, and each must equal the per-row
 scalar kernels exactly, except transformed coordinates, which keep the
@@ -26,7 +25,6 @@ import pandas as pd
 import pytest
 
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
-from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
@@ -127,12 +125,6 @@ def _lone(e, cols):
     return S.udf_table()[e[0]].func(*(_lone(a, cols) for a in e[1:]))
 
 
-def _b(e, cols):
-    if isinstance(e, str):
-        return cols[e]
-    return GB.REGISTRY_B[e[0] + "_B"].func(*(_b(a, cols) for a in e[1:]))
-
-
 def _fused(e, cols):
     fz = CR._Fusion()
     fz.emit(CR._Expr(CR._parse(CR.rewrite(_sql(e) + " AS out"))[0]))
@@ -142,7 +134,7 @@ def _fused(e, cols):
     return fz.udf().func(*(cols[leaf] for leaf in fz.leaves))["f0"]
 
 
-PATHS = {"lone": _lone, "fused": _fused, "_B": _b}
+PATHS = {"lone": _lone, "fused": _fused}
 HYGIENE = {"ST_GeomFromWKT", "ST_AsText"}
 
 
@@ -245,10 +237,9 @@ def test_paths_equal_each_other_and_the_scalar_kernels(case):
         ok.append(r)
     got = {name: [_plain(v) for v in path(expr, _cols(ok))]
            for name, path in PATHS.items()}
-    for name in ("fused", "_B"):
-        diff = [(r, g, w) for r, g, w in zip(ok, got[name], got["lone"])
-                if g != w]
-        assert not diff, (name, diff[:3])
+    diff = [(r, g, w) for r, g, w in zip(ok, got["fused"], got["lone"])
+            if g != w]
+    assert not diff, diff[:3]
     geom = case.startswith("astext_transform")
     diff = [(r, g, w) for r, g, w in zip(ok, got["lone"], want)
             if not (g == w or (geom and None not in (g, w)
