@@ -93,7 +93,7 @@ def _parse(s: pd.Series) -> PK.PackedBatch:
     non-finite rects) takes the scalar parser, and only those rows go
     through WKB."""
     b = LN.batch_of(s)
-    pieces = []                 # (rows, kind, points per row, xy)
+    pieces = []                 # (row mask, kind, points per row, xy)
     m, g = b.extract(LN.FPOINT2)
     if m.any():
         pieces.append((m, PK.POINT, 1, np.column_stack(
@@ -480,20 +480,20 @@ def _distance(pa: PK.PackedBatch, pb: PK.PackedBatch) -> pd.Series:
 # point-inside-rect is zero-boundary contact, ...).
 _BOX = PK.box_bounds_np
 _BOOL = BooleanType()
-_GEOM = StringType()
+_WKT = StringType()
 
 #: (SQL names, body, geometry-argument positions, result type)
 _ROWS = [
-    (("ST_GeomFromWKT", "ST_GeomFromText"), _normalize, (0,), _GEOM),
-    (("ST_AsText",), _same, (0,), _GEOM),
+    (("ST_GeomFromWKT", "ST_GeomFromText"), _normalize, (0,), _WKT),
+    (("ST_AsText",), _same, (0,), _WKT),
     (("ST_Area",), _area, (0,), DoubleType()),
     (("ST_NPoints", "ST_NumPoints"), _npoints, (0,), LongType()),
     (("ST_Length",), _length, (0,), DoubleType()),
     (("ST_Coords",), _coords, (0,), ArrayType(DoubleType())),
-    (("ST_Transform",), _transform, (0,), _GEOM),
-    (("ST_BufferRound",), _buffer_round, (0,), _GEOM),
-    (("ST_Centroid",), _centroid, (0,), _GEOM),
-    (("ST_Envelope",), _envelope, (0,), _GEOM),
+    (("ST_Transform",), _transform, (0,), _WKT),
+    (("ST_BufferRound",), _buffer_round, (0,), _WKT),
+    (("ST_Centroid",), _centroid, (0,), _WKT),
+    (("ST_Envelope",), _envelope, (0,), _WKT),
     (("ST_X",), partial(_xy, axis=0), (0,), DoubleType()),
     (("ST_Y",), partial(_xy, axis=1), (0,), DoubleType()),
     (("ST_Intersects",), _pred(S._law_intersects, S._intersects, _BOX),
@@ -527,7 +527,7 @@ class Carrier(NamedTuple):
 
 
 #: lower-cased SQL name -> Carrier
-CARRIER = {name.lower(): Carrier(body, geom, rt == _GEOM)
+CARRIER = {name.lower(): Carrier(body, geom, rt == _WKT)
            for names, body, geom, rt in _ROWS for name in names}
 
 
