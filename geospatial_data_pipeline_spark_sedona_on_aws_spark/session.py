@@ -15,6 +15,20 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Spark's cache of compiled whole-stage-codegen classes
+#: (`spark.sql.codegen.cache.maxEntries`, default 100; a static conf, so it
+#: takes effect only in the session that launches the JVM). A class that
+#: misses it is compiled again by Janino and then by the JIT. Sized from
+#: `scripts/codegen_census.py` at sf0.01, not from a host: one pass
+#: compiles 119 classes for the 10 spatial_mix queries, 670 for bench.py's
+#: 50 headline queries and 2031 for the whole registry. At 100, a session
+#: cycling through spatial_mix recompiled 83-89 of its 119 classes on
+#: every pass. 2048 is about twice the largest set a driver cycles
+#: through (the headline pass, which bench.py repeats four times); the
+#: registry runs once per check. Cost: the kept classes' Metaspace and
+#: code heap (SCALING.md, "Generated-code cache").
+CODEGEN_CACHE_ENTRIES = 2048
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -62,6 +76,15 @@ def get_spark(app_name: str = "geospatial-engine", shuffle_partitions: int | Non
         # broadcast dims up to 64 MB — the reference broadcasts its region
         # dimension explicitly (spark_job/process_geodata.py:101)
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # AQE numbers codegen stages in the order it creates query stages,
+        # and that order follows whichever concurrent stage finishes first;
+        # with the number in the class name, the same stage got a new source
+        # text, and so a cache miss, on runs where two stages finished the
+        # other way round (lm_bigram_score, ann_recall_at_k, event_funnel,
+        # bm25_term_scores, hll_distinct). The id stays in a comment, which
+        # is not part of the cache key.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         # r14 (guide §4.5): fork workers from a daemon that has already
         # imported numpy/pandas/pyarrow + the engine kernels — a cold

@@ -503,18 +503,32 @@ def test_buffer_round_udf_call_is_shared(spark):
     pipeline per output UDF, so the buffer kernel ran twice); the
     projection fuser (chainrw.select_st) makes single evaluation
     structural: exactly one fused UDF result id in the plan, exactly one
-    ArrowEvalPython node, and no per-measure chain left."""
+    ArrowEvalPython node, and no per-measure chain left. The same
+    projection through plain selectExpr, outside the fuser, keeps the
+    per-measure chains and must fail the check."""
     import re
 
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans import fixtures
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.plans.pipeline import st_buffer_round
 
-    plan = st_buffer_round(spark, "/root/testdata/sf0.001") \
-        ._jdf.queryExecution().executedPlan().toString()
-    ids = re.findall(r"fused\(.*?\)#(\d+)", plan)
-    assert ids, plan
-    assert len(set(ids)) == 1, f"fused UDF evaluated under ids {set(ids)}"
-    assert plan.count("ArrowEvalPython") == 1, plan
-    assert "ST_Area_B(ST_BufferRound_B" not in plan
+    def faults(df) -> list[str]:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        ids = set(re.findall(r"fused\(.*?\)#(\d+)", plan))
+        out = []
+        if len(ids) != 1:
+            out.append(f"fused UDF evaluated under ids {ids}")
+        if plan.count("ArrowEvalPython") != 1:
+            out.append("not exactly one ArrowEvalPython node")
+        if "ST_Area(ST_BufferRound(" in plan:
+            out.append("per-measure chain")
+        return out
+
+    assert faults(st_buffer_round(spark, "/root/testdata/sf0.001")) == []
+    buf = "ST_BufferRound(land_geometry, (1 + property_id % 5) / 4.0, 8)"
+    plain = fixtures.land_use_areas(spark, "/root/testdata/sf0.001").selectExpr(
+        "property_id", f"CAST(round(ST_Area({buf}) * 100) AS BIGINT) AS area_q",
+        f"ST_NPoints({buf}) AS n_vertices")
+    assert "per-measure chain" in faults(plain)
 
 
 def test_dynamic_partition_pruning_fires_on_partitioned_fact(spark, tmp_path):
