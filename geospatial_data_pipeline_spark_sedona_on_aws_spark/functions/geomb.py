@@ -6,8 +6,9 @@ measured at ~63% of the buffer→area→npoints chain (SCALING.md, r7). Each
 carrier function here is instead ONE body over kernel/packed.PackedBatch:
 geometry arguments come in packed, a geometry result goes out packed, a
 scalar result goes out as a pandas Series, and the measures, the CRS
-projection, the convex round buffer, centroid, envelope and the
-rect/point predicates run as whole-batch numpy math.
+projection, the coordinate maps (rotate, scale, translate, affine, snap,
+reduce precision, expand), the convex round buffer, centroid, envelope
+and the rect/point predicates run as whole-batch numpy math.
 
 Text is the only geometry format that crosses the SQL boundary.
 `CARRIER` maps each SQL name that has a body to (body, geometry-argument
@@ -17,12 +18,14 @@ positions, geometry result?). It has two users:
   bodies inside one fused Python call: `decode` parses each distinct
   geometry input once, and `encode` formats WKT only where a packed
   value surfaces;
-- `REGISTRY_TEXT` registers six names as the same decode, body and
+- `REGISTRY_TEXT` registers thirteen names as the same decode, body and
   encode behind one adapter: ST_Transform, ST_Envelope, ST_BufferRound,
   ST_Contains and ST_Within, whose body called alone beats a per-row
-  text loop, and ST_Coords (array<double>: flattened x, y …, areal rings
-  closed, the numbers a WKT-text split yields), an engine extension with
-  no text twin.
+  text loop; the coordinate maps ST_Rotate, ST_Scale, ST_Translate,
+  ST_Affine, ST_SnapToGrid, ST_ReducePrecision and ST_Expand, which have
+  no other lone path; and ST_Coords (array<double>: flattened x, y …,
+  areal rings closed, the numbers a WKT-text split yields), an engine
+  extension with no text twin.
 
 Decoding is a plain parse. Canonical rows become packed rows straight
 from the lanes extracts; every other row takes the scalar parser. The
@@ -343,24 +346,30 @@ def _envelope(p: PK.PackedBatch) -> PK.PackedBatch:
     areal = np.isin(p.kind, PK._AREAL)
     box = nonempty & (areal | ((x1 != x2) & (y1 != y2)))
     pt = nonempty & ~box & (x1 == x2) & (y1 == y2)
-    flat = nonempty & ~box & ~pt
-    kind = np.select([box | (live & ~nonempty), pt, flat],
+    return _put_scalar(
+        _boxes(x1, y1, x2, y2, box, pt, nonempty & ~box & ~pt,
+               live & ~nonempty),
+        np.asarray(list(p.fallback), dtype=np.int64),
+        lambda i: GT.to_wkb(GT.parse_wkt(GT.envelope_wkt(
+            GT.strip_z(GT.parse_wkb(p.fallback[i]))))))
+
+
+def _boxes(x1, y1, x2, y2, box, pt, flat, empty) -> PK.PackedBatch:
+    """Per row: the box x1 y1, x2 y1, x2 y2, x1 y2 (the CCW walk, stored
+    open), the POINT x1 y1, the flat LINESTRING x1 y1, x2 y2, or POLYGON
+    EMPTY; a row in none of the four masks is NULL."""
+    kind = np.select([box | empty, pt, flat],
                      [PK.POLYGON, PK.POINT, PK.LINESTRING], 0)
     npts = np.select([box, pt, flat], [4, 1, 2], 0)
+    some = box | pt | flat
     first = np.cumsum(npts) - npts       # each row's first coordinate
-    # box: x1 y1, x2 y1, x2 y2, x1 y2 (the CCW walk, stored open);
-    # point: x1 y1; flat line: x1 y1, x2 y2
     xy = np.empty((int(npts.sum()), 2))
-    xy[first[nonempty]] = np.column_stack([x1, y1])[nonempty]
+    xy[first[some]] = np.column_stack([x1, y1])[some]
     far = box | flat
     xy[first[far] + 1] = np.column_stack([x2, np.where(box, y1, y2)])[far]
     xy[first[box] + 2] = np.column_stack([x2, y2])[box]
     xy[first[box] + 3] = np.column_stack([x1, y2])[box]
-    return _put_scalar(
-        PK.assemble(kind, nonempty, npts[nonempty], xy),
-        np.asarray(list(p.fallback), dtype=np.int64),
-        lambda i: GT.to_wkb(GT.parse_wkt(GT.envelope_wkt(
-            GT.strip_z(GT.parse_wkb(p.fallback[i]))))))
+    return PK.assemble(kind, some, npts[some], xy)
 
 
 def _transform(p: PK.PackedBatch, src: pd.Series,
@@ -403,15 +412,18 @@ def _put_scalar(out: PK.PackedBatch, rows, row_fn) -> PK.PackedBatch:
 def _buffer_round_scalar(tg, d: float, q: int) -> bytes:
     """Rows the vectorized convex walk doesn't cover: the scalar
     spatial._buffer_round, WKB out."""
-    return GT.to_wkb(GT.parse_wkt(S._buffer_round(GT.to_wkt(tg), d, q)))
+    return _wkb_of(S._buffer_round(GT.to_wkt(tg), d, q))
+
+
+def _param(s: pd.Series) -> np.ndarray:
+    """A numeric argument as float64, NULL as NaN."""
+    return pd.to_numeric(s, errors="coerce").to_numpy(dtype=np.float64,
+                                                      na_value=np.nan)
 
 
 def _buffer_round(p: PK.PackedBatch, d: pd.Series,
                   q: pd.Series) -> PK.PackedBatch:
-    dd = pd.to_numeric(d, errors="coerce").to_numpy(dtype=np.float64,
-                                                    na_value=np.nan)
-    qq = pd.to_numeric(q, errors="coerce").to_numpy(dtype=np.float64,
-                                                    na_value=np.nan)
+    dd, qq = _param(d), _param(q)
     dd = np.where(qq == qq, dd, np.nan)   # NULL quadsegs: NULL
     qn = np.unique(qq[qq == qq])
     todo = (p.kind != 0) & (dd == dd)
@@ -429,6 +441,131 @@ def _buffer_round(p: PK.PackedBatch, d: pd.Series,
     return _put_scalar(out, np.flatnonzero(todo & ~fast), lambda i:
                        _buffer_round_scalar(PK.row_tgeom(p, i),
                                             float(dd[i]), quad))
+
+
+# Coordinate maps. Each is one numpy expression over p.coords with the
+# row's arguments gathered per coordinate, in the scalar kernel's
+# operation order, so every coordinate is bit-equal to spatial.py's. A
+# NULL in any argument gives a NULL row. Rows held as WKB (Z,
+# GEOMETRYCOLLECTION) go through that scalar kernel on their WKT.
+
+def _coord_map(p: PK.PackedBatch, args: list, fn, scalar) -> PK.PackedBatch:
+    """p with (x, y) -> fn(x, y, at) over every coordinate, `at` being
+    each coordinate's row (index the row arguments with it); kind -1
+    rows take scalar(wkt, *row arguments as floats)."""
+    ok = ~np.isnan(np.asarray(args)).any(axis=0)
+    if ((p.kind != 0) & ~ok).any():
+        p = PK.take(p, np.where(ok, np.arange(p.n), -1))
+    at = np.repeat(np.arange(p.n), np.diff(p.geom_coord_off()))
+    x, y = fn(p.coords[:, 0], p.coords[:, 1], at)
+    out = PK.PackedBatch(p.n, np.where(p.kind == -1, 0, p.kind).astype(
+        np.int8), p.geom_off, p.ring_off, p.outer, np.column_stack([x, y]),
+        {})
+    return _put_scalar(out, np.asarray(list(p.fallback), dtype=np.int64),
+                       lambda i: _wkb_of(scalar(_wkt_of(p, i), *(
+                           float(a[i]) for a in args))))
+
+
+def _wkb_of(w):
+    return None if w is None else GT.to_wkb(GT.parse_wkt(w))
+
+
+def _rotate(p: PK.PackedBatch, t: pd.Series) -> PK.PackedBatch:
+    """cos and sin once per distinct angle, through math (lanes._trig),
+    as the scalar kernel takes them."""
+    th = np.where(p.kind != 0, _param(t), np.nan)
+    c, s = LN._trig(pd.Series(th))
+
+    def rot(x, y, at):
+        ca, sa = c[at], s[at]
+        return ca * x - sa * y, sa * x + ca * y
+
+    return _coord_map(p, [th], rot, S._rotate)
+
+
+def _scale(p: PK.PackedBatch, fx: pd.Series,
+           fy: pd.Series) -> PK.PackedBatch:
+    a, b = _param(fx), _param(fy)
+    return _coord_map(p, [a, b], lambda x, y, at: (x * a[at], y * b[at]),
+                      S._scale)
+
+
+def _translate(p: PK.PackedBatch, dx: pd.Series,
+               dy: pd.Series) -> PK.PackedBatch:
+    a, b = _param(dx), _param(dy)
+    return _coord_map(p, [a, b], lambda x, y, at: (x + a[at], y + b[at]),
+                      S._translate)
+
+
+def _affine(p: PK.PackedBatch, *abdexy: pd.Series) -> PK.PackedBatch:
+    a, b, d, e, xo, yo = args = [_param(v) for v in abdexy]
+    return _coord_map(
+        p, args, lambda x, y, at: (a[at] * x + b[at] * y + xo[at],
+                                   d[at] * x + e[at] * y + yo[at]),
+        S._affine)
+
+
+def _snap_to_grid(p: PK.PackedBatch, size: pd.Series) -> PK.PackedBatch:
+    """round(q) * size with q = coordinate / size: np.rint rounds half to
+    even as round() does, + 0.0 drops the sign of a zero that round()'s
+    int does not keep, and a non-finite q raises round()'s error. A size
+    <= 0 gives NULL."""
+    sz = _param(size)
+    sz = np.where(sz > 0, sz, np.nan)
+
+    def snap(x, y, at):
+        g = sz[at, None]
+        with np.errstate(over="ignore"):
+            q = np.column_stack([x, y]) / g
+        bad = ~np.isfinite(q)
+        if bad.any():
+            round(float(q[bad][0]))          # raises, as the kernel does
+        r = (np.rint(q) + 0.0) * g
+        return r[:, 0], r[:, 1]
+
+    return _coord_map(p, [sz], snap, S._snap_to_grid)
+
+
+def _reduce_precision(p: PK.PackedBatch, d: pd.Series) -> PK.PackedBatch:
+    """Python's round(v, digits) per coordinate, which rounds the decimal
+    value correctly; np.round scales, rints and unscales, which can land
+    on a neighbouring double."""
+    nd = _param(d)
+
+    def rnd(x, y, at):
+        xy, n = np.column_stack([x, y]), nd[at]
+        for k in np.unique(n).tolist():
+            m = n == k
+            xy[m] = np.reshape([round(v, int(k))
+                                for v in xy[m].ravel().tolist()], (-1, 2))
+        return xy[:, 0], xy[:, 1]
+
+    return _coord_map(p, [nd], rnd,
+                      lambda w, v: S._reduce_precision(w, int(v)))
+
+
+def _expand(p: PK.PackedBatch, d: pd.Series) -> PK.PackedBatch:
+    """PostGIS ST_Expand: the bounds grown by d on every side, with the
+    scalar kernel's branches (a box; a POINT or a LINESTRING where the
+    grown bounds are degenerate; POLYGON EMPTY past that and for empty
+    input). Rows with a NaN coordinate, whose min and max Python takes
+    in vertex order, and rows held as WKB go through the scalar kernel."""
+    dd = _param(d)
+    bb = PK.bounds_np(p)
+    co = p.geom_coord_off()
+    has = co[:-1] < co[1:]
+    live = (p.kind != 0) & (dd == dd)
+    slow = live & ((p.kind == -1) | (has & np.isnan(bb).any(axis=1)))
+    x1, y1 = bb[:, 0] - dd, bb[:, 1] - dd
+    x2, y2 = bb[:, 2] + dd, bb[:, 3] + dd
+    empty = live & ~slow & (~has | (x1 > x2) | (y1 > y2))
+    ok = live & ~slow & ~empty
+    pt = ok & (x1 == x2) & (y1 == y2)
+    flat = ok & ~pt & ((x1 == x2) | (y1 == y2))
+    return _put_scalar(
+        _boxes(x1, y1, x2, y2, ok & ~pt & ~flat, pt, flat, empty),
+        np.flatnonzero(slow),
+        lambda i: _wkb_of(S._expand(_wkt_of(p, i), float(dd[i]))))
 
 
 def _wkt_of(p: PK.PackedBatch, i: int):
@@ -494,6 +631,13 @@ _ROWS = [
     (("ST_BufferRound",), _buffer_round, (0,), _WKT),
     (("ST_Centroid",), _centroid, (0,), _WKT),
     (("ST_Envelope",), _envelope, (0,), _WKT),
+    (("ST_Rotate",), _rotate, (0,), _WKT),
+    (("ST_Scale",), _scale, (0,), _WKT),
+    (("ST_Translate",), _translate, (0,), _WKT),
+    (("ST_Affine",), _affine, (0,), _WKT),
+    (("ST_SnapToGrid",), _snap_to_grid, (0,), _WKT),
+    (("ST_ReducePrecision",), _reduce_precision, (0,), _WKT),
+    (("ST_Expand",), _expand, (0,), _WKT),
     (("ST_X",), partial(_xy, axis=0), (0,), DoubleType()),
     (("ST_Y",), partial(_xy, axis=1), (0,), DoubleType()),
     (("ST_Intersects",), _pred(S._law_intersects, S._intersects, _BOX),
@@ -548,13 +692,17 @@ def _adapt(name: str, body, geom, rtype):
 
 #: Names registered as the one-node adapter. A decode + body + encode
 #: beats a per-row text loop 4-12x on 60 k rects; ST_Coords has no text
-#: UDF at all. The lane-backed text UDFs (ST_Area, ST_NPoints,
-#: ST_Length, ST_Centroid, ST_X, ST_Y, the six interval predicates,
-#: ST_GeomFromWKT, ST_AsText) are faster than the adapter when called
-#: alone, and ST_Distance's box path is not yet bit-equal to its scalar
-#: kernel.
+#: UDF at all. The seven coordinate maps (ST_Rotate … ST_Expand) have
+#: no text UDF either: the adapter is their only lone call, so every
+#: chain through them runs packed. The lane-backed text UDFs (ST_Area,
+#: ST_NPoints, ST_Length, ST_Centroid, ST_X, ST_Y, the six interval
+#: predicates, ST_GeomFromWKT, ST_AsText) are faster than the adapter
+#: when called alone, and ST_Distance's box path is not yet bit-equal to
+#: its scalar kernel.
 _ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound", "ST_Contains",
-            "ST_Within", "ST_Coords")
+            "ST_Within", "ST_Coords", "ST_Rotate", "ST_Scale",
+            "ST_Translate", "ST_Affine", "ST_SnapToGrid",
+            "ST_ReducePrecision", "ST_Expand")
 REGISTRY_TEXT = {name: _adapt(name, body, geom, rt)
                  for names, body, geom, rt in _ROWS for name in names
                  if name in _ADAPTED}

@@ -1,7 +1,11 @@
 """Vectorized canonical-text lanes for the five r10 scalar parity batches
 (r11, VERDICT r10 item 1): st_shape_edit_ops, st_edit_line_ops,
 st_measure_ops, st_affine_ops, st_misc_ops — the last per-row-Python
-family in the registry (~28 s combined at sf0.1).
+family in the registry (~28 s combined at sf0.1). The coordinate maps
+of st_affine_ops (ST_Rotate, ST_Scale, ST_Affine, ST_SnapToGrid,
+ST_ReducePrecision, ST_Expand, with ST_Translate) have no lane: they
+are packed bodies in functions/geomb.py, called alone through its
+one-node adapter and chained packed by the projection fuser.
 
 Same design as functions/lanes.py (which this module builds on): each
 hot ST_ function gets a BATCH lane keyed on the canonical machine-built
@@ -17,11 +21,12 @@ New in r11 over the r10 lanes:
 - `lanes.fmt_f64` — arrow's float64->string cast is bit-identical to
   kernel `_fmt` inside |v| ∈ [1e-4, 1e10) ∪ {0} (verified on 1.7M
   samples incl. dense edge sweeps), so geometry EMISSION vectorizes
-  too: transforms (rotate/affine/scale/expand) re-serialize whole
-  batches through one arrow cast instead of per-row `_fmt`.
+  too: geometry-valued lanes (ST_Multi, ST_LineSubstring, ...)
+  re-serialize whole batches through one arrow cast instead of per-row
+  `_fmt`.
 - float-atom structural patterns (FLINE2/FLINE3/FPOLY5/...) so the
-  OUTPUT of one laned stage is claimable by the next stage of the same
-  chain (e.g. ST_Area(ST_Rotate(g, θ)) stays laned end to end).
+  OUTPUT of one laned stage, or a packed body's WKT, is claimable by
+  the next lane of the same expression.
 
 Exactness contract (bit-equal to the scalar twin, pinned by
 tests/test_lanes_ops.py): float parse is arrow strtod == Python float;
@@ -41,7 +46,6 @@ import math
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 import pyarrow.compute as pc
 
 from . import lanes as L
@@ -102,23 +106,7 @@ def _fallback2(out, claimed, a, b, row_fn) -> pd.Series:
     return outs
 
 
-# ------------------------------------------------------ affine transforms
-
-def _emit_poly5(parts_xy) -> tuple[pa.Array, np.ndarray]:
-    """POLYGON text from 4 transformed (x, y) float arrays; the closure
-    re-emits the first vertex exactly as the kernel to_wkt does. Returns
-    (text, fmt-window ok mask)."""
-    strs, ok = [], None
-    for v in parts_xy:
-        sv, okv = fmt_f64(v)
-        strs.append(sv)
-        ok = okv if ok is None else (ok & okv)
-    x1s, y1s, x2s, y2s, x3s, y3s, x4s, y4s = strs
-    txt = _join("POLYGON ((", x1s, " ", y1s, ", ", x2s, " ", y2s, ", ",
-                x3s, " ", y3s, ", ", x4s, " ", y4s, ", ", x1s, " ",
-                y1s, "))")
-    return txt, ok
-
+# ------------------------------------------------------ rect vertices
 
 def _fpoly5_closed(b: _Batch):
     """(closed mask, xs[0..3], ys[0..3]) of the FPOLY5 extract — the 4
@@ -129,180 +117,6 @@ def _fpoly5_closed(b: _Batch):
     ys = [_num(g, 2 * i + 1) for i in range(5)]
     closed = valid & (xs[4] == xs[0]) & (ys[4] == ys[0])
     return closed, xs[:4], ys[:4]
-
-
-def _coord_map_lane(s: pd.Series, claim_extra: np.ndarray, fx, fy,
-                    row_fn, other_args) -> pd.Series:
-    """Shared shape of rotate/scale/affine: apply (fx, fy) to every
-    vertex of canonical FPOLY5 / FPOINT2 rows, emit through fmt_f64."""
-    f = _Fill(s)
-    closed, xs, ys = _fpoly5_closed(f.b)
-    m = closed & claim_extra
-    if m.any():
-        parts = []
-        for i in range(4):
-            parts.append(fx(xs[i], ys[i]))
-            parts.append(fy(xs[i], ys[i]))
-        txt, ok = _emit_poly5(parts)
-        f.put(m & ok, txt)
-    mp, g = f.b.extract(FPOINT2)
-    mp = mp & claim_extra & ~f.claimed
-    if mp.any():
-        x, y = _num(g, 0), _num(g, 1)
-        sx, okx = fmt_f64(fx(x, y))
-        sy, oky = fmt_f64(fy(x, y))
-        f.put(mp & okx & oky, _join("POINT (", sx, " ", sy, ")"))
-    out = pd.Series(f.out, index=s.index, dtype=object)
-    rest = pd.Series(~f.claimed, index=s.index)
-    if rest.any():
-        cols = [s[rest]] + [a[rest] for a in other_args]
-        out[rest] = pd.Series([row_fn(*vals) for vals in zip(*cols)],
-                              index=s[rest].index, dtype=object)
-    return out
-
-
-def rotate(s: pd.Series, t: pd.Series, scalar_fn) -> pd.Series:
-    tn = pd.to_numeric(t, errors="coerce")
-    tmask = tn.notna().to_numpy()
-    c = sn = None
-    if tmask.any():
-        c, sn = L._trig(tn)
-    else:
-        c = sn = np.zeros(len(s))
-
-    def row(g, v):
-        return None if g is None or pd.isna(v) else scalar_fn(g, float(v))
-
-    return _coord_map_lane(
-        s, tmask,
-        lambda x, y: c * x - sn * y,
-        lambda x, y: sn * x + c * y,
-        row, [t])
-
-
-def scale(s: pd.Series, fx: pd.Series, fy: pd.Series, scalar_fn) -> pd.Series:
-    a = _npnum(fx)
-    b = _npnum(fy)
-    ok = ~np.isnan(a) & ~np.isnan(b)
-
-    def row(g, va, vb):
-        return None if g is None or pd.isna(va) or pd.isna(vb) \
-            else scalar_fn(g, float(va), float(vb))
-
-    return _coord_map_lane(s, ok, lambda x, y: x * a, lambda x, y: y * b,
-                           row, [fx, fy])
-
-
-def affine(s: pd.Series, a, b, d, e, xo, yo, scalar_fn) -> pd.Series:
-    va, vb, vd, ve, vx, vy = (_npnum(v) for v in (a, b, d, e, xo, yo))
-    ok = ~(np.isnan(va) | np.isnan(vb) | np.isnan(vd) | np.isnan(ve)
-           | np.isnan(vx) | np.isnan(vy))
-
-    def row(g, *params):
-        return None if g is None else scalar_fn(g, *map(float, params))
-
-    return _coord_map_lane(
-        s, ok,
-        lambda x, y: va * x + vb * y + vx,
-        lambda x, y: vd * x + ve * y + vy,
-        row, [a, b, d, e, xo, yo])
-
-
-def snap_to_grid(s: pd.Series, size: pd.Series, scalar_fn) -> pd.Series:
-    sz = _npnum(size)
-    with np.errstate(invalid="ignore", divide="ignore"):
-        ok = (sz > 0)
-    f = _Fill(s)
-    m, g = f.b.extract(FPOINT2)
-    m = m & ok
-    if m.any():
-        x, y = _num(g, 0), _num(g, 1)
-        with np.errstate(invalid="ignore"):
-            q1, q2 = x / sz, y / sz
-            # np.rint == Python round() (both half-even) for |q| < 2^52
-            safe = (np.abs(q1) < 1e12) & (np.abs(q2) < 1e12)
-            rx = np.rint(q1) * sz
-            ry = np.rint(q2) * sz
-        sx, okx = fmt_f64(rx)
-        sy, oky = fmt_f64(ry)
-        f.put(m & safe & okx & oky, _join("POINT (", sx, " ", sy, ")"))
-
-    def row(g_, v):
-        return None if g_ is None or pd.isna(v) else scalar_fn(g_, float(v))
-
-    return _fallback2(f.out, f.claimed, s, size, row)
-
-
-def reduce_precision(s: pd.Series, d: pd.Series, scalar_fn) -> pd.Series:
-    dn = _npnum(d)
-    ok = ~np.isnan(dn)
-    f = _Fill(s)
-    m, g = f.b.extract(FPOINT2)
-    m = m & ok
-    if m.any():
-        x, y = _num(g, 0), _num(g, 1)
-        # Python round(float, n) is correctly-rounded DECIMAL rounding;
-        # np.round's scale-rint-descale can differ — round per row on the
-        # pre-parsed floats (2 C calls/row, no parse)
-        rx = np.full(len(s), np.nan)
-        ry = np.full(len(s), np.nan)
-        for i in np.nonzero(m)[0]:
-            nd = int(dn[i])
-            rx[i] = round(x[i], nd)
-            ry[i] = round(y[i], nd)
-        sx, okx = fmt_f64(rx)
-        sy, oky = fmt_f64(ry)
-        f.put(m & okx & oky, _join("POINT (", sx, " ", sy, ")"))
-
-    def row(g_, v):
-        return None if g_ is None or pd.isna(v) else scalar_fn(g_, int(v))
-
-    return _fallback2(f.out, f.claimed, s, d, row)
-
-
-def expand(s: pd.Series, d: pd.Series, scalar_fn) -> pd.Series:
-    dn = _npnum(d)
-    ok = ~np.isnan(dn)
-    f = _Fill(s)
-    closed, xs, ys = _fpoly5_closed(f.b)
-    mp, gp = f.b.extract(FPOINT2)
-    for src in ("poly", "point"):
-        if src == "poly":
-            m = closed & ok
-            if not m.any():
-                continue
-            mnx = np.minimum(np.minimum(xs[0], xs[1]),
-                             np.minimum(xs[2], xs[3]))
-            mxx = np.maximum(np.maximum(xs[0], xs[1]),
-                             np.maximum(xs[2], xs[3]))
-            mny = np.minimum(np.minimum(ys[0], ys[1]),
-                             np.minimum(ys[2], ys[3]))
-            mxy = np.maximum(np.maximum(ys[0], ys[1]),
-                             np.maximum(ys[2], ys[3]))
-        else:
-            m = mp & ok & ~f.claimed
-            if not m.any():
-                continue
-            mnx = mxx = _num(gp, 0)
-            mny = mxy = _num(gp, 1)
-        x1, x2 = mnx - dn, mxx + dn
-        y1, y2 = mny - dn, mxy + dn
-        main = m & (x1 < x2) & (y1 < y2)     # other branches -> scalar
-        if not main.any():
-            continue
-        s1, o1 = fmt_f64(x1)
-        s2, o2 = fmt_f64(y1)
-        s3, o3 = fmt_f64(x2)
-        s4, o4 = fmt_f64(y2)
-        txt = _join("POLYGON ((", s1, " ", s2, ", ", s3, " ", s2, ", ",
-                    s3, " ", s4, ", ", s1, " ", s4, ", ", s1, " ", s2,
-                    "))")
-        f.put(main & o1 & o2 & o3 & o4, txt)
-
-    def row(g_, v):
-        return None if g_ is None or pd.isna(v) else scalar_fn(g_, float(v))
-
-    return _fallback2(f.out, f.claimed, s, d, row)
 
 
 def multi(s: pd.Series, scalar_fn) -> pd.Series:

@@ -3821,13 +3821,6 @@ def st_interiorringn(s: pd.Series, n: pd.Series) -> pd.Series:
 def st_reverse(s: pd.Series) -> pd.Series:
     return s.map(_reverse, na_action="ignore")
 
-@pandas_udf(StringType())
-def st_translate(s: pd.Series, dx: pd.Series, dy: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None or pd.isna(a) or pd.isna(b)
-         else _translate(g, float(a), float(b))
-         for g, a, b in zip(s, dx, dy)], index=s.index)
-
 @pandas_udf(DoubleType())
 def st_azimuth(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([_azimuth(x, y) for x, y in zip(a, b)],
@@ -3885,31 +3878,6 @@ def st_collect_aggr(x: pd.Series, y: pd.Series) -> str:
                       [tuple(p) for p in pts]))
 
 # ---------------------------------------------- r7 scalar wrappers
-
-@pandas_udf(StringType())
-def st_rotate(s: pd.Series, t: pd.Series) -> pd.Series:
-    return LO.rotate(s, t, _rotate)
-
-@pandas_udf(StringType())
-def st_scale(s: pd.Series, fx: pd.Series, fy: pd.Series) -> pd.Series:
-    return LO.scale(s, fx, fy, _scale)
-
-@pandas_udf(StringType())
-def st_affine(s: pd.Series, a: pd.Series, b: pd.Series, d: pd.Series,
-              e: pd.Series, xo: pd.Series, yo: pd.Series) -> pd.Series:
-    return LO.affine(s, a, b, d, e, xo, yo, _affine)
-
-@pandas_udf(StringType())
-def st_snaptogrid(s: pd.Series, size: pd.Series) -> pd.Series:
-    return LO.snap_to_grid(s, size, _snap_to_grid)
-
-@pandas_udf(StringType())
-def st_reduceprecision(s: pd.Series, d: pd.Series) -> pd.Series:
-    return LO.reduce_precision(s, d, _reduce_precision)
-
-@pandas_udf(StringType())
-def st_expand(s: pd.Series, d: pd.Series) -> pd.Series:
-    return LO.expand(s, d, _expand)
 
 @pandas_udf(StringType())
 def st_multi(s: pd.Series) -> pd.Series:
@@ -4373,7 +4341,6 @@ _REGISTRY = {
     "ST_NumInteriorRings": st_numinteriorrings,
     "ST_InteriorRingN": st_interiorringn,
     "ST_Reverse": st_reverse,
-    "ST_Translate": st_translate,
     "ST_Azimuth": st_azimuth,
     "ST_Covers": st_covers,
     "ST_CoveredBy": st_coveredby,
@@ -4385,13 +4352,8 @@ _REGISTRY = {
     "ST_LineInterpolatePoint": st_lineinterpolatepoint,
     "ST_LineLocatePoint": st_linelocatepoint,
     "ST_ClosestPoint": st_closestpoint,
-    # --- r7 surface: affine/precision, measures, shape, editors ---
-    "ST_Rotate": st_rotate,
-    "ST_Scale": st_scale,
-    "ST_Affine": st_affine,
-    "ST_SnapToGrid": st_snaptogrid,
-    "ST_ReducePrecision": st_reduceprecision,
-    "ST_Expand": st_expand,
+    # --- r7 surface: measures, shape, editors (the affine/precision
+    # maps are packed bodies: functions/geomb.REGISTRY_TEXT) ---
     "ST_Multi": st_multi,
     "ST_Perimeter": st_perimeter,
     "ST_Angle": st_angle,

@@ -87,17 +87,28 @@ def test_perimeter_geometrycollection_sums_areal_members():
 
 
 def test_expand_degenerate_envelopes():
-    assert S._expand("POINT (3 4)", 0) == "POINT (3 4)"
-    assert S._expand("LINESTRING (1 1, 1 5)", 0) == "LINESTRING (1 1, 1 5)"
-    assert S._expand("LINESTRING (1 1, 5 1)", 0) == "LINESTRING (1 1, 5 1)"
-    # negative d past the center still collapses to EMPTY
-    assert S._expand("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", -5) == \
-        "POLYGON EMPTY"
-    # exact collapse to the center line/point is degenerate, not EMPTY
-    assert S._expand("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", -1) == \
-        "POINT (1 1)"
-    assert S._expand("POINT (3 4)", 1) == \
-        "POLYGON ((2 3, 4 3, 4 5, 2 5, 2 3))"
+    """The scalar kernel and the packed body behind the registered
+    ST_Expand give the same degenerate shapes."""
+    import pandas as pd
+
+    def body(w, d):
+        return S.udf_table()["ST_Expand"].func(
+            pd.Series([w], dtype=object), pd.Series([float(d)]))[0]
+
+    for expand in (S._expand, body):
+        assert expand("POINT (3 4)", 0) == "POINT (3 4)"
+        assert expand("LINESTRING (1 1, 1 5)", 0) == \
+            "LINESTRING (1 1, 1 5)"
+        assert expand("LINESTRING (1 1, 5 1)", 0) == \
+            "LINESTRING (1 1, 5 1)"
+        # negative d past the center still collapses to EMPTY
+        assert expand("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", -5) == \
+            "POLYGON EMPTY"
+        # exact collapse to the center line/point is degenerate, not EMPTY
+        assert expand("POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))", -1) == \
+            "POINT (1 1)"
+        assert expand("POINT (3 4)", 1) == \
+            "POLYGON ((2 3, 4 3, 4 5, 2 5, 2 3))"
 
 
 def test_line_merge_degree_rules():

@@ -155,6 +155,20 @@ def test_shared_node_joins_the_chain():
         ["st_area", "st_astext", "st_geomfromwkt"]
 
 
+def test_coordinate_map_chains_run_packed():
+    # a coordinate map is a body, not the end of the chain: no WKT is
+    # written after it and parsed again by its consumer
+    assert _packed("ST_Area(ST_Rotate(g, t)) AS a") == \
+        ["st_area", "st_rotate"]
+    assert _packed("ST_X(ST_Centroid(ST_Affine(g, 0D, -1D, 1D, 0D, 0D,"
+                   " 0D))) AS x") == ["st_affine", "st_centroid", "st_x"]
+    assert _packed("ST_AsText(ST_Expand(ST_SnapToGrid(ST_Translate("
+                   "ST_Scale(ST_ReducePrecision(g, 1), 2D, 3D), 1D, 1D),"
+                   " 0.5D), 1D)) AS w") == \
+        ["st_astext", "st_expand", "st_reduceprecision", "st_scale",
+         "st_snaptogrid", "st_translate"]
+
+
 def test_coords_chain_runs_packed():
     assert _packed("ST_Coords(ST_Transform(ST_GeomFromWKT(w),"
                    " 'EPSG:4326', 'EPSG:32722')) AS c") == \

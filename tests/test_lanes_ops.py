@@ -102,6 +102,12 @@ def _boom(*a, **k):
     raise AssertionError("lane fell back to the scalar")
 
 
+def _st(name: str):
+    """The registered UDF's function (the coordinate maps are packed
+    bodies behind functions/geomb's one-node adapter)."""
+    return S.udf_table()[name].func
+
+
 # ------------------------------------------------- unary wrapper parity
 
 UNARY = [
@@ -179,7 +185,7 @@ def test_linemerge_wrapper():
 def test_rotate_then_area_chain():
     s = _cat(POLY)
     t = _pad(THETA, 0.5)
-    rot = S.st_rotate.func(s, t)
+    rot = _st("ST_Rotate")(s, t)
     want = [None if g is None or pd.isna(v) else S._rotate(g, float(v))
             for g, v in zip(s, t)]
     _eq(rot, want, "rotate")
@@ -196,7 +202,7 @@ def test_affine_centroid_chain():
          "POINT (1.5 -2.25)", None], dtype=object)], ignore_index=True)
     params = [pd.Series([v] * len(s), dtype=float)
               for v in (0.0, -1.0, 1.0, 0.0, 0.0, 0.0)]
-    aff = S.st_affine.func(s, *params)
+    aff = _st("ST_Affine")(s, *params)
     want = [None if g is None else S._affine(g, 0.0, -1.0, 1.0, 0.0,
                                              0.0, 0.0) for g in s]
     _eq(aff, want, "affine")
@@ -209,21 +215,21 @@ def test_scale_expand_snap_reduce():
     s = _cat(POLY)
     two = pd.Series([2.0] * len(s))
     three = pd.Series([3.0] * len(s))
-    _eq(S.st_scale.func(s, two, three),
+    _eq(_st("ST_Scale")(s, two, three),
         [None if g is None else S._scale(g, 2.0, 3.0) for g in s],
         "scale")
     d = _pad(pd.Series(((1 + PID % 5) / 4.0)), 0.25)
-    _eq(S.st_expand.func(s, d),
+    _eq(_st("ST_Expand")(s, d),
         [None if g is None or pd.isna(v) else S._expand(g, float(v))
          for g, v in zip(s, d)], "expand")
     fpt = _cat(pd.Series([f"POINT ({a + 0.3125} {b})"
                           for a, b in zip(A, B)], dtype=object))
     q = pd.Series([0.25] * len(fpt))
-    _eq(S.st_snaptogrid.func(fpt, q),
+    _eq(_st("ST_SnapToGrid")(fpt, q),
         [None if g is None else S._snap_to_grid(g, 0.25) for g in fpt],
         "snaptogrid")
     one = pd.Series([1] * len(fpt))
-    _eq(S.st_reduceprecision.func(fpt, one),
+    _eq(_st("ST_ReducePrecision")(fpt, one),
         [None if g is None else S._reduce_precision(g, 1) for g in fpt],
         "reduceprecision")
 
@@ -365,15 +371,31 @@ def test_misc_wrappers():
 
 # --------------------------------------------------------- claim probes
 
-def test_fixture_classes_are_claimed():
+def test_fixture_classes_are_claimed(monkeypatch):
     """The exact fixture shape classes of the five registry batches must
-    be handled by the lanes — scalar_fn must never be called."""
+    be handled by the lanes — scalar_fn must never be called — and by
+    the packed bodies of the coordinate maps, which must send no fixture
+    rect to their scalar kernel or to the scalar WKT parser."""
+    from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import (
+        geomtypes as GT,
+    )
+
     one = lambda v: pd.Series([v] * N)  # noqa: E731
-    LO.rotate(POLY, THETA, _boom)
-    LO.area(LO.rotate(POLY, THETA, S._rotate), _boom)
-    LO.affine(POLY, *[one(float(v)) for v in (0, -1, 1, 0, 0, 0)], _boom)
-    LO.scale(POLY, one(2.0), one(3.0), _boom)
-    LO.expand(POLY, pd.Series((1 + PID % 5) / 4.0), _boom)
+    for name in ("_rotate", "_affine", "_scale", "_expand", "_translate",
+                 "_snap_to_grid", "_reduce_precision"):
+        monkeypatch.setattr(S, name, _boom)
+    monkeypatch.setattr(GT, "parse_wkt", _boom)
+    rot = _st("ST_Rotate")(POLY, THETA)
+    _st("ST_Affine")(POLY, *[one(float(v)) for v in (0, -1, 1, 0, 0, 0)])
+    _st("ST_Scale")(POLY, one(2.0), one(3.0))
+    _st("ST_Translate")(POLY, one(2.0), one(3.0))
+    _st("ST_Expand")(POLY, pd.Series((1 + PID % 5) / 4.0))
+    fpt = pd.Series([f"POINT ({a + 0.3125} {b})" for a, b in zip(A, B)],
+                    dtype=object)
+    _st("ST_SnapToGrid")(fpt, one(0.25))
+    _st("ST_ReducePrecision")(fpt, one(1))
+    monkeypatch.undo()
+    LO.area(rot, _boom)
     LO.multi(IPT, _boom)
     LO.perimeter(POLY, _boom)
     LO.bounding_diagonal(POLY, _boom)

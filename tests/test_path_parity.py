@@ -1,12 +1,15 @@
 """Every path an ST_ call can take gives a raw input the same answer.
 
 One fixed seed, no Spark. The corpus is seeded integer and 17-digit
-float rects and points plus edge rows the fixtures never hold: CW rings,
-a repeated vertex, degenerate rings, a CCW hole, MULTIPOLYGON,
-LINESTRING, POLYGON Z, GEOMETRYCOLLECTION, an SRID= prefix, EMPTY,
-NULL and a ring the parser rejects. Each expression runs on two paths:
+float rects (every fourth CW), points and 64-vertex rings, plus edge
+rows the fixtures never hold: CW rings, a repeated vertex, degenerate
+rings, CCW and CW holes, MULTIPOLYGON (one with a hole), LINESTRING,
+MULTILINESTRING, MULTIPOINT, POLYGON / POINT / LINESTRING Z,
+GEOMETRYCOLLECTION, an SRID= prefix, EMPTY, -0, exponent spellings,
+unclosed rects, NULL and a ring the parser rejects. Each expression
+runs on two paths:
 
-- lone: the registered text UDFs composed call by call (`.func`), as a
+- lone: the registered UDFs composed call by call (`.func`), as a
   plain `selectExpr` runs them;
 - fused: the body `chainrw._Fusion` generates for the projection, whose
   carrier chains run packed.
@@ -16,9 +19,14 @@ scalar kernels exactly, except transformed coordinates, which keep the
 engine's 1e-6 contract (the vectorized projection and the scalar one
 differ in the last ulp). Vertex order and count, NULLs and errors must
 match exactly: a row whose reference raises must make every path raise.
+The coordinate maps (ST_Rotate … ST_Expand) take seeded per-row
+parameters with NULL in every column and match with no tolerance and
+with the same error type.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 import pandas as pd
@@ -57,6 +65,19 @@ EDGE = [
     "LINESTRING EMPTY",
     "POLYGON ((0 0, 1 1, 0 0))",                 # < 3 vertices: raises
     None,
+    "POLYGON ((-0 0, 4 -0, 4 4, -0 4, -0 0))",                 # -0
+    "POINT (-0 -0)",
+    "POINT (1.2e11 -3.5E-7)",                                  # exponents
+    "POLYGON ((1e2 0, 2.5e2 0, 2.5e2 1.5e2, 1e2 1.5e2, 1e2 0))",
+    "POLYGON ((0 0, 4 0, 4 4, 0 4))",                          # unclosed
+    "POLYGON ((0.1 0.2, 4.30000000000001 0.2, 4.30000000000001 4.7,"
+    " 0.1 4.7))",
+    "POINT Z (1 2 3)",
+    "LINESTRING Z (0 0 0, 3 4 5)",
+    "MULTILINESTRING ((0 0, 1 1), (2 2, 3.5 3.25))",
+    "MULTIPOLYGON (((0 0, 9 0, 9 9, 0 9, 0 0), (2 2, 2 4, 4 4, 4 2, 2 2)),"
+    " ((20 20, 25 20, 25 25, 20 20)))",
+    "GEOMETRYCOLLECTION EMPTY",
 ]
 
 
@@ -81,6 +102,10 @@ def _corpus(n: int = 300) -> list:
         rows.append(f"POINT ({x} {y})")
     for x, y in rng.uniform(-200, 200, (n // 3, 2)).tolist():
         rows.append(f"POINT ({x!r} {y!r})")
+    for x, y in rng.uniform(-200, 200, (4, 2)).tolist():   # long rings
+        ring = ", ".join(f"{x + math.cos(a) * 7!r} {y + math.sin(a) * 5!r}"
+                         for a in (k * math.pi / 32 for k in range(64)))
+        rows.append(f"POLYGON (({ring}, {x + 7.0!r} {y!r}))")
     rows += EDGE
     return [rows[i] for i in rng.permutation(len(rows))]
 
@@ -271,3 +296,141 @@ def test_null_crs_gives_null_rows(path):
         cols = {"w": w, "src": pd.Series(src, dtype=object),
                 "dst": pd.Series(dst, dtype=object)}
         assert [_plain(v) for v in PATHS[path](expr, cols)] == [None, None]
+
+
+# ------------------------------------------------------- coordinate maps
+#
+# The seven coordinate maps have one packed body each (functions/geomb),
+# called alone through the one-node adapter and chained by the fuser;
+# Z and GEOMETRYCOLLECTION rows go through the scalar kernel. Their
+# paths must agree with the kernel byte for byte, with no tolerance.
+
+MAPS = {
+    # SQL name: (parameter columns, per-row scalar kernel)
+    "ST_Rotate": (("t",), S._rotate),
+    "ST_Scale": (("fx", "fy"), S._scale),
+    "ST_Translate": (("dx", "dy"), S._translate),
+    "ST_Affine": (("pa", "pb", "pd", "pe", "px", "py"), S._affine),
+    "ST_SnapToGrid": (("size",), S._snap_to_grid),
+    "ST_ReducePrecision": (("digits",),
+                           lambda w, n: S._reduce_precision(w, int(n))),
+    "ST_Expand": (("d",), S._expand),
+}
+
+#: per-column parameter pools; every column holds NULL too
+_POOL = {
+    "t": [0.0, 0.39269908169872414, 1.5707963267948966, -2.5, 3.0,
+          0.1, 7.25, float("inf")],
+    "fx": [2.0, -1.5, 0.1, 1e-3, 3.0, 0.0, -0.0, 1e11],
+    "dx": [2.0, -3.5, 0.1, 1e11, -0.0, 0.0, 123.456, -7e-5],
+    "pa": [0.0, -1.0, 1.0, 0.5, 2.5, -0.3, 1e-7, 3.0],
+    "size": [0.25, 0.5, 1.0, 3.7, 2.5e-3, 5e-324, 0.0, -1.0],
+    "digits": [-2.0, -1.0, 0.0, 1.0, 2.0, 3.0, 5.0, 17.0],
+    "d": [0.0, -0.0, 0.5, -0.5, -5.0, 1.25, 1e3, 1e-9],
+}
+_POOL["fy"], _POOL["dy"] = _POOL["fx"], _POOL["dx"]
+for _k in ("pb", "pd", "pe", "px", "py"):
+    _POOL[_k] = _POOL["pa"]
+
+
+def _map_params(n: int) -> dict:
+    """Seeded per-row parameter columns, about one row in ten NULL."""
+    rng = np.random.default_rng(20261019)
+    out = {}
+    for k, pool in _POOL.items():
+        v = np.asarray(pool)[rng.integers(0, len(pool), n)]
+        if k in ("t", "dx", "dy", "pa", "pe"):
+            free = rng.random(n) < 0.5          # plus 17-digit values
+            v[free] = rng.uniform(-7, 7, int(free.sum()))
+        v[rng.random(n) < 0.1] = np.nan
+        out[k] = v
+    return out
+
+
+def _map_ref(kernel, w, *params):
+    """The scalar kernel on the row. A NULL geometry or parameter gives
+    NULL. A geometry that does not parse raises whatever its parameters
+    are (a NULL one, a grid size <= 0), as the packed paths parse the
+    column first."""
+    if w is None:
+        return None
+    GT.parse_wkt(w)
+    return None if any(v != v for v in params) else kernel(w, *params)
+
+
+#: case: (SQL name, expression, measure applied to the kernel's result)
+MAP_CASES = {}
+for _name, (_params, _) in MAPS.items():
+    _call = (_name, "w", *_params)
+    MAP_CASES[f"{_name}-astext"] = (_name, ("ST_AsText", _call), None)
+    MAP_CASES[f"{_name}-area"] = (_name, ("ST_Area", _call), S._area)
+    MAP_CASES[f"{_name}-centroid"] = (
+        _name, ("ST_AsText", ("ST_Centroid", _call)), S._centroid)
+
+
+@pytest.mark.parametrize("case", sorted(MAP_CASES))
+def test_coordinate_maps_equal_the_scalar_kernels(case):
+    """Lone adapter, fused body and scalar kernel agree byte for byte on
+    every row, and raise the same error type on every row that raises."""
+    name, expr, after = MAP_CASES[case]
+    names, kernel = MAPS[name]
+    ws = _corpus()
+    par = _map_params(len(ws))
+    rows, want, bad = [], [], []
+    for i, w in enumerate(ws):
+        ps = [float(par[k][i]) for k in names]
+        try:
+            v = _map_ref(kernel, w, *ps)
+            v = v if after is None or v is None else after(v)
+        except Exception as exc:                        # noqa: BLE001
+            bad.append((i, type(exc)))
+            continue
+        rows.append(i)
+        want.append(_plain(v))
+
+    def cols(idx):
+        out = {"w": pd.Series([ws[i] for i in idx], dtype=object)}
+        out.update({k: pd.Series(par[k][idx]) for k in names})
+        return out
+
+    for label, path in PATHS.items():
+        got = [_plain(v) for v in path(expr, cols(rows))]
+        diff = [(ws[i], [par[k][i] for k in names], g, w)
+                for i, g, w in zip(rows, got, want) if g != w]
+        assert not diff, (label, diff[:3])
+    assert len(rows) > 600 and bad
+    for i, err in bad:
+        for label, path in PATHS.items():
+            with pytest.raises(Exception) as got:
+                path(expr, cols([i]))
+            assert got.type is err, (label, ws[i], got.value)
+
+
+@pytest.mark.parametrize("path", sorted(PATHS))
+@pytest.mark.parametrize("name", sorted(MAPS))
+def test_coordinate_map_null_arguments_give_null(path, name):
+    """A NULL in any argument gives a NULL row, not NaN coordinates; a
+    NULL geometry never looks at its parameters (an infinite angle
+    raises only on a live row)."""
+    params, _ = MAPS[name]
+    w = pd.Series(["POINT (1 2)", "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))",
+                   "POINT Z (1 2 3)", None], dtype=object)
+    expr = ("ST_AsText", (name, "w", *params))
+    for k in params:
+        cols = {"w": w}
+        cols.update({c: pd.Series([np.nan if c == k else 1.0] * 3
+                                  + [np.inf]) for c in params})
+        assert [_plain(v) for v in PATHS[path](expr, cols)] == [None] * 4
+
+
+@pytest.mark.parametrize("path", sorted(PATHS))
+def test_expand_takes_bounds_in_vertex_order_past_nan(path):
+    """Python's min and max skip a NaN after the first vertex and keep
+    one in the first vertex, so such rows take the scalar kernel. (A
+    ring whose result holds a NaN vertex is outside the contract: the
+    parser closes rings by ==, see COVERAGE.md.)"""
+    w = pd.Series(["LINESTRING (0 0, nan 1, 2 2)",
+                   "MULTIPOINT (5 5, 1 nan, 3 2)"], dtype=object)
+    cols = {"w": w, "d": pd.Series([1.0, 0.5])}
+    got = PATHS[path](("ST_AsText", ("ST_Expand", "w", "d")), cols)
+    assert list(got) == [S._expand(v, d) for v, d in zip(w, cols["d"])]
