@@ -157,10 +157,10 @@ def _parse(s: str, i: int = 0, stops: str = ""):
 #: inner geometry (ST_NPoints∘ST_Segmentize is a pure vertex-count
 #: formula; the densified ring itself is never built). Applied before
 #: the projection fuser; fused == composition is parity-pinned
-#: (tests/test_chainrw.py).
+#: (tests/test_chainrw.py). ST_NumPoints is not fused: it counts only a
+#: LINESTRING, and the counter counts every kind.
 _FUSE = {
     ("st_npoints", "st_segmentize"): "ST_SegmentizeNPoints",
-    ("st_numpoints", "st_segmentize"): "ST_SegmentizeNPoints",
 }
 
 
@@ -309,11 +309,12 @@ class _Fusion:
         every member of a carrier chain, i.e. of >= 2 nodes with a body
         linked through geometry arguments that a geometry-producing body
         fills, at least one of them not hygiene (ST_GeomFromWKT /
-        ST_AsText). A lone call stays on its text UDF: for a lane-backed
-        function (the measures, ST_X / ST_Y, the interval predicates)
-        or a parse straight into a serialize that is cheaper than a
-        decode and an encode, and the text UDFs of geomb.REGISTRY_TEXT
-        are that one-node decode, body and encode already. A name
+        ST_AsText). A lone call stays on its registered UDF: for a
+        lane-backed function (ST_X / ST_Y, the interval predicates) or
+        a parse straight into a serialize that is cheaper than a decode
+        and an encode, and the UDFs of geomb.REGISTRY_TEXT (the
+        measures, the coordinate maps, …) are that one-node decode,
+        body and encode already. A name
         without a body ends the chain at its node; chains inside its
         arguments still form."""
         comp = list(range(len(self.nodes)))
@@ -384,6 +385,8 @@ class _Fusion:
                              for i, r in enumerate(refs)))
                 if isinstance(v, pd.Series):
                     v.index = cols[0].index
+                elif c.reprints:
+                    v = PK.as_printed(v)
                 vals.append(v)
             return pd.DataFrame({f"f{k}": get(r)
                                  for k, r in enumerate(outs)})

@@ -18,14 +18,15 @@ positions, geometry result?). It has two users:
   bodies inside one fused Python call: `decode` parses each distinct
   geometry input once, and `encode` formats WKT only where a packed
   value surfaces;
-- `REGISTRY_TEXT` registers thirteen names as the same decode, body and
+- `REGISTRY_TEXT` registers eighteen names as the same decode, body and
   encode behind one adapter: ST_Transform, ST_Envelope, ST_BufferRound,
   ST_Contains and ST_Within, whose body called alone beats a per-row
   text loop; the coordinate maps ST_Rotate, ST_Scale, ST_Translate,
-  ST_Affine, ST_SnapToGrid, ST_ReducePrecision and ST_Expand, which have
-  no other lone path; and ST_Coords (array<double>: flattened x, y …,
-  areal rings closed, the numbers a WKT-text split yields), an engine
-  extension with no text twin.
+  ST_Affine, ST_SnapToGrid, ST_ReducePrecision and ST_Expand, and the
+  measures ST_Area, ST_NPoints, ST_NumPoints, ST_Length and
+  ST_Centroid, which have no other lone path; and ST_Coords
+  (array<double>: flattened x, y …, areal rings closed, the numbers a
+  WKT-text split yields), an engine extension with no text twin.
 
 Decoding is a plain parse. Canonical rows become packed rows straight
 from the lanes extracts; every other row takes the scalar parser. The
@@ -77,50 +78,52 @@ def decode(s: pd.Series) -> PK.PackedBatch:
     handful of distinct strings across the whole batch (e.g. 50 region
     rects x 600k rows): from 4096 rows on, a batch that is <= 1/4
     distinct parses each distinct value ONCE and gathers it back.
-    factorize is one hash pass (~0.2 us/row)."""
+    factorize is one hash pass (~0.2 us/row), so it runs only when the
+    first n/4 + 2 rows repeat a value: a batch of at most n/4 distinct
+    values always does (one of those rows may be NULL, which factorize
+    leaves out), and a batch of distinct strings, the common case, pays
+    a hash of a quarter of its rows instead."""
     if len(s) >= 4096:
-        codes, uniques = pd.factorize(s)
-        if len(uniques) <= len(s) // 4:
-            return PK.take(_parse(pd.Series(uniques, dtype=object)), codes)
+        head = s.to_numpy()[:len(s) // 4 + 2]
+        if len(pd.unique(head)) < len(head):
+            codes, uniques = pd.factorize(s)
+            if len(uniques) <= len(s) // 4:
+                return PK.take(_parse(pd.Series(uniques, dtype=object)),
+                               codes)
     return _parse(s)
 
 
 def _parse(s: pd.Series) -> PK.PackedBatch:
-    """Text edge off the shared lanes extracts: canonical POINT,
-    LINESTRING and MULTIPOINT text and the CCW and CW rect walks
-    (closing vertex optional) become one packed ring per row, in walk
-    order, straight from the captured numbers. Numbers go through
-    arrow's cast, the same correctly rounded double float() gives, so
-    every such row equals the scalar parse. Any other row (Z, EMPTY,
-    holes, parenthesized MULTIPOINT members, stray whitespace,
-    non-finite rects) takes the scalar parser, and only those rows go
-    through WKB."""
+    """Text edge off the shared lanes patterns: canonical single-ring
+    POLYGON (closing vertex optional), LINESTRING, POINT and MULTIPOINT
+    text become one packed ring per row, in text order. A bare RE2 match
+    validates each row; its numbers are the text between the type prefix
+    and the closing parentheses, split and cast by arrow, the same
+    correctly rounded double float() gives, so every such row equals the
+    scalar parse. The classes match in that order (a row has one type
+    prefix, so at most one matches) and stop once every non-NULL row is
+    claimed. Any other row (Z, EMPTY, holes, parenthesized MULTIPOINT
+    members, stray whitespace, non-finite coordinates, a ring of fewer
+    than three distinct vertices) takes the scalar parser, and only
+    those rows go through WKB."""
     b = LN.batch_of(s)
+    todo = s.notna().to_numpy()
     pieces = []                 # (row mask, kind, points per row, xy)
-    m, g = b.extract(LN.FPOINT2)
-    if m.any():
-        pieces.append((m, PK.POINT, 1, np.column_stack(
-            [LN._num(g, 0)[m], LN._num(g, 1)[m]])))
-    for pat, kind in ((LO.FLINE_ANY, PK.LINESTRING),
-                      (LO.FMPOINT_ANY, PK.MULTIPOINT)):
-        m, g = b.extract(pat)
-        if m.any():
-            pieces.append((m, kind, *LN._body_xy(g[0], np.flatnonzero(m))))
-    g, ccw, cw, _ = LN._poly5_walks(b, LO.FPOLY45)
-    m = ccw | cw
-    if m.any():
-        a, y1, c, y3 = (LN._num(g, i)[m] for i in (0, 1, 2, 5))
-        ok = np.isfinite([a, y1, c, y3]).all(axis=0)
-        m[m] = ok
-        pieces.append((m, PK.POLYGON, 4, np.column_stack(
-            [a, y1, c, y1, c, y3, a, y3])[ok].reshape(-1, 2)))
-    done = np.zeros(len(s), dtype=bool)
-    for m, *_ in pieces:
-        done |= m
-    rest = np.flatnonzero(~done & s.notna().to_numpy())
+    for pat, kind, head, tail in _CLASSES:
+        if not todo.any():
+            break
+        m = b.match(pat) & todo
+        if not m.any():
+            continue
+        npts, xy = LN._body_xy(b.arr, np.flatnonzero(m), head, tail)
+        if kind == PK.POLYGON:
+            m, npts, xy = _open_rings(m, npts, xy)
+        pieces.append((m, kind, npts, xy))
+        todo &= ~m
+    rest = np.flatnonzero(todo)
     slow = PK.pack_wkb([GT.to_wkb(GT.parse_wkt(v))
                         for v in s.to_numpy()[rest]])
-    fast = int(done.sum())
+    fast = sum(int(m.sum()) for m, *_ in pieces)
     out = PK.assemble(
         np.concatenate([np.full(m.sum(), k) for m, k, _, _ in pieces]
                        + [slow.kind]),
@@ -134,6 +137,33 @@ def _parse(s: pd.Series) -> PK.PackedBatch:
     pos = np.full(len(s), -1, dtype=np.int64)
     pos[order] = np.arange(len(order))
     return PK.take(out, pos)
+
+
+#: (pattern, kind, type-prefix length, closing length) of the text
+#: classes _parse claims
+_CLASSES = ((LO.FPOLY_ANY, PK.POLYGON, len("POLYGON (("), 2),
+            (LO.FLINE_ANY, PK.LINESTRING, len("LINESTRING ("), 1),
+            (LN.FPOINT2, PK.POINT, len("POINT ("), 1),
+            (LO.FMPOINT_ANY, PK.MULTIPOINT, len("MULTIPOINT ("), 1))
+
+
+def _open_rings(m, npts, xy):
+    """The parser's ring rule on the rings parsed for rows m: drop a
+    closing vertex equal to the first, keep rings of three or more
+    vertices with finite coordinates (the rest stay unclaimed)."""
+    end = np.cumsum(npts)
+    first, last = xy[end - npts], xy[end - 1]
+    close = (first == last).all(axis=1)
+    keep = np.ones(len(xy), dtype=bool)
+    keep[(end - 1)[close]] = False
+    npts = npts - close
+    ok = (npts >= 3) & (np.bincount(
+        np.repeat(np.arange(len(npts)), npts + close),
+        weights=~np.isfinite(xy).all(axis=1), minlength=len(npts)) == 0)
+    keep &= np.repeat(ok, npts + close)
+    m = m.copy()
+    m[m] = ok
+    return m, npts[ok], xy[keep]
 
 
 def encode(p: PK.PackedBatch, index) -> pd.Series:
@@ -266,6 +296,18 @@ def _npoints(p: PK.PackedBatch) -> pd.Series:
     return out
 
 
+def _num_points(p: PK.PackedBatch) -> pd.Series:
+    """PostGIS ST_NumPoints: the vertex count of a LINESTRING, NULL for
+    every other kind and for LINESTRING EMPTY."""
+    out = pd.Series(PK.npoints_np(p), dtype="Int64")
+    out[(p.kind != PK.LINESTRING) | (p.rings_per_geom() == 0)] = None
+    for i, raw in p.fallback.items():
+        kind, data = GT.parse_wkb(raw)      # S._num_points, no reprint
+        if GT.basekind(kind) == "LINESTRING" and data:
+            out.iloc[i] = len(data[0])
+    return out
+
+
 def _length(p: PK.PackedBatch) -> pd.Series:
     out = pd.Series(PK.length_np(p))
     for i, raw in p.fallback.items():
@@ -321,10 +363,6 @@ def _centroid_scalar(tg):
 
 def _centroid(p: PK.PackedBatch) -> PK.PackedBatch:
     elig, cx, cy = PK.centroid_np(p)
-    elig_l, lx, ly = PK.lineal_centroid_np(p)
-    cx = np.where(elig_l, lx, cx)
-    cy = np.where(elig_l, ly, cy)
-    elig = elig | elig_l
     for i in np.flatnonzero(~elig & (p.kind != 0)):
         c = _centroid_scalar(PK.row_tgeom(p, i))
         if c is not None:
@@ -624,7 +662,8 @@ _ROWS = [
     (("ST_GeomFromWKT", "ST_GeomFromText"), _normalize, (0,), _WKT),
     (("ST_AsText",), _same, (0,), _WKT),
     (("ST_Area",), _area, (0,), DoubleType()),
-    (("ST_NPoints", "ST_NumPoints"), _npoints, (0,), LongType()),
+    (("ST_NPoints",), _npoints, (0,), LongType()),
+    (("ST_NumPoints",), _num_points, (0,), LongType()),
     (("ST_Length",), _length, (0,), DoubleType()),
     (("ST_Coords",), _coords, (0,), ArrayType(DoubleType())),
     (("ST_Transform",), _transform, (0,), _WKT),
@@ -669,6 +708,13 @@ class Carrier(NamedTuple):
         passes the geometry, and computes nothing from it."""
         return self.body in (_same, _normalize)
 
+    @property
+    def reprints(self) -> bool:
+        """Its lone call formats a new WKT: every geometry body but
+        ST_AsText's, which passes its text on. Its packed result then
+        holds the kinds that text names (kernel/packed.as_printed)."""
+        return self.produces and self.body is not _same
+
 
 #: lower-cased SQL name -> Carrier
 CARRIER = {name.lower(): Carrier(body, geom, rt == _WKT)
@@ -692,17 +738,19 @@ def _adapt(name: str, body, geom, rtype):
 
 #: Names registered as the one-node adapter. A decode + body + encode
 #: beats a per-row text loop 4-12x on 60 k rects; ST_Coords has no text
-#: UDF at all. The seven coordinate maps (ST_Rotate … ST_Expand) have
-#: no text UDF either: the adapter is their only lone call, so every
-#: chain through them runs packed. The lane-backed text UDFs (ST_Area,
-#: ST_NPoints, ST_Length, ST_Centroid, ST_X, ST_Y, the six interval
-#: predicates, ST_GeomFromWKT, ST_AsText) are faster than the adapter
-#: when called alone, and ST_Distance's box path is not yet bit-equal to
-#: its scalar kernel.
+#: UDF at all. The coordinate maps (ST_Rotate … ST_Expand) and the
+#: measures (ST_Area, ST_NPoints, ST_NumPoints, ST_Length, ST_Centroid)
+#: have no text UDF either: the adapter is their only lone call, so the
+#: lone call, every chain through them and the scalar kernel (kind -1
+#: rows) give one answer. Still text UDFs: ST_X, ST_Y, the interval
+#: predicates, ST_GeomFromWKT and ST_AsText, whose lanes beat the
+#: adapter called alone, and ST_Distance, whose box path is not yet
+#: bit-equal to its scalar kernel.
 _ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound", "ST_Contains",
             "ST_Within", "ST_Coords", "ST_Rotate", "ST_Scale",
             "ST_Translate", "ST_Affine", "ST_SnapToGrid",
-            "ST_ReducePrecision", "ST_Expand")
+            "ST_ReducePrecision", "ST_Expand", "ST_Area", "ST_NPoints",
+            "ST_NumPoints", "ST_Length", "ST_Centroid")
 REGISTRY_TEXT = {name: _adapt(name, body, geom, rt)
                  for names, body, geom, rt in _ROWS for name in names
                  if name in _ADAPTED}

@@ -3,9 +3,12 @@
 st_measure_ops, st_affine_ops, st_misc_ops — the last per-row-Python
 family in the registry (~28 s combined at sf0.1). The coordinate maps
 of st_affine_ops (ST_Rotate, ST_Scale, ST_Affine, ST_SnapToGrid,
-ST_ReducePrecision, ST_Expand, with ST_Translate) have no lane: they
-are packed bodies in functions/geomb.py, called alone through its
-one-node adapter and chained packed by the projection fuser.
+ST_ReducePrecision, ST_Expand, with ST_Translate) and the measures
+(ST_Area, ST_NPoints, ST_NumPoints, ST_Length, ST_Centroid) have no
+lane: they are packed bodies in functions/geomb.py, called alone
+through its one-node adapter and chained packed by the projection
+fuser. The generic bodies FLINE_ANY, FMPOINT_ANY and FPOLY_ANY below
+are also what geomb's text edge decodes from.
 
 Same design as functions/lanes.py (which this module builds on): each
 hot ST_ function gets a BATCH lane keyed on the canonical machine-built
@@ -65,10 +68,6 @@ FLINE5 = _named(
     r"^LINESTRING \(%s %s, %s %s, %s %s, %s %s, %s %s\)$" % ((_F,) * 10))
 FPOLY5 = _named(
     r"^POLYGON \(\(%s %s, %s %s, %s %s, %s %s, %s %s\)\)$" % ((_F,) * 10))
-#: FPOLY5 with the closing vertex optional (JVM-concat rects often omit it)
-FPOLY45 = _named(
-    r"^POLYGON \(\(%s %s, %s %s, %s %s, %s %s(?:, %s %s)?\)\)$"
-    % ((_F,) * 10))
 IMPOINT4 = _named(
     r"^MULTIPOINT \(%s %s, %s %s, %s %s, %s %s\)$" % ((_I,) * 8))
 IGC_PPL = _named(
@@ -84,10 +83,10 @@ FGC1L2 = _named(
 _GC2LINE = _named(
     rf"^GEOMETRYCOLLECTION \(LINESTRING \((?:{L._P})(?:, (?:{L._P}))+\), "
     rf"LINESTRING \((?:{L._P})(?:, (?:{L._P}))+\)\)$")
-#: fully-validating generic bodies (claimable for counting accessors)
+#: fully-validating generic bodies (claimable for counting accessors and
+#: for functions/geomb.decode)
 FLINE_ANY = _named(rf"^LINESTRING \(({_FP}(?:, {_FP})+)\)$")
-FPOLY_1RING = _named(
-    rf"^POLYGON \(\({_F} {_F}, (?:{_FP}, )+{_F} {_F}\)\)$")
+FPOLY_ANY = _named(rf"^POLYGON \(\(({_FP}(?:, {_FP})+)\)\)$")
 FMPOINT_ANY = _named(rf"^MULTIPOINT \(({_FP}(?:, {_FP})*)\)$")
 
 
@@ -1250,75 +1249,6 @@ def bound_of(s: pd.Series, which: str, scalar_fn) -> pd.Series:
     return f.finish(scalar_fn)
 
 
-def num_points(s: pd.Series, scalar_fn) -> pd.Series:
-    f = _Fill(s)
-    m = f.b.match(FLINE_ANY)
-    if m.any():
-        commas = pc.count_substring(f.b.arr, pattern=",").to_numpy(
-            zero_copy_only=False).astype(float)
-        f.put(m, commas + 1)
-    # PostGIS ST_NumPoints is LINESTRING-only -> NULL for other canonical
-    # classes
-    for pat in (FPOINT2, FPOINTZ, FPOLY5, FMPOINT_ANY):
-        f.put(f.b.match(pat), None)
-    return f.finish(scalar_fn)
-
-
-def area(s: pd.Series, scalar_fn) -> pd.Series:
-    """General float 5-point single-ring polygons (covers the int-rect
-    class AND the rotated/affine outputs of the transform lanes): the
-    kernel's ANCHORED shoelace over the 4 stored vertices, replicated
-    term by term, |acc/2| — exact operation-order parity."""
-    f = _Fill(s)
-    closed, xs, ys = _fpoly5_closed(f.b)
-    if closed.any():
-        x0, y0 = xs[0], ys[0]
-        acc = np.zeros(len(s))
-        for i in range(4):
-            x1, y1 = xs[i], ys[i]
-            x2, y2 = xs[(i + 1) % 4], ys[(i + 1) % 4]
-            acc = acc + ((x1 - x0) * (y2 - y0) - (x2 - x0) * (y1 - y0))
-        f.put(closed, 0.0 + np.abs(acc / 2.0))
-    # lineal / puntal canonical classes: planar area 0 (JTS)
-    for pat in (FPOINT2, FLINE_ANY, FMPOINT_ANY):
-        f.put(f.b.match(pat), 0.0)
-    return f.finish(scalar_fn)
-
-
-def npoints(s: pd.Series, scalar_fn) -> pd.Series:
-    """Vertex counts by comma count on fully-VALIDATING patterns: a
-    single-ring POLYGON counts the closing duplicate (+1 when the text
-    ring is closed — the parser drops it, to_wkt re-adds it — +2 when
-    the text ring is open)."""
-    f = _Fill(s)
-    commas = None
-
-    def ncommas():
-        nonlocal commas
-        if commas is None:
-            commas = pc.count_substring(f.b.arr, pattern=",").fill_null(
-                0).to_numpy(zero_copy_only=False).astype(np.int64)
-        return commas
-
-    v, g = f.b.extract(FPOLY_1RING)
-    if v.any():
-        fx, fy = _num(g, 0), _num(g, 1)
-        lx, ly = _num(g, 2), _num(g, 3)
-        closed = v & (fx == lx) & (fy == ly)
-        c = ncommas()
-        f.put(closed & (c >= 3), c + 1)
-        f.put(v & ~closed & (c >= 2), c + 2)
-    m = f.b.match(FLINE_ANY)
-    if m.any():
-        f.put(m, ncommas() + 1)
-    mm = f.b.match(FMPOINT_ANY)
-    if mm.any():
-        f.put(mm, ncommas() + 1)
-    f.put(f.b.match(FPOINT2), 1)
-    f.put(f.b.match(FPOINTZ), 1)
-    return f.finish(scalar_fn)
-
-
 def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
     f = _Fill(s)
     f.put(f.b.match(FGC2L2), 2)
@@ -1333,91 +1263,4 @@ def num_geometries(s: pd.Series, scalar_fn) -> pd.Series:
         commas = pc.count_substring(f.b.arr, pattern=",").fill_null(
             0).to_numpy(zero_copy_only=False).astype(np.int64)
         f.put(m, commas + 1)
-    return f.finish(scalar_fn)
-
-
-def length(s: pd.Series, scalar_fn) -> pd.Series:
-    """Any canonical 2D LINESTRING — per-row math.hypot fold (the
-    scalar's exact sum order) over pairs parsed in ONE bulk pass. r14: the old per-row replace/split/float
-    loop profiled at ~5 s/600k (the hottest line of st_clearance_ops);
-    now the matched bodies parse through one lanes._body_xy call (arrow
-    cast, bit-identical to float()); only the hypot fold itself stays
-    per row, preserving the scalar's left-to-right sum order."""
-    f = _Fill(s)
-    m, g = f.b.extract(FLINE_ANY)
-    if m.any():
-        rows = np.flatnonzero(m)
-        npts, xy = L._body_xy(g[0], rows)
-        xs, ys = xy[:, 0], xy[:, 1]
-        off = np.zeros(len(rows) + 1, dtype=np.int64)
-        np.cumsum(npts, out=off[1:])
-        vals = np.full(len(s), None, dtype=object)
-        hyp = math.hypot
-        for j, i in enumerate(rows):
-            lo, hi = off[j], off[j + 1]
-            tot = 0
-            for k in range(lo, hi - 1):
-                tot = tot + hyp(xs[k + 1] - xs[k], ys[k + 1] - ys[k])
-            vals[i] = tot
-        f.put(m, vals)
-    f.put(f.b.match(FPOINT2), 0.0)
-    return f.finish(scalar_fn)
-
-
-def centroid(s: pd.Series, scalar_fn) -> pd.Series:
-    """Areal centroid of canonical single-ring 5-point polygons: the
-    normalize step (dedupe + orient CCW) and _centroid_areal_val are
-    replicated exactly; claims require 4 consecutive-distinct stored
-    vertices and a nonzero signed area. Output is the scalar's
-    shortest-repr POINT text."""
-    f = _Fill(s)
-    closed, xs, ys = _fpoly5_closed(f.b)
-    if closed.any():
-        distinct = closed
-        for i in range(3):
-            distinct = distinct & ((xs[i] != xs[i + 1])
-                                   | (ys[i] != ys[i + 1]))
-        distinct = distinct & ((xs[0] != xs[3]) | (ys[0] != ys[3]))
-
-        def ring_vals(order):
-            x0, y0 = xs[order[0]], ys[order[0]]
-            a2 = np.zeros(len(s))
-            cxa = np.zeros(len(s))
-            cya = np.zeros(len(s))
-            for i in range(4):
-                x1, y1 = xs[order[i]], ys[order[i]]
-                x2, y2 = xs[order[(i + 1) % 4]], ys[order[(i + 1) % 4]]
-                cross = x1 * y2 - x2 * y1
-                a2 = a2 + cross
-                cxa = cxa + (x1 + x2) * cross
-                cya = cya + (y1 + y2) * cross
-            sa = a2 / 2.0
-            sx = cxa / 6.0
-            sy = cya / 6.0
-            return sa, sx, sy
-
-        # _ring_signed_area decides orientation with the ANCHORED form
-        x0, y0 = xs[0], ys[0]
-        acc = np.zeros(len(s))
-        for i in range(4):
-            x1, y1 = xs[i], ys[i]
-            x2, y2 = xs[(i + 1) % 4], ys[(i + 1) % 4]
-            acc = acc + ((x1 - x0) * (y2 - y0) - (x2 - x0) * (y1 - y0))
-        sa_anchor = acc / 2.0
-        m = distinct & (sa_anchor != 0.0)
-        if m.any():
-            fwd = ring_vals([0, 1, 2, 3])
-            rev = ring_vals([3, 2, 1, 0])
-            ccw = sa_anchor > 0
-            sa = np.where(ccw, fwd[0], rev[0])
-            sx = np.where(ccw, fwd[1], rev[1])
-            sy = np.where(ccw, fwd[2], rev[2])
-            m = m & (sa != 0.0)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                cx = sx / sa
-                cy = sy / sa
-            vals = np.full(len(s), None, dtype=object)
-            fx, fy = L._fmt_np(cx, m), L._fmt_np(cy, m)
-            vals[m] = "POINT (" + fx[m] + " " + fy[m] + ")"
-            f.put(m, vals)
     return f.finish(scalar_fn)

@@ -3376,12 +3376,6 @@ def st_buffer(s: pd.Series, d: pd.Series) -> pd.Series:
 def st_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([_intersection(x, y) for x, y in zip(a, b)], index=a.index)
 
-@pandas_udf(DoubleType())
-def st_area(s: pd.Series) -> pd.Series:
-    # r10 lane: canonical small-int rect batches skip the parse; the
-    # anchored shoelace of such a rect is exactly (c-a)*(d-b)
-    return LO.area(s, _area).astype("float64")
-
 @pandas_udf(StringType())
 def st_union(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([_union2(x, y) for x, y in zip(a, b)], index=a.index)
@@ -3410,16 +3404,8 @@ def st_dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
     return pd.Series(out, index=a.index, dtype="object")
 
 @pandas_udf(StringType())
-def st_centroid(s: pd.Series) -> pd.Series:
-    return LO.centroid(s, _centroid)
-
-@pandas_udf(StringType())
 def st_convexhull(s: pd.Series) -> pd.Series:
     return s.map(_convex_hull, na_action="ignore")
-
-@pandas_udf(LongType())
-def st_npoints(s: pd.Series) -> pd.Series:
-    return LO.npoints(s, _npoints).astype("Int64")
 
 @pandas_udf(BinaryType())
 def st_asbinary(s: pd.Series) -> pd.Series:
@@ -3433,10 +3419,6 @@ def st_geomfromwkb(b: pd.Series) -> pd.Series:
     engine's canonical WKT carrier."""
     return b.map(lambda buf: GT.to_wkt(GT.parse_wkb(bytes(buf))),
                  na_action="ignore")
-
-@pandas_udf(DoubleType())
-def st_length(s: pd.Series) -> pd.Series:
-    return LO.length(s, _length).astype("float64")
 
 @pandas_udf(DoubleType())
 def st_x(s: pd.Series) -> pd.Series:
@@ -4157,10 +4139,6 @@ def st_ymax(s: pd.Series) -> pd.Series:
     return LO.bound_of(s, "ymax",
                        lambda g: _bound_of(g, "ymax")).astype("float64")
 
-@pandas_udf(LongType())
-def st_numpoints(s: pd.Series) -> pd.Series:
-    return LO.num_points(s, _num_points).astype("object")
-
 @pandas_udf(StringType())
 def st_envelope_aggr(s: pd.Series) -> str:
     """ST_Envelope_Aggr: the bounding box of every geometry in the group
@@ -4285,7 +4263,6 @@ _REGISTRY = {
     "ST_MakeValid": st_makevalid,
     "ST_Buffer": st_buffer,
     "ST_Intersection": st_intersection,
-    "ST_Area": st_area,
     "ST_ClippedArea": st_clipped_area,
     "ST_Union": st_union,
     "ST_Difference": st_difference,
@@ -4294,11 +4271,8 @@ _REGISTRY = {
     "ST_Normalize": st_normalize,
     "ST_Distance": st_distance,
     "ST_DWithin": st_dwithin,
-    "ST_Centroid": st_centroid,
     "ST_ConvexHull": st_convexhull,
-    "ST_NPoints": st_npoints,
     "ST_SimplifyLine": st_simplifyline,
-    "ST_Length": st_length,
     "ST_X": st_x,
     "ST_Y": st_y,
     "ST_Z": st_z,
@@ -4415,7 +4389,6 @@ _REGISTRY = {
     "ST_XMax": st_xmax,
     "ST_YMin": st_ymin,
     "ST_YMax": st_ymax,
-    "ST_NumPoints": st_numpoints,
     # endpoints are always kept by the DP core, so the PreserveTopology
     # name is honest for lineal input; ring simplification keeps the
     # anchor vertex and drops collapsed rings (PostGIS behavior)

@@ -39,6 +39,7 @@ the polygon grouping: a new polygon starts at each outer ring).
 
 from __future__ import annotations
 
+import math
 import struct
 
 import numpy as np
@@ -569,6 +570,32 @@ def take(p: PackedBatch, idx) -> PackedBatch:
                     p.outer[rings], fallback)
 
 
+def as_printed(p: PackedBatch) -> PackedBatch:
+    """p with every multi of at most one member retyped as its single
+    kind: the kind its WKT names, since GT.to_wkt prints such a multi as
+    its member (or as the single kind's EMPTY). A body that reads the
+    kind of a chained geometry then sees what its lone call would parse
+    from the text between the calls. Rows held as WKB are retyped in
+    their bytes."""
+    ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
+    members = np.select(
+        [p.kind == MULTIPOINT, p.kind == MULTILINESTRING],
+        [np.diff(p.geom_coord_off()), p.rings_per_geom()],
+        np.bincount(ring_geom, weights=p.outer, minlength=p.n))
+    one = np.isin(p.kind, (MULTIPOINT, MULTILINESTRING, MULTIPOLYGON)) \
+        & (members <= 1)
+    fallback = dict(p.fallback)
+    for i, raw in p.fallback.items():
+        kind, data = GT.parse_wkb(raw)
+        if kind.startswith("MULTI") and len(data) <= 1:
+            fallback[i] = GT.to_wkb((kind[5:], data))
+    if not one.any() and fallback == p.fallback:
+        return p
+    single = p.kind - 3                      # WKB: multi code = single + 3
+    return PackedBatch(p.n, np.where(one, single, p.kind).astype(np.int8),
+                       p.geom_off, p.ring_off, p.outer, p.coords, fallback)
+
+
 def row_tgeom(p: PackedBatch, i: int):
     """One row as a kernel/geomtypes tgeom (fallback rows re-parse their
     bytes). None for SQL NULL."""
@@ -607,7 +634,13 @@ def _seq_sums(vals: np.ndarray, off: np.ndarray) -> np.ndarray:
     accumulators from 9 elements on). So this folds by column: step j
     adds every segment's j-th value. Equal segment lengths reshape into
     rows and add strided columns; ragged ones sort the segments longest
-    first, so step j touches only those still longer than j."""
+    first, so step j touches only those still longer than j.
+
+    A column step costs about what one segment's own fold costs, so
+    once no more segments are left than steps, each remaining one
+    finishes alone: np.cumsum is a sequential left-to-right fold (no
+    pairwise blocks). One long ring then costs one cumsum, not one numpy
+    step per vertex for the whole batch."""
     lens = off[1:] - off[:-1]
     out = np.zeros(len(lens), dtype=np.float64)
     if not len(lens) or not vals.size:
@@ -615,7 +648,7 @@ def _seq_sums(vals: np.ndarray, off: np.ndarray) -> np.ndarray:
     top = int(lens.max())
     if top == 0:
         return out
-    if (lens == top).all():
+    if (lens == top).all() and len(lens) > top:
         rows = vals[off[0]:off[-1]].reshape(len(lens), top)
         acc = rows[:, 0] + 0.0          # the fold's 0.0 + v0 (-0.0 -> 0.0)
         for j in range(1, top):
@@ -624,10 +657,15 @@ def _seq_sums(vals: np.ndarray, off: np.ndarray) -> np.ndarray:
     order = np.argsort(-lens, kind="stable")
     start, ls = off[:-1][order], lens[order]
     live = np.searchsorted(-ls, -np.arange(top), side="left")
+    alone = np.flatnonzero(live <= top - np.arange(top))
+    cut = int(alone[0]) if len(alone) else top
     acc = np.zeros(len(lens), dtype=np.float64)
-    for j in range(top):
+    for j in range(cut):
         k = live[j]
         acc[:k] += vals[start[:k] + j]
+    for i in range(int(live[cut]) if cut < top else 0):
+        acc[i] = np.cumsum(np.concatenate(
+            ([acc[i]], vals[start[i] + cut:start[i] + ls[i]])))[-1]
     out[order] = acc
     return out
 
@@ -646,6 +684,9 @@ def area_np(p: PackedBatch) -> np.ndarray:
     """Per-geometry planar area (holes subtracted), bit-identical to
     kernel/geom.area: per-ring shoelace anchored at the ring's first
     vertex, summed left-to-right."""
+    areal = np.isin(p.kind, _AREAL)
+    if not areal.any():
+        return np.zeros(p.n)
     x, y = p.coords[:, 0], p.coords[:, 1]
     if len(p.coords):
         nxt = _next_in_ring(p)
@@ -659,7 +700,7 @@ def area_np(p: PackedBatch) -> np.ndarray:
     np.negative(contrib, where=~p.outer, out=contrib)
     out = _seq_sums(contrib, p.geom_off)
     # only areal kinds have area; fallback rows handled by caller
-    out[~np.isin(p.kind, _AREAL)] = 0.0
+    out[~areal] = 0.0
     return out
 
 
@@ -694,36 +735,37 @@ def ring_faults_np(p: PackedBatch):
 def npoints_np(p: PackedBatch) -> np.ndarray:
     """Per-geometry vertex count, matching GT.npoints: areal rings count
     the closing duplicate (+1 per ring); puntal/lineal count as stored."""
-    rl = p.ring_len().astype(np.float64)
-    per_geom = _seq_sums(rl, p.geom_off).astype(np.int64)
-    nrings = p.rings_per_geom()
+    per_geom = np.diff(p.geom_coord_off())
     areal = np.isin(p.kind, _AREAL)
-    per_geom[areal] += nrings[areal]
+    per_geom[areal] += p.rings_per_geom()[areal]
     per_geom[p.kind <= 0] = 0
     return per_geom
 
 
+def _hypot(dx: np.ndarray, dy: np.ndarray) -> np.ndarray:
+    """math.hypot per element, the scalar kernels' segment length.
+    np.hypot (libm) differs from it in the last ulp on about 0.6 % of
+    segments."""
+    return np.fromiter(map(math.hypot, dx.tolist(), dy.tolist()),
+                       np.float64, len(dx))
+
+
 def length_np(p: PackedBatch) -> np.ndarray:
-    """Per-geometry GT.length: path length (lineal), ring perimeter incl.
-    closing edge (areal), 0 (puntal)."""
+    """Per-geometry GT.length: math.hypot per segment (areal rings
+    closed, lineal paths open), folded left to right over ALL of the
+    geometry's segments in one pass, as GT.length's sum does; 0 for
+    puntal. An open path's wrap adds 0.0, which leaves the sum as it
+    is."""
     x, y = p.coords[:, 0], p.coords[:, 1]
-    if len(p.coords):
-        nxt = _next_in_ring(p)
-        seg = np.hypot(x[nxt] - x, y[nxt] - y)
-        # lineal rings are OPEN paths: zero out the wrap edge
-        last = p.ring_off[1:] - 1
-        ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
-        lineal_ring = np.isin(p.kind[ring_geom], _LINEAL)
-        ok = (p.ring_off[:-1] <= last) & lineal_ring
-        seg_mask = np.ones(len(seg), dtype=bool)
-        seg_mask[last[ok]] = False
-        seg = seg * seg_mask
-    else:
-        seg = np.zeros(0, dtype=np.float64)
-    per_ring = _seq_sums(seg, p.ring_off)
-    out = _seq_sums(per_ring, p.geom_off)
-    out[np.isin(p.kind, _PUNTAL)] = 0.0
-    out[p.kind <= 0] = 0.0
+    nxt = _next_in_ring(p)
+    with np.errstate(invalid="ignore"):        # inf - inf
+        seg = _hypot(x[nxt] - x, y[nxt] - y)
+    ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
+    last = p.ring_off[1:] - 1
+    wrap = (p.ring_off[:-1] <= last) & np.isin(p.kind[ring_geom], _LINEAL)
+    seg[last[wrap]] = 0.0
+    out = _seq_sums(seg, p.geom_coord_off())
+    out[~np.isin(p.kind, _AREAL + _LINEAL)] = 0.0
     return out
 
 
@@ -825,68 +867,80 @@ def box_bounds_np(p: PackedBatch):
     return mask, x1, y1, x2, y2
 
 
-def lineal_centroid_np(p: PackedBatch):
-    """Vectorized length-weighted segment-midpoint centroid for lineal
-    rows (GT.centroid's formula). Returns (eligible, cx, cy); zero-total-
-    length rows are left ineligible (the scalar path applies the vertex-
-    average fallback)."""
-    elig = np.isin(p.kind, (LINESTRING, MULTILINESTRING))
+def centroid_np(p: PackedBatch):
+    """Vectorized centroids with the scalar kernels' formulas and
+    operation order, so equal bit for bit. Returns (eligible mask, cx,
+    cy); every other row takes the scalar path.
+
+    - puntal (GT.centroid): the vertex average;
+    - lineal (GT.centroid): the length-weighted segment-midpoint average
+      over all of the geometry's segments in one running sum, with
+      math.hypot lengths; a zero total length is left to the scalar
+      (vertex-average fallback);
+    - areal (functions/spatial._centroid_areal_val over
+      kernel/geom.normalize): rows where normalize() only reorients
+      rings (no repeated vertex, nonzero area). A ring of the wrong
+      orientation folds reversed, as normalize's r[::-1] does; per-ring
+      sums fold per geometry left to right."""
     cx = np.full(p.n, np.nan)
     cy = np.full(p.n, np.nan)
-    if not elig.any() or not len(p.coords):
-        return elig & False, cx, cy
+    elig = np.zeros(p.n, dtype=bool)
+    if not len(p.coords):
+        return elig, cx, cy
     x, y = p.coords[:, 0], p.coords[:, 1]
-    nxt = _next_in_ring(p)
-    wrap = nxt <= np.arange(len(x))        # ring-last wraps to ring start
-    ln = np.hypot(x[nxt] - x, y[nxt] - y)
-    ln[wrap] = 0.0
-    mx = (x + x[nxt]) * 0.5 * ln
-    my = (y + y[nxt]) * 0.5 * ln
-    # GT.centroid folds every segment of the geometry in one running
-    # sum (no per-part subtotal)
     co = p.geom_coord_off()
-    g_tot, g_mx, g_my = (_seq_sums(v, co) for v in (ln, mx, my))
-    good = elig & (g_tot > 0)
-    cx[good] = g_mx[good] / g_tot[good]
-    cy[good] = g_my[good] / g_tot[good]
-    return good, cx, cy
+    cnt = np.diff(co)
+    with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+        pts = np.isin(p.kind, _PUNTAL) & (cnt > 0)
+        if pts.any():
+            cx[pts] = (_seq_sums(x, co) / cnt)[pts]
+            cy[pts] = (_seq_sums(y, co) / cnt)[pts]
+            elig |= pts
+        lin = np.isin(p.kind, _LINEAL)
+        if lin.any():
+            nxt = _next_in_ring(p)
+            ln = _hypot(x[nxt] - x, y[nxt] - y)
+            mx = ln * (x + x[nxt]) / 2.0
+            my = ln * (y + y[nxt]) / 2.0
+            wrap = nxt <= np.arange(len(x))    # ring-last wraps to start
+            ln[wrap] = mx[wrap] = my[wrap] = 0.0
+            tot, sx, sy = (_seq_sums(v, co) for v in (ln, mx, my))
+            good = lin & (tot > 0)
+            cx[good] = (sx / tot)[good]
+            cy[good] = (sy / tot)[good]
+            elig |= good
+        areal = np.isin(p.kind, _AREAL) & (p.rings_per_geom() > 0)
+        if areal.any():
+            ok, sa, sx, sy = _areal_centroid(p, areal)
+            good = ok & (sa != 0)
+            cx[good] = (sx / sa)[good]
+            cy[good] = (sy / sa)[good]
+            elig |= good
+    return elig, cx, cy
 
 
-def centroid_np(p: PackedBatch):
-    """Vectorized area-weighted centroid for SINGLE-RING areal rows whose
-    ring normalize() leaves as it is (CCW, consecutive vertices
-    distinct): the same cross accumulation as
-    functions/spatial._centroid_areal_val, in the same order, so equal
-    bit for bit. Returns (eligible mask, cx, cy) — every other row is not
-    eligible and takes the scalar path."""
-    rpg = p.rings_per_geom()
-    elig = np.isin(p.kind, _AREAL) & (rpg == 1)
-    cx_out = np.full(p.n, np.nan)
-    cy_out = np.full(p.n, np.nan)
-    if not elig.any():
-        return elig, cx_out, cy_out
+def _areal_centroid(p: PackedBatch, areal: np.ndarray):
+    """(rows normalize() changes at most in orientation, signed area,
+    sx, sy): the sums _centroid_areal_val takes, per geometry."""
     repeat, sa = ring_faults_np(p)
-    kept = (sa > 0) & ~repeat
-    elig[elig] = kept[p.geom_off[:-1][elig]]
+    ring_geom = np.repeat(np.arange(p.n), p.rings_per_geom())
+    bad = repeat | (p.ring_len() < 3) | ~(np.abs(sa) > 0)
+    areal = areal & (np.bincount(ring_geom[bad], minlength=p.n) == 0)
+    flip = areal[ring_geom] & ((sa > 0) != p.outer)
     x, y = p.coords[:, 0], p.coords[:, 1]
+    if flip.any():
+        start, ln = p.ring_off[:-1][flip], p.ring_len()[flip]
+        at = _multi_arange(start, ln)
+        src = np.arange(len(x))
+        src[at] = np.repeat(2 * start + ln - 1, ln) - at
+        x, y = x[src], y[src]
     nxt = _next_in_ring(p)
     cross = x * y[nxt] - x[nxt] * y
-    ring_a2 = _seq_sums(cross, p.ring_off)
-    ring_cx = _seq_sums((x + x[nxt]) * cross, p.ring_off)
-    ring_cy = _seq_sums((y + y[nxt]) * cross, p.ring_off)
-    ring_of = p.geom_off[:-1]
-    r = ring_of[elig]
-    sa = ring_a2[r] / 2.0
-    zero = sa == 0
-    elig_idx = np.flatnonzero(elig)
-    good = elig_idx[~zero]
-    sa_g = sa[~zero]
-    cx_out[good] = (ring_cx[r][~zero] / 6.0) / sa_g
-    cy_out[good] = (ring_cy[r][~zero] / 6.0) / sa_g
-    # zero-area rings stay eligible=False so the scalar path decides
-    elig = elig.copy()
-    elig[elig_idx[zero]] = False
-    return elig, cx_out, cy_out
+    a2 = _seq_sums(cross, p.ring_off)
+    rx = _seq_sums((x + x[nxt]) * cross, p.ring_off)
+    ry = _seq_sums((y + y[nxt]) * cross, p.ring_off)
+    return (areal, *(_seq_sums(v, p.geom_off)
+                     for v in (a2 / 2.0, rx / 6.0, ry / 6.0)))
 
 
 # ------------------------------------------------- vectorized round buffer
@@ -898,7 +952,9 @@ def buffer_round_np(p: PackedBatch, d, quadsegs: int = 8):
     outward arc or a collinear pass-through, never a folding miter).
     Same formulas, same branch thresholds, same point order; arc interior
     points are center + d·(cos θ, sin θ) and the two arc endpoints use the
-    exact edge normals, mirroring the scalar walk.
+    exact edge normals, mirroring the scalar walk. Edge lengths are
+    math.hypot's (_hypot), as the walk takes them: np.hypot's last ulp
+    moved the normals, and so every vertex, of some long float rings.
 
     Returns (fast: bool (n,), coords: (M, 2), off: (F+1,) int64) where
     `off` delimits the output ring of each fast row (in row order).
@@ -938,7 +994,7 @@ def buffer_round_np(p: PackedBatch, d, quadsegs: int = 8):
     pts = p.coords
     ex = pts[vnxt, 0] - pts[vidx, 0]
     ey = pts[vnxt, 1] - pts[vidx, 1]
-    ln = np.hypot(ex, ey)
+    ln = _hypot(ex, ey)
 
     ok = np.ones(C, dtype=bool)
     # all edges nonzero (zero edges would be skipped by the scalar walk)

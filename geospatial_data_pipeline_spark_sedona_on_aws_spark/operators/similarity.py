@@ -621,6 +621,12 @@ def lsh_ann(spark: SparkSession, sf_dir: str,
     q_side = emb if max_query_id is None else \
         emb.where(F.col("vec_id") < max_query_id)
     a = q_side.withColumn("probe", F.explode(probes)).alias("a")
+    if max_query_id is not None:
+        # the bounded query batch is the build side on every build. Left
+        # to AQE, the side whose shuffle stage finished first was
+        # broadcast, so the generated code (and its compiles) changed
+        # from one run of the same query to the next
+        a = F.broadcast(a)
     b = emb.alias("b")
     if max_query_id is None and emb_count(spark, sf_dir) > LSH_ARROW_MIN_N:
         # full-corpus arm at scale: millions of candidate pairs make the
@@ -1522,7 +1528,9 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.lit(name).alias("index_name"), "query_id", "neighbor_id")
         for name, fn in idx_fns.items()
     ])
-    hits = (tagged.join(exact, ["query_id", "neighbor_id"])
+    # exact holds N_QUERY_VECS x k rows: the build side on every build
+    # (see lsh_ann's max_query_id arm for why the choice is not AQE's)
+    hits = (tagged.join(F.broadcast(exact), ["query_id", "neighbor_id"])
             .groupBy("index_name").agg(F.count("*").alias("hits")))
     names = spark.createDataFrame(
         list(ANN_RECALL_FLOORS_BP), "index_name string, floor_bp long")

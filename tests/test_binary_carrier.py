@@ -172,6 +172,30 @@ def test_decode_equals_scalar_parse_on_mixed_column(monkeypatch, n,
         GB.decode(bad)
 
 
+def test_decode_parses_a_cyclic_column_once_per_value(monkeypatch):
+    """A column cycling through 1001 distinct values is an eighth
+    distinct, so each value is parsed once. Its period is coprime to
+    every power-of-two stride: a strided sample of fewer rows than the
+    period would see no repeat."""
+    import pandas as pd
+
+    base = [f"POINT ({i} {i / 8!r})" for i in range(1001)]
+    parsed: list = []
+    real = GB._parse
+
+    def parse(s):
+        parsed.append(len(s))
+        return real(s)
+
+    monkeypatch.setattr(GB, "_parse", parse)
+    p = GB.decode(pd.Series([base[i % 1001] for i in range(8192)],
+                            dtype=object))
+    assert parsed == [1001]
+    assert [PK.row_tgeom(p, i) for i in (0, 1001, 8191)] == [
+        GT.parse_wkt(base[0]), GT.parse_wkt(base[0]),
+        GT.parse_wkt(base[8191 % 1001])]
+
+
 def _long_float_rings(rng: random.Random, n: int) -> list:
     """CCW star-shaped float rings of 9-40 vertices (holed every third
     row): long enough that a pairwise or blocked sum reorders the
@@ -192,6 +216,30 @@ def _long_float_rings(rng: random.Random, n: int) -> list:
     return out
 
 
+def test_seq_sums_is_the_left_to_right_fold():
+    """Ragged segments, a few of them long enough to finish alone, and
+    an all -0.0 segment: every sum is `acc = 0.0; acc += v`, bit for
+    bit."""
+    rng = np.random.default_rng(11)
+    lens = np.concatenate([rng.integers(0, 9, 500), [10_000, 3, 0, 2_000,
+                                                     4]])
+    vals = rng.standard_normal(int(lens.sum())) * 10.0 ** rng.integers(
+        -8, 9, int(lens.sum()))
+    off = np.concatenate([[0], np.cumsum(lens)])
+    vals[off[-2]:off[-1]] = -0.0
+    for segs in (off, off[:-1], np.array([0, 10_000]),
+                 np.arange(0, 4 * 7, 7),            # uniform, 3 rows of 7
+                 np.arange(0, 101 * 7, 7)):         # uniform, 100 rows
+        want = []
+        for a, b in zip(segs[:-1], segs[1:]):
+            acc = 0.0
+            for v in vals[a:b].tolist():
+                acc += v
+            want.append(acc)
+        got = PK._seq_sums(vals, segs)
+        assert (got.view(np.int64) == np.array(want).view(np.int64)).all()
+
+
 @given(seed=st.integers(0, 10_000))
 @settings(max_examples=20, deadline=None)
 def test_prop_packed_measures_equal_typed_kernel(seed):
@@ -210,13 +258,10 @@ def test_prop_packed_measures_equal_typed_kernel(seed):
         assert ar[i] == GT.area_of(t), wkts[i]
         assert npt[i] == GT.npoints(t), wkts[i]
         if elig[i]:
-            assert (cx[i], cy[i]) == S._centroid_areal_val(
-                G.normalize(t[1])), wkts[i]
-        # np.hypot (C99 libm) vs math.hypot (CPython's compensated
-        # algorithm) differ in the last ulp — lengths compare at 1e-12 rel
-        exp_len = GT.length(t)
-        assert abs(ln[i] - exp_len) <= 1e-12 * max(1.0, abs(exp_len)), \
-            wkts[i]
+            assert (cx[i], cy[i]) == GB._centroid_scalar(t), wkts[i]
+        # one hypot (math.hypot) and one left-to-right fold per
+        # geometry, as GT.length takes them
+        assert ln[i] == GT.length(t), wkts[i]
 
 
 @given(seed=st.integers(0, 10_000))
@@ -323,13 +368,15 @@ def test_geomfromwkt_b_rect_fast_path_matches_scalar(monkeypatch):
         "POINT (-0.30000000000000004 1e-7)",
         "LINESTRING (0 0, 5 5)",
         "MULTIPOINT (1.0000000000000002 2, 3 4e2)",
+        # not a rect walk; any single ring in canonical spacing
+        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW, left first
+        "POLYGON ((0 0, 10 0, 10 2, 2 2, 2 10, 0 10))",  # L-shape
+        "POLYGON ((0 0, 4.0 0, 4 4, 0 4, 0 0))",    # 4.0 vs 4
+        "POLYGON ((0 0, 3 0, 3 3, -0 0))",          # closes on -0 == 0
     ] + _repr_rects(random.Random(7), 400)
     slow_rows = [
-        "POLYGON ((4 0, 0 0, 0 4, 4 4))",           # CW, left first
         None,
-        "POLYGON ((0 0, 10 0, 10 2, 2 2, 2 10, 0 10))",  # L-shape
         "POLYGON Z ((0 0 1, 4 0 1, 4 4 1, 0 4 1))",
-        "POLYGON ((0 0, 4.0 0, 4 4, 0 4, 0 0))",    # 4.0 vs 4: not a walk
         "POLYGON ((0 0, 1e999 0, 1e999 4, 0 4, 0 0))",  # non-finite
         "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))\n",
     ]
@@ -659,4 +706,4 @@ def test_packed_z_and_gc_fallback_through_b_surface():
     npt = GB.CARRIER["st_npoints"].body(p)
     assert npt.iloc[0] == 5 and npt.iloc[1] == 6
     assert (ar.tolist(), npt.tolist()) == (
-        S.st_area.func(s).tolist(), S.st_npoints.func(s).tolist())
+        [S._area(w) for w in s], [S._npoints(w) for w in s])

@@ -656,13 +656,15 @@ def test_nonareal_fixed_mask_is_identity(seed):
 
 def test_fuse_npoints_segmentize_rewrite():
     """The _FUSE rule turns ST_NPoints(ST_Segmentize(g, m)) into the
-    fused counter — and leaves non-matching consumers alone."""
+    fused counter — and leaves non-matching consumers alone, including
+    ST_NumPoints, which counts only a LINESTRING (the counter would give
+    17 for the segmentized 4x4 rect, where call by call gives NULL)."""
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as C
 
     assert C.rewrite("ST_NPoints(ST_Segmentize(g, 1D))") == \
         "ST_SegmentizeNPoints(g, 1D)"
     assert C.rewrite("ST_NumPoints(ST_Segmentize(g, 2.5))") == \
-        "ST_SegmentizeNPoints(g, 2.5)"
+        "ST_NumPoints(ST_Segmentize(g, 2.5))"
     # inner args that are themselves expressions survive verbatim
     assert C.rewrite("ST_NPoints(ST_Segmentize(wkt, d + 1))") == \
         "ST_SegmentizeNPoints(wkt, d + 1)"
@@ -743,7 +745,7 @@ def test_centroid_text_full_precision_lone_and_carrier():
         "POLYGON ((0.1 0.2, 3.7 0.3, 1.9 2.9, 0.1 0.2))",
         "POLYGON ((0.1 0.2, 3.7 0.2, 3.7 2.9, 0.1 2.9, 0.1 0.2))",
     ], dtype=object)
-    lone = S.st_centroid.func(g).tolist()
+    lone = S.udf_table()["ST_Centroid"].func(g).tolist()
     body, leaves = _fused_body(
         "ST_AsText(ST_Centroid(ST_GeomFromWKT(g))) AS c")
     assert leaves == ["g"]
@@ -823,5 +825,5 @@ def test_carrier_buffer_null_arguments_are_null():
     assert leaves == ["g", "d", "q"]
     got = body(g, d, q)["f0"].tolist()
     buf = S.udf_table()["ST_BufferRound"].func
-    exp = S.st_area.func(buf(g, d, q)).tolist()
+    exp = S.udf_table()["ST_Area"].func(buf(g, d, q)).tolist()
     assert got[0] == exp[0] and all(v != v for v in got[1:] + exp[1:])

@@ -107,8 +107,8 @@ UNARY = [
      lambda w: SE._typed_from_text(w, "MULTIPOINT")),
     ("ST_GeomCollFromText", SE.st_geomcollfromtext,
      lambda w: SE._typed_from_text(w, "GEOMETRYCOLLECTION")),
-    ("ST_Area", S.st_area, S._area),
-    ("ST_NPoints", S.st_npoints, S._npoints),
+    ("ST_Area", S.udf_table()["ST_Area"], S._area),
+    ("ST_NPoints", S.udf_table()["ST_NPoints"], S._npoints),
     ("ST_X", S.st_x, lambda w: S._st_xy(w, 0)),
     ("ST_Y", S.st_y, lambda w: S._st_xy(w, 1)),
     ("ST_Z", S.st_z, lambda w: S._st_xy(w, 2)),
@@ -250,7 +250,7 @@ def test_length_lane_equals_scalar():
         f"{x} {y}" for x, y in zip(rx, ry)) + ")"
         for rx, ry in zip(xs, ys)]
         + list(_mixed_batch()))
-    got = pd.Series(S.st_length.func(s), dtype=object)
+    got = pd.Series(S.udf_table()["ST_Length"].func(s), dtype=object)
     want = s.map(S._length, na_action="ignore")
     _eq_series(got, want, "ST_Length")
 

@@ -1,13 +1,15 @@
 """Every path an ST_ call can take gives a raw input the same answer.
 
-One fixed seed, no Spark. The corpus is seeded integer and 17-digit
-float rects (every fourth CW), points and 64-vertex rings, plus edge
-rows the fixtures never hold: CW rings, a repeated vertex, degenerate
+One fixed seed (SEED), no Spark; scripts/path_parity_seeds.py runs the
+same cases on other seeds. The corpus is seeded integer and 17-digit
+float rects (every fourth CW), points, 2-9-point lines, two-member
+MULTILINESTRINGs and 64-vertex rings, plus edge rows the fixtures never
+hold: CW rings, a repeated vertex, degenerate
 rings, CCW and CW holes, MULTIPOLYGON (one with a hole), LINESTRING,
-MULTILINESTRING, MULTIPOINT, POLYGON / POINT / LINESTRING Z,
-GEOMETRYCOLLECTION, an SRID= prefix, EMPTY, -0, exponent spellings,
-unclosed rects, NULL and a ring the parser rejects. Each expression
-runs on two paths:
+MULTILINESTRING, MULTIPOINT, one-member multis (2D and Z), POLYGON /
+POINT / LINESTRING Z, GEOMETRYCOLLECTION, an SRID= prefix, EMPTY, -0,
+exponent spellings, unclosed rects, NULL and a ring the parser rejects.
+Each expression runs on two paths:
 
 - lone: the registered UDFs composed call by call (`.func`), as a
   plain `selectExpr` runs them;
@@ -33,6 +35,7 @@ import pandas as pd
 import pytest
 
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
+from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
@@ -78,7 +81,15 @@ EDGE = [
     "MULTIPOLYGON (((0 0, 9 0, 9 9, 0 9, 0 0), (2 2, 2 4, 4 4, 4 2, 2 2)),"
     " ((20 20, 25 20, 25 25, 20 20)))",
     "GEOMETRYCOLLECTION EMPTY",
+    "MULTILINESTRING ((0 0, 3 4, 6 0))",                       # one member
+    "MULTIPOINT ((1.5 2))",
+    "MULTILINESTRING Z ((0 0 1, 3 4 1))",
+    "MULTIPOINT Z (1 2 3)",
+    "LINESTRING (2 2, 2 2)",                                   # zero length
 ]
+
+#: the corpus seed tier-1 runs; scripts/path_parity_seeds.py passes others
+SEED = 20261018
 
 
 def _rect(a, b, c, d, cw=False) -> str:
@@ -87,8 +98,18 @@ def _rect(a, b, c, d, cw=False) -> str:
     return f"POLYGON (({a} {b}, {c} {b}, {c} {d}, {a} {d}, {a} {b}))"
 
 
-def _corpus(n: int = 300) -> list:
-    rng = np.random.default_rng(20261018)
+def _path(rng, ints: bool) -> str:
+    """2-9 seeded vertices, integer or 17-digit float."""
+    k = int(rng.integers(2, 10))
+    if ints:
+        return ", ".join(f"{x} {y}"
+                         for x, y in rng.integers(-500, 500, (k, 2)).tolist())
+    return ", ".join(f"{x!r} {y!r}"
+                     for x, y in rng.uniform(-200, 200, (k, 2)).tolist())
+
+
+def _corpus(n: int = 300, seed: int = SEED) -> list:
+    rng = np.random.default_rng(seed)
     rows = []
     for i, (x, y, w, h) in enumerate(
             rng.integers(-500, 500, (n, 4)).tolist()):
@@ -106,6 +127,11 @@ def _corpus(n: int = 300) -> list:
         ring = ", ".join(f"{x + math.cos(a) * 7!r} {y + math.sin(a) * 5!r}"
                          for a in (k * math.pi / 32 for k in range(64)))
         rows.append(f"POLYGON (({ring}, {x + 7.0!r} {y!r}))")
+    for i in range(n // 3):
+        rows.append(f"LINESTRING ({_path(rng, i % 2 == 0)})")
+    for i in range(n // 6):
+        rows.append(f"MULTILINESTRING (({_path(rng, i % 2 == 0)}),"
+                    f" ({_path(rng, i % 3 == 0)}))")
     rows += EDGE
     return [rows[i] for i in rng.permutation(len(rows))]
 
@@ -122,8 +148,8 @@ def _inside(w, rng) -> str | None:
     return _rect(*map(repr, (a, b, (a + c) / 2, (b + d) / 2)))
 
 
-def _pairs(ws: list) -> tuple:
-    rng = np.random.default_rng(7)
+def _pairs(ws: list, seed: int) -> tuple:
+    rng = np.random.default_rng(seed + 7)
     bs = [_inside(w, rng) or ws[int(rng.integers(len(ws)))] for w in ws]
     return ws, bs
 
@@ -154,7 +180,8 @@ def _fused(e, cols):
     fz = CR._Fusion()
     fz.emit(CR._Expr(CR._parse(CR.rewrite(_sql(e) + " AS out"))[0]))
     chain = any(not isinstance(a, str) for a in e[1:])
-    if chain and not _names(e) <= HYGIENE:
+    bodies = all(n.lower() in GB.CARRIER for n in _names(e))
+    if chain and bodies and not _names(e) <= HYGIENE:
         assert fz.packed(), _sql(e)          # its bodies run packed
     return fz.udf().func(*(cols[leaf] for leaf in fz.leaves))["f0"]
 
@@ -219,6 +246,29 @@ CASES = {
                         ("ST_AsText", "b")), S._contains),
     "within_chain": (("ST_Within", ("ST_AsText", "a"), ("ST_AsText", "b")),
                      lambda a, b: S._contains(b, a)),
+    # the measures: one packed body each, called alone through the
+    # one-node adapter and chained by the fuser
+    "area": (("ST_Area", "w"), S._area),
+    "npoints": (("ST_NPoints", "w"), S._npoints),
+    "numpoints": (("ST_NumPoints", "w"), S._num_points),
+    "length": (("ST_Length", "w"), S._length),
+    "astext_centroid": (("ST_AsText", ("ST_Centroid", "w")), S._centroid),
+    "length_geomfromwkt": (("ST_Length", ("ST_GeomFromWKT", "w")),
+                           lambda w: S._length(S._geom_from_wkt(w))),
+    "numpoints_geomfromwkt": (("ST_NumPoints", ("ST_GeomFromWKT", "w")),
+                              lambda w: S._num_points(S._geom_from_wkt(w))),
+    "x_centroid_geomfromwkt": (
+        ("ST_X", ("ST_Centroid", ("ST_GeomFromWKT", "w"))),
+        lambda w: S._st_xy(S._centroid(S._geom_from_wkt(w)), 0)),
+    # a one-member MULTIPOINT prints, and so reads, as its POINT
+    "x_geomfromwkt": (("ST_X", ("ST_GeomFromWKT", "w")),
+                      lambda w: S._st_xy(S._geom_from_wkt(w), 0)),
+    # ST_NumPoints over ST_Segmentize is not rewritten to the all-kinds
+    # vertex counter; ST_NPoints over it is
+    "numpoints_segmentize": (("ST_NumPoints", ("ST_Segmentize", "w", "m")),
+                             lambda w: S._num_points(S._segmentize(w, 1.5))),
+    "npoints_segmentize": (("ST_NPoints", ("ST_Segmentize", "w", "m")),
+                           lambda w: S._npoints(S._segmentize(w, 1.5))),
 }
 
 
@@ -228,7 +278,8 @@ def _cols(rows: list) -> dict:
     return {"w": a, "a": a, "b": b,
             "src": pd.Series([SRC] * n, dtype=object),
             "dst": pd.Series([DST] * n, dtype=object),
-            "d": pd.Series([0.75] * n), "q": pd.Series([8] * n)}
+            "d": pd.Series([0.75] * n), "q": pd.Series([8] * n),
+            "m": pd.Series([1.5] * n)}
 
 
 def _same_geometry(got: str, want: str) -> bool:
@@ -245,11 +296,11 @@ def _same_geometry(got: str, want: str) -> bool:
 
 
 @pytest.mark.parametrize("case", sorted(CASES))
-def test_paths_equal_each_other_and_the_scalar_kernels(case):
+def test_paths_equal_each_other_and_the_scalar_kernels(case, seed=SEED):
     expr, ref = CASES[case]
     pair = "a" in _leaves(expr)
-    ws = _corpus(100 if "buffer" in case else 300)
-    rows = list(zip(*_pairs(ws))) if pair else [(w, None) for w in ws]
+    ws = _corpus(100 if "buffer" in case else 300, seed)
+    rows = list(zip(*_pairs(ws, seed))) if pair else [(w, None) for w in ws]
     want, ok, bad = [], [], []
     for r in rows:
         args = r if pair else r[:1]
@@ -275,6 +326,15 @@ def test_paths_equal_each_other_and_the_scalar_kernels(case):
         for name, path in PATHS.items():
             with pytest.raises(Exception):
                 path(expr, _cols([r]))
+
+
+def test_buffer_edge_lengths_are_math_hypot():
+    """The corpus of this seed holds a 64-vertex ring with an edge whose
+    np.hypot and math.hypot differ in the last ulp: the vectorized round
+    buffer must take the scalar walk's math.hypot, or every vertex of
+    that ring moves (found by scripts/path_parity_seeds.py)."""
+    test_paths_equal_each_other_and_the_scalar_kernels("astext_buffer",
+                                                       20261058)
 
 
 @pytest.mark.parametrize("path", sorted(PATHS))
@@ -333,9 +393,9 @@ for _k in ("pb", "pd", "pe", "px", "py"):
     _POOL[_k] = _POOL["pa"]
 
 
-def _map_params(n: int) -> dict:
+def _map_params(n: int, seed: int) -> dict:
     """Seeded per-row parameter columns, about one row in ten NULL."""
-    rng = np.random.default_rng(20261019)
+    rng = np.random.default_rng(seed + 1)
     out = {}
     for k, pool in _POOL.items():
         v = np.asarray(pool)[rng.integers(0, len(pool), n)]
@@ -369,13 +429,13 @@ for _name, (_params, _) in MAPS.items():
 
 
 @pytest.mark.parametrize("case", sorted(MAP_CASES))
-def test_coordinate_maps_equal_the_scalar_kernels(case):
+def test_coordinate_maps_equal_the_scalar_kernels(case, seed=SEED):
     """Lone adapter, fused body and scalar kernel agree byte for byte on
     every row, and raise the same error type on every row that raises."""
     name, expr, after = MAP_CASES[case]
     names, kernel = MAPS[name]
-    ws = _corpus()
-    par = _map_params(len(ws))
+    ws = _corpus(seed=seed)
+    par = _map_params(len(ws), seed)
     rows, want, bad = [], [], []
     for i, w in enumerate(ws):
         ps = [float(par[k][i]) for k in names]

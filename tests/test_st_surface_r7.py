@@ -653,6 +653,6 @@ def test_fused_xy_struct_udfs_equal_composition():
                        ("f1", SP.st_y.func(rows)),
                        ("f2", SP.st_x.func(ep)),
                        ("f3", SP.st_y.func(ep)),
-                       ("f4", SP.st_length.func(rows)),
+                       ("f4", SP.udf_table()["ST_Length"].func(rows)),
                        ("f5", SP.st_numgeometries.func(rows))):
         assert list(got[field].fillna(-1)) == list(exp.fillna(-1)), field
