@@ -48,7 +48,11 @@ out of the daemon's reach: for Spark 4.1.2 that is pyspark's 819 test
 modules and `pyspark/sql/streaming/benchmark`, which no worker imports;
 the 347 modules both copies hold, and py4j's 9, are byte-identical.
 Measured with `scripts/daemon_start.py` (4 cores): the engine daemon is
-ready in ~0.9 s instead of ~1.7 s.
+ready in ~0.9 s instead of ~1.7 s. The stop itself now takes ~20 ms,
+almost all of it the JVM's: it took ~0.9 s until `session.get_spark`
+made it wake PySpark's accumulator-update server instead of waiting out
+that server's 1 s poll. So a session turnover is mostly this daemon's
+start and the workers' first round trip (`scripts/session_cycle.py`).
 
 Wired via `spark.python.daemon.module` (session.get_spark). Imports are
 best-effort: any failure falls back to a plain pyspark.daemon — the

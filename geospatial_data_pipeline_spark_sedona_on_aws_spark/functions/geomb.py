@@ -188,9 +188,19 @@ def _wkt_batch(p: PK.PackedBatch) -> list:
     joins from points to rings to rows; a one-member multi prints as its
     single kind, as GT.to_wkt does. Rows held as bytes, rows with a
     non-finite coordinate and multi-polygon rows go per row."""
-    idx, take, close, ring_geom = _closed_rings(p)
     sx, okx = LN.fmt_f64_full(p.coords[:, 0])
     sy, oky = LN.fmt_f64_full(p.coords[:, 1])
+    pt = p.kind == PK.POINT
+    if (okx.all() and oky.all() and (pt | (p.kind == 0)).all()
+            and (p.rings_per_geom() == pt).all()
+            and np.array_equal(p.ring_off, np.arange(len(p.coords) + 1))):
+        # only one-vertex points and NULLs: coordinate i is the i-th
+        # point's, and one element-wise join prints them
+        out = np.full(p.n, None, dtype=object)
+        out[pt] = pc.binary_join_element_wise(
+            "POINT (", sx, " ", sy, ")", "").to_numpy(zero_copy_only=False)
+        return out.tolist()
+    idx, take, close, ring_geom = _closed_rings(p)
     pts = pc.binary_join_element_wise(sx, sy, " ").take(pa.array(idx))
     ring_off = np.zeros(len(take) + 1, dtype=np.int64)
     np.cumsum(take, out=ring_off[1:])

@@ -11,8 +11,11 @@ to be overridden (spark.sql.shuffle.partitions) on a real cluster.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import socket
 
+from pyspark import SparkContext, accumulators
 from pyspark.sql import SparkSession
 
 #: Spark's cache of compiled whole-stage-codegen classes
@@ -132,4 +135,63 @@ def get_spark(app_name: str = "geospatial-engine", shuffle_partitions: int | Non
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cores}]")
     if SparkSession.getActiveSession() is None:
         builder = builder.master(master)
-    return builder.getOrCreate()
+    fresh = SparkContext._active_spark_context is None
+    spark = builder.getOrCreate()
+    if fresh:
+        # PySpark's accumulator-update server notices a shutdown only on a
+        # poll tick (1 s in the handler of the JVM's connection, 0.5 s in
+        # the serve loop), so `spark.stop()` slept ~0.9 s after the JVM had
+        # stopped. Wrapped only here, before any job, so a context whose
+        # connection PySpark's handler already serves keeps its behaviour.
+        _wake_update_server_on_stop(spark.sparkContext)
+    return spark
+
+
+class _WakeableUpdateHandler(accumulators.UpdateRequestHandler):
+    """PySpark's handler that records its connection, so that the
+    server's `shutdown` can wake its poll, and ends quietly when that wake
+    ends the stream."""
+
+    def handle(self) -> None:
+        self.server.update_connection = self.connection
+        try:
+            super().handle()
+        except (EOFError, OSError):
+            if not self.server.server_shutdown:
+                raise
+
+
+def _wake_update_server_on_stop(sc) -> None:
+    """Make `sc.stop()` end the accumulator-update server at once.
+
+    The server's `shutdown` runs after `_jsc.stop()` has returned, and the
+    JVM waits for the ack of every update it sends, so nothing is in flight
+    when the wake ends the connection. Best-effort: a server without the
+    attributes this relies on, or one already wrapped, is left as it is.
+    """
+    server = getattr(sc, "_accumulatorServer", None)
+    if (server is None
+            or getattr(server, "RequestHandlerClass", None)
+            is not accumulators.UpdateRequestHandler
+            or not hasattr(server, "server_shutdown")
+            or "_BaseServer__shutdown_request" not in vars(server)):
+        return
+    server.RequestHandlerClass = _WakeableUpdateHandler
+    shutdown = type(server).shutdown
+
+    def wake_and_shutdown() -> None:
+        # Both flags before either wake: a serve loop woken first would
+        # go back to its 0.5 s select.
+        server.server_shutdown = True
+        server._BaseServer__shutdown_request = True
+        conn = getattr(server, "update_connection", None)
+        with contextlib.suppress(OSError):
+            if conn is not None:       # the handler's select(1)
+                conn.shutdown(socket.SHUT_RD)
+        with contextlib.suppress(OSError), socket.socket(
+                server.address_family, server.socket_type) as s:
+            s.settimeout(1)            # the serve loop's select(0.5)
+            s.connect(server.server_address)
+        shutdown(server)  # closes the socket, removes a Unix socket file
+
+    server.shutdown = wake_and_shutdown

@@ -98,6 +98,26 @@ def test_prop_packed_codec_round_trips(seed):
                                 for t in tg]
 
 
+@pytest.mark.parametrize("extra", [
+    [], ["POINT EMPTY"], ["POINT (nan 1)"], ["POINT Z (1 2 3)"],
+    ["MULTIPOINT (1 2)"], ["LINESTRING (0 0, 1 1)"]])
+def test_points_print_as_the_kernel_prints_them(extra):
+    """A batch of only points and NULLs prints in one element-wise join;
+    one row of any other shape sends the batch down the general path.
+    Either way every row is GT.to_wkt's text."""
+    rng = random.Random(3)
+    wkts = [None, "POINT (-0 0)", "POINT (1e-17 12345678901234567)"]
+    for _ in range(200):
+        x, y = rng.uniform(-180, 180), rng.uniform(-90, 90)
+        wkts += [f"POINT ({x!r} {y!r})",
+                 f"POINT ({rng.randint(-10**6, 10**6)} {round(y)})"]
+    wkts += extra
+    tg = [None if w is None else GT.parse_wkt(w) for w in wkts]
+    p = PK.pack_wkb([None if t is None else GT.to_wkb(t) for t in tg])
+    assert GB._wkt_batch(p) == [None if t is None else GT.to_wkt(t)
+                                for t in tg]
+
+
 def _rows_wkb(p) -> list:
     """Each packed row written back through the typed kernel."""
     return [None if p.kind[i] == 0 else GT.to_wkb(PK.row_tgeom(p, i))
