@@ -108,7 +108,7 @@ try:  # engine + numeric stack: best-effort, COW-shared after fork
     import pyspark.sql.pandas.serializers  # noqa: F401  (worker hot path)
 
     from .functions import geomb, lanes, lanes_ops, spatial  # noqa: F401
-    from .functions import chainrw, grid, spatial_ext, text  # noqa: F401
+    from .functions import chainrw, grid, spatial_ext, table, text  # noqa: F401
     from .kernel import geom, geomtypes, packed, transform  # noqa: F401
 except Exception:  # pragma: no cover - missing optional dep on a worker host
     pass

@@ -38,6 +38,7 @@ from pyspark.util import PythonEvalType
 
 from ..kernel import packed as PK
 from . import geomb as GB
+from . import table as TB
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
@@ -200,9 +201,7 @@ _ALIASED = re.compile(r"(?is).*\sAS\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]*`)\s*")
 def _udfs() -> dict:
     """Lower-cased registered name -> UDF (SQL names are
     case-insensitive)."""
-    from .spatial import udf_table
-
-    return {name.lower(): fn for name, fn in udf_table().items()}
+    return {name.lower(): fn for name, fn in TB.udf_table().items()}
 
 
 def _resolve(call: _Call, field):
@@ -276,7 +275,7 @@ class _Fusion:
         key = (fn, tuple(refs))
         if key not in self.nodes:
             self.nodes[key] = len(self.nodes)
-            self.carrier.append(GB.CARRIER.get(call.name.lower()))
+            self.carrier.append(TB.CARRIER.get(call.name.lower()))
         return ("v", self.nodes[key], field)
 
     def _field(self, ref) -> str:
@@ -305,18 +304,18 @@ class _Fusion:
         return "".join(out)
 
     def packed(self) -> set:
-        """The nodes that run their packed body (functions/geomb.CARRIER):
+        """The nodes that run their packed body (functions/table.CARRIER):
         every member of a carrier chain, i.e. of >= 2 nodes with a body
         linked through geometry arguments that a geometry-producing body
         fills, at least one of them not hygiene (ST_GeomFromWKT /
         ST_AsText). A lone call stays on its registered UDF: for a
         lane-backed function (ST_X / ST_Y, the interval predicates) or
         a parse straight into a serialize that is cheaper than a decode
-        and an encode, and the UDFs of geomb.REGISTRY_TEXT (the
-        measures, the coordinate maps, …) are that one-node decode,
-        body and encode already. A name
-        without a body ends the chain at its node; chains inside its
-        arguments still form."""
+        and an encode, and a name whose table row has a body and no lane
+        (the measures, the coordinate maps, …) is registered as that
+        one-node decode, body and encode already. A name without a body
+        ends the chain at its node; chains inside its arguments still
+        form."""
         comp = list(range(len(self.nodes)))
 
         def root(k):

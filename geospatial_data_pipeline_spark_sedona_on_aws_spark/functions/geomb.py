@@ -10,23 +10,20 @@ projection, the coordinate maps (rotate, scale, translate, affine, snap,
 reduce precision, expand), the convex round buffer, centroid, envelope
 and the rect/point predicates run as whole-batch numpy math.
 
-Text is the only geometry format that crosses the SQL boundary.
-`CARRIER` maps each SQL name that has a body to (body, geometry-argument
-positions, geometry result?). It has two users:
+Text is the only geometry format that crosses the SQL boundary. The
+bodies are cells of functions/table.ROWS, the one table of SQL names,
+and table.CARRIER (read from it) maps each SQL name that has a body to
+its `Carrier` (body, geometry-argument positions, geometry result?).
+Two users:
 
 - functions/chainrw's projection fuser runs a carrier chain as these
   bodies inside one fused Python call: `decode` parses each distinct
   geometry input once, and `encode` formats WKT only where a packed
   value surfaces;
-- `REGISTRY_TEXT` registers eighteen names as the same decode, body and
-  encode behind one adapter: ST_Transform, ST_Envelope, ST_BufferRound,
-  ST_Contains and ST_Within, whose body called alone beats a per-row
-  text loop; the coordinate maps ST_Rotate, ST_Scale, ST_Translate,
-  ST_Affine, ST_SnapToGrid, ST_ReducePrecision and ST_Expand, and the
-  measures ST_Area, ST_NPoints, ST_NumPoints, ST_Length and
-  ST_Centroid, which have no other lone path; and ST_Coords
-  (array<double>: flattened x, y …, areal rings closed, the numbers a
-  WKT-text split yields), an engine extension with no text twin.
+- a row with a body and no lane registers `_adapt`: the same decode,
+  body and encode behind one UDF. Its lone call is then the packed body
+  too, so the lone call, every chain through it and the scalar kernel
+  (kind -1 rows) give one answer. The table names which rows those are.
 
 Decoding is a plain parse. Canonical rows become packed rows straight
 from the lanes extracts; every other row takes the scalar parser. The
@@ -46,7 +43,6 @@ either). Scale: row-local, per-Arrow-batch, no shuffle or driver state.
 
 from __future__ import annotations
 
-from functools import partial
 from typing import Callable, NamedTuple
 
 import numpy as np
@@ -54,13 +50,6 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (
-    ArrayType,
-    BooleanType,
-    DoubleType,
-    LongType,
-    StringType,
-)
 
 from ..kernel import geom as G
 from ..kernel import geomtypes as GT
@@ -655,55 +644,7 @@ def _distance(pa: PK.PackedBatch, pb: PK.PackedBatch) -> pd.Series:
     return pd.Series(out)
 
 
-# ------------------------------------------------------------ the table
-
-# box_bounds_np (r9) also accepts degenerate boxes (points):
-# intersects / disjoint / equals / contains (covers) / within are pure
-# closed-interval statements at any operand dimension. touches /
-# overlaps / crosses stay rect-only — their truth depends on operand
-# dimension in ways bounds can't express (point-touches-point is false,
-# point-inside-rect is zero-boundary contact, ...).
-_BOX = PK.box_bounds_np
-_BOOL = BooleanType()
-_WKT = StringType()
-
-#: (SQL names, body, geometry-argument positions, result type)
-_ROWS = [
-    (("ST_GeomFromWKT", "ST_GeomFromText"), _normalize, (0,), _WKT),
-    (("ST_AsText",), _same, (0,), _WKT),
-    (("ST_Area",), _area, (0,), DoubleType()),
-    (("ST_NPoints",), _npoints, (0,), LongType()),
-    (("ST_NumPoints",), _num_points, (0,), LongType()),
-    (("ST_Length",), _length, (0,), DoubleType()),
-    (("ST_Coords",), _coords, (0,), ArrayType(DoubleType())),
-    (("ST_Transform",), _transform, (0,), _WKT),
-    (("ST_BufferRound",), _buffer_round, (0,), _WKT),
-    (("ST_Centroid",), _centroid, (0,), _WKT),
-    (("ST_Envelope",), _envelope, (0,), _WKT),
-    (("ST_Rotate",), _rotate, (0,), _WKT),
-    (("ST_Scale",), _scale, (0,), _WKT),
-    (("ST_Translate",), _translate, (0,), _WKT),
-    (("ST_Affine",), _affine, (0,), _WKT),
-    (("ST_SnapToGrid",), _snap_to_grid, (0,), _WKT),
-    (("ST_ReducePrecision",), _reduce_precision, (0,), _WKT),
-    (("ST_Expand",), _expand, (0,), _WKT),
-    (("ST_X",), partial(_xy, axis=0), (0,), DoubleType()),
-    (("ST_Y",), partial(_xy, axis=1), (0,), DoubleType()),
-    (("ST_Intersects",), _pred(S._law_intersects, S._intersects, _BOX),
-     (0, 1), _BOOL),
-    (("ST_Disjoint",), _pred(S._law_disjoint, S._disjoint, _BOX), (0, 1),
-     _BOOL),
-    (("ST_Touches",), _pred(S._law_touches, S._touches), (0, 1), _BOOL),
-    (("ST_Overlaps",), _pred(S._law_overlaps, S._overlaps), (0, 1), _BOOL),
-    (("ST_Equals",), _pred(S._law_equals, S._equals, _BOX), (0, 1), _BOOL),
-    (("ST_Contains",), _pred(S._law_contains, S._contains, _BOX), (0, 1),
-     _BOOL),
-    (("ST_Within",), _pred(S._law_within, lambda x, y: S._contains(y, x),
-                           _BOX), (0, 1), _BOOL),
-    (("ST_Crosses",), _pred(S._law_crosses, S._crosses), (0, 1), _BOOL),
-    (("ST_Distance",), _distance, (0, 1), DoubleType()),
-]
-
+# ------------------------------------------------ carrier and adapter
 
 class Carrier(NamedTuple):
     """A packed body, its geometry-argument positions, and whether its
@@ -726,11 +667,6 @@ class Carrier(NamedTuple):
         return self.produces and self.body is not _same
 
 
-#: lower-cased SQL name -> Carrier
-CARRIER = {name.lower(): Carrier(body, geom, rt == _WKT)
-           for names, body, geom, rt in _ROWS for name in names}
-
-
 def _adapt(name: str, body, geom, rtype):
     """The registered one-node UDF: decode the geometry arguments, run
     the body, encode a geometry result as WKT."""
@@ -745,22 +681,3 @@ def _adapt(name: str, body, geom, rtype):
     fn.__name__ = fn.__qualname__ = name.lower()
     return pandas_udf(fn, rtype)
 
-
-#: Names registered as the one-node adapter. A decode + body + encode
-#: beats a per-row text loop 4-12x on 60 k rects; ST_Coords has no text
-#: UDF at all. The coordinate maps (ST_Rotate … ST_Expand) and the
-#: measures (ST_Area, ST_NPoints, ST_NumPoints, ST_Length, ST_Centroid)
-#: have no text UDF either: the adapter is their only lone call, so the
-#: lone call, every chain through them and the scalar kernel (kind -1
-#: rows) give one answer. Still text UDFs: ST_X, ST_Y, the interval
-#: predicates, ST_GeomFromWKT and ST_AsText, whose lanes beat the
-#: adapter called alone, and ST_Distance, whose box path is not yet
-#: bit-equal to its scalar kernel.
-_ADAPTED = ("ST_Transform", "ST_Envelope", "ST_BufferRound", "ST_Contains",
-            "ST_Within", "ST_Coords", "ST_Rotate", "ST_Scale",
-            "ST_Translate", "ST_Affine", "ST_SnapToGrid",
-            "ST_ReducePrecision", "ST_Expand", "ST_Area", "ST_NPoints",
-            "ST_NumPoints", "ST_Length", "ST_Centroid")
-REGISTRY_TEXT = {name: _adapt(name, body, geom, rt)
-                 for names, body, geom, rt in _ROWS for name in names
-                 if name in _ADAPTED}

@@ -38,9 +38,6 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 from ..kernel import geomtypes as GT
 
@@ -155,29 +152,3 @@ HEX_ROUND_EXPRS = [
     " THEN -floor(qf + 0.5) - floor(-qf - rf + 0.5)"
     " ELSE floor(rf + 0.5) END AS BIGINT) AS hr",
 ]
-
-
-@pandas_udf(StringType())
-def st_tileenvelope(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-    return pd.Series([_tile_envelope(a, b, c)
-                      for a, b, c in zip(z, x, y)], index=z.index)
-
-
-@pandas_udf(StringType())
-def st_square(size: pd.Series, i: pd.Series, j: pd.Series) -> pd.Series:
-    return pd.Series([_square(a, b, c)
-                      for a, b, c in zip(size, i, j)], index=size.index)
-
-
-@pandas_udf(StringType())
-def st_hexagon(size: pd.Series, q: pd.Series, r: pd.Series) -> pd.Series:
-    return pd.Series([_hexagon(a, b, c)
-                      for a, b, c in zip(size, q, r)], index=size.index)
-
-
-#: merged into functions/spatial.register_spatial_functions
-REGISTRY_GRID = {
-    "ST_TileEnvelope": st_tileenvelope,
-    "ST_Square": st_square,
-    "ST_Hexagon": st_hexagon,
-}

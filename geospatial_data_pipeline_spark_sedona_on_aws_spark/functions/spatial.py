@@ -1,10 +1,14 @@
-"""ST_* spatial function surface as vectorized Arrow pandas UDFs.
+"""ST_* spatial function surface: the per-row scalar kernels, the lanes
+that front them, and registration.
 
 The reference invokes Sedona's SQL functions through F.expr("ST_...") strings
 (reference spark_job/process_geodata.py:102-139); after
 ``register_spatial_functions(spark)`` the *same call sites work verbatim* here,
-resolved to these UDFs instead of Sedona's JVM implementations
-(SURVEY.md §2.9).
+resolved to the engine's Arrow pandas UDFs instead of Sedona's JVM
+implementations (SURVEY.md §2.9). Each UDF is built from one row per SQL
+name in functions/table.py (names, result type, the kernel here, an
+optional lane, an optional packed body); only the grouped aggregates and
+the struct-valued ST_SimplifyLine are hand-written below.
 
 Geometry columns are **canonical WKT strings** (StringType): self-describing,
 hashable, and directly usable as grouping keys — which the reference needs,
@@ -19,16 +23,11 @@ the hot pipeline path additionally uses the fused dissolve-clip-area operator
 
 from __future__ import annotations
 
-import functools
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
     DoubleType,
     LongType,
     StringType,
@@ -40,7 +39,6 @@ from ..kernel import boolean as B
 from ..kernel import geom as G
 from ..kernel import geomtypes as GT
 from . import lanes as LN
-from . import lanes_ops as LO
 
 # ------------------------------------------------------------ scalar impls
 
@@ -102,8 +100,8 @@ def _buffer(s: str | None, d: float) -> str | None:
     spark_job/process_geodata.py:125); d != 0 → miter-join edge offset,
     exact for convex polygons (the reference's 1e-7 sliver weld at :102
     only needs 'grow slightly')."""
-    if s is None:
-        return None
+    if s is None or d is None or d != d:
+        return None   # a NULL distance (None, or NaN from a DOUBLE column)
     d = float(d)  # SQL numeric literals may arrive as decimal.Decimal
     if not _is_areal(s):
         # planar ops take the strip_z projection (kernel/geomtypes.py
@@ -603,18 +601,28 @@ def _dim(s: str) -> int:
 def _interiors_intersect(a: str, b: str) -> bool:
     if _is_areal(a) and _is_areal(b):
         return B.intersection_area(G.parse_wkt(a), G.parse_wkt(b)) > 0.0
-    return GT.interiors_intersect(GT.parse_wkt(a), GT.parse_wkt(b))
+    ta, tb = GT.parse_wkt(a), GT.parse_wkt(b)
+    if {ta[0], tb[0]} <= {"POLYGON", "MULTIPOLYGON"}:
+        # 2D areal behind an SRID= prefix, which _is_areal does not read
+        return B.intersection_area(G.parse_wkt(a), G.parse_wkt(b)) > 0.0
+    return GT.interiors_intersect(ta, tb)
 
 def _is_empty_geom(s: str) -> bool:
     _, data = GT.parse_wkt(s)
     return not data
+
+def _any_empty(a: str, b: str) -> bool:
+    """Either operand EMPTY. Both parse, so an operand the parser rejects
+    raises beside an EMPTY one too, as the packed paths' decode does."""
+    ea, eb = _is_empty_geom(a), _is_empty_geom(b)
+    return ea or eb
 
 def _intersects(a: str | None, b: str | None) -> bool | None:
     """SQL NULL propagates NULL; an EMPTY geometry intersects nothing
     (JTS convention: predicates on empties are false, not null)."""
     if a is None or b is None:
         return None
-    if _is_empty_geom(a) or _is_empty_geom(b):
+    if _any_empty(a, b):
         return False
     d = _distance(a, b)
     return None if d is None else d == 0.0
@@ -636,7 +644,7 @@ def _crosses(a: str | None, b: str | None) -> bool | None:
     outside the other's closure."""
     if a is None or b is None:
         return None
-    if _is_empty_geom(a) or _is_empty_geom(b):
+    if _any_empty(a, b):
         return False
     da, db = _dim(a), _dim(b)
     if da == db:
@@ -794,7 +802,7 @@ def _relate(a: str | None, b: str | None) -> str | None:
     a point set has none. NULL → NULL; EMPTY raises."""
     if a is None or b is None:
         return None
-    if _is_empty_geom(a) or _is_empty_geom(b):
+    if _any_empty(a, b):
         raise G.GeomError("ST_Relate on EMPTY input")
     da, db = _dim(a), _dim(b)
     if da < db:
@@ -816,7 +824,7 @@ def _overlaps(a: str | None, b: str | None) -> bool | None:
     dimension, and neither covers the other."""
     if a is None or b is None:
         return None
-    if _is_empty_geom(a) or _is_empty_geom(b):
+    if _any_empty(a, b):
         return False
     da, db = _dim(a), _dim(b)
     if da != db:
@@ -846,12 +854,14 @@ def _equals(a: str | None, b: str | None) -> bool | None:
     tests below already return False on empties)."""
     if a is None or b is None:
         return None
+    # both operands parse first, so a ring the parser rejects raises
+    # whatever the other operand is, as the packed paths' decode does
+    ta, tb = GT.parse_wkt(a), GT.parse_wkt(b)
     da, db = _dim(a), _dim(b)
     if da != db:
         return False
     if da == 2:
         return bool(_contains(a, b)) and bool(_contains(b, a))
-    ta, tb = GT.parse_wkt(a), GT.parse_wkt(b)
     if da == 0:
         pa, pb = GT.points_of(ta), GT.points_of(tb)
         return bool(pa) and set(pa) == set(pb)
@@ -2013,45 +2023,6 @@ def _make_polygon(line: str | None) -> str | None:
         return None
     return G.to_wkt([[path[:-1]]])
 
-def _line_merge(s: str | None) -> str | None:
-    """ST_LineMerge: stitch the paths of a MULTILINESTRING at shared
-    endpoints (degree-2 joins only, the JTS LineMerger contract); paths
-    that cannot merge stay separate. Singular lines pass through."""
-    if s is None:
-        return None
-    kind, data = GT.parse_wkt(s)
-    if GT.basekind(kind) not in ("LINESTRING", "MULTILINESTRING"):
-        return None
-    paths = [[p[:2] for p in path] for path in data]
-    merged = True
-    while merged and len(paths) > 1:
-        merged = False
-        # endpoint degree map: only degree-2 meeting points merge
-        deg: dict = {}
-        for p in paths:
-            for end in (p[0], p[-1]):
-                deg[end] = deg.get(end, 0) + 1
-        for i in range(len(paths)):
-            for j in range(i + 1, len(paths)):
-                a, b = paths[i], paths[j]
-                for flip_a in (False, True):
-                    for flip_b in (False, True):
-                        aa = a[::-1] if flip_a else a
-                        bb = b[::-1] if flip_b else b
-                        if aa[-1] == bb[0] and deg.get(aa[-1], 0) == 2:
-                            paths[i] = aa + bb[1:]
-                            del paths[j]
-                            merged = True
-                            break
-                    if merged:
-                        break
-                if merged:
-                    break
-            if merged:
-                break
-    return GT.to_wkt(("MULTILINESTRING" if len(paths) > 1
-                      else "LINESTRING", paths))
-
 def _remove_repeated_points(s: str | None) -> str | None:
     """ST_RemoveRepeatedPoints: drop consecutive duplicate vertices
     (rings keep their implicit closure; puntal input dedupes members)."""
@@ -2614,23 +2585,6 @@ def _area_spheroid(s: str | None) -> float | None:
         return 0.0
 
     return walk(tg)
-
-
-@pandas_udf(DoubleType())
-def st_distancesphere(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_distance_sphere(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def st_distancespheroid(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_distance_spheroid(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="float64")
-
-
-@pandas_udf(DoubleType())
-def st_areaspheroid(s: pd.Series) -> pd.Series:
-    return s.map(_area_spheroid, na_action="ignore").astype("float64")
 
 
 # ------------------------------------------------------ GeoJSON interchange
@@ -3293,9 +3247,12 @@ def _ear_clip(ring: list) -> list:
     return out
 
 
-# --------------------------------------------------------------- pandas UDFs
+# ------------------------------------------------------------------- lanes
+#
+# The lanes and row kernels of functions/table.ROWS, which builds every
+# registered UDF; below them, the UDFs a row cannot express.
 
-# Vectorized rect fast path for the unary hygiene UDFs. A row whose
+# Vectorized rect fast path for the unary hygiene lanes. A row whose
 # POLY5 extract is the canonical CCW walk (lanes._poly5_walks) is
 # PROVABLY a fixed point of parse→normalize→to_wkt (and of make_valid,
 # and of buffer(0)):
@@ -3341,25 +3298,10 @@ def _identity_hygiene(s: pd.Series, scalar_fn) -> pd.Series:
     return _unary_hygiene(
         s, scalar_fn, _nonareal_fixed_mask(s) | _rect_fixed_mask(s))
 
-@pandas_udf(StringType())
-def st_geomfromwkt(s: pd.Series) -> pd.Series:
-    return _identity_hygiene(s, _geom_from_wkt)
-
-@pandas_udf(StringType())
-def st_astext(s: pd.Series) -> pd.Series:
-    return s  # geometry already carried as canonical WKT
-
-@pandas_udf(StringType())
-def st_makevalid(s: pd.Series) -> pd.Series:
-    # non-areal MakeValid is serialization-canonicalization only — the
-    # same identity contract as ST_GeomFromWKT, so the extended mask holds
-    return _identity_hygiene(s, _make_valid)
-
-@pandas_udf(StringType())
-def st_buffer(s: pd.Series, d: pd.Series) -> pd.Series:
-    # buffer(0) is the topology rinse — same fixed-point fast path as the
-    # other hygiene UDFs; nonzero offsets always take the kernel path,
-    # so a batch without a zero offset skips the extract
+def _buffer_hygiene(s: pd.Series, d: pd.Series, scalar_fn) -> pd.Series:
+    """buffer(0) is the topology rinse: the same fixed-point fast path as
+    the other hygiene lanes. Nonzero offsets always take the kernel, so a
+    batch without a zero offset skips the extract."""
     mask = (pd.to_numeric(d, errors="coerce") == 0).to_numpy()
     if mask.any():
         mask &= _rect_fixed_mask(s)
@@ -3367,130 +3309,31 @@ def st_buffer(s: pd.Series, d: pd.Series) -> pd.Series:
     slow = ~mask
     if slow.any():
         out[slow] = pd.Series(
-            [_buffer(g, x) for g, x in zip(s[slow], d[slow])],
+            [scalar_fn(g, x) for g, x in zip(s[slow], d[slow])],
             index=s.index[slow],
         )
     return out
 
-@pandas_udf(StringType())
-def st_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_intersection(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(StringType())
-def st_union(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_union2(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(StringType())
-def st_difference(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_difference(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(DoubleType())
-def st_distance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_distance(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="float64")
-
-@pandas_udf(BooleanType())
-def st_dwithin(a: pd.Series, b: pd.Series, d: pd.Series) -> pd.Series:
+def _dwithin(a: str, b: str, d) -> bool | None:
     """Sedona ST_DWithin(a, b, d): distance(a, b) <= d. Shares _distance,
-    so every type pair the typed kernel supports works here; NULL
-    geometry or distance propagates NULL."""
-    out = []
-    for x, y, dd in zip(a, b, d):
-        if x is None or y is None or pd.isna(dd):
-            out.append(None)
-            continue
-        dist = _distance(x, y)
-        out.append(None if dist is None else bool(dist <= float(dd)))
-    return pd.Series(out, index=a.index, dtype="object")
+    so every type pair the typed kernel supports works here."""
+    dist = _distance(a, b)
+    return None if dist is None else bool(dist <= float(d))
 
-@pandas_udf(StringType())
-def st_convexhull(s: pd.Series) -> pd.Series:
-    return s.map(_convex_hull, na_action="ignore")
-
-@pandas_udf(BinaryType())
-def st_asbinary(s: pd.Series) -> pd.Series:
+def _as_binary(w: str) -> bytes:
     """ST_AsBinary: canonical little-endian ISO WKB of any WKT type
     (kernel/geomtypes.to_wkb)."""
-    return s.map(lambda w: GT.to_wkb(GT.parse_wkt(w)), na_action="ignore")
+    return GT.to_wkb(GT.parse_wkt(w))
 
-@pandas_udf(StringType())
-def st_geomfromwkb(b: pd.Series) -> pd.Series:
+def _geom_from_wkb(buf) -> str:
     """ST_GeomFromWKB: parse ISO WKB (either byte order) back to the
     engine's canonical WKT carrier."""
-    return b.map(lambda buf: GT.to_wkt(GT.parse_wkb(bytes(buf))),
-                 na_action="ignore")
+    return GT.to_wkt(GT.parse_wkb(bytes(buf)))
 
-@pandas_udf(DoubleType())
-def st_x(s: pd.Series) -> pd.Series:
-    return LN.st_x(s, lambda w: _st_xy(w, 0)).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_y(s: pd.Series) -> pd.Series:
-    return LN.st_y(s, lambda w: _st_xy(w, 1)).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_z(s: pd.Series) -> pd.Series:
-    return LN._xy_accessor(s, 2, lambda w: _st_xy(w, 2)).astype("float64")
-
-
-@pandas_udf(StringType())
-def st_force2d(s: pd.Series) -> pd.Series:
-    return s.map(_force_2d, na_action="ignore")
-
-@pandas_udf(LongType())
-def st_ndims(s: pd.Series) -> pd.Series:
-    return s.map(_ndims, na_action="ignore").astype("Int64")
-
-@pandas_udf(BooleanType())
-def st_hasz(s: pd.Series) -> pd.Series:
-    return LO.hasz(s, lambda w: _ndims(w) == 3).astype("object")
-
-@pandas_udf(DoubleType())
-def st_zmin(s: pd.Series) -> pd.Series:
-    return s.map(lambda w: _z_minmax(w, False),
-                 na_action="ignore").astype("float64")
-
-@pandas_udf(DoubleType())
-def st_zmax(s: pd.Series) -> pd.Series:
-    return s.map(lambda w: _z_minmax(w, True),
-                 na_action="ignore").astype("float64")
-
-@pandas_udf(StructType([StructField("n_kept", LongType()),
-                        StructField("length", DoubleType())]))
-def st_simplifyline(xs: pd.Series, ys: pd.Series, tol: pd.Series) -> pd.DataFrame:
-    """Douglas–Peucker over coordinate arrays; returns the kept-vertex
-    count and the simplified polyline's length. Array-columns in, struct
-    out — the Spark-idiomatic shape for per-row variable-length geometry
-    (no WKT round-trip on the hot path)."""
-    import math
-    n_kept, length = [], []
-    for x, y, t in zip(xs, ys, tol):
-        if x is None or y is None or t is None:
-            n_kept.append(None)
-            length.append(None)
-            continue
-        idx = G.simplify_polyline(list(x), list(y), float(t))
-        n_kept.append(len(idx))
-        acc = 0.0
-        for i in range(1, len(idx)):
-            dx = x[idx[i]] - x[idx[i - 1]]
-            dy = y[idx[i]] - y[idx[i - 1]]
-            acc += math.sqrt(dx * dx + dy * dy)
-        length.append(acc)
-    return pd.DataFrame({"n_kept": n_kept, "length": length})
-
-@pandas_udf(DoubleType())
-def st_clipped_area(subject: pd.Series, clip: pd.Series) -> pd.Series:
+def _clipped_area(a: str, b: str) -> float:
     """Fused area(intersection(a, b)) — one boundary crossing instead of two
     (SURVEY.md §4.3 expression fusion)."""
-    out = []
-    for a, b in zip(subject, clip):
-        if a is None or b is None:
-            out.append(None)
-            continue
-        w = _intersection(a, b)
-        out.append(G.area(G.parse_wkt(w)))
-    return pd.Series(out, index=subject.index, dtype="float64")
+    return G.area(G.parse_wkt(_intersection(a, b)))
 
 def _rect_bounds_series(s: pd.Series):
     """(mask, x1, y1, x2, y2) for rows that are PROVABLY canonical rects
@@ -3515,9 +3358,9 @@ def _pair_law(a_bounds, b_bounds, law, row_fn) -> np.ndarray:
         out[i] = row_fn(i)
     return out
 
-def _rect_pair_predicate(a: pd.Series, b: pd.Series, law, scalar_fn
+def _rect_pair_predicate(a: pd.Series, b: pd.Series, scalar_fn, law
                          ) -> pd.Series:
-    """Vectorized rect×rect fast path for the DE-9IM predicate UDFs:
+    """Vectorized rect×rect lane of the DE-9IM predicates:
     where BOTH sides are canonical rects the predicate is pure interval
     arithmetic over the whole Arrow batch (the closed forms pinned
     against the scalar path by test_prop_rect_predicates_interval_law);
@@ -3569,90 +3412,10 @@ def _disjoint(x, y):
     v = _intersects(x, y)
     return None if v is None else not v
 
-@pandas_udf(BooleanType())
-def st_intersects(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_intersects, _intersects)
-
-@pandas_udf(BooleanType())
-def st_disjoint(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_disjoint, _disjoint)
-
-@pandas_udf(BooleanType())
-def st_touches(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_touches, _touches)
-
-@pandas_udf(BooleanType())
-def st_crosses(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_crosses, _crosses)
-
-@pandas_udf(BooleanType())
-def st_overlaps(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_overlaps, _overlaps)
-
-@pandas_udf(BooleanType())
-def st_equals(a: pd.Series, b: pd.Series) -> pd.Series:
-    return _rect_pair_predicate(a, b, _law_equals, _equals)
-
-@pandas_udf(StringType())
-def st_relate(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_relate(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(LongType())
-def st_numgeometries(s: pd.Series) -> pd.Series:
-    return LO.num_geometries(s, _num_geometries).astype("Int64")
-
-@pandas_udf(StringType())
-def st_geometryn(s: pd.Series, n: pd.Series) -> pd.Series:
-    return LO.geometry_n(s, n, _geometry_n)
-
-@pandas_udf(StringType())
-def st_pointn(s: pd.Series, n: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None or pd.isna(i) else _point_n(g, int(i))
-         for g, i in zip(s, n)], index=s.index)
-
-@pandas_udf(StringType())
-def st_startpoint(s: pd.Series) -> pd.Series:
-    return LO.terminal_point(s, False,
-                             lambda g: _terminal_point(g, False))
-
-@pandas_udf(StringType())
-def st_endpoint(s: pd.Series) -> pd.Series:
-    return LO.terminal_point(s, True,
-                             lambda g: _terminal_point(g, True))
-
-@pandas_udf(StringType())
-def st_exteriorring(s: pd.Series) -> pd.Series:
-    return s.map(_exterior_ring, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_boundary(s: pd.Series) -> pd.Series:
-    return s.map(_boundary, na_action="ignore")
-
-@pandas_udf(BooleanType())
-def st_isvalid(s: pd.Series) -> pd.Series:
-    return s.map(_is_valid, na_action="ignore").astype("object")
-
-@pandas_udf(StringType())
-def st_flipcoordinates(s: pd.Series) -> pd.Series:
-    return s.map(_flip_coordinates, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_point(x: pd.Series, y: pd.Series) -> pd.Series:
+def _point(x, y) -> str:
     """ST_Point / ST_MakePoint: POINT WKT from coordinate doubles through
     the kernel's canonical formatter."""
-    return pd.Series(
-        [None if pd.isna(a) or pd.isna(b)
-         else f"POINT ({G._fmt(float(a))} {G._fmt(float(b))})"
-         for a, b in zip(x, y)], index=x.index)
-
-@pandas_udf(StringType())
-def st_asgeojson(s: pd.Series) -> pd.Series:
-    return s.map(_as_geojson, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_geomfromgeojson(s: pd.Series) -> pd.Series:
-    return s.map(_geom_from_geojson, na_action="ignore")
+    return f"POINT ({G._fmt(float(x))} {G._fmt(float(y))})"
 
 def _geohash_vec_int(lon, lat, precision: int):
     """Vectorized geohash for integer-valued coordinates: the quantization
@@ -3685,12 +3448,10 @@ def _geohash_vec_int(lon, lat, precision: int):
                           .astype("U1"))
     return out
 
-@pandas_udf(StringType())
-def st_geohash(s: pd.Series, p: pd.Series) -> pd.Series:
-    # fast path: integer-coordinate POINT WKT (lanes.POINT2) with a
-    # constant precision per batch (the common bucketing shape) → exact
-    # int64 quantization, no per-row parse or bisection; everything else
-    # takes the scalar path
+def _geohash_lane(s: pd.Series, p: pd.Series, scalar_fn) -> pd.Series:
+    """Integer-coordinate POINT WKT (lanes.POINT2) with one precision per
+    batch (the common bucketing shape): exact int64 quantization, no
+    per-row parse or bisection. Every other row takes the kernel."""
     pp = pd.to_numeric(p, errors="coerce")
     prec = pp.dropna().unique()
     out = np.full(len(s), None, dtype=object)
@@ -3705,45 +3466,17 @@ def st_geohash(s: pd.Series, p: pd.Series) -> pd.Series:
                                          int(prec[0]))
     for i in np.flatnonzero(~mask):
         g, kk = s.iat[i], pp.iat[i]
-        out[i] = None if g is None or pd.isna(kk) else _geohash(g, int(kk))
+        out[i] = None if g is None or pd.isna(kk) else scalar_fn(g, int(kk))
     return pd.Series(out, index=s.index)
 
-@pandas_udf(StringType())
-def st_lineinterpolatepoint(s: pd.Series, f: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None or pd.isna(x)
-         else _line_interpolate_point(g, float(x))
-         for g, x in zip(s, f)], index=s.index)
-
-@pandas_udf(DoubleType())
-def st_linelocatepoint(s: pd.Series, p: pd.Series) -> pd.Series:
-    return pd.Series([_line_locate_point(g, q) for g, q in zip(s, p)],
-                     index=s.index, dtype="float64")
-
-@pandas_udf(StringType())
-def st_closestpoint(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_closest_point(x, y) for x, y in zip(a, b)],
-                     index=a.index)
-
-@pandas_udf(StringType())
-def st_symdifference(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_sym_difference(x, y) for x, y in zip(a, b)],
-                     index=a.index)
-
-@pandas_udf(StringType())
-def st_makeline(a: pd.Series, b: pd.Series) -> pd.Series:
+def _make_line(a: str, b: str) -> str | None:
     """ST_MakeLine(pointA, pointB): the 2-vertex LINESTRING; NULL for
     non-point or EMPTY input."""
-    def mk(x, y):
-        if x is None or y is None:
-            return None
-        ka, da = GT.parse_wkt(x)
-        kb, db = GT.parse_wkt(y)
-        if ka != "POINT" or kb != "POINT" or not da or not db:
-            return None
-        return GT.to_wkt(("LINESTRING", [[da[0], db[0]]]))
-
-    return pd.Series([mk(x, y) for x, y in zip(a, b)], index=a.index)
+    ka, da = GT.parse_wkt(a)
+    kb, db = GT.parse_wkt(b)
+    if ka != "POINT" or kb != "POINT" or not da or not db:
+        return None
+    return GT.to_wkt(("LINESTRING", [[da[0], db[0]]]))
 
 def _normalize_full(s: str | None) -> str | None:
     """ST_Normalize (PostGIS semantics): the engine's canonical form
@@ -3763,63 +3496,7 @@ def _normalize_full(s: str | None) -> str | None:
 
     return G.to_wkt([[rot(r) for r in poly] for poly in g])
 
-@pandas_udf(StringType())
-def st_normalize(s: pd.Series) -> pd.Series:
-    # the hygiene fast path applies: a canonical rect already starts at
-    # its lex-min vertex, so it is a fixed point of the full normalize
-    return _unary_hygiene(s, _normalize_full)
-
-@pandas_udf(StringType())
-def st_geomfromgeohash(g: pd.Series) -> pd.Series:
-    return g.map(_geom_from_geohash, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_pointfromgeohash(g: pd.Series) -> pd.Series:
-    return g.map(_point_from_geohash, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_geometrytype(s: pd.Series) -> pd.Series:
-    return LO.geometry_type(s, _geometry_type)
-
-@pandas_udf(LongType())
-def st_dimension(s: pd.Series) -> pd.Series:
-    return s.map(_dimension_of, na_action="ignore").astype("Int64")
-
-@pandas_udf(BooleanType())
-def st_isempty(s: pd.Series) -> pd.Series:
-    return s.map(_is_empty, na_action="ignore").astype("object")
-
-@pandas_udf(LongType())
-def st_numinteriorrings(s: pd.Series) -> pd.Series:
-    return LN.num_interior_rings(s, _num_interior_rings).astype("Int64")
-
-@pandas_udf(StringType())
-def st_interiorringn(s: pd.Series, n: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if g is None or pd.isna(i) else _interior_ring_n(g, int(i))
-         for g, i in zip(s, n)], index=s.index)
-
-@pandas_udf(StringType())
-def st_reverse(s: pd.Series) -> pd.Series:
-    return s.map(_reverse, na_action="ignore")
-
-@pandas_udf(DoubleType())
-def st_azimuth(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_azimuth(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="float64")
-
-@pandas_udf(BooleanType())
-def st_covers(a: pd.Series, b: pd.Series) -> pd.Series:
-    """The engine's containment test IS covers (boundary counts) — this
-    registers the honest SQL/MM name alongside ST_Contains."""
-    return pd.Series([_contains(x, y) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(BooleanType())
-def st_coveredby(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_contains(y, x) for x, y in zip(a, b)], index=a.index)
-
-@pandas_udf(ArrayType(StringType()))
-def st_dump(s: pd.Series) -> pd.Series:
+def _dump(w: str) -> list:
     """ST_Dump: the members of a multi-geometry as individual WKT strings
     (a singular geometry dumps to itself, EMPTY to no members;
     GEOMETRYCOLLECTION members dump recursively to atomic geometries —
@@ -3838,7 +3515,38 @@ def st_dump(s: pd.Series) -> pd.Series:
             member += " Z"
         return [GT.to_wkt((member, [m])) for m in data]
 
-    return s.map(lambda w: dump_tg(GT.parse_wkt(w)), na_action="ignore")
+    return dump_tg(GT.parse_wkt(w))
+
+def _segmentize_npoints(s: str, m: float) -> int | None:
+    """ST_SegmentizeNPoints' kernel: the literal composition."""
+    seg = _segmentize(s, m)
+    return None if seg is None else _npoints(seg)
+
+# ----------------------------------------- UDFs a table row cannot express
+
+@pandas_udf(StructType([StructField("n_kept", LongType()),
+                        StructField("length", DoubleType())]))
+def st_simplifyline(xs: pd.Series, ys: pd.Series, tol: pd.Series) -> pd.DataFrame:
+    """Douglas–Peucker over coordinate arrays; returns the kept-vertex
+    count and the simplified polyline's length. Array-columns in, struct
+    out — the Spark-idiomatic shape for per-row variable-length geometry
+    (no WKT round-trip on the hot path)."""
+    import math
+    n_kept, length = [], []
+    for x, y, t in zip(xs, ys, tol):
+        if x is None or y is None or t is None or t != t:
+            n_kept.append(None)
+            length.append(None)
+            continue
+        idx = G.simplify_polyline(list(x), list(y), float(t))
+        n_kept.append(len(idx))
+        acc = 0.0
+        for i in range(1, len(idx)):
+            dx = x[idx[i]] - x[idx[i - 1]]
+            dy = y[idx[i]] - y[idx[i - 1]]
+            acc += math.sqrt(dx * dx + dy * dy)
+        length.append(acc)
+    return pd.DataFrame({"n_kept": n_kept, "length": length})
 
 @pandas_udf(StringType())
 def st_collect_aggr(x: pd.Series, y: pd.Series) -> str:
@@ -3858,286 +3566,6 @@ def st_collect_aggr(x: pd.Series, y: pd.Series) -> str:
     pts = sorted(zip(xv[ok].astype(float), yv[ok].astype(float)))
     return GT.to_wkt(("MULTIPOINT" if len(pts) != 1 else "POINT",
                       [tuple(p) for p in pts]))
-
-# ---------------------------------------------- r7 scalar wrappers
-
-@pandas_udf(StringType())
-def st_multi(s: pd.Series) -> pd.Series:
-    return LO.multi(s, _multi)
-
-@pandas_udf(DoubleType())
-def st_perimeter(s: pd.Series) -> pd.Series:
-    return LO.perimeter(s, _perimeter).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_angle(p1: pd.Series, p2: pd.Series, p3: pd.Series) -> pd.Series:
-    return LO.angle3(p1, p2, p3, _angle3).astype("float64")
-
-@pandas_udf(StringType())
-def st_shortestline(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.shortest_line(a, b, _shortest_line)
-
-@pandas_udf(DoubleType())
-def st_maxdistance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.max_distance(a, b, _max_distance).astype("float64")
-
-@pandas_udf(StringType())
-def st_longestline(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.longest_line(a, b, _longest_line)
-
-@pandas_udf(DoubleType())
-def st_hausdorffdistance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.hausdorff(a, b, _hausdorff_distance).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_frechetdistance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.frechet(a, b, _frechet_distance).astype("float64")
-
-@pandas_udf(StringType())
-def st_boundingdiagonal(s: pd.Series) -> pd.Series:
-    return LO.bounding_diagonal(s, _bounding_diagonal)
-
-@pandas_udf(BooleanType())
-def st_isclosed(s: pd.Series) -> pd.Series:
-    return LO.is_closed(s, _is_closed).astype("object")
-
-@pandas_udf(BooleanType())
-def st_issimple(s: pd.Series) -> pd.Series:
-    return LO.is_simple(s, _is_simple).astype("object")
-
-@pandas_udf(BooleanType())
-def st_isring(s: pd.Series) -> pd.Series:
-    return LO.is_ring(s, _is_ring).astype("object")
-
-@pandas_udf(StringType())
-def st_pointonsurface(s: pd.Series) -> pd.Series:
-    return LO.point_on_surface(s, _point_on_surface)
-
-@pandas_udf(StringType())
-def st_minimumboundingcircle(s: pd.Series) -> pd.Series:
-    return s.map(_min_bounding_circle, na_action="ignore")
-
-@pandas_udf(DoubleType())
-def st_minimumboundingradius(s: pd.Series) -> pd.Series:
-    """Radius of the minimum enclosing circle. Diverges from Sedona's
-    struct(center, radius) return — the SQL surface keeps scalars; the
-    center is ST_Centroid(ST_MinimumBoundingCircle(g))."""
-    return LO.min_bounding_radius_val(
-        s, lambda g: (_min_bounding_radius(g) or (None, None))[1]
-    ).astype("float64")
-
-@pandas_udf(StringType())
-def st_geometricmedian(s: pd.Series) -> pd.Series:
-    return LO.geometric_median(s, _geometric_median)
-
-@pandas_udf(StringType())
-def st_linesubstring(s: pd.Series, f1: pd.Series,
-                     f2: pd.Series) -> pd.Series:
-    return LO.line_substring(s, f1, f2, _line_substring)
-
-@pandas_udf(StringType())
-def st_segmentize(s: pd.Series, m: pd.Series) -> pd.Series:
-    return LO.segmentize(s, m, _segmentize)
-
-def _segmentize_npoints(s: str, m: float) -> int | None:
-    """Scalar fallback of the fused counter: the literal composition."""
-    seg = _segmentize(s, m)
-    return None if seg is None else _npoints(seg)
-
-@pandas_udf(LongType())
-def st_segmentize_npoints(s: pd.Series, m: pd.Series) -> pd.Series:
-    """Fused ST_NPoints(ST_Segmentize(g, m)) — emitted by the chain
-    rewriter (functions/chainrw.py _FUSE) so the text spelling never
-    materializes the densified ring; also directly callable."""
-    return LO.segmentize_npoints(s, m, _segmentize_npoints) \
-        .astype("Int64")
-
-@pandas_udf(StringType())
-def st_collectionextract(s: pd.Series, d: pd.Series) -> pd.Series:
-    return LO.collection_extract(s, d, _collection_extract)
-
-@pandas_udf(StringType())
-def st_simplify(s: pd.Series, tol: pd.Series) -> pd.Series:
-    return LO.simplify(s, tol, _simplify_wkt)
-
-@pandas_udf(StringType())
-def st_delaunaytriangles(s: pd.Series) -> pd.Series:
-    return s.map(_delaunay_triangles, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_voronoipolygons(s: pd.Series) -> pd.Series:
-    return s.map(_voronoi_polygons, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_concavehull(s: pd.Series, pct: pd.Series) -> pd.Series:
-    return pd.Series([None if g is None or pd.isna(v)
-                      else _concave_hull(g, float(v))
-                      for g, v in zip(s, pct)], index=s.index)
-
-@pandas_udf(StringType())
-def st_subdivide(s: pd.Series, mv: pd.Series) -> pd.Series:
-    return pd.Series([None if g is None or pd.isna(v)
-                      else _subdivide(g, int(v))
-                      for g, v in zip(s, mv)], index=s.index)
-
-# r8 name-parity batch wrappers
-
-@pandas_udf(LongType())
-def st_nrings(s: pd.Series) -> pd.Series:
-    return s.map(_nrings, na_action="ignore").astype("Int64")
-
-@pandas_udf(StringType())
-def st_pointz(x: pd.Series, y: pd.Series, z: pd.Series) -> pd.Series:
-    return pd.Series([_point_z(a, b, c) for a, b, c in zip(x, y, z)],
-                     index=x.index)
-
-@pandas_udf(StringType())
-def st_asewkt(s: pd.Series) -> pd.Series:
-    return s.map(_as_ewkt, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_geomfromewkt(s: pd.Series) -> pd.Series:
-    return s.map(_geom_from_ewkt, na_action="ignore")
-
-@pandas_udf(ArrayType(StringType()))
-def st_dumppoints(s: pd.Series) -> pd.Series:
-    return s.map(_dump_points, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_makeenvelope(x1: pd.Series, y1: pd.Series, x2: pd.Series,
-                    y2: pd.Series) -> pd.Series:
-    return pd.Series([_make_envelope(a, b, c, d)
-                      for a, b, c, d in zip(x1, y1, x2, y2)],
-                     index=x1.index)
-
-@pandas_udf(StringType())
-def st_unaryunion(s: pd.Series) -> pd.Series:
-    return s.map(_unary_union, na_action="ignore")
-
-@pandas_udf(BooleanType())
-def st_crossesdateline(s: pd.Series) -> pd.Series:
-    return s.map(_crosses_dateline, na_action="ignore").astype("boolean")
-
-@pandas_udf(StringType())
-def st_shiftlongitude(s: pd.Series) -> pd.Series:
-    return s.map(_shift_longitude, na_action="ignore")
-
-@pandas_udf(LongType())
-def st_bestsrid(s: pd.Series) -> pd.Series:
-    return s.map(_best_srid, na_action="ignore").astype("Int64")
-
-@pandas_udf(StringType())
-def st_polygon_from_line(s: pd.Series) -> pd.Series:
-    return s.map(lambda w: _lineal_to_polygon(w, "ST_Polygon"),
-                 na_action="ignore")
-
-@pandas_udf(StringType())
-def st_makepolygon(s: pd.Series) -> pd.Series:
-    return s.map(lambda w: _lineal_to_polygon(w, "ST_MakePolygon"),
-                 na_action="ignore")
-
-@pandas_udf(DoubleType())
-def st_lengthspheroid(s: pd.Series) -> pd.Series:
-    return s.map(_length_spheroid, na_action="ignore").astype("float64")
-
-@pandas_udf(DoubleType())
-def st_mmin(s: pd.Series) -> pd.Series:
-    return s.map(_mm_minmax, na_action="ignore").astype("float64")
-
-@pandas_udf(DoubleType())
-def st_mmax(s: pd.Series) -> pd.Series:
-    return s.map(_mm_minmax, na_action="ignore").astype("float64")
-
-@pandas_udf(ArrayType(StringType()))
-def st_subdivide_explode(s: pd.Series, mv: pd.Series) -> pd.Series:
-    return pd.Series([None if g is None or pd.isna(v)
-                      else _subdivide_explode(g, int(v))
-                      for g, v in zip(s, mv)], index=s.index)
-
-@pandas_udf(StringType())
-def st_linemerge(s: pd.Series) -> pd.Series:
-    return s.map(_line_merge, na_action="ignore")
-
-@pandas_udf(StringType())
-def st_generatepoints(s: pd.Series, n: pd.Series,
-                      seed: pd.Series) -> pd.Series:
-    return pd.Series([None if g is None or pd.isna(k)
-                      else _generate_points(g, int(k),
-                                            0 if pd.isna(sd) else int(sd))
-                      for g, k, sd in zip(s, n, seed)], index=s.index)
-
-@pandas_udf(StringType())
-def st_triangulatepolygon(s: pd.Series) -> pd.Series:
-    return s.map(_triangulate_polygon, na_action="ignore")
-
-@pandas_udf(DoubleType())
-def st_degrees(x: pd.Series) -> pd.Series:
-    import math
-
-    return pd.to_numeric(x, errors="coerce").map(
-        math.degrees, na_action="ignore").astype("float64")
-
-@pandas_udf(StringType())
-def st_addpoint(line: pd.Series, pt: pd.Series,
-                pos: pd.Series) -> pd.Series:
-    return LO.add_point(line, pt, pos, _add_point)
-
-@pandas_udf(StringType())
-def st_removepoint(line: pd.Series, pos: pd.Series) -> pd.Series:
-    return LO.remove_point(line, pos, _remove_point)
-
-@pandas_udf(StringType())
-def st_setpoint(line: pd.Series, pos: pd.Series,
-                pt: pd.Series) -> pd.Series:
-    return LO.set_point(line, pos, pt, _set_point)
-
-@pandas_udf(StringType())
-def st_snap(g: pd.Series, ref: pd.Series, tol: pd.Series) -> pd.Series:
-    return LO.snap(g, ref, tol, _snap)
-
-@pandas_udf(StringType())
-def st_split(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LO.split(a, b, _split)
-
-@pandas_udf(StringType())
-def st_makepolygon(s: pd.Series) -> pd.Series:
-    return LO.make_polygon(s, _make_polygon)
-
-@pandas_udf(StringType())
-def st_linemerge(s: pd.Series) -> pd.Series:
-    return LO.line_merge(s, _line_merge)
-
-@pandas_udf(StringType())
-def st_removerepeatedpoints(s: pd.Series) -> pd.Series:
-    return LO.remove_repeated_points(s, _remove_repeated_points)
-
-@pandas_udf(StringType())
-def st_force3d(s: pd.Series, z: pd.Series) -> pd.Series:
-    return LN.force_3dz(s, z, _force_3d)
-
-@pandas_udf(StringType())
-def st_project(s: pd.Series, d: pd.Series, az: pd.Series) -> pd.Series:
-    return LO.project(s, d, az, _project_point)
-
-@pandas_udf(DoubleType())
-def st_xmin(s: pd.Series) -> pd.Series:
-    return LO.bound_of(s, "xmin",
-                       lambda g: _bound_of(g, "xmin")).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_xmax(s: pd.Series) -> pd.Series:
-    return LO.bound_of(s, "xmax",
-                       lambda g: _bound_of(g, "xmax")).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_ymin(s: pd.Series) -> pd.Series:
-    return LO.bound_of(s, "ymin",
-                       lambda g: _bound_of(g, "ymin")).astype("float64")
-
-@pandas_udf(DoubleType())
-def st_ymax(s: pd.Series) -> pd.Series:
-    return LO.bound_of(s, "ymax",
-                       lambda g: _bound_of(g, "ymax")).astype("float64")
 
 @pandas_udf(StringType())
 def st_envelope_aggr(s: pd.Series) -> str:
@@ -4257,163 +3685,15 @@ def salted_union_aggr(df, keys, geom_col: str, out_col: str = "union_geom",
     return (partial.groupBy(*keys)
             .agg(st_union_aggr(F.col("__partial")).alias(out_col)))
 
-_REGISTRY = {
-    "ST_GeomFromWKT": st_geomfromwkt,
-    "ST_AsText": st_astext,
-    "ST_MakeValid": st_makevalid,
-    "ST_Buffer": st_buffer,
-    "ST_Intersection": st_intersection,
-    "ST_ClippedArea": st_clipped_area,
-    "ST_Union": st_union,
-    "ST_Difference": st_difference,
-    "ST_SymDifference": st_symdifference,
-    "ST_MakeLine": st_makeline,
-    "ST_Normalize": st_normalize,
-    "ST_Distance": st_distance,
-    "ST_DWithin": st_dwithin,
-    "ST_ConvexHull": st_convexhull,
-    "ST_SimplifyLine": st_simplifyline,
-    "ST_X": st_x,
-    "ST_Y": st_y,
-    "ST_Z": st_z,
-    "ST_DistanceSphere": st_distancesphere,
-    "ST_DistanceSpheroid": st_distancespheroid,
-    "ST_AreaSpheroid": st_areaspheroid,
-    "ST_Force2D": st_force2d,
-    "ST_NDims": st_ndims,
-    "ST_HasZ": st_hasz,
-    "ST_ZMin": st_zmin,
-    "ST_ZMax": st_zmax,
-    "ST_AsBinary": st_asbinary,
-    "ST_GeomFromWKB": st_geomfromwkb,
-    "ST_Intersects": st_intersects,
-    "ST_Disjoint": st_disjoint,
-    "ST_Touches": st_touches,
-    "ST_Crosses": st_crosses,
-    "ST_Overlaps": st_overlaps,
-    "ST_Equals": st_equals,
-    "ST_Relate": st_relate,
-    "ST_NumGeometries": st_numgeometries,
-    "ST_GeometryN": st_geometryn,
-    "ST_PointN": st_pointn,
-    "ST_StartPoint": st_startpoint,
-    "ST_EndPoint": st_endpoint,
-    "ST_ExteriorRing": st_exteriorring,
-    "ST_Boundary": st_boundary,
-    "ST_IsValid": st_isvalid,
-    "ST_FlipCoordinates": st_flipcoordinates,
-    "ST_Point": st_point,
-    "ST_MakePoint": st_point,
-    "ST_AsGeoJSON": st_asgeojson,
-    "ST_GeomFromGeoJSON": st_geomfromgeojson,
-    "ST_GeoHash": st_geohash,
-    "ST_GeomFromGeoHash": st_geomfromgeohash,
-    "ST_PointFromGeoHash": st_pointfromgeohash,
-    "ST_GeometryType": st_geometrytype,
-    "ST_Dimension": st_dimension,
-    "ST_IsEmpty": st_isempty,
-    "ST_NumInteriorRings": st_numinteriorrings,
-    "ST_InteriorRingN": st_interiorringn,
-    "ST_Reverse": st_reverse,
-    "ST_Azimuth": st_azimuth,
-    "ST_Covers": st_covers,
-    "ST_CoveredBy": st_coveredby,
-    "ST_Dump": st_dump,
-    "ST_Collect_Aggr": st_collect_aggr,
-    "ST_Envelope_Aggr": st_envelope_aggr,
-    "ST_Union_Aggr": st_union_aggr,
-    "ST_Intersection_Aggr": st_intersection_aggr,
-    "ST_LineInterpolatePoint": st_lineinterpolatepoint,
-    "ST_LineLocatePoint": st_linelocatepoint,
-    "ST_ClosestPoint": st_closestpoint,
-    # --- r7 surface: measures, shape, editors (the affine/precision
-    # maps are packed bodies: functions/geomb.REGISTRY_TEXT) ---
-    "ST_Multi": st_multi,
-    "ST_Perimeter": st_perimeter,
-    "ST_Angle": st_angle,
-    "ST_ShortestLine": st_shortestline,
-    "ST_MaxDistance": st_maxdistance,
-    "ST_LongestLine": st_longestline,
-    "ST_HausdorffDistance": st_hausdorffdistance,
-    "ST_FrechetDistance": st_frechetdistance,
-    "ST_BoundingDiagonal": st_boundingdiagonal,
-    "ST_IsClosed": st_isclosed,
-    "ST_IsSimple": st_issimple,
-    "ST_IsRing": st_isring,
-    "ST_PointOnSurface": st_pointonsurface,
-    "ST_MinimumBoundingCircle": st_minimumboundingcircle,
-    "ST_MinimumBoundingRadius": st_minimumboundingradius,
-    "ST_GeometricMedian": st_geometricmedian,
-    "ST_LineSubstring": st_linesubstring,
-    "ST_Segmentize": st_segmentize,
-    "ST_SegmentizeNPoints": st_segmentize_npoints,   # fused (chainrw)
-    "ST_CollectionExtract": st_collectionextract,
-    "ST_DelaunayTriangles": st_delaunaytriangles,
-    "ST_VoronoiPolygons": st_voronoipolygons,
-    "ST_ConcaveHull": st_concavehull,
-    "ST_AddPoint": st_addpoint,
-    "ST_RemovePoint": st_removepoint,
-    "ST_SetPoint": st_setpoint,
-    "ST_Snap": st_snap,
-    "ST_Split": st_split,
-    "ST_SubDivide": st_subdivide,
-    "ST_Subdivide": st_subdivide,
-    # r8 name-parity batch
-    "ST_GeomFromText": st_geomfromwkt,       # Sedona alias
-    "ST_NRings": st_nrings,
-    "ST_PointZ": st_pointz,
-    "ST_AsEWKT": st_asewkt,
-    "ST_GeomFromEWKT": st_geomfromewkt,
-    "ST_DumpPoints": st_dumppoints,
-    "ST_MakeEnvelope": st_makeenvelope,
-    "ST_UnaryUnion": st_unaryunion,
-    "ST_CrossesDateLine": st_crossesdateline,
-    "ST_ShiftLongitude": st_shiftlongitude,
-    "ST_BestSRID": st_bestsrid,
-    "ST_Polygon": st_polygon_from_line,
-    "ST_MakePolygon": st_makepolygon,
-    "ST_LengthSpheroid": st_lengthspheroid,
-    "ST_MMin": st_mmin,
-    "ST_MMax": st_mmax,
-    "ST_SubDivideExplode": st_subdivide_explode,
-    "ST_Degrees": st_degrees,
-    "ST_LineMerge": st_linemerge,
-    "ST_TriangulatePolygon": st_triangulatepolygon,
-    "ST_GeneratePoints": st_generatepoints,
-    "ST_MakePolygon": st_makepolygon,
-    "ST_LineMerge": st_linemerge,
-    "ST_RemoveRepeatedPoints": st_removerepeatedpoints,
-    "ST_Force3D": st_force3d,
-    "ST_Project": st_project,
-    "ST_XMin": st_xmin,
-    "ST_XMax": st_xmax,
-    "ST_YMin": st_ymin,
-    "ST_YMax": st_ymax,
-    # endpoints are always kept by the DP core, so the PreserveTopology
-    # name is honest for lineal input; ring simplification keeps the
-    # anchor vertex and drops collapsed rings (PostGIS behavior)
-    "ST_Simplify": st_simplify,
-    "ST_SimplifyPreserveTopology": st_simplify,
-}
-
-@functools.cache
 def udf_table() -> dict:
-    """Every SQL name the engine registers -> its UDF, in registration
-    order (on a repeated name the later entry wins, as in Spark's
-    registry). register_spatial_functions registers exactly this table
-    and chainrw's projection fuser resolves names through it, so a name
-    that resolves in SQL is always one the fuser can see."""
-    from . import geomb, grid, spatial_ext
+    """Every SQL name the engine registers -> its UDF, one row per
+    function in functions/table.ROWS. register_spatial_functions
+    registers exactly this table and chainrw's projection fuser resolves
+    names through it, so a name that resolves in SQL is always one the
+    fuser can see."""
+    from .table import udf_table
 
-    return {
-        **_REGISTRY, **geomb.REGISTRY_TEXT,
-        **spatial_ext.REGISTRY_EXT,
-        **grid.REGISTRY_GRID,
-        # singular/plural + dimension-tag aliases (PostGIS registers both)
-        "ST_NumInteriorRing": st_numinteriorrings,
-        "ST_Force3DZ": st_force3d,
-        "ST_CoordDim": st_ndims,  # PostGIS alias of NDims
-    }
+    return udf_table()
 
 
 def register_spatial_functions(spark: SparkSession) -> None:

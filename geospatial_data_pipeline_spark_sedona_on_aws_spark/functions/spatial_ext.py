@@ -8,10 +8,10 @@ calls the ~10 names in spark_job/process_geodata.py:102-139, but a
 reference USER has the whole Sedona registry available — this batch
 continues closing that surface (SURVEY.md §2.9 name parity).
 
-All scalars are vectorized pandas_udfs over the WKT text carrier (the
-same contract as functions/spatial.py); registration merges into the
-same `register_spatial_functions` call. Deviations from upstream, each
-deliberate and documented on the helper:
+The kernels and lanes here are registered through functions/table.ROWS
+over the WKT text carrier (the same contract as functions/spatial.py);
+the struct-valued ST_MaximumInscribedCircle stays a hand-written UDF.
+Deviations from upstream, each deliberate and documented on the helper:
 
 - typed FromText constructors return NULL on a type mismatch (Sedona's
   behavior) rather than raising (PostGIS);
@@ -32,8 +32,7 @@ import math
 
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import (BooleanType, DoubleType, LongType,
-                               StringType, StructField, StructType)
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..kernel import geom as G
 from ..kernel import geomtypes as GT
@@ -569,97 +568,7 @@ def _simplify_vw(wkt: str | None, tol) -> str | None:
     return GT.to_wkt((kind, [GT.parse_wkt(_simplify_vw(GT.to_wkt(m), t))
                              for m in data]))
 
-# ----------------------------------------------------------- UDF wrappers
-
-@pandas_udf(StringType())
-def st_polygonfromenvelope(x1: pd.Series, y1: pd.Series, x2: pd.Series,
-                           y2: pd.Series) -> pd.Series:
-    return LN.polygon_from_envelope(x1, y1, x2, y2, _polygon_from_envelope)
-
-@pandas_udf(StringType())
-def st_pointfromtext(s: pd.Series, d: pd.Series) -> pd.Series:
-    return LN.point_from_text(s, d, _point_from_text)
-
-@pandas_udf(StringType())
-def st_linestringfromtext(s: pd.Series, d: pd.Series) -> pd.Series:
-    return LN.linestring_from_text(s, d, _linestring_from_text)
-
-@pandas_udf(StringType())
-def st_linefromtext(s: pd.Series) -> pd.Series:
-    return LN.typed_from_text(
-        s, "LINESTRING", lambda w: _typed_from_text(w, "LINESTRING"))
-
-@pandas_udf(StringType())
-def st_mlinefromtext(s: pd.Series) -> pd.Series:
-    return LN.typed_from_text(
-        s, "MULTILINESTRING",
-        lambda w: _typed_from_text(w, "MULTILINESTRING"))
-
-@pandas_udf(StringType())
-def st_mpolyfromtext(s: pd.Series) -> pd.Series:
-    return LN.typed_from_text(
-        s, "MULTIPOLYGON", lambda w: _typed_from_text(w, "MULTIPOLYGON"))
-
-@pandas_udf(StringType())
-def st_mpointfromtext(s: pd.Series) -> pd.Series:
-    return LN.typed_from_text(
-        s, "MULTIPOINT", lambda w: _typed_from_text(w, "MULTIPOINT"))
-
-@pandas_udf(StringType())
-def st_geomcollfromtext(s: pd.Series) -> pd.Series:
-    return LN.typed_from_text(
-        s, "GEOMETRYCOLLECTION",
-        lambda w: _typed_from_text(w, "GEOMETRYCOLLECTION"))
-
-@pandas_udf(StringType())
-def st_linefrommultipoint(s: pd.Series) -> pd.Series:
-    return LN.line_from_multipoint(s, _line_from_multipoint)
-
-@pandas_udf(StringType())
-def st_forcepolygoncw(s: pd.Series) -> pd.Series:
-    return LN.force_polygon_cw(
-        s, lambda w: _force_orientation(w, exterior_ccw=False))
-
-@pandas_udf(StringType())
-def st_forcepolygonccw(s: pd.Series) -> pd.Series:
-    return LN.force_polygon_ccw(
-        s, lambda w: _force_orientation(w, exterior_ccw=True))
-
-@pandas_udf(BooleanType())
-def st_ispolygoncw(s: pd.Series) -> pd.Series:
-    return LN.is_polygon_cw(
-        s, lambda w: _is_polygon_oriented(w, exterior_ccw=False)
-    ).astype("boolean")
-
-@pandas_udf(BooleanType())
-def st_ispolygonccw(s: pd.Series) -> pd.Series:
-    return LN.is_polygon_ccw(
-        s, lambda w: _is_polygon_oriented(w, exterior_ccw=True)
-    ).astype("boolean")
-
-@pandas_udf(BooleanType())
-def st_iscollection(s: pd.Series) -> pd.Series:
-    return LN.is_collection(s, _is_collection).astype("boolean")
-
-@pandas_udf(LongType())
-def st_zmflag(s: pd.Series) -> pd.Series:
-    return LN.zmflag(s, _zmflag).astype("Int64")
-
-@pandas_udf(StringType())
-def st_forcecollection(s: pd.Series) -> pd.Series:
-    return LN.force_collection(s, _force_collection)
-
-@pandas_udf(StringType())
-def st_isvalidreason(s: pd.Series) -> pd.Series:
-    return LN.is_valid_reason(s, _is_valid_reason)
-
-@pandas_udf(DoubleType())
-def st_minimumclearance(s: pd.Series) -> pd.Series:
-    return LN.minimum_clearance(s, _minimum_clearance).astype("float64")
-
-@pandas_udf(StringType())
-def st_minimumclearanceline(s: pd.Series) -> pd.Series:
-    return LN.minimum_clearance_line(s, _minimum_clearance_line)
+# -------------------------------------- ST_MaximumInscribedCircle (struct)
 
 _MIC_SCHEMA = StructType([
     StructField("center", StringType()),
@@ -681,18 +590,6 @@ def st_maximuminscribedcircle(s: pd.Series) -> pd.DataFrame:
     out["radius"] = pd.to_numeric(out["radius"], errors="coerce")
     return out
 
-
-@pandas_udf(DoubleType())
-def st_3ddistance(a: pd.Series, b: pd.Series) -> pd.Series:
-    return LN.distance_3d(a, b, _distance3d).astype("float64")
-
-@pandas_udf(StringType())
-def st_rotatex(s: pd.Series, t: pd.Series) -> pd.Series:
-    return LN.rotate_x(s, t, _rotate_x)
-
-@pandas_udf(StringType())
-def st_rotatey(s: pd.Series, t: pd.Series) -> pd.Series:
-    return LN.rotate_y(s, t, _rotate_y)
 
 def _srid(wkt: str | None) -> int | None:
     """PostGIS ST_SRID over the text carriage: the 'SRID=n;' EWKT prefix
@@ -725,58 +622,6 @@ def _set_srid(wkt: str | None, srid) -> str | None:
     canon = GT.to_wkt(GT.parse_wkt(wkt))  # also strips any old prefix
     srid = int(srid)
     return canon if srid <= 0 else f"SRID={srid};{canon}"
-
-
-@pandas_udf(LongType())
-def st_srid(s: pd.Series) -> pd.Series:
-    return s.map(_srid, na_action="ignore").astype("Int64")
-
-
-@pandas_udf(StringType())
-def st_setsrid(s: pd.Series, n: pd.Series) -> pd.Series:
-    return pd.Series([_set_srid(w, v) for w, v in zip(s, n)],
-                     index=s.index)
-
-
-@pandas_udf(StringType())
-def st_ashexewkb(s: pd.Series) -> pd.Series:
-    return LN.as_hexewkb(s, _as_hexewkb)
-
-@pandas_udf(StringType())
-def st_simplifyvw(s: pd.Series, tol: pd.Series) -> pd.Series:
-    return LN.simplify_vw(s, tol, _simplify_vw)
-
-#: merged into functions/spatial.register_spatial_functions
-REGISTRY_EXT = {
-    "ST_PolygonFromEnvelope": st_polygonfromenvelope,
-    "ST_PointFromText": st_pointfromtext,
-    "ST_LineStringFromText": st_linestringfromtext,
-    "ST_LineFromText": st_linefromtext,
-    "ST_MLineFromText": st_mlinefromtext,
-    "ST_MPolyFromText": st_mpolyfromtext,
-    "ST_MPointFromText": st_mpointfromtext,
-    "ST_GeomCollFromText": st_geomcollfromtext,
-    "ST_LineFromMultiPoint": st_linefrommultipoint,
-    "ST_ForcePolygonCW": st_forcepolygoncw,
-    "ST_ForcePolygonCCW": st_forcepolygonccw,
-    "ST_ForceRHR": st_forcepolygoncw,       # PostGIS alias
-    "ST_IsPolygonCW": st_ispolygoncw,
-    "ST_IsPolygonCCW": st_ispolygonccw,
-    "ST_IsCollection": st_iscollection,
-    "ST_Zmflag": st_zmflag,
-    "ST_ForceCollection": st_forcecollection,
-    "ST_IsValidReason": st_isvalidreason,
-    "ST_MinimumClearance": st_minimumclearance,
-    "ST_MinimumClearanceLine": st_minimumclearanceline,
-    "ST_MaximumInscribedCircle": st_maximuminscribedcircle,
-    "ST_3DDistance": st_3ddistance,
-    "ST_RotateX": st_rotatex,
-    "ST_RotateY": st_rotatey,
-    "ST_AsHEXEWKB": st_ashexewkb,
-    "ST_SRID": st_srid,
-    "ST_SetSRID": st_setsrid,
-    "ST_SimplifyVW": st_simplifyvw,
-}
 
 
 # ------------------------------------------------------------ KML / GML
@@ -958,29 +803,6 @@ def _geom_from_xml(text: str | None) -> str | None:
     return GT.to_wkt(_xml_to_tgeom(el))
 
 
-@pandas_udf(StringType())
-def st_askml(s: pd.Series) -> pd.Series:
-    return s.map(_as_kml, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def st_asgml(s: pd.Series) -> pd.Series:
-    return s.map(_as_gml, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def st_geomfromgml(s: pd.Series) -> pd.Series:
-    return s.map(_geom_from_xml, na_action="ignore")
-
-
-REGISTRY_EXT.update({
-    "ST_AsKML": st_askml,
-    "ST_AsGML": st_asgml,
-    "ST_GeomFromGML": st_geomfromgml,
-    "ST_GeomFromKML": st_geomfromgml,  # shared parser (KML = no prefix)
-})
-
-
 # ------------------------------------------------- noding / polygonize
 
 def _node(wkt: str | None) -> str | None:
@@ -1019,22 +841,6 @@ def _polygonize(wkt: str | None) -> str | None:
         return "GEOMETRYCOLLECTION EMPTY"
     return GT.to_wkt(("GEOMETRYCOLLECTION",
                       [("POLYGON", [p]) for p in polys]))
-
-
-@pandas_udf(StringType())
-def st_node(s: pd.Series) -> pd.Series:
-    return s.map(_node, na_action="ignore")
-
-
-@pandas_udf(StringType())
-def st_polygonize(s: pd.Series) -> pd.Series:
-    return s.map(_polygonize, na_action="ignore")
-
-
-REGISTRY_EXT.update({
-    "ST_Node": st_node,
-    "ST_Polygonize": st_polygonize,
-})
 
 
 # ---------------------------------------------------- misc scalar batch
@@ -1095,35 +901,6 @@ def _mem_size(wkt: str | None) -> int | None:
     if wkt is None:
         return None
     return len(GT.to_wkb(GT.parse_wkt(wkt)))
-
-
-@pandas_udf(StringType())
-def st_collect(s: pd.Series) -> pd.Series:
-    return s.map(_collect_array, na_action="ignore")
-
-
-@pandas_udf(BooleanType())
-def st_orderingequals(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([_ordering_equals(x, y) for x, y in zip(a, b)],
-                     index=a.index, dtype="boolean")
-
-
-@pandas_udf(StringType())
-def st_points(s: pd.Series) -> pd.Series:
-    return s.map(_points, na_action="ignore")
-
-
-@pandas_udf(LongType())
-def st_memsize(s: pd.Series) -> pd.Series:
-    return s.map(_mem_size, na_action="ignore").astype("Int64")
-
-
-REGISTRY_EXT.update({
-    "ST_Collect": st_collect,
-    "ST_OrderingEquals": st_orderingequals,
-    "ST_Points": st_points,
-    "ST_MemSize": st_memsize,
-})
 
 
 # ------------------------------------------------------------ BuildArea
@@ -1189,13 +966,3 @@ def _build_area(wkt: str | None) -> str | None:
              [("POLYGON", [p]) for p in group])))
         out_polys.extend(G.parse_wkt(merged))
     return G.to_wkt(sorted(out_polys, key=lambda p: p[0][0]))
-
-
-@pandas_udf(StringType())
-def st_buildarea(s: pd.Series) -> pd.Series:
-    return s.map(_build_area, na_action="ignore")
-
-
-REGISTRY_EXT.update({
-    "ST_BuildArea": st_buildarea,
-})

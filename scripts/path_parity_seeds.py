@@ -17,6 +17,8 @@ import os
 import sys
 import time
 
+import pytest
+
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 sys.path.insert(0, os.path.join(ROOT, "tests"))
@@ -43,7 +45,9 @@ def main(argv) -> int:
         for case, test in _cases():
             try:
                 test(case, seed)
-            except AssertionError as exc:
+            except (AssertionError, pytest.fail.Exception) as exc:
+                # pytest.raises reports a path that did not raise with
+                # pytest.fail, whose exception is no AssertionError
                 failed.append((seed, case))
                 print(f"seed {seed} {case}: {str(exc)[:600]}", flush=True)
         print(f"seed {seed} done ({time.perf_counter() - t0:.0f} s)",

@@ -23,7 +23,7 @@ def test_union_aggr_hot_key_bounded_hold():
     more than one block of parsed geometries beyond the accumulator."""
     S._AGGR_HELD_HIGH_WATER = 0
     rects = _hot_key_rects(10_000)
-    out = S.st_union_aggr.func(pd.Series(rects))
+    out = S.udf_table()["ST_Union_Aggr"].func(pd.Series(rects))
     assert S._AGGR_HELD_HIGH_WATER <= S._AGGR_BLOCK + 1, \
         S._AGGR_HELD_HIGH_WATER
     got = S._area(out)
@@ -36,7 +36,7 @@ def test_intersection_aggr_streaming_hold():
     rects = [f"POLYGON ((0 0, {1 + 1000/(i+1)} 0, {1 + 1000/(i+1)} "
              f"{1 + 1000/(i+1)}, 0 {1 + 1000/(i+1)}))"
              for i in range(5_000)]
-    out = S.st_intersection_aggr.func(pd.Series(rects))
+    out = S.udf_table()["ST_Intersection_Aggr"].func(pd.Series(rects))
     assert S._AGGR_HELD_HIGH_WATER <= S._AGGR_BLOCK + 1
     got = S._area(out)
     exp = (1 + 1000 / 5000) ** 2  # the smallest rect
@@ -51,7 +51,7 @@ def test_union_aggr_block_fold_equals_single_union():
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geom as G
 
     rects = _hot_key_rects(300)
-    chunked = S.st_union_aggr.func(pd.Series(rects))
+    chunked = S.udf_table()["ST_Union_Aggr"].func(pd.Series(rects))
     whole = G.to_wkt(B.union_geom([G.normalize(G.parse_wkt(w))
                                    for w in rects]))
     assert abs(S._area(chunked) - S._area(whole)) < 1e-9

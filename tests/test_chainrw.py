@@ -32,6 +32,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
+from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import table as TB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import transform as T
@@ -560,10 +561,10 @@ def test_box_predicate_boundary_parity_binary_equals_text():
     a = pd.Series([rect] * len(pts) + ["POINT (1 2)", "POINT (1 2)"],
                   dtype=object)
     b = pd.Series(pts + ["POINT (1 2)", "POINT (3 4)"], dtype=object)
-    wa = GB.CARRIER["st_geomfromwkt"].body(GB.decode(a))
-    wb = GB.CARRIER["st_geomfromwkt"].body(GB.decode(b))
+    wa = TB.CARRIER["st_geomfromwkt"].body(GB.decode(a))
+    wb = TB.CARRIER["st_geomfromwkt"].body(GB.decode(b))
     for name in ("contains", "within", "intersects", "disjoint", "equals"):
-        got = GB.CARRIER[f"st_{name}"].body(wa, wb).tolist()
+        got = TB.CARRIER[f"st_{name}"].body(wa, wb).tolist()
         tfn = {
             "contains": S._contains,
             "within": lambda x, y: S._contains(y, x),
@@ -644,10 +645,10 @@ def test_nonareal_fixed_mask_is_identity(seed):
         if m:
             assert exp == w, f"mask accepted a non-fixed-point: {w} -> {exp}"
     # the full UDF path equals the scalar path on the whole batch
-    got = S.st_geomfromwkt.func(ser)
+    got = S.udf_table()["ST_GeomFromWKT"].func(ser)
     exp_all = [None if w is None else S._geom_from_wkt(w) for w in rows]
     assert got.tolist() == exp_all
-    got_mv = S.st_makevalid.func(ser)
+    got_mv = S.udf_table()["ST_MakeValid"].func(ser)
     exp_mv = [None if w is None else S._make_valid(w) for w in rows]
     assert got_mv.tolist() == exp_mv
 

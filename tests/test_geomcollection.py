@@ -164,7 +164,7 @@ def test_geomcollection_accessor_scalars():
     assert S._geom_from_geojson(gj) == gc
     # nested collections flatten through ST_Dump (PostGIS convention)
     nested = f"GEOMETRYCOLLECTION (POINT (9 9), {gc})"
-    assert S.st_dump.func(pd.Series([nested]))[0] == [
+    assert S.udf_table()["ST_Dump"].func(pd.Series([nested]))[0] == [
         "POINT (9 9)", "POINT (1 2)", "LINESTRING (0 0, 3 4)",
         "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"]
 

@@ -1348,9 +1348,10 @@ def test_st_dump_and_collect_known_values():
     import pandas as pd
 
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        st_collect_aggr, st_dump)
+        udf_table)
 
-    dump = st_dump.func
+    st_collect_aggr = udf_table()["ST_Collect_Aggr"]
+    dump = udf_table()["ST_Dump"].func
     assert dump(pd.Series(["MULTIPOINT (1 2, 3 4)"]))[0] == [
         "POINT (1 2)", "POINT (3 4)"]
     assert dump(pd.Series(["POINT (5 6)"]))[0] == ["POINT (5 6)"]
@@ -1408,18 +1409,18 @@ def test_predicate_udf_fast_path_equals_scalar_on_mixed_batch():
          None]
     sa, sb = pd.Series(A), pd.Series(B)
     pairs = [
-        (S.st_intersects.func, S._intersects),
-        (S.st_touches.func, S._touches),
-        (S.st_crosses.func, S._crosses),
-        (S.st_overlaps.func, S._overlaps),
-        (S.st_equals.func, S._equals),
+        (S.udf_table()["ST_Intersects"].func, S._intersects),
+        (S.udf_table()["ST_Touches"].func, S._touches),
+        (S.udf_table()["ST_Crosses"].func, S._crosses),
+        (S.udf_table()["ST_Overlaps"].func, S._overlaps),
+        (S.udf_table()["ST_Equals"].func, S._equals),
     ]
     for udf_fn, scalar_fn in pairs:
         got = list(udf_fn(sa, sb))
         want = [None if x is None or y is None else scalar_fn(x, y)
                 for x, y in zip(A, B)]
         assert got == want, (scalar_fn.__name__, got, want)
-    got = list(S.st_disjoint.func(sa, sb))
+    got = list(S.udf_table()["ST_Disjoint"].func(sa, sb))
     want = [None if x is None or y is None else
             (None if (v := S._intersects(x, y)) is None else not v)
             for x, y in zip(A, B)]
@@ -1758,7 +1759,7 @@ def test_prop_geohash_decode_inverts_encode(lon, lat, p):
 
 def test_symdiff_makeline_normalize_known_values():
     from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions.spatial import (
-        _area, _normalize_full, _sym_difference, st_makeline)
+        _area, _normalize_full, _sym_difference, udf_table)
 
     A = "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"
     B = "POLYGON ((5 5, 15 5, 15 15, 5 15, 5 5))"
@@ -1769,7 +1770,7 @@ def test_symdiff_makeline_normalize_known_values():
     assert _area(_sym_difference(A, far)) == 200.0
 
     import pandas as pd
-    mk = st_makeline.func
+    mk = udf_table()["ST_MakeLine"].func
     assert (mk(pd.Series(["POINT (1 2)"]), pd.Series(["POINT (4 6)"]))[0]
             == "LINESTRING (1 2, 4 6)")
     assert mk(pd.Series(["POINT (1 2)"]), pd.Series([A]))[0] is None

@@ -335,7 +335,7 @@ def test_rect_fixed_point_fast_path_identity():
             assert (f == sl) or (pd.isna(f) and pd.isna(sl)), (f, sl)
     # ST_Buffer(g, 0) shares the mask; nonzero offsets never take it
     for d in ([0.0] * len(cases), [0.0, 1.0] * (len(cases) // 2)):
-        got = S.st_buffer.func(s, pd.Series(d)).tolist()
+        got = S.udf_table()["ST_Buffer"].func(s, pd.Series(d)).tolist()
         assert got == [S._buffer(g, x) for g, x in zip(cases, d)]
 
 

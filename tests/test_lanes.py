@@ -79,41 +79,41 @@ def _eq_series(got: pd.Series, want: pd.Series, label: str):
 
 
 UNARY = [
-    ("ST_ForcePolygonCW", SE.st_forcepolygoncw,
+    ("ST_ForcePolygonCW", S.udf_table()["ST_ForcePolygonCW"],
      lambda w: SE._force_orientation(w, exterior_ccw=False)),
-    ("ST_ForcePolygonCCW", SE.st_forcepolygonccw,
+    ("ST_ForcePolygonCCW", S.udf_table()["ST_ForcePolygonCCW"],
      lambda w: SE._force_orientation(w, exterior_ccw=True)),
-    ("ST_IsPolygonCW", SE.st_ispolygoncw,
+    ("ST_IsPolygonCW", S.udf_table()["ST_IsPolygonCW"],
      lambda w: SE._is_polygon_oriented(w, exterior_ccw=False)),
-    ("ST_IsPolygonCCW", SE.st_ispolygonccw,
+    ("ST_IsPolygonCCW", S.udf_table()["ST_IsPolygonCCW"],
      lambda w: SE._is_polygon_oriented(w, exterior_ccw=True)),
-    ("ST_IsCollection", SE.st_iscollection, SE._is_collection),
-    ("ST_Zmflag", SE.st_zmflag, SE._zmflag),
-    ("ST_ForceCollection", SE.st_forcecollection, SE._force_collection),
-    ("ST_IsValidReason", SE.st_isvalidreason, SE._is_valid_reason),
-    ("ST_MinimumClearance", SE.st_minimumclearance, SE._minimum_clearance),
-    ("ST_MinimumClearanceLine", SE.st_minimumclearanceline,
+    ("ST_IsCollection", S.udf_table()["ST_IsCollection"], SE._is_collection),
+    ("ST_Zmflag", S.udf_table()["ST_Zmflag"], SE._zmflag),
+    ("ST_ForceCollection", S.udf_table()["ST_ForceCollection"], SE._force_collection),
+    ("ST_IsValidReason", S.udf_table()["ST_IsValidReason"], SE._is_valid_reason),
+    ("ST_MinimumClearance", S.udf_table()["ST_MinimumClearance"], SE._minimum_clearance),
+    ("ST_MinimumClearanceLine", S.udf_table()["ST_MinimumClearanceLine"],
      SE._minimum_clearance_line),
-    ("ST_AsHEXEWKB", SE.st_ashexewkb, SE._as_hexewkb),
-    ("ST_LineFromMultiPoint", SE.st_linefrommultipoint,
+    ("ST_AsHEXEWKB", S.udf_table()["ST_AsHEXEWKB"], SE._as_hexewkb),
+    ("ST_LineFromMultiPoint", S.udf_table()["ST_LineFromMultiPoint"],
      SE._line_from_multipoint),
-    ("ST_LineFromText", SE.st_linefromtext,
+    ("ST_LineFromText", S.udf_table()["ST_LineFromText"],
      lambda w: SE._typed_from_text(w, "LINESTRING")),
-    ("ST_MLineFromText", SE.st_mlinefromtext,
+    ("ST_MLineFromText", S.udf_table()["ST_MLineFromText"],
      lambda w: SE._typed_from_text(w, "MULTILINESTRING")),
-    ("ST_MPolyFromText", SE.st_mpolyfromtext,
+    ("ST_MPolyFromText", S.udf_table()["ST_MPolyFromText"],
      lambda w: SE._typed_from_text(w, "MULTIPOLYGON")),
-    ("ST_MPointFromText", SE.st_mpointfromtext,
+    ("ST_MPointFromText", S.udf_table()["ST_MPointFromText"],
      lambda w: SE._typed_from_text(w, "MULTIPOINT")),
-    ("ST_GeomCollFromText", SE.st_geomcollfromtext,
+    ("ST_GeomCollFromText", S.udf_table()["ST_GeomCollFromText"],
      lambda w: SE._typed_from_text(w, "GEOMETRYCOLLECTION")),
     ("ST_Area", S.udf_table()["ST_Area"], S._area),
     ("ST_NPoints", S.udf_table()["ST_NPoints"], S._npoints),
-    ("ST_X", S.st_x, lambda w: S._st_xy(w, 0)),
-    ("ST_Y", S.st_y, lambda w: S._st_xy(w, 1)),
-    ("ST_Z", S.st_z, lambda w: S._st_xy(w, 2)),
-    ("ST_NumGeometries", S.st_numgeometries, S._num_geometries),
-    ("ST_NumInteriorRings", S.st_numinteriorrings,
+    ("ST_X", S.udf_table()["ST_X"], lambda w: S._st_xy(w, 0)),
+    ("ST_Y", S.udf_table()["ST_Y"], lambda w: S._st_xy(w, 1)),
+    ("ST_Z", S.udf_table()["ST_Z"], lambda w: S._st_xy(w, 2)),
+    ("ST_NumGeometries", S.udf_table()["ST_NumGeometries"], S._num_geometries),
+    ("ST_NumInteriorRings", S.udf_table()["ST_NumInteriorRings"],
      S._num_interior_rings),
 ]
 
@@ -131,8 +131,8 @@ def test_rotate_lanes_equal_scalar():
     s = _mixed_batch()
     t = pd.Series([math.pi if i % 3 else math.pi / 4
                    for i in range(len(s))], dtype=float)
-    for udf, scalar in ((SE.st_rotatex, SE._rotate_x),
-                        (SE.st_rotatey, SE._rotate_y)):
+    for udf, scalar in ((S.udf_table()["ST_RotateX"], SE._rotate_x),
+                        (S.udf_table()["ST_RotateY"], SE._rotate_y)):
         got = pd.Series(udf.func(s, t), dtype=object)
         want = pd.Series([scalar(w, v) for w, v in zip(s, t)],
                          index=s.index, dtype=object)
@@ -147,7 +147,7 @@ def test_3ddistance_lane_equals_scalar():
     lz = pd.Series([f"LINESTRING Z ({x} {y} 0, {u} {y} 0)"
                     for x, y, u in zip(a, b, c)])
     for left, right in ((pz1, pz2), (lz, pz2), (pz1, lz)):
-        got = pd.Series(SE.st_3ddistance.func(left, right), dtype=object)
+        got = pd.Series(S.udf_table()["ST_3DDistance"].func(left, right), dtype=object)
         want = pd.Series([SE._distance3d(x, y)
                           for x, y in zip(left, right)], dtype=object)
         _eq_series(got, want, "ST_3DDistance")
@@ -155,7 +155,7 @@ def test_3ddistance_lane_equals_scalar():
 
 def test_mic_lane_equals_scalar():
     s = _mixed_batch()
-    got = SE.st_maximuminscribedcircle.func(s)
+    got = S.udf_table()["ST_MaximumInscribedCircle"].func(s)
 
     def scalar_row(w):
         if w is None:
@@ -177,7 +177,7 @@ def test_delimited_constructor_lanes():
     pts = pd.Series([f"{x},{y}" for x, y in zip(a, b)]
                     + ["1.5,2.5", "1", None])
     delim = pd.Series([","] * len(pts))
-    got = pd.Series(SE.st_pointfromtext.func(pts, delim), dtype=object)
+    got = pd.Series(S.udf_table()["ST_PointFromText"].func(pts, delim), dtype=object)
     want = pd.Series([None if t is None else SE._point_from_text(t, ",")
                       for t in pts], dtype=object)
     _eq_series(got, want, "ST_PointFromText")
@@ -186,7 +186,7 @@ def test_delimited_constructor_lanes():
                        for x, y, u, v in zip(a, b, c, d)]
                       + ["1,2,3", "1.5,2,3,4", None])
     delim = pd.Series([","] * len(lines))
-    got = pd.Series(SE.st_linestringfromtext.func(lines, delim),
+    got = pd.Series(S.udf_table()["ST_LineStringFromText"].func(lines, delim),
                     dtype=object)
     want = pd.Series([None if t is None
                       else SE._linestring_from_text(t, ",")
@@ -202,7 +202,7 @@ def test_polygon_from_envelope_lane():
     y2 = pd.Series(d.astype(float)).tolist() + [3.5, 3.0]
     x1, y1, x2, y2 = (pd.Series(v, dtype=object)
                       for v in (x1, y1, x2, y2))
-    got = pd.Series(SE.st_polygonfromenvelope.func(x1, y1, x2, y2),
+    got = pd.Series(S.udf_table()["ST_PolygonFromEnvelope"].func(x1, y1, x2, y2),
                     dtype=object)
     want = pd.Series([SE._polygon_from_envelope(p, q, r, t)
                       for p, q, r, t in zip(x1, y1, x2, y2)],
@@ -213,7 +213,7 @@ def test_polygon_from_envelope_lane():
 def test_force3dz_lane():
     s = _mixed_batch()
     z = pd.Series([7.0] * len(s))
-    got = pd.Series(S.st_force3d.func(s, z), dtype=object)
+    got = pd.Series(S.udf_table()["ST_Force3D"].func(s, z), dtype=object)
     want = pd.Series([None if w is None else S._force_3d(w, 7.0)
                       for w in s], dtype=object)
     _eq_series(got, want, "ST_Force3DZ")
@@ -236,7 +236,7 @@ def test_simplify_vw_lane_equals_scalar():
            "LINESTRING (0.5 0, 1 1, 2 0, 3 1, 4 0)",  # floats -> fallback
            None])
     tol = pd.Series(RNG.integers(0, 2000, len(s)).astype(float) / 4.0)
-    got = pd.Series(SE.st_simplifyvw.func(s, tol), dtype=object)
+    got = pd.Series(S.udf_table()["ST_SimplifyVW"].func(s, tol), dtype=object)
     want = pd.Series([SE._simplify_vw(w, v) for w, v in zip(s, tol)],
                      dtype=object)
     _eq_series(got, want, "ST_SimplifyVW")
@@ -281,12 +281,12 @@ def test_predicate_udfs_share_one_poly5_extract(monkeypatch):
         return real(arr, pattern=pattern, **kw)
 
     monkeypatch.setattr(pc, "extract_regex", counting)
-    outs = [S.st_intersects.func(land, region),
-            S.st_disjoint.func(land, region),
-            S.st_touches.func(land, region),
-            S.st_overlaps.func(land, region),
-            S.st_equals.func(land, shifted),
-            S.st_crosses.func(land, region)]
+    outs = [S.udf_table()["ST_Intersects"].func(land, region),
+            S.udf_table()["ST_Disjoint"].func(land, region),
+            S.udf_table()["ST_Touches"].func(land, region),
+            S.udf_table()["ST_Overlaps"].func(land, region),
+            S.udf_table()["ST_Equals"].func(land, shifted),
+            S.udf_table()["ST_Crosses"].func(land, region)]
     assert calls.count(LN.POLY5) == 3, calls
     want = [S._intersects, S._disjoint, S._touches, S._overlaps,
             S._equals, S._crosses]

@@ -113,35 +113,35 @@ def _st(name: str):
 
 UNARY = [
     ("area", S.udf_table()["ST_Area"], S._area, POLY),
-    ("perimeter", S.st_perimeter, S._perimeter, POLY),
-    ("boundingdiagonal", S.st_boundingdiagonal, S._bounding_diagonal,
+    ("perimeter", S.udf_table()["ST_Perimeter"], S._perimeter, POLY),
+    ("boundingdiagonal", S.udf_table()["ST_BoundingDiagonal"], S._bounding_diagonal,
      POLY),
-    ("isclosed", S.st_isclosed, S._is_closed, RING),
-    ("isclosed-open", S.st_isclosed, S._is_closed, DIAG),
-    ("issimple-diag", S.st_issimple, S._is_simple, DIAG),
-    ("issimple-bow", S.st_issimple, S._is_simple, BOW),
-    ("isring", S.st_isring, S._is_ring, RING),
-    ("pointonsurface", S.st_pointonsurface, S._point_on_surface, POLY),
-    ("geometricmedian", S.st_geometricmedian, S._geometric_median,
+    ("isclosed", S.udf_table()["ST_IsClosed"], S._is_closed, RING),
+    ("isclosed-open", S.udf_table()["ST_IsClosed"], S._is_closed, DIAG),
+    ("issimple-diag", S.udf_table()["ST_IsSimple"], S._is_simple, DIAG),
+    ("issimple-bow", S.udf_table()["ST_IsSimple"], S._is_simple, BOW),
+    ("isring", S.udf_table()["ST_IsRing"], S._is_ring, RING),
+    ("pointonsurface", S.udf_table()["ST_PointOnSurface"], S._point_on_surface, POLY),
+    ("geometricmedian", S.udf_table()["ST_GeometricMedian"], S._geometric_median,
      CORNERS),
-    ("makepolygon", S.st_makepolygon, S._make_polygon, RING),
-    ("removerepeated", S.st_removerepeatedpoints,
+    ("makepolygon", S.udf_table()["ST_MakePolygon"], S._make_polygon, RING),
+    ("removerepeated", S.udf_table()["ST_RemoveRepeatedPoints"],
      S._remove_repeated_points, DUP),
-    ("multi", S.st_multi, S._multi, IPT),
-    ("geometrytype", S.st_geometrytype, S._geometry_type, POLY),
+    ("multi", S.udf_table()["ST_Multi"], S._multi, IPT),
+    ("geometrytype", S.udf_table()["ST_GeometryType"], S._geometry_type, POLY),
     ("numpoints", S.udf_table()["ST_NumPoints"], S._num_points, RING),
     ("length", S.udf_table()["ST_Length"], S._length, BOTTOM),
     ("npoints", S.udf_table()["ST_NPoints"], S._npoints, POLY),
-    ("numgeometries", S.st_numgeometries, S._num_geometries, GC),
-    ("xmin", S.st_xmin, lambda g: S._bound_of(g, "xmin"), POLY),
-    ("xmax", S.st_xmax, lambda g: S._bound_of(g, "xmax"), POLY),
-    ("ymin", S.st_ymin, lambda g: S._bound_of(g, "ymin"), POLY),
-    ("ymax", S.st_ymax, lambda g: S._bound_of(g, "ymax"), POLY),
-    ("startpoint", S.st_startpoint,
+    ("numgeometries", S.udf_table()["ST_NumGeometries"], S._num_geometries, GC),
+    ("xmin", S.udf_table()["ST_XMin"], lambda g: S._bound_of(g, "xmin"), POLY),
+    ("xmax", S.udf_table()["ST_XMax"], lambda g: S._bound_of(g, "xmax"), POLY),
+    ("ymin", S.udf_table()["ST_YMin"], lambda g: S._bound_of(g, "ymin"), POLY),
+    ("ymax", S.udf_table()["ST_YMax"], lambda g: S._bound_of(g, "ymax"), POLY),
+    ("startpoint", S.udf_table()["ST_StartPoint"],
      lambda g: S._terminal_point(g, False), BOTTOM),
-    ("endpoint", S.st_endpoint,
+    ("endpoint", S.udf_table()["ST_EndPoint"],
      lambda g: S._terminal_point(g, True), BOTTOM),
-    ("mbr", S.st_minimumboundingradius,
+    ("mbr", S.udf_table()["ST_MinimumBoundingRadius"],
      lambda g: (S._min_bounding_radius(g) or (None, None))[1], POLY),
 ]
 
@@ -176,7 +176,7 @@ def test_linemerge_wrapper():
                    pd.Series(["MULTILINESTRING ((0 0, 1 0), (5 5, 6 6))",
                               "LINESTRING (0.5 0.25, 3.5 0.25)", None],
                              dtype=object)], ignore_index=True)
-    got = S.st_linemerge.func(s)
+    got = S.udf_table()["ST_LineMerge"].func(s)
     want = [None if g is None else S._line_merge(g) for g in s]
     _eq(got, want, "linemerge")
 
@@ -242,30 +242,30 @@ def test_measure_wrappers():
                         dtype=object))
     p3 = _cat(pd.Series([f"POINT ({a} {d})" for a, d in zip(A, D)],
                         dtype=object))
-    _eq(S.st_angle.func(p1, p2, p3),
+    _eq(S.udf_table()["ST_Angle"].func(p1, p2, p3),
         [S._angle3(a, b, c) for a, b, c in zip(p1, p2, p3)], "angle")
     pt = _cat(pd.Series([f"POINT ({a - 1} {b - 1})"
                          for a, b in zip(A, B)], dtype=object))
     poly = _cat(POLY)
-    _eq(S.st_maxdistance.func(pt, poly),
+    _eq(S.udf_table()["ST_MaxDistance"].func(pt, poly),
         [S._max_distance(x, y) for x, y in zip(pt, poly)], "maxdist")
-    ll = S.st_longestline.func(pt, poly)
+    ll = S.udf_table()["ST_LongestLine"].func(pt, poly)
     _eq(ll, [S._longest_line(x, y) for x, y in zip(pt, poly)],
         "longestline")
     pt3 = _cat(pd.Series([f"POINT ({a - 3} {b})" for a, b in zip(A, B)],
                          dtype=object))
-    _eq(S.st_shortestline.func(pt3, poly),
+    _eq(S.udf_table()["ST_ShortestLine"].func(pt3, poly),
         [S._shortest_line(x, y) for x, y in zip(pt3, poly)],
         "shortestline")
     sa = _cat(BOTTOM)
     sh = _cat(pd.Series([f"LINESTRING ({c + 2} {b}, {2 * c + 2 - a} {b})"
                          for a, b, c in zip(A, B, C)], dtype=object))
-    _eq(S.st_hausdorffdistance.func(sa, sh),
+    _eq(S.udf_table()["ST_HausdorffDistance"].func(sa, sh),
         [S._hausdorff_distance(x, y) for x, y in zip(sa, sh)],
         "hausdorff")
     rv = _cat(pd.Series([f"LINESTRING ({c} {b + 3}, {a} {b + 3})"
                          for a, b, c in zip(A, B, C)], dtype=object))
-    _eq(S.st_frechetdistance.func(sa, rv),
+    _eq(S.udf_table()["ST_FrechetDistance"].func(sa, rv),
         [S._frechet_distance(x, y) for x, y in zip(sa, rv)], "frechet")
 
 
@@ -274,16 +274,16 @@ def test_editor_wrappers():
     midpt = _cat(pd.Series([f"POINT ({(a + c) / 2.0} {b + 1})"
                             for a, b, c in zip(A, B, C)], dtype=object))
     pos1 = pd.Series([1] * len(line))
-    ap = S.st_addpoint.func(line, midpt, pos1)
+    ap = S.udf_table()["ST_AddPoint"].func(line, midpt, pos1)
     _eq(ap, [None if x is None or y is None else S._add_point(x, y, 1)
              for x, y in zip(line, midpt)], "addpoint")
-    _eq(S.st_removepoint.func(ap, pos1),
+    _eq(S.udf_table()["ST_RemovePoint"].func(ap, pos1),
         [None if g is None else S._remove_point(g, 1) for g in ap],
         "removepoint")
     endpt = _cat(pd.Series([f"POINT ({c + 5} {b})"
                             for b, c in zip(B, C)], dtype=object))
     neg1 = pd.Series([-1] * len(line))
-    _eq(S.st_setpoint.func(line, neg1, endpt),
+    _eq(S.udf_table()["ST_SetPoint"].func(line, neg1, endpt),
         [None if x is None or y is None else S._set_point(x, -1, y)
          for x, y in zip(line, endpt)], "setpoint")
     snapline = _cat(pd.Series(
@@ -291,12 +291,12 @@ def test_editor_wrappers():
          for a, b, c, d in zip(A, B, C, D)], dtype=object))
     ref = _cat(IPT)
     half = pd.Series([0.5] * len(line))
-    _eq(S.st_snap.func(snapline, ref, half),
+    _eq(S.udf_table()["ST_Snap"].func(snapline, ref, half),
         [None if x is None or y is None else S._snap(x, y, 0.5)
          for x, y in zip(snapline, ref)], "snap-vertex")
     near = _cat(pd.Series([f"POINT ({(a + c) / 2.0} {b + 0.25})"
                            for a, b, c in zip(A, B, C)], dtype=object))
-    _eq(S.st_snap.func(line, near, half),
+    _eq(S.udf_table()["ST_Snap"].func(line, near, half),
         [None if x is None or y is None else S._snap(x, y, 0.5)
          for x, y in zip(line, near)], "snap-insert")
     # _split raises for areal targets: lineal-only batch
@@ -311,15 +311,15 @@ def test_editor_wrappers():
                                    for a, b in zip(A, B)], dtype=object),
                         pd.Series(["POINT (2 0.25)", None],
                                   dtype=object)], ignore_index=True)
-    spl = S.st_split.func(lline, mid_on)
+    spl = S.udf_table()["ST_Split"].func(lline, mid_on)
     _eq(spl, [S._split(x, y) for x, y in zip(lline, mid_on)], "split")
     zero = pd.Series([0] * len(spl))
-    _eq(S.st_geometryn.func(spl, zero),
+    _eq(S.udf_table()["ST_GeometryN"].func(spl, zero),
         [None if g is None else S._geometry_n(g, 0) for g in spl],
         "geometryn")
     f1 = pd.Series([0.25] * len(line))
     f2 = pd.Series([0.75] * len(line))
-    _eq(S.st_linesubstring.func(line, f1, f2),
+    _eq(S.udf_table()["ST_LineSubstring"].func(line, f1, f2),
         [None if g is None else S._line_substring(g, 0.25, 0.75)
          for g in line], "linesubstring")
 
@@ -327,7 +327,7 @@ def test_editor_wrappers():
 def test_misc_wrappers():
     s = _cat(POLY)
     one = pd.Series([1.0] * len(s))
-    sg = S.st_segmentize.func(s, one)
+    sg = S.udf_table()["ST_Segmentize"].func(s, one)
     _eq(sg, [None if g is None else S._segmentize(g, 1.0) for g in s],
         "segmentize")
     _eq(_st("ST_NPoints")(sg),
@@ -338,35 +338,35 @@ def test_misc_wrappers():
     # str(int) emission); a fractional mlen forces the exact=False branch
     # (float vertices through kernel _fmt). Same scalar law either way.
     frac = pd.Series([0.7] * len(s))
-    _eq(S.st_segmentize.func(s, frac),
+    _eq(S.udf_table()["ST_Segmentize"].func(s, frac),
         [None if g is None else S._segmentize(g, 0.7) for g in s],
         "segmentize-float-branch")
     gc = _cat(GC)
     for dim in (1, 2, 3):
         dd = pd.Series([dim] * len(gc))
-        _eq(S.st_collectionextract.func(gc, dd),
+        _eq(S.udf_table()["ST_CollectionExtract"].func(gc, dd),
             [None if g is None else S._collection_extract(g, dim)
              for g in gc], f"collectionextract-{dim}")
     bump = _cat(BUMP)
     tol = pd.Series([0.1] * len(bump))
-    _eq(S.st_simplify.func(bump, tol),
+    _eq(S.udf_table()["ST_Simplify"].func(bump, tol),
         [None if g is None else S._simplify_wkt(g, 0.1) for g in bump],
         "simplify")
     # sub-tolerance bump is DROPPED, large bump kept: hit both branches
     tol_small = pd.Series([0.001] * len(bump))
-    _eq(S.st_simplify.func(bump, tol_small),
+    _eq(S.udf_table()["ST_Simplify"].func(bump, tol_small),
         [None if g is None else S._simplify_wkt(g, 0.001) for g in bump],
         "simplify-keep")
     eqpt = _cat(pd.Series([f"POINT ({float(a % 90)} 0)" for a in A],
                           dtype=object))
     dist = pd.Series([111194.9266] * len(eqpt))
     az = pd.Series([1.5707963267948966] * len(eqpt))
-    _eq(S.st_project.func(eqpt, dist, az),
+    _eq(S.udf_table()["ST_Project"].func(eqpt, dist, az),
         [None if g is None else S._project_point(g, 111194.9266,
                                                  1.5707963267948966)
          for g in eqpt], "project")
-    f3 = S.st_force3d.func(_cat(IPT), pd.Series([7.0] * (N + len(FALLBACK))))
-    _eq(S.st_hasz.func(f3),
+    f3 = S.udf_table()["ST_Force3D"].func(_cat(IPT), pd.Series([7.0] * (N + len(FALLBACK))))
+    _eq(S.udf_table()["ST_HasZ"].func(f3),
         [None if g is None else S._ndims(g) == 3 for g in f3], "hasz")
 
 

@@ -35,8 +35,8 @@ import pandas as pd
 import pytest
 
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import chainrw as CR
-from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import geomb as GB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import spatial as S
+from geospatial_data_pipeline_spark_sedona_on_aws_spark.functions import table as TB
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import geomtypes as GT
 from geospatial_data_pipeline_spark_sedona_on_aws_spark.kernel import packed as PK
 
@@ -180,7 +180,7 @@ def _fused(e, cols):
     fz = CR._Fusion()
     fz.emit(CR._Expr(CR._parse(CR.rewrite(_sql(e) + " AS out"))[0]))
     chain = any(not isinstance(a, str) for a in e[1:])
-    bodies = all(n.lower() in GB.CARRIER for n in _names(e))
+    bodies = all(n.lower() in TB.CARRIER for n in _names(e))
     if chain and bodies and not _names(e) <= HYGIENE:
         assert fz.packed(), _sql(e)          # its bodies run packed
     return fz.udf().func(*(cols[leaf] for leaf in fz.leaves))["f0"]
@@ -269,6 +269,32 @@ CASES = {
                              lambda w: S._num_points(S._segmentize(w, 1.5))),
     "npoints_segmentize": (("ST_NPoints", ("ST_Segmentize", "w", "m")),
                            lambda w: S._npoints(S._segmentize(w, 1.5))),
+    "y_geomfromwkt": (("ST_Y", ("ST_GeomFromWKT", "w")),
+                      lambda w: S._st_xy(S._geom_from_wkt(w), 1)),
+    "length_geomfromtext": (("ST_Length", ("ST_GeomFromText", "w")),
+                            lambda w: S._length(S._geom_from_wkt(w))),
+}
+
+# the interval predicates: a text lane called alone, a packed body in a
+# chain; both must equal the scalar kernel, errors included
+for _name, _kernel in (("ST_Intersects", S._intersects),
+                       ("ST_Disjoint", S._disjoint),
+                       ("ST_Touches", S._touches),
+                       ("ST_Overlaps", S._overlaps),
+                       ("ST_Equals", S._equals),
+                       ("ST_Crosses", S._crosses)):
+    _short = _name[3:].lower()
+    CASES[_short] = ((_name, "a", "b"), _kernel)
+    CASES[f"{_short}_chain"] = (
+        (_name, ("ST_AsText", "a"), ("ST_AsText", "b")), _kernel)
+
+#: SQL names with a packed body that no case above runs, and why
+CARRIER_EXEMPT = {
+    # its box path and the scalar _distance differ in the last ulp on
+    # float rects (e.g. 564.8196347464493 vs ...494), so no case can
+    # assert one answer yet (COVERAGE.md)
+    "ST_Distance": "box path not bit-equal to the scalar kernel",
+    "ST_Coords": "an engine extension with no text twin to compare",
 }
 
 
@@ -326,6 +352,33 @@ def test_paths_equal_each_other_and_the_scalar_kernels(case, seed=SEED):
         for name, path in PATHS.items():
             with pytest.raises(Exception):
                 path(expr, _cols([r]))
+
+
+def test_every_packed_body_has_a_case():
+    """Every name table.CARRIER runs packed is in a case here (the
+    coordinate maps below included) or exempt with a reason."""
+    exprs = [e for e, _ in CASES.values()] + [e for _, e, _ in
+                                               MAP_CASES.values()]
+    covered = {n.lower() for e in exprs for n in _names(e)}
+    exempt = {n.lower() for n in CARRIER_EXEMPT}
+    assert set(TB.CARRIER) - covered == exempt
+    assert exempt <= set(TB.CARRIER)
+
+
+@pytest.mark.parametrize("path", sorted(PATHS))
+def test_predicates_parse_both_operands_beside_an_empty(path):
+    """An EMPTY operand decides no predicate before the other operand
+    parses: a ring the parser rejects raises on every path, called alone
+    and through a packed chain, whichever side it is on."""
+    bad, empty = "POLYGON ((0 0, 1 1, 0 0))", "POLYGON EMPTY"
+    for case in sorted(c for c in CASES if CASES[c][0][0] in (
+            "ST_Intersects", "ST_Disjoint", "ST_Touches", "ST_Overlaps",
+            "ST_Equals", "ST_Crosses")):
+        for r in ((empty, bad), (bad, empty)):
+            with pytest.raises(Exception):
+                CASES[case][1](*r)
+            with pytest.raises(Exception):
+                PATHS[path](CASES[case][0], _cols([r]))
 
 
 def test_buffer_edge_lengths_are_math_hypot():

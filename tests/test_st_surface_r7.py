@@ -648,11 +648,11 @@ def test_fused_xy_struct_udfs_equal_composition():
         fz.emit(CR._Expr(CR._parse(e)[0]))
     assert len(fz.nodes) == 7                  # ST_EndPoint(s) runs once
     got = fz.udf().func(rows)
-    ep = SP.st_endpoint.func(rows)
-    for field, exp in (("f0", SP.st_x.func(rows)),
-                       ("f1", SP.st_y.func(rows)),
-                       ("f2", SP.st_x.func(ep)),
-                       ("f3", SP.st_y.func(ep)),
+    ep = SP.udf_table()["ST_EndPoint"].func(rows)
+    for field, exp in (("f0", SP.udf_table()["ST_X"].func(rows)),
+                       ("f1", SP.udf_table()["ST_Y"].func(rows)),
+                       ("f2", SP.udf_table()["ST_X"].func(ep)),
+                       ("f3", SP.udf_table()["ST_Y"].func(ep)),
                        ("f4", SP.udf_table()["ST_Length"].func(rows)),
-                       ("f5", SP.st_numgeometries.func(rows))):
+                       ("f5", SP.udf_table()["ST_NumGeometries"].func(rows))):
         assert list(got[field].fillna(-1)) == list(exp.fillna(-1)), field
